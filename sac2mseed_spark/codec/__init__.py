@@ -43,6 +43,11 @@ GOR_MLEN_BITS = 6
 BLOB_HEADER_LEN = 16  # magic(2) version(1) n_streams(1) n_chunks(4) n_points(8)
 CHUNK_FIXED_LEN = 20  # n_points(4) t0(8) delta0(8)
 
+# Max points per chunk. A window's chunks split at ``turn_idx // CHUNK_POINTS``
+# boundaries — a pure function of the row, so a blob's bytes are the same
+# at any parallelism.
+CHUNK_POINTS = 4096
+
 from .oracle import (  # noqa: E402,F401
     assemble_blob,
     decode_blob,

@@ -1,8 +1,8 @@
 """Per-window top-k leaderboard over a rollup tier.
 
 "Which conversations dominated each hour" — the ops view behind skew
-diagnosis (the hot conversations operators/skew.py salts for are
-exactly the ones this surfaces) and behind curation (cap any single
+diagnosis (the hot conversations whose windows pack into multi-chunk
+blobs are exactly the ones this surfaces) and behind curation (cap any single
 conversation's share of a training batch).
 
 Determinism: rank by (value desc, conv_id asc) — total order, no

@@ -1,24 +1,15 @@
 """Window packing: per-(conv_id, tier, window) compressed series blobs.
 
 The msr_pack analogue (/root/reference/libmseed/pack.c:70-395), Spark-first.
-Two physically different plans, bit-identical outputs (tests assert):
-
-  default (flat path, one shuffle):
-      repartition on (conv_id, window_start_us) -> sortWithinPartitions on
-      the stable turn order -> ONE mapInPandas pass over flat primitive
-      Arrow columns (int64/float64 — no struct lists, no collect_list, no
-      interpreted higher-order functions). The kernel carries incomplete
-      window groups across Arrow batches, detects window/chunk boundaries
-      vectorially, runs the numpy codec once per batch, and assembles
-      final blobs in the same pass.
-
-  salted=True (skew path, two shuffles):
-      group by (conv_id, window, chunk_id) — chunk_id is a pure function
-      of turn_idx (operators/skew.py), so a pathologically hot window
-      splits deterministically across executors — encode chunks, then a
-      second grouping assembles blobs. Use when single windows exceed
-      executor memory; payload bytes are IDENTICAL to the flat path
-      because chunk boundaries depend only on turn_idx values.
+One plan, one shuffle: repartition on conv_id -> sortWithinPartitions on
+(conv_id, window_start_us, turn_idx, ts_us) -> ONE mapInArrow pass over flat
+primitive Arrow columns (int64/float64 — no struct lists, no collect_list,
+no interpreted higher-order functions). The kernel carries the open window
+group across Arrow batches, detects window/chunk boundaries vectorially,
+runs the numpy codec once per closed block, and assembles final blobs in
+the same pass. Chunk boundaries are a pure function of turn_idx
+(``turn_idx // CHUNK_POINTS``), so the bytes never depend on the physical
+partitioning (tests assert).
 
 Windows are self-delimiting (each chunk re-anchors at its own X0) so there
 is NO cross-window or cross-chunk state — the property that makes packing
@@ -38,7 +29,7 @@ and a multi-window segment blob here would similarly cut header share.
 It is deliberately NOT adopted:
 
   * the incremental pipeline's unit of overwrite is the (conv, window)
-    key (plans/pipeline.py merge_tier) — a blob spanning windows forces
+    key (plans/pipeline.py snapshot MERGE) — a blob spanning windows forces
     read-modify-write of untouched neighbor windows on every delta
     merge and heal, trading a storage constant for write amplification
     in the steady-state path;
@@ -56,12 +47,10 @@ holds months of data at 1m granularity (i.e. misuses the tier system).
 
 from __future__ import annotations
 
-import struct as _struct
 import zlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -75,28 +64,13 @@ from pyspark.sql.types import (
 )
 
 from .. import TIERS
-from ..codec import MAGIC, VERSION
-from ..codec.vectorized import encode_chunks_raw, encode_chunks_vec
+from ..codec import BLOB_HEADER_LEN, CHUNK_POINTS, MAGIC, VERSION
+from ..codec.vectorized import encode_chunks_raw
 from .rollup import window_start_col
-from .skew import CHUNK_POINTS
 
 # value streams packed per window, in order (stream 0 carries the x0/xn
 # invariant columns). NULL latency (first turn) packs as NaN bits.
 STREAMS = ["latency_us", "token_count"]
-
-_CHUNK_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("window_start_us", LongType()),
-        StructField("chunk_id", IntegerType()),
-        StructField("n_points", LongType()),
-        StructField("first_ts_us", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("x0", LongType()),  # uint64 bit pattern viewed as int64
-        StructField("xn", LongType()),
-        StructField("chunk", BinaryType()),
-    ]
-)
 
 PACKED_SCHEMA = StructType(
     [
@@ -112,21 +86,6 @@ PACKED_SCHEMA = StructType(
         StructField("crc32", LongType()),
     ]
 )
-
-_HEAD_FMT = "<BBIQ"
-
-
-def _field(name: str):
-    # one-arg closure: F.transform dispatches on lambda arity, so a
-    # `lambda x, s=s:` default-arg capture would receive the array index
-    return lambda x: x[name]
-
-
-# ----------------------------------------------------------------------
-# flat path (default)
-# ----------------------------------------------------------------------
-
-_HEADER_LEN = 16  # MAGIC(2) + version(1) + n_streams(1) + n_chunks(4) + n_points(8)
 
 
 def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
@@ -201,7 +160,7 @@ def _run_block_arrow(tbl):
     span_start = chunk_off[win_chunk_start]
     span = chunk_off[win_chunk_end] - span_start
     out_off = np.zeros(W + 1, dtype=np.int64)
-    np.cumsum(_HEADER_LEN + span, out=out_off[1:])
+    np.cumsum(BLOB_HEADER_LEN + span, out=out_off[1:])
     out = np.empty(int(out_off[-1]), dtype=np.uint8)
     h = out_off[:-1]
     out[h] = MAGIC[0]
@@ -212,7 +171,7 @@ def _run_block_arrow(tbl):
         out[h + 4 + j] = ((n_chunks.astype(np.uint64) >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
     for j in range(8):  # n_points, little-endian u64
         out[h + 8 + j] = ((n_points.astype(np.uint64) >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
-    out[_ranges(h + _HEADER_LEN, span)] = buf[_ranges(span_start, span)]
+    out[_ranges(h + BLOB_HEADER_LEN, span)] = buf[_ranges(span_start, span)]
 
     mv = memoryview(out)
     crcs = np.fromiter(
@@ -222,12 +181,12 @@ def _run_block_arrow(tbl):
     )
 
     if out_off[-1] > np.iinfo(np.int32).max:
-        # >2 GiB of encoded payload in one carried block would silently
-        # wrap the Arrow int32 offsets; fail loudly — the caller should
-        # route such pathologically hot windows through the salted path
+        # >2 GiB of encoded payload in one block would silently wrap the
+        # Arrow int32 offsets; a window that large cannot be stored as one
+        # binary cell anyway, so fail loudly
         raise ValueError(
             f"encoded block exceeds 2 GiB ({int(out_off[-1])} bytes); "
-            "use pack_tier(salted=True) for this key distribution"
+            "a window this large cannot be stored as one payload cell"
         )
     payload = pa.Array.from_buffers(
         pa.binary(),
@@ -263,55 +222,50 @@ def _run_block_arrow(tbl):
     )
 
 
-def _pack_flat_arrow(batches) -> "Iterator":
-    """One pass over a partition's sorted flat rows (Arrow RecordBatches);
-    the trailing incomplete window group is carried into the next batch.
-
-    SPARK_GRAFT_PACK_PROF=1 prints per-worker (kernel s, rows) to stderr
-    on exhaustion — separates numpy encode time from the Arrow/socket
-    transfer + scheduling time around it when diagnosing contention."""
-    import os
-    import sys
-    import time
-
+def _concat(parts):
+    """One single-chunk table from the non-empty table slices ``parts``."""
     import pyarrow as pa
 
-    prof = os.environ.get("SPARK_GRAFT_PACK_PROF") == "1"
-    k_s, k_rows = 0.0, 0
-    carry = None  # pa.Table
+    return pa.concat_tables([t for t in parts if t.num_rows]).combine_chunks()
 
+
+def _row_key(tbl, i: int) -> tuple:
+    return tbl.column("conv_id")[i].as_py(), tbl.column("window_start_us")[i].as_py()
+
+
+def _pack_flat_arrow(batches) -> Iterator:
+    """One pass over a partition's sorted flat rows (Arrow RecordBatches).
+
+    The open window group (the rows from the last group start on) is kept
+    as a list of batch slices and concatenated once, when a later batch
+    closes it. Each batch is scanned for group starts once, plus its first
+    row against the carried last row, so a window spanning many batches
+    costs time linear in its rows."""
+    import pyarrow as pa
+
+    carry = []  # single-chunk table slices of the open window group
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        t0 = time.perf_counter() if prof else 0.0
         tbl = pa.Table.from_batches([rb])
-        if carry is not None:
-            tbl = pa.concat_tables([carry, tbl]).combine_chunks()
         new = _conv_ws_change(tbl)
-        change = np.flatnonzero(new[1:])  # group starts after row 0
-        start = int(change[-1]) + 1 if len(change) else 0
-        done, carry = tbl.slice(0, start), tbl.slice(start)
-        out = _run_block_arrow(done) if done.num_rows else None
-        if prof:
-            k_s += time.perf_counter() - t0
-            k_rows += rb.num_rows
-        if out is not None:
-            yield out
-    if carry is not None and carry.num_rows:
-        t0 = time.perf_counter() if prof else 0.0
-        out = _run_block_arrow(carry)
-        if prof:
-            k_s += time.perf_counter() - t0
-        yield out
-    if prof and k_rows:
-        print(f"PACK_PROF kernel_s={k_s:.3f} rows={k_rows}", file=sys.stderr)
+        if carry:
+            new[0] = _row_key(tbl, 0) != _row_key(carry[-1], -1)
+        starts = np.flatnonzero(new)
+        if not len(starts):
+            carry.append(tbl)
+            continue
+        start = int(starts[-1])
+        done, carry = carry + [tbl.slice(0, start)], [tbl.slice(start)]
+        if any(t.num_rows for t in done):
+            yield _run_block_arrow(_concat(done))
+    if carry:
+        yield _run_block_arrow(_concat(carry))
 
 
 def pack_tier(
     metrics: DataFrame,
     tier: str,
-    salted: bool = False,
-    n_partitions: int | None = None,
     clustered_by_conv: bool = False,
     assume_sorted: bool = False,
 ) -> DataFrame:
@@ -334,8 +288,6 @@ def pack_tier(
     a full materialization of every row — the pack stage becomes one
     cache-scan + one Arrow pass.
     """
-    if salted:
-        return _pack_tier_salted(metrics, tier)
     flat = metrics.select(
         "conv_id",
         window_start_col(F.col("ts_us"), tier).alias("window_start_us"),
@@ -345,153 +297,11 @@ def pack_tier(
     )
     keys = ["conv_id", "window_start_us"]
     if not (clustered_by_conv or assume_sorted):
-        flat = (
-            flat.repartition(n_partitions, "conv_id")
-            if n_partitions
-            else flat.repartition("conv_id")
-        )
+        flat = flat.repartition("conv_id")
     if not assume_sorted:
         flat = flat.sortWithinPartitions(*keys, "turn_idx", "ts_us", *STREAMS)
     packed = flat.mapInArrow(_pack_flat_arrow, schema=PACKED_SCHEMA)
     return packed.withColumn("tier", F.lit(tier))
-
-
-def pack_tier_adaptive(
-    metrics: DataFrame,
-    tier: str,
-    hot_rows: int = 2_000_000,
-    sample_frac: float = 0.01,
-) -> DataFrame:
-    """Sampled heavy-hitter probe chooses the physical pack plan.
-
-    Default: the flat single-pass plan. If any single (conv_id, window)
-    group's estimated row count exceeds ``hot_rows`` (a group too big for
-    one task's memory), route through the chunk-salted two-phase plan
-    instead — the AQE-style runtime decision, paid as one cheap sampled
-    count at plan time. The probe keys on the actual pack grouping key,
-    not conv_id totals, so a long-lived conversation spread across many
-    small windows does not trip it. Payload bytes are IDENTICAL either
-    way because chunk boundaries are pure functions of turn_idx
-    (operators/skew.py contract; tests/test_pack_spark.py asserts)."""
-    from .skew import heavy_hitters
-
-    probe = metrics.select(
-        "conv_id", window_start_col(F.col("ts_us"), tier).alias("window_start_us")
-    )
-    hot = heavy_hitters(probe, ["conv_id", "window_start_us"], hot_rows, sample_frac)
-    return pack_tier(metrics, tier, salted=bool(hot.take(1)))
-
-
-# ----------------------------------------------------------------------
-# salted path (explicit skew splitting for pathologically hot windows)
-# ----------------------------------------------------------------------
-
-def _encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        ts_arrays = pdf["ts_arr"].to_numpy()
-        offsets = np.zeros(len(pdf) + 1, dtype=np.int64)
-        offsets[1:] = np.cumsum([len(a) for a in ts_arrays])
-        ts_flat = np.concatenate(ts_arrays).astype(np.int64)
-        streams_flat = []
-        for s in STREAMS:
-            vals = np.concatenate(pdf[f"{s}_arr"].to_numpy()).astype(np.float64)
-            streams_flat.append(vals.view(np.uint64))
-        chunk_bytes, stats = encode_chunks_vec(ts_flat, offsets, streams_flat)
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "window_start_us": pdf["window_start_us"].to_numpy(),
-                "chunk_id": pdf["chunk_id"].to_numpy(),
-                "n_points": stats["n_points"].astype(np.int64),
-                "first_ts_us": stats["first_ts"].astype(np.int64),
-                "last_ts_us": stats["last_ts"].astype(np.int64),
-                "x0": stats["x0"].view(np.int64),
-                "xn": stats["xn"].view(np.int64),
-                "chunk": chunk_bytes,
-            }
-        )
-
-
-def _assemble_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    n_streams = len(STREAMS)
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        payloads, crcs = [], []
-        n_points_col = []
-        for chunks in pdf["chunks"].to_numpy():
-            # chunks: list of dicts sorted by chunk_id (sort_array upstream)
-            total = int(sum(c["n_points"] for c in chunks))
-            blob = MAGIC + _struct.pack(_HEAD_FMT, VERSION, n_streams, len(chunks), total)
-            blob += b"".join(bytes(c["chunk"]) for c in chunks)
-            payloads.append(blob)
-            crcs.append(zlib.crc32(blob))
-            n_points_col.append(total)
-        first = [c[0] for c in pdf["chunks"].to_numpy()]
-        last = [c[-1] for c in pdf["chunks"].to_numpy()]
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "window_start_us": pdf["window_start_us"].to_numpy(),
-                "n_points": np.array(n_points_col, dtype=np.int64),
-                "n_chunks": [len(c) for c in pdf["chunks"].to_numpy()],
-                "first_ts_us": [c["first_ts_us"] for c in first],
-                "last_ts_us": [c["last_ts_us"] for c in last],
-                "x0": [c["x0"] for c in first],
-                "xn": [c["xn"] for c in last],
-                "payload": payloads,
-                "crc32": np.array(crcs, dtype=np.int64),
-            }
-        )
-
-
-def _pack_tier_salted(metrics: DataFrame, tier: str) -> DataFrame:
-    pts = F.sort_array(
-        F.collect_list(
-            F.struct(
-                F.col("turn_idx"),
-                F.col("ts_us"),
-                *[F.col(s).cast("double").alias(s) for s in STREAMS],
-            )
-        )
-    )
-    grouped = (
-        metrics.withColumn("window_start_us", window_start_col(F.col("ts_us"), tier))
-        .withColumn("chunk_id", F.floor(F.col("turn_idx") / CHUNK_POINTS).cast("int"))
-        .groupBy("conv_id", "window_start_us", "chunk_id")
-        .agg(pts.alias("pts"))
-        .select(
-            "conv_id",
-            "window_start_us",
-            "chunk_id",
-            F.transform("pts", _field("ts_us")).alias("ts_arr"),
-            *[F.transform("pts", _field(s)).alias(f"{s}_arr") for s in STREAMS],
-        )
-    )
-    chunks = grouped.mapInPandas(_encode_partition, schema=_CHUNK_SCHEMA)
-    assembled = (
-        chunks.groupBy("conv_id", "window_start_us")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "chunk_id",
-                        "n_points",
-                        "first_ts_us",
-                        "last_ts_us",
-                        "x0",
-                        "xn",
-                        "chunk",
-                    )
-                )
-            ).alias("chunks")
-        )
-        .mapInPandas(_assemble_partition, schema=PACKED_SCHEMA)
-        .withColumn("tier", F.lit(tier))
-    )
-    return assembled
 
 
 # ----------------------------------------------------------------------

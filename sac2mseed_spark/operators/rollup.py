@@ -21,18 +21,23 @@ from pyspark.sql import functions as F
 
 from .. import TIERS
 
+# The eight tier statistics, each declared once:
+# (column, aggregate over turns, merge of lower-tier values of the column).
+# Every merge is an integer sum/min/max, so re-aggregation is exact.
+TIER_STATS = (
+    ("n_points", lambda: F.count(F.lit(1)), F.sum),
+    ("n_latency", lambda: F.count("latency_us"), F.sum),
+    ("sum_latency_us", lambda: F.sum("latency_us"), F.sum),
+    ("min_latency_us", lambda: F.min("latency_us"), F.min),
+    ("max_latency_us", lambda: F.max("latency_us"), F.max),
+    ("sum_tokens", lambda: F.sum("token_count"), F.sum),
+    ("min_ts_us", lambda: F.min("ts_us"), F.min),
+    ("max_ts_us", lambda: F.max("ts_us"), F.max),
+)
+
 # Aggregate column set of a tier table (pre-payload; operators/pack.py adds
 # the compressed series columns).
-TIER_AGG_COLS = [
-    "n_points",
-    "n_latency",
-    "sum_latency_us",
-    "min_latency_us",
-    "max_latency_us",
-    "sum_tokens",
-    "min_ts_us",
-    "max_ts_us",
-]
+TIER_AGG_COLS = [c for c, _, _ in TIER_STATS]
 
 
 def window_start_col(ts_us_col, tier: str):
@@ -41,47 +46,35 @@ def window_start_col(ts_us_col, tier: str):
     return (F.floor(ts_us_col / w) * w).cast("long")
 
 
-def rollup_from_turns(metrics: DataFrame, tier: str) -> DataFrame:
-    """Aggregate per-turn metrics directly into one tier.
-
-    One hash-aggregate (partial map-side combine + final) on
-    (conv_id, window_start) — Catalyst plans the two-phase agg; no window
-    functions, no sort.
-    """
+def _aggregate(df: DataFrame, window_start, aggs, tier: str) -> DataFrame:
+    """One hash-aggregate (partial map-side combine + final) on
+    (conv_id, window_start) — no window functions, no sort. Emits
+    conv_id, window_start_us, *TIER_AGG_COLS, tier."""
     return (
-        metrics.withColumn("window_start_us", window_start_col(F.col("ts_us"), tier))
-        .groupBy("conv_id", "window_start_us")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.count("latency_us").alias("n_latency"),
-            F.sum("latency_us").alias("sum_latency_us"),
-            F.min("latency_us").alias("min_latency_us"),
-            F.max("latency_us").alias("max_latency_us"),
-            F.sum("token_count").alias("sum_tokens"),
-            F.min("ts_us").alias("min_ts_us"),
-            F.max("ts_us").alias("max_ts_us"),
-        )
+        df.groupBy("conv_id", window_start.alias("window_start_us"))
+        .agg(*aggs)
         .withColumn("tier", F.lit(tier))
     )
 
 
+def _from_turns(metrics: DataFrame, window_start, tier: str) -> DataFrame:
+    aggs = [turns().alias(c) for c, turns, _ in TIER_STATS]
+    return _aggregate(metrics, window_start, aggs, tier)
+
+
+def rollup_from_turns(metrics: DataFrame, tier: str) -> DataFrame:
+    """Aggregate per-turn metrics directly into one tier."""
+    return _from_turns(metrics, window_start_col(F.col("ts_us"), tier), tier)
+
+
 def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
-    """Re-aggregate a lower tier into a higher one (integer-exact)."""
-    return (
-        lower.withColumn("ws", window_start_col(F.col("window_start_us"), tier))
-        .groupBy("conv_id", "ws")
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("n_latency").alias("n_latency"),
-            F.sum("sum_latency_us").alias("sum_latency_us"),
-            F.min("min_latency_us").alias("min_latency_us"),
-            F.max("max_latency_us").alias("max_latency_us"),
-            F.sum("sum_tokens").alias("sum_tokens"),
-            F.min("min_ts_us").alias("min_ts_us"),
-            F.max("max_ts_us").alias("max_ts_us"),
-        )
-        .withColumnRenamed("ws", "window_start_us")
-        .withColumn("tier", F.lit(tier))
+    """Re-aggregate tier rows into ``tier`` (integer-exact). ``lower`` may
+    already be at ``tier`` — floor(ws / w) * w is the identity on aligned
+    window starts — which makes this the incremental MERGE of
+    (previous rows ∪ delta rows) as well as the cascade step."""
+    aggs = [merge(c).alias(c) for c, _, merge in TIER_STATS]
+    return _aggregate(
+        lower, window_start_col(F.col("window_start_us"), tier), aggs, tier
     )
 
 
@@ -123,27 +116,10 @@ def rollup_calendar(metrics: DataFrame, unit: str = "month") -> DataFrame:
     and identical in any engine. Same integer-domain statistics as the
     fixed tiers, so cascading/retention logic composes unchanged.
 
-    One hash aggregate on (conv_id, window_start_us) — identical scale
-    shape to rollup_from_turns.
+    Differs from rollup_from_turns only in the bucket expression.
     """
     units = {"week", "month", "quarter", "year"}
     if unit not in units:
         raise ValueError(f"unit must be one of {sorted(units)}, got {unit!r}")
-    ws = F.unix_micros(
-        F.date_trunc(unit, F.timestamp_micros(F.col("ts_us")))
-    ).alias("window_start_us")
-    return (
-        metrics.select("*", ws)
-        .groupBy("conv_id", "window_start_us")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.count("latency_us").alias("n_latency"),
-            F.sum("latency_us").alias("sum_latency_us"),
-            F.min("latency_us").alias("min_latency_us"),
-            F.max("latency_us").alias("max_latency_us"),
-            F.sum("token_count").alias("sum_tokens"),
-            F.min("ts_us").alias("min_ts_us"),
-            F.max("ts_us").alias("max_ts_us"),
-        )
-        .withColumn("tier", F.lit(unit))
-    )
+    ws = F.unix_micros(F.date_trunc(unit, F.timestamp_micros(F.col("ts_us"))))
+    return _from_turns(metrics, ws, unit)

@@ -7,7 +7,7 @@ operator decides membership from a 60-bit content hash of the row key
 (functions/hashing.h60, bit-identical in DuckDB), so the same row makes
 the same keep/drop decision at any parallelism, any partitioning, any
 engine — the determinism contract every operator in this repo carries
-(cf. chunk_id-as-salt in operators/skew.py).
+(cf. the turn_idx chunk boundaries in operators/pack.py).
 
 Scale shape: pure codegen filter on a scan — no shuffle, no sort, no
 driver state. Rates broadcast as a literal CASE chain (strata counts are

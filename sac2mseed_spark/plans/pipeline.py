@@ -105,7 +105,7 @@ from pyspark.sql import functions as F
 from .. import TIERS
 from ..functions.metrics import derive_turn_metrics
 from ..operators.retention import retention_bound_us, retention_sweep
-from ..operators.rollup import TIER_AGG_COLS, rollup_from_turns, window_start_col
+from ..operators.rollup import rollup_from_tier, rollup_from_turns, window_start_col
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 # d{version}[h]: plain snapshot deltas rank before the heal delta of the
@@ -122,29 +122,6 @@ def list_snapshots(input_dir: str) -> list[tuple[int, str]]:
         if m:
             out.append((int(m.group(1)), os.path.join(input_dir, name)))
     return out
-
-
-def merge_tier(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Continuous-aggregate MERGE: integer-domain re-aggregation of
-    (existing ∪ delta) per (conv_id, window) — exactly associative, so
-    merged == full recompute bit-for-bit (tests assert). Callers pass
-    only the TOUCHED windows of ``existing`` (a semi-join on the delta's
-    keys), keeping this merge delta-sized."""
-    src = delta if existing is None else existing.unionByName(delta)
-    return (
-        src.groupBy("conv_id", "window_start_us", "tier")
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("n_latency").alias("n_latency"),
-            F.sum("sum_latency_us").alias("sum_latency_us"),
-            F.min("min_latency_us").alias("min_latency_us"),
-            F.max("max_latency_us").alias("max_latency_us"),
-            F.sum("sum_tokens").alias("sum_tokens"),
-            F.min("min_ts_us").alias("min_ts_us"),
-            F.max("max_ts_us").alias("max_ts_us"),
-        )
-        .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
-    )
 
 
 class IncrementalRollup:
@@ -444,9 +421,7 @@ class IncrementalRollup:
         )
         metric_rows = []
         for tier in TIERS:
-            delta = rollup_from_turns(delta_m, tier).select(
-                "conv_id", "window_start_us", *TIER_AGG_COLS, "tier"
-            )
+            delta = rollup_from_turns(delta_m, tier)
             # late data older than the committed retention bound is
             # dropped at ingest — it would be invisible (read-filtered)
             # and immediately eviction-eligible anyway, and admitting it
@@ -464,7 +439,9 @@ class IncrementalRollup:
                 touched=delta.select(*_WINDOW_KEYS),
                 bound_us=state["retention_bounds"].get(tier),
             )
-            merged = merge_tier(prev_rows, delta)
+            merged = rollup_from_tier(
+                delta if prev_rows is None else prev_rows.unionByName(delta), tier
+            )
             out = self._delta_path(self._tier_base(tier), snap_id)
             merged.write.mode("overwrite").parquet(out)
 
@@ -653,9 +630,7 @@ class IncrementalRollup:
             )
             healed_m = derive_turn_metrics(raw).persist()
             for tier in TIERS:
-                rows = rollup_from_turns(healed_m, tier).select(
-                    "conv_id", "window_start_us", *TIER_AGG_COLS, "tier"
-                )
+                rows = rollup_from_turns(healed_m, tier)
                 # respect committed evictions: healed rows never resurrect
                 # windows behind the retention bound
                 lo = state["retention_bounds"].get(tier)

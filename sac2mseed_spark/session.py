@@ -31,6 +31,24 @@ ENGINE_CONFS = {
 }
 
 
+def _local_heap() -> str:
+    """A quarter of the host's MemAvailable, between 512m and 16g: the
+    pre-touched heap must fit beside the Python workers, and a fixed
+    size larger than the host's free memory keeps the JVM from starting."""
+    avail_kb = 0
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail_kb = int(line.split()[1])
+                    break
+    except OSError:
+        pass
+    if not avail_kb:
+        return "16g"
+    return f"{max(512, min(16 * 1024, avail_kb // 1024 // 4))}m"
+
+
 def get_spark(
     app_name: str = "sac2mseed_spark",
     master: str | None = None,
@@ -67,13 +85,13 @@ def get_spark(
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = builder.master(master)
     if master.startswith("local"):
-        # local mode = one JVM for driver+executors; size the heap for the
-        # thread count instead of Spark's 1g default (cluster mode gets
-        # memory from spark-submit flags instead). Keep the heap MODEST and
-        # pre-touched: an oversized growing heap spends more time
-        # page-faulting fresh regions than it saves (measured: 48g heap ran
-        # the same job 3x slower than 16g on this box).
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        # local mode = one JVM for driver+executors; size the heap from the
+        # memory the host can spare instead of Spark's 1g default (cluster
+        # mode gets memory from spark-submit flags instead). Keep the heap
+        # MODEST and pre-touched: an oversized growing heap spends more
+        # time page-faulting fresh regions than it saves (measured: a 48g
+        # heap ran the same job 3x slower than a 16g one).
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _local_heap()
         jvm_opts = f"-Xms{mem} -XX:+AlwaysPreTouch"
         # When the JVM is pinned to a core subset (emulated executors via
         # taskset), it still sizes GC/JIT/fork-join pools for every CPU it

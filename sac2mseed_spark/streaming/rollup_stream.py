@@ -11,10 +11,12 @@ pack.c:337). Spark mapping (SURVEY.md §2.9):
     (handled by the watermark: rows later than the allowed lateness are
     dropped from the stream path and belong to the batch backfill)
 
-The streaming aggregate produces the SAME integer-domain tier columns as
-operators/rollup.rollup_from_turns, so a streaming-maintained 1m tier can
-be cascaded to 1h/1d by the batch operators (continuous-aggregate
-maintenance) and is bit-compatible with a batch recompute.
+The streaming aggregate (stream_rollup) emits a fixed subset of the tier
+statistics in operators/rollup.TIER_STATS: n_points, sum_tokens,
+min_ts_us and max_ts_us, with the same integer-domain definitions. It has
+no latency statistics (stream_turn_metrics derives no latency), so those
+four columns are bit-compatible with a batch recompute, but a streaming
+1m tier is not a full tier table that rollup_from_tier can cascade.
 """
 
 from __future__ import annotations

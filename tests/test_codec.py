@@ -240,8 +240,9 @@ def test_xn_mismatch_detected():
 
 def test_chunked_equals_single_when_split():
     """Splitting a series at a fixed boundary and concatenating the chunk
-    encodings in a blob decodes to the same series — the skew-split
-    bit-exactness property (operators/skew.py contract)."""
+    encodings in a blob decodes to the same series — the property that
+    lets a window split into chunks at fixed turn_idx boundaries
+    (codec.CHUNK_POINTS)."""
     ts, vals = ts_jitter(1000), val_sinusoid(1000)
     vb = _bits(vals)
     whole = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, 1000)

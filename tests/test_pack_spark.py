@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sac2mseed_spark.codec import oracle
+from sac2mseed_spark.codec import CHUNK_POINTS, oracle
 from sac2mseed_spark.functions.metrics import derive_turn_metrics
 from sac2mseed_spark.operators.pack import (
     STREAMS,
@@ -18,7 +18,13 @@ from sac2mseed_spark.operators.pack import (
     unpack_tier,
     verify_continuity,
 )
+from sac2mseed_spark.operators.rollup import window_start_col
 from sac2mseed_spark.sources.transcripts import generate_transcripts
+
+
+def _bits(v):
+    """float64 bit pattern as the oracle takes it; NULL packs as NaN."""
+    return oracle.float_to_bits(float("nan") if v is None else v)
 
 
 @pytest.fixture(scope="module")
@@ -58,8 +64,8 @@ def test_unpack_roundtrip_values(spark, packed_1m):
 
 
 def test_parallelism_invariance(spark):
-    """Identical payload bytes at 1 vs 8 upstream partitions (the skew-split
-    bit-exactness contract, operators/skew.py)."""
+    """Identical payload bytes at 1 vs 8 upstream partitions (chunk
+    boundaries depend only on turn_idx, codec.CHUNK_POINTS)."""
     t = generate_transcripts(spark, "t_small", seed=42)
     m = derive_turn_metrics(t)
     a = pack_tier(m.coalesce(1), "1m")
@@ -85,22 +91,6 @@ def test_out_of_order_input_same_bytes(spark):
     pa = {(r["conv_id"], r["window_start_us"]): bytes(r["payload"]) for r in pack_tier(m1, "1h").collect()}
     pb = {(r["conv_id"], r["window_start_us"]): bytes(r["payload"]) for r in pack_tier(m2, "1h").collect()}
     assert pa == pb
-
-
-def test_salted_path_same_bytes(spark):
-    """The skew-split (salted) two-stage plan and the flat one-shuffle plan
-    must produce byte-identical blobs — chunk boundaries depend only on
-    turn_idx values, never on physical partitioning."""
-    m = derive_turn_metrics(generate_transcripts(spark, "t_gaps", seed=42))
-    flat = {
-        (r["conv_id"], r["window_start_us"]): (bytes(r["payload"]), r["crc32"])
-        for r in pack_tier(m, "1h").collect()
-    }
-    salted = {
-        (r["conv_id"], r["window_start_us"]): (bytes(r["payload"]), r["crc32"])
-        for r in pack_tier(m, "1h", salted=True).collect()
-    }
-    assert flat == salted
 
 
 def test_assume_sorted_same_bytes(spark):
@@ -135,8 +125,6 @@ def test_chunk_split_across_windows(spark):
     inside one window produce multi-chunk blobs that decode whole."""
     from pyspark.sql import functions as F
 
-    from sac2mseed_spark.operators.skew import CHUNK_POINTS
-
     n = CHUNK_POINTS + 500
     df = spark.range(n).select(
         F.lit("c0").alias("conv_id"),
@@ -155,22 +143,83 @@ def test_chunk_split_across_windows(spark):
     assert len(ts) == n and ts == list(range(1_700_000_000_000_000, 1_700_000_000_000_000 + 1000 * n, 1000))
 
 
-def test_hot_conversation_salted_equals_flat(spark):
-    """Zipf-head fixture (3 convs x 100k turns): hot conversations split
-    across chunk groups on the salted path and still produce blobs
-    byte-identical to the flat plan."""
+def test_hot_windows_match_oracle(spark):
+    """Zipf-head fixture (3 convs x 100k turns) at 1d: every blob, hot
+    multi-chunk windows included, equals the pure-Python reference
+    codec's blob for the same points, chunked at turn_idx // CHUNK_POINTS."""
     m = derive_turn_metrics(generate_transcripts(spark, "t_hot", seed=42))
-    m = m.filter(F.col("conv_id") < "conv_00000010")  # the hot head + a few
-    flat = {
-        (r["conv_id"], r["window_start_us"]): (r["crc32"], r["n_points"], r["n_chunks"])
+    m = m.filter(F.col("conv_id") < "conv_00000003")  # the hot head
+    packed = {
+        (r["conv_id"], r["window_start_us"]): r
         for r in pack_tier(m, "1d").collect()
     }
-    salted = {
-        (r["conv_id"], r["window_start_us"]): (r["crc32"], r["n_points"], r["n_chunks"])
-        for r in pack_tier(m, "1d", salted=True).collect()
-    }
-    assert flat == salted
-    assert any(v[2] > 1 for v in flat.values())  # hot windows really split
+    points = {}
+    for r in m.select(
+        "conv_id",
+        window_start_col(F.col("ts_us"), "1d").alias("window_start_us"),
+        "turn_idx",
+        "ts_us",
+        *[F.col(s).cast("double").alias(s) for s in STREAMS],
+    ).collect():
+        points.setdefault((r["conv_id"], r["window_start_us"]), []).append(r)
+    assert packed.keys() == points.keys()
+    for key, rows in points.items():
+        rows.sort(key=lambda r: (r["turn_idx"], r["ts_us"]))
+        chunks = {}
+        for r in rows:
+            chunks.setdefault(r["turn_idx"] // CHUNK_POINTS, []).append(r)
+        want = oracle.assemble_blob(
+            [
+                oracle.encode_chunk(
+                    [r["ts_us"] for r in c],
+                    [[_bits(r[s]) for r in c] for s in STREAMS],
+                )
+                for _, c in sorted(chunks.items())
+            ],
+            len(STREAMS),
+            len(rows),
+        )
+        got = packed[key]
+        assert bytes(got["payload"]) == want, key
+        assert got["n_chunks"] == len(chunks) and got["n_points"] == len(rows)
+    assert any(r["n_chunks"] > 1 for r in packed.values())  # hot windows split
+
+
+def test_carry_across_batches_equals_one_block():
+    """The flat kernel over many small Arrow batches — windows spanning
+    several batches, batch edges on and off window boundaries — yields
+    the same rows as one block over the whole table."""
+    import pyarrow as pa
+
+    from sac2mseed_spark.operators.pack import _pack_flat_arrow, _run_block_arrow
+
+    rng = np.random.default_rng(7)
+    conv, ws, turn = [], [], []
+    for c, sizes in enumerate([[3, 1, 250], [1], [40, 7000, 2], [1, 1, 1]]):
+        t = 0
+        for w, n in enumerate(sizes):
+            conv += [f"c{c}"] * n
+            ws += [w * 60_000_000] * n
+            turn += range(t, t + n)
+            t += n
+    n = len(conv)
+    ts = np.asarray(ws, dtype=np.int64) + np.arange(n, dtype=np.int64)
+    tbl = pa.table(
+        {
+            "conv_id": conv,
+            "window_start_us": pa.array(ws, pa.int64()),
+            "turn_idx": pa.array(turn, pa.int64()),
+            "ts_us": pa.array(ts),
+            "latency_us": pa.array(rng.integers(0, 10**6, n).astype(np.float64)),
+            "token_count": pa.array(rng.integers(0, 500, n).astype(np.float64)),
+        }
+    )
+    whole = _run_block_arrow(tbl)
+    for size in (1, 2, 97, 1000):
+        out = list(_pack_flat_arrow(iter(tbl.to_batches(max_chunksize=size))))
+        assert pa.Table.from_batches(out).equals(pa.Table.from_batches([whole]))
+        if size == 1:  # each window is emitted as soon as the next one starts
+            assert len(out) == whole.num_rows
 
 
 def test_repack_equals_direct_pack(spark):
@@ -212,37 +261,6 @@ def test_read_tier_selection_prunes_and_matches(spark):
         for r in apply_selections(m, sels).select("conv_id", "ts_us").collect()
     }
     assert got == want and got
-
-
-def test_adaptive_pack_engages_salted_on_hot_keys(spark):
-    """pack_tier_adaptive's sampled heavy-hitter probe: picks the salted
-    plan on the Zipf-head fixture, the flat plan on a uniform one, and the
-    salted decision changes nothing about the bytes."""
-    from sac2mseed_spark.operators.pack import pack_tier_adaptive
-    from sac2mseed_spark.operators.skew import heavy_hitters
-
-    m_hot = derive_turn_metrics(generate_transcripts(spark, "t_hot", seed=42))
-    m_hot = m_hot.filter(F.col("conv_id") < "conv_00000020").cache()
-    hot = heavy_hitters(m_hot, ["conv_id"], threshold=50_000, sample_frac=0.05)
-    hot_keys = {r["conv_id"] for r in hot.collect()}
-    # the 3 Zipf-head conversations (100k turns each) and nothing else
-    assert hot_keys == {"conv_00000000", "conv_00000001", "conv_00000002"}
-
-    adaptive = {
-        (r["conv_id"], r["window_start_us"]): (r["crc32"], r["n_points"])
-        for r in pack_tier_adaptive(m_hot, "1d", hot_rows=50_000, sample_frac=0.05).collect()
-    }
-    flat = {
-        (r["conv_id"], r["window_start_us"]): (r["crc32"], r["n_points"])
-        for r in pack_tier(m_hot, "1d").collect()
-    }
-    assert adaptive == flat
-    m_hot.unpersist()
-
-    # uniform fixture: no heavy hitters -> flat plan chosen (no error path)
-    m_uni = derive_turn_metrics(generate_transcripts(spark, "t_small", seed=42))
-    assert not heavy_hitters(m_uni, ["conv_id"], threshold=50_000, sample_frac=0.5).take(1)
-    assert pack_tier_adaptive(m_uni, "1h", hot_rows=50_000).count() > 0
 
 
 def test_payload_decodes_with_oracle(spark, packed_1m):

@@ -1,7 +1,7 @@
 """Micro-bench: token_count formulations on real fixture text.
 
-The metrics stage profiler (profile_metrics.py) shows tokenization is
-~70% of the gate job's dominant stage. Java regex (regexp_count) is the
+A stage profile of the metrics derivation showed tokenization at ~70%
+of its dominant stage. Java regex (regexp_count) is the
 current implementation; candidates below are value-identical on
 single-space-separated corpora (the fixture, by construction) and are
 checked for exact agreement before timing is trusted.

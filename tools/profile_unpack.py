@@ -8,9 +8,7 @@ fixture (t_bench, seed 42, packed with assume_sorted=True like bench.py):
   2. spark wall: force(unpack_tier(packed_1m)) — the number bench.py
      reports, interleaved best-of-N.
   3. layout: per-partition blob counts + byte sizes of the persisted
-     packed_1m, and the Arrow batch shape mapInArrow actually sees
-     (SPARK_GRAFT_UNPACK_PROF=1 makes the decode kernel report per-batch
-     rows/bytes/kernel-seconds to stderr).
+     packed_1m.
 
 Usage: python tools/profile_unpack.py [fixture] (default t_bench)
 """
