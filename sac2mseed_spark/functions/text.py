@@ -23,9 +23,12 @@ BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 
 def ws_tokens(text: Column | str) -> Column:
-    """Whitespace tokens of trimmed text; empty text -> empty array."""
+    """Whitespace tokens of trimmed text; empty or null text -> empty
+    array (so a null text counts 0 tokens, not F.size(NULL) = -1)."""
     t = F.trim(F.col(text) if isinstance(text, str) else text)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
+    return F.when(
+        F.coalesce(F.length(t), F.lit(0)) == 0, F.array().cast("array<string>")
+    ).otherwise(
         F.split(t, r"\s+")
     )
 

@@ -8,7 +8,9 @@ between two snapshot ids yields). The engine state is:
   tiers/{tier}/d{n}[h]/    MERGE-on-read delta chain per aggregate tier
   tiers/_convstate/d{n}/   per-conversation carry state, same chain form
   packed/{tier}/d{n}[h]/   packed-payload delta chain
-  metrics/                 append-only rollup-count + lineage table
+  metrics/                 append-only rollup-count + lineage table (per
+                           snapshot and tier: running totals, source files,
+                           wall, out-of-order conversations, chain length)
   retention/               eviction-sweep accounting table
   heal_pending/d{n}/       conversations flagged out-of-order at snapshot n
   _checkpoint.json         atomically-committed resume token
@@ -16,8 +18,10 @@ between two snapshot ids yields). The engine state is:
 EVERY table family is a delta chain: snapshot n writes ONLY the rows its
 delta touches to a ``d{n}`` directory, and reads resolve
 latest-version-wins per key (aggregate tiers and packed tiers key on
-(conv_id, window_start_us); conv state keys on conv_id). Per-snapshot
-write volume is therefore proportional to the delta, not the table — the
+(conv_id, window_start_us); conv state keys on conv_id). A chain is
+resolved in ONE scan of all its entries, each row ranked by the name of
+the entry directory it was read from. Per-snapshot write volume is
+therefore proportional to the delta, not the table — the
 reference merges into only the touched trace the same way
 (/root/reference/libmseed/tracelist.c:135-606 fast paths), and an Iceberg
 deployment expresses the same chain as MERGE + positional deletes (no
@@ -40,12 +44,13 @@ minimum turn_idx for a conversation is <= the carried last_turn_idx is
 out-of-order — its within-snapshot latencies were derived against the
 wrong predecessor. ``_process_one`` still rolls it in (the aggregate
 merge is order-insensitive in structure, only the affected latency VALUES
-are provisional) and records the affected conv_ids under
-``heal_pending/``. ``heal()`` then re-derives ONLY those conversations
-from all raw snapshots and writes corrective ``d{n}h`` chain entries
-(ranked after ``d{n}``) for every table family — after which all tiers
-are byte-identical to a full recompute (tests assert), and incremental
-processing resumes unchanged.
+are provisional). The flag is a column of the conv-state delta, counted
+by an observation on that write; only when the count is > 0 are the
+affected conv_ids written under ``heal_pending/``. ``heal()`` then
+re-derives ONLY those conversations from all raw snapshots and writes
+corrective ``d{n}h`` chain entries (ranked after ``d{n}``) for every
+table family — after which all tiers are byte-identical to a full
+recompute (tests assert), and incremental processing resumes unchanged.
 
 Retention (downsample-and-expire): ``apply_retention`` commits per-tier
 eviction BOUNDS into the checkpoint — eviction is a pure predicate on
@@ -68,8 +73,13 @@ is integer-exact-associative (operators/rollup.py contract), so replaying
 a snapshot is idempotent: the chain resolver never reads past the
 committed version, so nothing is double-counted. Rollup-count totals in
 the metrics table are maintained ARITHMETICALLY (previous committed
-totals + delta-sized aggregates, crash-safe inside the same checkpoint),
-never by re-scanning the table.
+totals + the windows and points written by each tier's MERGE minus those
+of the previous rows it replaced, crash-safe inside the same checkpoint),
+never by re-scanning the table: both figures come from
+``DataFrame.observe`` on the MERGE write itself, so a commit runs no
+bookkeeping job — its only Spark actions are its writes. Each action
+carries a job description naming its phase (``commit d00000002 1h
+merge``, ``heal d00000002 pack 1m``, ``compact tiers/1h``).
 
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
@@ -97,9 +107,11 @@ import re
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import TIERS
@@ -113,6 +125,32 @@ _SNAP_RE = re.compile(r"^snap_(\d+)$")
 _DELTA_RE = re.compile(r"^d(\d+)(h?)$")
 
 _WINDOW_KEYS = ["conv_id", "window_start_us"]
+# chain entry of a row: the d{version:08d}[h] directory holding its file;
+# the fixed-width names sort in resolution order
+_ENTRY_RE = r"/(d[0-9]{8}h?)/[^/]+$"
+
+
+def _observe_totals(df: DataFrame, obs: Observation) -> DataFrame:
+    """``df`` with its window count and point sum observed by ``obs``."""
+    return df.observe(
+        obs,
+        F.count(F.lit(1)).alias("w"),
+        F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
+    )
+
+
+def _observed(obs: Observation, *names: str) -> tuple[int, ...]:
+    """The named metrics the finished action reported for ``obs``. A metric
+    the plan did not report (its observed node was optimised away) raises:
+    a running total must never silently count it as 0."""
+    try:
+        got = obs.get
+    except Py4JJavaError:  # the action reported no row for ``obs``
+        got = {}
+    missing = [n for n in names if got.get(n) is None]
+    if missing:
+        raise RuntimeError(f"observation reported no value for {missing}")
+    return tuple(int(got[n]) for n in names)
 
 
 def list_snapshots(input_dir: str) -> list[tuple[int, str]]:
@@ -190,6 +228,19 @@ class IncrementalRollup:
             json.dump(state, f)
         os.replace(tmp, self.ckpt_path)  # atomic commit
 
+    @contextmanager
+    def _phase(self, desc: str):
+        """Describe the Spark jobs started inside as engine phase ``desc``
+        (e.g. ``commit d00000002 1h merge``). The caller's description is
+        restored afterwards; its job group is left alone."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(desc)
+        try:
+            yield
+        finally:
+            sc.setJobDescription(prev)
+
     # -- chain layout ---------------------------------------------------
     def _tier_base(self, tier: str) -> str:
         return os.path.join(self.work_dir, "tiers", tier)
@@ -246,63 +297,67 @@ class IncrementalRollup:
         healed_through: int | None = None,
         touched_on: list[str] | None = None,
     ) -> DataFrame | None:
-        """MERGE-on-read: union the chain <= version, latest-version-wins
-        per key. ``touched`` (a DataFrame of ``touched_on`` columns,
-        default ``keys``) semi-joins each chain entry down to the rows a
-        merge needs — with parquet row-group min/max stats this prunes
-        most of each delta file; Iceberg would prune at manifest level.
-        ``touched_on`` may be a key prefix (e.g. just conv_id when the
-        caller needs every window of the touched conversations — the
-        packed re-encode path). ``bound_us`` applies the committed
+        """MERGE-on-read: one scan of the chain <= version, latest entry
+        wins per key. Each row is ranked by the name of the entry
+        directory its file lives in (``_metadata.file_path``): the
+        fixed-width ``d{version:08d}[h]`` names sort in resolution order,
+        so a heal entry ranks after its plain twin. ``touched`` (a
+        DataFrame of ``touched_on`` columns, default ``keys``) semi-joins
+        the scan down to the rows a merge needs, so the rows shuffled are
+        delta-sized. ``touched_on`` may be a key prefix (e.g. just conv_id
+        when the caller needs every window of the touched conversations —
+        the packed re-encode path). ``bound_us`` applies the committed
         retention predicate (metadata-only DELETE, module doc)."""
         dirs = self._chain_dirs(base, version, healed_through)
         if not dirs:
             return None
-        parts = []
-        for i, path in enumerate(dirs):
-            df = self.spark.read.parquet(path)
-            if touched is not None:
-                df = df.join(touched, touched_on or keys, "left_semi")
-            parts.append(df.withColumn("_v", F.lit(i)))
-        df = reduce(DataFrame.unionByName, parts)
+        df = self.spark.read.parquet(*dirs).withColumn(
+            "_e", F.regexp_extract(F.col("_metadata.file_path"), _ENTRY_RE, 1)
+        )
+        if touched is not None:
+            df = df.join(touched, touched_on or keys, "left_semi")
         if bound_us is not None:
             df = df.filter(F.col("window_start_us") >= F.lit(bound_us))
-        w = Window.partitionBy(*keys).orderBy(F.desc("_v"))
+        w = Window.partitionBy(*keys).orderBy(F.desc("_e"))
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_v", "_rn")
+            .drop("_e", "_rn")
         )
 
     # -- readers --------------------------------------------------------
     def conv_state(self, version: int) -> DataFrame | None:
         if version == 0:
             return None
-        self._maybe_recover(self._read_ckpt())
-        return self._resolve_chain(self._state_base(), version, ["conv_id"])
-
-    def tier(self, tier: str, version: int | None = None) -> DataFrame | None:
         state = self._maybe_recover(self._read_ckpt())
-        v = version if version is not None else state["version"]
-        if v == 0:
-            return None
         return self._resolve_chain(
-            self._tier_base(tier),
-            v,
-            _WINDOW_KEYS,
-            bound_us=state["retention_bounds"].get(tier),
+            self._state_base(),
+            version,
+            ["conv_id"],
+            healed_through=state["healed_through"],
         )
 
+    def tier(self, tier: str, version: int | None = None) -> DataFrame | None:
+        return self._read_family(self._tier_base(tier), tier, version)
+
     def packed_tier(self, tier: str, version: int | None = None) -> DataFrame | None:
+        return self._read_family(self._packed_base(tier), tier, version)
+
+    def _read_family(
+        self, base: str, tier: str, version: int | None
+    ) -> DataFrame | None:
+        """A window-keyed family at ``version`` (default: committed), with
+        the tier's committed retention bound; one checkpoint read."""
         state = self._maybe_recover(self._read_ckpt())
         v = version if version is not None else state["version"]
         if v == 0:
             return None
         return self._resolve_chain(
-            self._packed_base(tier),
+            base,
             v,
             _WINDOW_KEYS,
             bound_us=state["retention_bounds"].get(tier),
+            healed_through=state["healed_through"],
         )
 
     def metrics_table(self) -> DataFrame | None:
@@ -312,7 +367,11 @@ class IncrementalRollup:
         snaps = [n for n in os.listdir(p) if n.startswith("snap_")]
         if not snaps:  # empty dir or stray non-snapshot files
             return None
-        return self.spark.read.parquet(os.path.join(p, "snap_*"))
+        # mergeSchema: snapshot dirs written before a column was added
+        # read it as null
+        return self.spark.read.option("mergeSchema", "true").parquet(
+            os.path.join(p, "snap_*")
+        )
 
     def retention_table(self) -> DataFrame | None:
         p = os.path.join(self.work_dir, "retention")
@@ -343,25 +402,27 @@ class IncrementalRollup:
 
     def _process_one(self, state: dict, snap_id: int, snap_path: str) -> None:
         t0 = time.time()
-        raw = self.spark.read.parquet(snap_path)
-        delta_m = derive_turn_metrics(raw)
+        tag = f"commit d{snap_id:08d}"
         prev_version = state["version"]
+        ht = state["healed_through"]
+        with self._phase(f"{tag} read"):
+            raw = self.spark.read.parquet(snap_path)
+        delta_m = derive_turn_metrics(raw)
 
         # StreamState carry: seed each conversation's first-in-snapshot
         # latency from the previous snapshot's last turn. The state read
         # is delta-sized too: only the snapshot's own conversations are
         # resolved down the chain.
-        prev_state = (
-            None
-            if prev_version == 0
-            else self._resolve_chain(
+        with self._phase(f"{tag} state read"):
+            prev_state = self._resolve_chain(
                 self._state_base(),
                 prev_version,
                 ["conv_id"],
                 touched=raw.select("conv_id").distinct(),
+                healed_through=ht,
             )
-        )
         if prev_state is not None:
+            prev_state = prev_state.persist()
             delta_m = delta_m.join(prev_state, "conv_id", "left").withColumn(
                 "latency_us",
                 F.coalesce(
@@ -370,35 +431,21 @@ class IncrementalRollup:
             ).drop("last_turn_idx", "last_ts_us")
         delta_m = delta_m.persist()
 
-        # per-conversation span of this delta: min turn (out-of-order
-        # detection) and max (turn, ts) (state advance) in one aggregate
-        delta_span = delta_m.groupBy("conv_id").agg(
-            F.min("turn_idx").alias("_min_turn"),
-            F.max(F.struct("turn_idx", "ts_us")).alias("_new"),
-        ).persist()
-
-        # out-of-order detection (heal trigger, module doc): arriving
+        # conv-state delta: ONLY the touched conversations' new last turn,
+        # plus the out-of-order flag (heal trigger, module doc): arriving
         # turns at or before the carried last_turn_idx mean this
         # conversation's derived latencies are provisional until heal()
-        if prev_state is not None:
-            ooo = (
-                delta_span.join(prev_state, "conv_id")
-                .filter(F.col("_min_turn") <= F.col("last_turn_idx"))
-                .select("conv_id")
-            )
-            if ooo.limit(1).count() > 0:
-                ooo.write.mode("overwrite").parquet(
-                    self._delta_path(self._pending_base(), snap_id)
-                )
-
-        # conv-state delta: ONLY the touched conversations' new last turn
+        span = delta_m.groupBy("conv_id").agg(
+            F.min("turn_idx").alias("_min_turn"),
+            F.max(F.struct("turn_idx", "ts_us")).alias("_l"),
+        )
         if prev_state is None:
-            new_state = delta_span.select("conv_id", F.col("_new").alias("_l"))
+            conv = span.withColumn("_ooo", F.lit(False))
         else:
-            new_state = delta_span.join(prev_state, "conv_id", "left").select(
+            conv = span.join(prev_state, "conv_id", "left").select(
                 "conv_id",
                 F.greatest(
-                    F.col("_new"),
+                    F.col("_l"),
                     F.when(
                         F.col("last_turn_idx").isNotNull(),
                         F.struct(
@@ -407,19 +454,31 @@ class IncrementalRollup:
                         ),
                     ),
                 ).alias("_l"),
+                F.coalesce(
+                    F.col("_min_turn") <= F.col("last_turn_idx"), F.lit(False)
+                ).alias("_ooo"),
             )
-        new_state.select(
+        conv = conv.select(
             "conv_id",
             F.col("_l.turn_idx").alias("last_turn_idx"),
             F.col("_l.ts_us").alias("last_ts_us"),
-        ).write.mode("overwrite").parquet(
-            self._delta_path(self._state_base(), snap_id)
-        )
+            "_ooo",
+        ).persist()
+        ooo_obs = Observation()
+        with self._phase(f"{tag} state"):
+            conv.observe(ooo_obs, F.count_if("_ooo").alias("ooo")).drop(
+                "_ooo"
+            ).write.mode("overwrite").parquet(
+                self._delta_path(self._state_base(), snap_id)
+            )
+        (ooo_convs,) = _observed(ooo_obs, "ooo")
+        if ooo_convs:
+            with self._phase(f"{tag} heal pending"):
+                conv.filter("_ooo").select("conv_id").write.mode(
+                    "overwrite"
+                ).parquet(self._delta_path(self._pending_base(), snap_id))
 
-        lineage_files = sorted(
-            f for f in os.listdir(snap_path) if f.endswith(".parquet")
-        )
-        metric_rows = []
+        tier_walls = []
         for tier in TIERS:
             delta = rollup_from_turns(delta_m, tier)
             # late data older than the committed retention bound is
@@ -430,72 +489,90 @@ class IncrementalRollup:
             if lo is not None:
                 delta = delta.filter(F.col("window_start_us") >= F.lit(lo))
             delta = delta.persist()
-            # previous values of ONLY the touched windows — a semi-join
-            # down the chain, never a full-table read (class doc)
-            prev_rows = self._resolve_chain(
-                self._tier_base(tier),
-                prev_version,
-                _WINDOW_KEYS,
-                touched=delta.select(*_WINDOW_KEYS),
-                bound_us=state["retention_bounds"].get(tier),
+            # rollup-count totals: previous committed totals + what the
+            # MERGE write itself observed — windows and points it wrote
+            # minus those of the previous rows it replaced. No re-read.
+            prev_obs, out_obs = Observation(), Observation()
+            with self._phase(f"{tag} {tier} merge"):
+                # previous values of ONLY the touched windows — a
+                # semi-join down the chain, never a full-table read
+                prev_rows = self._resolve_chain(
+                    self._tier_base(tier),
+                    prev_version,
+                    _WINDOW_KEYS,
+                    touched=delta.select(*_WINDOW_KEYS),
+                    bound_us=lo,
+                    healed_through=ht,
+                )
+                lower = delta
+                if prev_rows is not None:
+                    lower = _observe_totals(prev_rows, prev_obs).unionByName(delta)
+                merged = _observe_totals(rollup_from_tier(lower, tier), out_obs)
+                merged.write.mode("overwrite").parquet(
+                    self._delta_path(self._tier_base(tier), snap_id)
+                )
+            new_w, new_p = _observed(out_obs, "w", "p")
+            # every previous row keys a row of the MERGE output, so a MERGE
+            # that wrote nothing replaced nothing (its delta was empty, and
+            # the optimiser may have pruned the empty semi-join together
+            # with its observation)
+            prev_w, prev_p = (
+                _observed(prev_obs, "w", "p")
+                if prev_rows is not None and new_w
+                else (0, 0)
             )
-            merged = rollup_from_tier(
-                delta if prev_rows is None else prev_rows.unionByName(delta), tier
-            )
-            out = self._delta_path(self._tier_base(tier), snap_id)
-            merged.write.mode("overwrite").parquet(out)
-
-            # rollup-count totals: previous committed totals + delta-sized
-            # aggregates — NEVER an O(table) rescan. New windows = touched
-            # minus previously-existing touched; new points = merged sum
-            # minus previous touched sum.
-            def _stats(df):
-                if df is None:
-                    return 0, 0
-                r = df.agg(
-                    F.count(F.lit(1)).alias("w"),
-                    F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
-                ).collect()[0]
-                return int(r["w"]), int(r["p"])
-
-            prev_w, prev_p = _stats(prev_rows)
-            new_w, new_p = _stats(self.spark.read.parquet(out))
             tot = state["totals"].setdefault(tier, {"n_windows": 0, "n_points": 0})
             tot["n_windows"] += new_w - prev_w
             tot["n_points"] += new_p - prev_p
             delta.unpersist()
-            metric_rows.append(
+            tier_walls.append((tier, time.time() - t0))
+        for tier in self.pack_tiers:
+            with self._phase(f"{tag} pack {tier}"):
+                self._update_packed(state, snap_id, delta_m, tier)
+        conv.unpersist()
+        delta_m.unpersist()
+        if prev_state is not None:
+            prev_state.unpersist()
+
+        # lineage: what the commit did, from driver-side facts only
+        lineage = ",".join(
+            sorted(f for f in os.listdir(snap_path) if f.endswith(".parquet"))
+        )
+        chain_len = self.chain_length({**state, "version": snap_id})
+        metrics_df = self.spark.createDataFrame(
+            [
                 (
                     state["run_id"],
                     snap_id,
                     tier,
-                    int(tot["n_windows"]),
-                    int(tot["n_points"]),
-                    ",".join(lineage_files),
-                    float(time.time() - t0),
+                    int(state["totals"][tier]["n_windows"]),
+                    int(state["totals"][tier]["n_points"]),
+                    lineage,
+                    float(wall),
+                    ooo_convs,
+                    chain_len,
                 )
-            )
-        metrics_df = self.spark.createDataFrame(
-            metric_rows,
+                for tier, wall in tier_walls
+            ],
             "run_id string, snapshot_id int, tier string, n_windows long,"
-            " n_points long, lineage string, wall_s double",
+            " n_points long, lineage string, wall_s double, ooo_convs long,"
+            " chain_len int",
         )
         # keyed-by-snapshot OVERWRITE, not a blind append: a crash between
         # this write and the checkpoint commit makes the rerun rewrite the
         # same directory instead of double-appending the snapshot's rows —
         # metrics share the tier tables' replay-idempotence guarantee
-        metrics_df.write.mode("overwrite").parquet(
-            os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
-        )
-        for tier in self.pack_tiers:
-            self._update_packed(prev_version, snap_id, delta_m, tier)
-        delta_span.unpersist()
-        delta_m.unpersist()
+        with self._phase(f"{tag} metrics"):
+            metrics_df.write.mode("overwrite").parquet(
+                os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
+            )
 
     def _update_packed(
-        self, prev_version: int, snap_id: int, delta_m: DataFrame, tier: str
+        self, state: dict, snap_id: int, delta_m: DataFrame, tier: str
     ) -> None:
-        """Re-encode only the windows the delta touches (class doc)."""
+        """Re-encode only the windows the delta touches (class doc).
+        ``state`` is the checkpoint the commit holds (not yet advanced to
+        ``snap_id``)."""
         from ..operators.pack import pack_tier, unpack_tier
 
         pt_cols = ["conv_id", "turn_idx", "ts_us", "latency_us", "token_count"]
@@ -507,7 +584,7 @@ class IncrementalRollup:
             F.col("token_count").cast("double").alias("token_count"),
         )
         # same ingest-time retention drop as the aggregate path
-        lo = self._read_ckpt()["retention_bounds"].get(tier)
+        lo = state["retention_bounds"].get(tier)
         if lo is not None:
             delta_pts = delta_pts.filter(
                 window_start_col(F.col("ts_us"), tier) >= F.lit(lo)
@@ -516,35 +593,34 @@ class IncrementalRollup:
             "conv_id",
             window_start_col(F.col("ts_us"), tier).alias("window_start_us"),
         ).distinct()
-        # chain read pruned to the touched CONVERSATIONS at each delta file
-        # (semi-join below the latest-wins window, so parquet row-group
-        # stats prune unread convs): all windows of a touched conversation
+        # chain read pruned to the touched CONVERSATIONS (semi-join below
+        # the latest-wins window): all windows of a touched conversation
         # are needed to restore old points' turn_idx from cumulative
         # n_points — a metadata scan; only the touched windows' payloads
         # are decoded below
         prev = self._resolve_chain(
             self._packed_base(tier),
-            prev_version,
+            state["version"],
             _WINDOW_KEYS,
             touched=touched.select("conv_id").distinct(),
             touched_on=["conv_id"],
             bound_us=lo,
-        ) if prev_version > 0 else None
+            healed_through=state["healed_through"],
+        )
         if prev is None:
             pts = delta_pts
         else:
-            prev_conv = prev
             woff = (
                 Window.partitionBy("conv_id")
                 .orderBy("window_start_us")
                 .rowsBetween(Window.unboundedPreceding, -1)
             )
-            offsets = prev_conv.select(
+            offsets = prev.select(
                 "conv_id",
                 "window_start_us",
                 F.coalesce(F.sum("n_points").over(woff), F.lit(0)).alias("_off"),
             )
-            old_touched = prev_conv.join(
+            old_touched = prev.join(
                 touched, ["conv_id", "window_start_us"], "left_semi"
             )
             old_pts = (
@@ -611,23 +687,26 @@ class IncrementalRollup:
         )
         if not pend_dirs:
             return 0
-        convs = (
-            reduce(
-                DataFrame.unionByName,
-                [self.spark.read.parquet(p) for p in pend_dirs],
+        tag = f"heal d{v:08d}"
+        with self._phase(f"{tag} convs"):
+            convs = (
+                reduce(
+                    DataFrame.unionByName,
+                    [self.spark.read.parquet(p) for p in pend_dirs],
+                )
+                .select("conv_id")
+                .distinct()
+                .persist()
             )
-            .select("conv_id")
-            .distinct()
-            .persist()
-        )
-        n_convs = convs.count()
+            n_convs = convs.count()
         if n_convs:
             snap_paths = [
                 p for sid, p in list_snapshots(self.input_dir) if sid <= v
             ]
-            raw = self.spark.read.parquet(*snap_paths).join(
-                convs, "conv_id", "left_semi"
-            )
+            with self._phase(f"{tag} read"):
+                raw = self.spark.read.parquet(*snap_paths).join(
+                    convs, "conv_id", "left_semi"
+                )
             healed_m = derive_turn_metrics(raw).persist()
             for tier in TIERS:
                 rows = rollup_from_turns(healed_m, tier)
@@ -636,9 +715,10 @@ class IncrementalRollup:
                 lo = state["retention_bounds"].get(tier)
                 if lo is not None:
                     rows = rows.filter(F.col("window_start_us") >= F.lit(lo))
-                rows.write.mode("overwrite").parquet(
-                    self._delta_path(self._tier_base(tier), v, heal=True)
-                )
+                with self._phase(f"{tag} {tier}"):
+                    rows.write.mode("overwrite").parquet(
+                        self._delta_path(self._tier_base(tier), v, heal=True)
+                    )
             from ..operators.pack import pack_tier
 
             for tier in self.pack_tiers:
@@ -646,18 +726,20 @@ class IncrementalRollup:
                 lo = state["retention_bounds"].get(tier)
                 if lo is not None:
                     packed = packed.filter(F.col("window_start_us") >= F.lit(lo))
-                packed.write.mode("overwrite").parquet(
-                    self._delta_path(self._packed_base(tier), v, heal=True)
+                with self._phase(f"{tag} pack {tier}"):
+                    packed.write.mode("overwrite").parquet(
+                        self._delta_path(self._packed_base(tier), v, heal=True)
+                    )
+            with self._phase(f"{tag} state"):
+                healed_m.groupBy("conv_id").agg(
+                    F.max(F.struct("turn_idx", "ts_us")).alias("_l")
+                ).select(
+                    "conv_id",
+                    F.col("_l.turn_idx").alias("last_turn_idx"),
+                    F.col("_l.ts_us").alias("last_ts_us"),
+                ).write.mode("overwrite").parquet(
+                    self._delta_path(self._state_base(), v, heal=True)
                 )
-            healed_m.groupBy("conv_id").agg(
-                F.max(F.struct("turn_idx", "ts_us")).alias("_l")
-            ).select(
-                "conv_id",
-                F.col("_l.turn_idx").alias("last_turn_idx"),
-                F.col("_l.ts_us").alias("last_ts_us"),
-            ).write.mode("overwrite").parquet(
-                self._delta_path(self._state_base(), v, heal=True)
-            )
             healed_m.unpersist()
         convs.unpersist()
         state["healed_through"] = v
@@ -688,21 +770,23 @@ class IncrementalRollup:
         reclaimed later by ``compact()``. Returns the accounting rows."""
         state = self._maybe_recover(self._read_ckpt())
         v = state["version"]
-        tiers = {
-            t: df
-            for t in TIERS
-            if (df := self.tier(t, v)) is not None
-        }
-        sweep = retention_sweep(tiers, now_us, horizons) if tiers else None
-        rows = list(sweep.collect()) if sweep is not None else []
+        with self._phase("retention sweep"):
+            tiers = {
+                t: df
+                for t in TIERS
+                if (df := self.tier(t, v)) is not None
+            }
+            sweep = retention_sweep(tiers, now_us, horizons) if tiers else None
+            rows = list(sweep.collect()) if sweep is not None else []
         # packed-tier accounting: same bound as the tier of the same name
         # (windows are the unit of eviction for both representations)
         packed_rows = []
         for t in self.pack_tiers:
-            pdf = self.packed_tier(t, v)
-            if pdf is None:
-                continue
-            pr = retention_sweep({t: pdf}, now_us, horizons).collect()[0]
+            with self._phase(f"retention sweep packed {t}"):
+                pdf = self.packed_tier(t, v)
+                if pdf is None:
+                    continue
+                pr = retention_sweep({t: pdf}, now_us, horizons).collect()[0]
             packed_rows.append((f"packed:{t}", pr))
         for r in rows:
             tier = r["tier"]
@@ -730,9 +814,10 @@ class IncrementalRollup:
             "swept_at_us long, tier string, n_kept long, n_evicted long,"
             " pts_kept long, pts_evicted long",
         )
-        acct.write.mode("overwrite").parquet(
-            os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}")
-        )
+        with self._phase("retention accounting"):
+            acct.write.mode("overwrite").parquet(
+                os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}")
+            )
         return acct
 
     def serve(self, now_us: int, horizons=None) -> DataFrame:
@@ -849,11 +934,12 @@ class IncrementalRollup:
             dirs = self._chain_dirs(base, v, state["healed_through"])
             if not dirs:
                 continue
-            resolved = self._resolve_chain(
-                base, v, keys, bound_us=bound, healed_through=state["healed_through"]
-            )
             tmp = os.path.join(base, "_compact_tmp")
-            resolved.write.mode("overwrite").parquet(tmp)
+            with self._phase(f"compact {os.path.relpath(base, self.work_dir)}"):
+                self._resolve_chain(
+                    base, v, keys, bound_us=bound,
+                    healed_through=state["healed_through"],
+                ).write.mode("overwrite").parquet(tmp)
             staged += 1
         if staged == 0:
             return

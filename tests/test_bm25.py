@@ -86,3 +86,29 @@ def test_query_side_is_broadcast(spark):
     )
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_null_text_counts_zero_tokens(spark):
+    """A null text is a document with no tokens, exactly like '': same
+    corpus length (avgdl) in bm25 and n_tokens 0 in text_profile, never
+    F.size(NULL) = -1."""
+    from sac2mseed_spark.functions.text import text_profile
+
+    texts = ["apple apple banana", None, "banana cherry", "cherry cherry"]
+    q = _queries(spark, [(100, "apple"), (101, "cherry")])
+    null_docs = _docs(spark, texts)
+    empty_docs = _docs(spark, ["" if t is None else t for t in texts])
+    assert sorted(map(tuple, bm25_retrieval(null_docs, q).collect())) == sorted(
+        map(tuple, bm25_retrieval(empty_docs, q).collect())
+    )
+    # only doc0 has 'apple': tf=2 df=1 dl=3, corpus T=7 over N=4 docs
+    top = bm25_retrieval(null_docs, q).filter("query_id = 100").collect()
+    assert top[0]["score"] == round(_score(2, 1, 3, 7, 4), 6)
+    n_tok = {
+        r["doc_id"]: r["n_tokens"]
+        for r in text_profile(null_docs).collect()
+    }
+    assert n_tok == {
+        r["doc_id"]: r["n_tokens"] for r in text_profile(empty_docs).collect()
+    }
+    assert n_tok[1] == 0

@@ -172,3 +172,61 @@ def test_heal_crash_replay(spark, ooo_snapshots, tmp_path):
     assert _packed_as_dict(inc.packed_tier("1m")) == _packed_as_dict(
         pack_tier(full_m, "1m")
     )
+
+
+def test_pending_only_for_ooo_snapshot_and_totals_match(spark, ooo_snapshots, tmp_path):
+    """``heal_pending/d{n}`` is written only for an out-of-order snapshot
+    and holds exactly the conversations whose first new turn is <= the
+    carried last turn; the metrics rows record that count, and the
+    observed running totals equal a direct scan at every version, before
+    and after heal."""
+    src, full_t = ooo_snapshots
+    work = str(tmp_path / "w4")
+    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+    assert inc.process_pending() == 4
+
+    # expected flags, from the raw snapshots alone
+    want = {}
+    carried = {}  # conv_id -> last turn_idx of the snapshots so far
+    for i in range(1, len(OOO_BOUNDS) + 1):
+        span = {
+            r["conv_id"]: (r["lo"], r["hi"])
+            for r in spark.read.parquet(os.path.join(src, f"snap_{i:08d}"))
+            .groupBy("conv_id")
+            .agg(F.min("turn_idx").alias("lo"), F.max("turn_idx").alias("hi"))
+            .collect()
+        }
+        flagged = {
+            c for c, (lo, _) in span.items() if c in carried and lo <= carried[c]
+        }
+        if flagged:
+            want[f"d{i:08d}"] = flagged
+        for c, (_, hi) in span.items():
+            carried[c] = max(carried.get(c, -1), hi)
+    assert list(want) == ["d00000003"]
+
+    pend = os.path.join(work, "heal_pending")
+    assert sorted(os.listdir(pend)) == list(want)
+    for name, convs in want.items():
+        got = [
+            r["conv_id"]
+            for r in spark.read.parquet(os.path.join(pend, name)).collect()
+        ]
+        assert len(got) == len(set(got)) and set(got) == convs
+
+    def check_totals():
+        rows = inc.metrics_table().collect()
+        for r in rows:
+            direct = inc.tier(r["tier"], version=r["snapshot_id"]).agg(
+                F.count(F.lit(1)).alias("w"), F.sum("n_points").alias("p")
+            ).collect()[0]
+            assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"])
+        return rows
+
+    rows = check_totals()
+    assert {(r["snapshot_id"], r["ooo_convs"]) for r in rows} == {
+        (i, len(want.get(f"d{i:08d}", ()))) for i in range(1, 5)
+    }
+    assert inc.heal() == len(want["d00000003"])
+    assert not os.listdir(pend)
+    check_totals()

@@ -6,11 +6,14 @@ and cross-record StreamState (libmseed.h:458-465) at snapshot granularity.
 
 import json
 import os
+import shutil
+import uuid
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sac2mseed_spark.functions.metrics import derive_turn_metrics
+from sac2mseed_spark.functions.metrics import derive_turn_metrics, ts_us_col
 from sac2mseed_spark.operators.rollup import rollup_from_turns
 from sac2mseed_spark.plans.pipeline import IncrementalRollup, list_snapshots
 from sac2mseed_spark.sources.transcripts import generate_transcripts
@@ -185,3 +188,130 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
             assert n_got < n_full, (c["base"], n_got, n_full)
             conv_checked += 1
     assert window_checked >= 1 and conv_checked >= 1
+
+
+def _stage(src, staged, snap_id):
+    """Make one snapshot of ``src`` visible in the ``staged`` input dir."""
+    name = f"snap_{snap_id:08d}"
+    shutil.copytree(os.path.join(src, name), os.path.join(staged, name))
+
+
+def _commit_jobs(spark, inc):
+    """Process the one pending snapshot; return the Spark jobs it ran,
+    counted under a job group the way perfbench's JobCounter does."""
+    sc = spark.sparkContext
+    gid = f"test-commit-{uuid.uuid4()}"
+    sc.setJobGroup(gid, "commit")
+    try:
+        assert inc.process_pending() == 1
+    finally:
+        sc.setJobGroup("test-idle", "idle")
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _assert_totals_equal_scan(inc, snap_id):
+    """The metrics rows of ``snap_id`` carry the running totals the commit
+    observed; they must equal a direct scan of each tier at that version."""
+    rows = {
+        r["tier"]: r
+        for r in inc.metrics_table().collect()
+        if r["snapshot_id"] == snap_id
+    }
+    assert set(rows) == {"1m", "1h", "1d"}
+    for tier, r in rows.items():
+        direct = inc.tier(tier, version=snap_id).agg(
+            F.count(F.lit(1)).alias("w"),
+            F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
+        ).collect()[0]
+        assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"]), (
+            snap_id, tier
+        )
+    return rows
+
+
+def test_commit_jobs_do_not_grow_with_chain(spark, tmp_path):
+    """An in-order commit resolves every chain in one scan and keeps its
+    running totals from observations, so its Spark jobs do not rise with
+    the chain length (no compaction: the chain grows by one per commit)."""
+    t = generate_transcripts(spark, "t_small", seed=42)
+    src = str(tmp_path / "src")
+    for i, (lo, hi) in enumerate([(0, 15), (15, 30), (30, 45), (45, 10_000)], 1):
+        t.filter((F.col("turn_idx") >= lo) & (F.col("turn_idx") < hi)).write.parquet(
+            os.path.join(src, f"snap_{i:08d}")
+        )
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"), max_chain=None)
+    jobs = {}
+    for snap_id in (1, 2, 3, 4):
+        _stage(src, staged, snap_id)
+        jobs[snap_id] = _commit_jobs(spark, inc)
+    chain = {
+        r["snapshot_id"]: r["chain_len"] for r in inc.metrics_table().collect()
+    }
+    assert chain == {1: 1, 2: 2, 3: 3, 4: 4}
+    assert {r["ooo_convs"] for r in inc.metrics_table().collect()} == {0}
+    assert jobs[4] <= jobs[2], jobs
+
+
+def test_observed_totals_existing_and_new_windows(spark, tmp_path):
+    """Snapshot 2 holds only turns that fall in windows snapshot 1 already
+    wrote (0 new windows in every tier); snapshot 3 holds only new
+    conversations (no previous rows at all). The observed running totals
+    equal a direct scan at every version."""
+    t = generate_transcripts(spark, "t_small", seed=42).withColumn(
+        "_m", F.floor(ts_us_col("ts") / 60_000_000)
+    )
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    t = t.withColumn("_last", F.lead("turn_idx").over(w).isNull()).withColumn(
+        "_same_min", F.lag("_m").over(w) == F.col("_m")
+    )
+    convs = sorted(r["conv_id"] for r in t.select("conv_id").distinct().collect())
+    late = convs[len(convs) // 2:]
+    early = t.filter(~F.col("conv_id").isin(late))
+    tail = F.col("_last") & F.coalesce(F.col("_same_min"), F.lit(False))
+    parts = [
+        early.filter(~tail),
+        early.filter(tail),
+        t.filter(F.col("conv_id").isin(late)),
+    ]
+    assert parts[1].count() > 0, "fixture has no tail turn sharing a 1m window"
+    src = str(tmp_path / "src")
+    for i, part in enumerate(parts, 1):
+        part.drop("_m", "_last", "_same_min").write.parquet(
+            os.path.join(src, f"snap_{i:08d}")
+        )
+    inc = IncrementalRollup(spark, src, str(tmp_path / "w"))
+    assert inc.process_pending() == 3
+    rows = {v: _assert_totals_equal_scan(inc, v) for v in (1, 2, 3)}
+    n_tail = parts[1].count()
+    for tier in ("1m", "1h", "1d"):
+        assert rows[2][tier]["n_windows"] == rows[1][tier]["n_windows"]
+        assert rows[2][tier]["n_points"] == rows[1][tier]["n_points"] + n_tail
+    full_m = derive_turn_metrics(t.drop("_m", "_last", "_same_min"))
+    assert _tiers_as_dict(inc.tier("1m")) == _tiers_as_dict(
+        rollup_from_turns(full_m, "1m")
+    )
+
+
+def test_observed_totals_snapshot_behind_retention_bound(spark, snapshots, tmp_path):
+    """A snapshot wholly behind a committed retention bound: its delta and
+    its MERGE are empty in every tier, yet the commit still observes its
+    totals (0 change) and they equal a direct scan."""
+    src, full_t = snapshots
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"))
+    _stage(src, staged, 1)
+    assert inc.process_pending() == 1
+    _assert_totals_equal_scan(inc, 1)
+    hi_us = full_t.agg(F.max(ts_us_col("ts"))).collect()[0][0]
+    day = 86_400_000_000
+    # every tier's bound lies past the newest turn: all windows expire
+    inc.apply_retention(hi_us + 30 * day, {"1m": day, "1h": day, "1d": day})
+    _stage(src, staged, 2)
+    assert inc.process_pending() == 1
+    rows = _assert_totals_equal_scan(inc, 2)
+    assert {(r["n_windows"], r["n_points"]) for r in rows.values()} == {(0, 0)}
