@@ -9,8 +9,8 @@ of flat numpy gathers/shifts over every still-active chunk. Chunks are
 processed in descending point-count order so the active set is always a
 prefix and per-iteration work is proportional to live chunks. Total cost is
 O(total_points) vector element-ops — the read-side twin of
-encode_chunks_raw, replacing the per-point interpreted loop of
-decode_fast.py (the reference's read path is *bigger* than its write path:
+encode_chunks_raw, with no per-point interpreted loop (the
+reference's read path is *bigger* than its write path:
 /root/reference/libmseed/unpackdata.c:35-564, 530 LoC, and 24 of its 31
 golden tests are read tests — the decode side must be first-class).
 

@@ -231,7 +231,3 @@ def decode_blob(blob: bytes, expect_xn: int | None = None):
 
 def float_to_bits(v: float) -> int:
     return struct.unpack("<Q", struct.pack("<d", v))[0]
-
-
-def bits_to_float(b: int) -> float:
-    return struct.unpack("<d", struct.pack("<Q", b))[0]

@@ -315,7 +315,3 @@ def encode_chunks_vec(
 
 def floats_to_bits(a: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(a, dtype=np.float64).view(_U64)
-
-
-def bits_to_floats(a: np.ndarray) -> np.ndarray:
-    return np.ascontiguousarray(a, dtype=_U64).view(np.float64)

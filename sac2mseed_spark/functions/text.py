@@ -37,48 +37,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(ws_tokens(text)).cast("long")
 
 
-def bpe_token_count(text: Column | str) -> Column:
-    """Count of BPE-ish subword tokens (regexp occurrences)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(c, F.lit(BPE_TOKEN_RE)).cast("long")
-
-
-def stopword_ratio(text: Column | str) -> Column:
-    toks = ws_tokens(text)
-    sw = F.size(
-        F.filter(toks, lambda x: F.lower(x).isin(EN_STOPWORDS))
-    )
-    return F.when(F.size(toks) > 0, sw / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    n_punct = F.regexp_count(c, F.lit("[^A-Za-z0-9\\s]"))
-    return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite quality in [0,1]: length factor x (1 - punct) x
-    (stopword presence factor). Same closed form in the oracle SQL."""
-    c = F.col(text) if isinstance(text, str) else text
-    len_factor = F.least(F.length(c) / F.lit(500.0), F.lit(1.0))
-    return F.round(
-        len_factor * (1.0 - punct_ratio(c)) * (0.5 + 0.5 * stopword_ratio(c)), 6
-    )
-
-
-def lang_id(text: Column | str, threshold: float = 0.05) -> Column:
-    """n-gram-free language heuristic: English iff stopword ratio exceeds
-    the threshold; short texts are 'und'. A real model slots in behind the
-    same column contract."""
-    toks = ws_tokens(text)
-    return (
-        F.when(F.size(toks) < 3, F.lit("und"))
-        .when(stopword_ratio(text) >= threshold, F.lit("en"))
-        .otherwise(F.lit("xx"))
-    )
-
-
 def shingles(text: Column | str, k: int = 3) -> Column:
     """k-word shingles as strings; texts with < k tokens yield the whole
     trimmed text as a single shingle (so short docs still participate).
@@ -169,8 +127,9 @@ def text_profile(docs, id_col: str = "doc_id", text_col: str = "text"):
     scan shape (the old explode + groupBy(doc) re-aggregated what each
     row already knows about itself; guide §2.4: remove shuffles outright).
 
-    Values are identical to the scalar helpers above (integer counts, same
-    float expression tree); this is the shape that survives a 100 TB scan.
+    Every column is a closed form the oracle SQL repeats (integer counts,
+    one float expression tree each); this is the shape that survives a
+    100 TB scan.
     """
     from pyspark.sql import DataFrame  # noqa: F401
 

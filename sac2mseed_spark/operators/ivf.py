@@ -25,10 +25,8 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from .similarity import _list_matrix, _PAIR_SCHEMA, _rank_topk, _seq_dot
 
@@ -146,56 +144,6 @@ def _nearest(V: np.ndarray, M: np.ndarray, cnorm: np.ndarray, n_assign: int):
         acc += V[:, d, None] * M[None, :, d]
     sim = acc / (np.sqrt(_seq_dot(V, V))[:, None] * cnorm[None, :])
     return np.argsort(-sim, axis=1, kind="stable")[:, :n_assign]
-
-
-def _assign_kernel(bc, n_assign: int, vec_type, expect_dims: int | None):
-    """mapInPandas kernel: nearest n_assign centroids per vector (ties →
-    lowest cid, via a stable sort over the cid-ascending centroid order)."""
-    out_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("v", vec_type),
-            StructField("cid", LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, M, cnorm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            if expect_dims is not None and V.shape[1] != expect_dims:
-                raise ValueError(f"embedding dims {V.shape[1]} != expected {expect_dims}")
-            # stable argsort of -sim keeps cid-ascending order on ties
-            top = _nearest(V, M, cnorm, n_assign)
-            ids = pdf["id"].to_numpy(np.int64)
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(ids, n_assign),
-                    "v": pdf["v"].to_numpy().repeat(n_assign),
-                    "cid": cids[top].ravel(),
-                }
-            )
-
-    return run, out_schema
-
-
-def assign_centroids(
-    df: DataFrame,
-    bc,
-    n_assign: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    expect_dims: int | None = None,
-) -> DataFrame:
-    """(id, v, cid) x n_assign: nearest-centroid assignment (the IVF index
-    build for the corpus; the probe-list build for queries)."""
-    vec_type = df.schema[vec_col].dataType
-    run, schema = _assign_kernel(bc, n_assign, vec_type, expect_dims)
-    return df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(run, schema=schema)
 
 
 def knn_ivf(

@@ -46,15 +46,20 @@ def window_start_col(ts_us_col, tier: str):
     return (F.floor(ts_us_col / w) * w).cast("long")
 
 
-def _aggregate(df: DataFrame, window_start, aggs, tier: str) -> DataFrame:
+def _aggregate(df: DataFrame, window_start, aggs, tier: str | None) -> DataFrame:
     """One hash-aggregate (partial map-side combine + final) on
-    (conv_id, window_start) — no window functions, no sort. Emits
-    conv_id, window_start_us, *TIER_AGG_COLS, tier."""
-    return (
-        df.groupBy("conv_id", window_start.alias("window_start_us"))
-        .agg(*aggs)
-        .withColumn("tier", F.lit(tier))
-    )
+    (conv_id, window_start) into ``tier`` — no window functions, no sort.
+    With ``tier`` None, ``df``'s own tier column joins the key, so rows of
+    several tiers aggregate in one pass. Emits conv_id, window_start_us,
+    *TIER_AGG_COLS, tier."""
+    keys = [F.col("conv_id"), window_start.alias("window_start_us")]
+    if tier is None:
+        return (
+            df.groupBy(*keys, "tier")
+            .agg(*aggs)
+            .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
+        )
+    return df.groupBy(*keys).agg(*aggs).withColumn("tier", F.lit(tier))
 
 
 def _from_turns(metrics: DataFrame, window_start, tier: str) -> DataFrame:
@@ -67,15 +72,23 @@ def rollup_from_turns(metrics: DataFrame, tier: str) -> DataFrame:
     return _from_turns(metrics, window_start_col(F.col("ts_us"), tier), tier)
 
 
-def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
-    """Re-aggregate tier rows into ``tier`` (integer-exact). ``lower`` may
-    already be at ``tier`` — floor(ws / w) * w is the identity on aligned
-    window starts — which makes this the incremental MERGE of
-    (previous rows ∪ delta rows) as well as the cascade step."""
+def _merge(rows: DataFrame, window_start, tier: str | None) -> DataFrame:
     aggs = [merge(c).alias(c) for c, _, merge in TIER_STATS]
-    return _aggregate(
-        lower, window_start_col(F.col("window_start_us"), tier), aggs, tier
-    )
+    return _aggregate(rows, window_start, aggs, tier)
+
+
+def merge_tiers(rows: DataFrame) -> DataFrame:
+    """The incremental MERGE: re-aggregate tier rows of ANY tiers per
+    (conv_id, window_start_us, tier) in one pass (integer-exact) — the
+    previous rows ∪ delta rows of every tier at once."""
+    return _merge(rows, F.col("window_start_us"), None)
+
+
+def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
+    """Re-aggregate tier rows into ``tier`` (integer-exact): the cascade
+    step, the same merge as ``merge_tiers`` with the window start floored
+    to ``tier`` (floor(ws / w) * w is the identity on aligned starts)."""
+    return _merge(lower, window_start_col(F.col("window_start_us"), tier), tier)
 
 
 def rollup_cascade(metrics: DataFrame) -> dict[str, DataFrame]:
@@ -90,19 +103,6 @@ def rollup_cascade(metrics: DataFrame) -> dict[str, DataFrame]:
     t1h = rollup_from_tier(t1m, "1h")
     t1d = rollup_from_tier(t1h, "1d")
     return {"1m": t1m, "1h": t1h, "1d": t1d}
-
-
-def derived_point_cols(df: DataFrame, tier: str) -> DataFrame:
-    """Attach read-time derived metrics (float64, single division each)."""
-    secs = TIERS[tier] / 1_000_000.0
-    return df.select(
-        "*",
-        (F.col("n_points") / F.lit(secs)).alias("turn_rate"),
-        F.when(
-            F.col("n_latency") > 0, F.col("sum_latency_us") / F.col("n_latency")
-        ).alias("avg_latency_us"),
-        F.timestamp_micros(F.col("window_start_us")).alias("window_start"),
-    )
 
 
 def rollup_calendar(metrics: DataFrame, unit: str = "month") -> DataFrame:

@@ -409,6 +409,9 @@ def knn_lsh(
     qpdf = queries.select(
         F.col(id_col).cast("long").alias("query_id"), F.col(vec_col).alias("qv")
     ).toPandas()
+    if not len(qpdf):  # no query rows: np.stack needs at least one
+        scored = corpus.sparkSession.createDataFrame([], schema=_PAIR_SCHEMA)
+        return _rank_topk(scored.withColumn("sim", F.round("sim", 6)), k)
     qids = qpdf["query_id"].to_numpy(np.int64)
     Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
     qn = np.sqrt(_seq_dot(Q, Q))

@@ -5,9 +5,10 @@ snapshot subdirectories (``snap_00000001/``, ``snap_00000002/``, … each a
 parquet dir of new transcript rows — the shape an Iceberg incremental read
 between two snapshot ids yields). The engine state is:
 
-  tiers/{tier}/d{n}[h]/    MERGE-on-read delta chain per aggregate tier
-  tiers/_convstate/d{n}/   per-conversation carry state, same chain form
-  packed/{tier}/d{n}[h]/   packed-payload delta chain
+  tiers/d{n}[h]/tier={t}/  aggregate tiers: ONE MERGE-on-read delta chain,
+                           every tier in each entry (one partitioned write)
+  packed/d{n}[h]/tier={t}/ packed-payload tiers, the same form
+  state/d{n}[h]/           per-conversation carry state, the same chain form
   metrics/                 append-only rollup-count + lineage table (per
                            snapshot and tier: running totals, source files,
                            wall, out-of-order conversations, chain length)
@@ -17,9 +18,12 @@ between two snapshot ids yields). The engine state is:
 
 EVERY table family is a delta chain: snapshot n writes ONLY the rows its
 delta touches to a ``d{n}`` directory, and reads resolve
-latest-version-wins per key (aggregate tiers and packed tiers key on
-(conv_id, window_start_us); conv state keys on conv_id). A chain is
-resolved in ONE scan of all its entries, each row ranked by the name of
+latest-version-wins per key (aggregate and packed tiers key on
+(tier, conv_id, window_start_us); conv state keys on conv_id). There are
+three families whatever ``TIERS`` and ``pack_tiers`` hold, and a commit
+runs one resolve, one MERGE and one write per family. A chain is
+resolved in ONE scan of its entries (of a window-keyed chain, of the
+``tier={t}`` leaf dirs the read needs), each row ranked by the name of
 the entry directory it was read from. Per-snapshot write volume is
 therefore proportional to the delta, not the table — the
 reference merges into only the touched trace the same way
@@ -54,7 +58,8 @@ recompute (tests assert), and incremental processing resumes unchanged.
 
 Retention (downsample-and-expire): ``apply_retention`` commits per-tier
 eviction BOUNDS into the checkpoint — eviction is a pure predicate on
-window_start_us applied by every chain read, i.e. the metadata-only
+window_start_us (built once, by ``_retained``) applied by every chain
+read and every write, i.e. the metadata-only
 ``DELETE WHERE window_start_us < bound`` of operators/retention.py, with
 the sweep accounting row written to ``retention/``. No data files are
 touched until ``compact()`` reclaims the space physically.
@@ -73,13 +78,13 @@ is integer-exact-associative (operators/rollup.py contract), so replaying
 a snapshot is idempotent: the chain resolver never reads past the
 committed version, so nothing is double-counted. Rollup-count totals in
 the metrics table are maintained ARITHMETICALLY (previous committed
-totals + the windows and points written by each tier's MERGE minus those
+totals + the windows and points of each tier the MERGE wrote minus those
 of the previous rows it replaced, crash-safe inside the same checkpoint),
 never by re-scanning the table: both figures come from
 ``DataFrame.observe`` on the MERGE write itself, so a commit runs no
 bookkeeping job — its only Spark actions are its writes. Each action
-carries a job description naming its phase (``commit d00000002 1h
-merge``, ``heal d00000002 pack 1m``, ``compact tiers/1h``).
+carries a job description naming its phase (``commit d00000002 tiers
+merge``, ``heal d00000002 pack``, ``compact tiers``).
 
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
@@ -102,6 +107,7 @@ maintenance action.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import re
 import shutil
@@ -111,31 +117,70 @@ from contextlib import contextmanager
 from functools import reduce
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import TIERS
 from ..functions.metrics import derive_turn_metrics
-from ..operators.retention import retention_bound_us, retention_sweep
-from ..operators.rollup import rollup_from_tier, rollup_from_turns, window_start_col
+from ..operators.pack import pack_tier, unpack_tier
+from ..operators.retention import retention_bound_us, retention_sweep, serve_tiered
+from ..operators.rollup import merge_tiers, rollup_from_turns, window_start_col
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 # d{version}[h]: plain snapshot deltas rank before the heal delta of the
 # same version ('' < 'h' lexicographically — latest-wins reads pick heal)
 _DELTA_RE = re.compile(r"^d(\d+)(h?)$")
 
-_WINDOW_KEYS = ["conv_id", "window_start_us"]
-# chain entry of a row: the d{version:08d}[h] directory holding its file;
-# the fixed-width names sort in resolution order
-_ENTRY_RE = r"/(d[0-9]{8}h?)/[^/]+$"
+# latest-wins keys: a window-keyed family holds every tier in one chain
+_WINDOW_KEYS = ["tier", "conv_id", "window_start_us"]
+_CONV_KEYS = ["conv_id"]
+# chain entry of a row: the d{version:08d}[h] directory holding its file
+# (the fixed-width names sort in resolution order); in a window-keyed
+# family, its tier: the tier={t} leaf dir between entry and file
+_ENTRY_RE = r"/(d[0-9]{8}h?)/(?:tier=([^/]+)/)?[^/]+$"
+
+
+def _retained(bounds: dict, tier: str | None = None, ws: Column | None = None):
+    """The committed retention predicate (the metadata-only ``DELETE WHERE
+    window_start_us < bound`` per tier, module doc): a row of ``tier``
+    (default: the frame's ``tier`` column) whose window starts at ``ws``
+    (default: ``window_start_us``) is kept iff it is not behind that
+    tier's bound. Every chain read and every write applies it."""
+    tier = F.col("tier") if tier is None else F.lit(tier)
+    ws = F.col("window_start_us") if ws is None else ws
+    return reduce(
+        operator.and_,
+        [(tier != t) | (ws >= F.lit(lo)) for t, lo in bounds.items()],
+        F.lit(True),
+    )
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _write_by_tier(df: DataFrame, path: str) -> None:
+    """Write one entry of a window-keyed family: a ``tier={t}`` leaf per
+    tier with rows. An entry with no row at all gets an empty ``tier=``
+    leaf instead (no tier reads it by name), so a read of a tier without
+    rows still finds the family's columns."""
+    df.write.partitionBy("tier").mode("overwrite").parquet(path)
+    if not any(n.startswith("tier=") for n in os.listdir(path)):
+        schema = df.drop("tier").schema
+        df.sparkSession.createDataFrame([], schema).write.parquet(
+            os.path.join(path, "tier=")
+        )
 
 
 def _observe_totals(df: DataFrame, obs: Observation) -> DataFrame:
-    """``df`` with its window count and point sum observed by ``obs``."""
+    """``df`` (rows of any tiers) with each tier's window count ``w_{t}``
+    and point sum ``p_{t}`` observed by ``obs``."""
+    is_t = {t: F.col("tier") == t for t in TIERS}
+    pts = {t: F.sum(F.when(c, F.col("n_points"))) for t, c in is_t.items()}
     return df.observe(
         obs,
-        F.count(F.lit(1)).alias("w"),
-        F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
+        *[F.count_if(c).alias(f"w_{t}") for t, c in is_t.items()],
+        *[F.coalesce(p, F.lit(0)).alias(f"p_{t}") for t, p in pts.items()],
     )
 
 
@@ -231,8 +276,8 @@ class IncrementalRollup:
     @contextmanager
     def _phase(self, desc: str):
         """Describe the Spark jobs started inside as engine phase ``desc``
-        (e.g. ``commit d00000002 1h merge``). The caller's description is
-        restored afterwards; its job group is left alone."""
+        (e.g. ``commit d00000002 tiers merge``). The caller's description
+        is restored afterwards; its job group is left alone."""
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(desc)
@@ -242,23 +287,21 @@ class IncrementalRollup:
             sc.setJobDescription(prev)
 
     # -- chain layout ---------------------------------------------------
-    def _tier_base(self, tier: str) -> str:
-        return os.path.join(self.work_dir, "tiers", tier)
-
-    def _state_base(self) -> str:
-        return os.path.join(self.work_dir, "tiers", "_convstate")
-
-    def _packed_base(self, tier: str) -> str:
-        return os.path.join(self.work_dir, "packed", tier)
-
-    def _pending_base(self) -> str:
-        return os.path.join(self.work_dir, "heal_pending")
+    def _base(self, family: str) -> str:
+        """Root of ``family``: a chain (``tiers``, ``packed``, ``state``)
+        or the ``heal_pending`` flags."""
+        return os.path.join(self.work_dir, family)
 
     def _delta_path(self, base: str, version: int, heal: bool = False) -> str:
         return os.path.join(base, f"d{version:08d}" + ("h" if heal else ""))
 
-    def _packed_delta_path(self, version: int, tier: str) -> str:
-        return self._delta_path(self._packed_base(tier), version)
+    def _compact_jobs(self) -> list[tuple[str, list[str]]]:
+        """(base, latest-wins keys) of the three chained table families."""
+        return [
+            (self._base("tiers"), _WINDOW_KEYS),
+            (self._base("packed"), _WINDOW_KEYS),
+            (self._base("state"), _CONV_KEYS),
+        ]
 
     def _chain_dirs(
         self, base: str, version: int, healed_through: int | None = None
@@ -293,9 +336,10 @@ class IncrementalRollup:
         version: int,
         keys: list[str],
         touched: DataFrame | None = None,
-        bound_us: int | None = None,
+        bounds: dict | None = None,
         healed_through: int | None = None,
         touched_on: list[str] | None = None,
+        tiers: tuple[str, ...] | None = None,
     ) -> DataFrame | None:
         """MERGE-on-read: one scan of the chain <= version, latest entry
         wins per key. Each row is ranked by the name of the entry
@@ -304,20 +348,43 @@ class IncrementalRollup:
         so a heal entry ranks after its plain twin. ``touched`` (a
         DataFrame of ``touched_on`` columns, default ``keys``) semi-joins
         the scan down to the rows a merge needs, so the rows shuffled are
-        delta-sized. ``touched_on`` may be a key prefix (e.g. just conv_id
-        when the caller needs every window of the touched conversations —
-        the packed re-encode path). ``bound_us`` applies the committed
-        retention predicate (metadata-only DELETE, module doc)."""
+        delta-sized. ``touched_on`` may be a subset of the keys (e.g. just
+        conv_id when the caller needs every window of the touched
+        conversations — the packed re-encode path).
+
+        A window-keyed family (``keys`` lead with ``tier``) is read from
+        the ``tier={t}`` leaf dirs of its entries, only those of ``tiers``
+        (default: all), and its ``tier`` column, last, comes from the
+        path; if no entry holds a row of ``tiers``, the result is an empty
+        frame of the family's columns. ``bounds`` (tier -> bound) applies
+        the committed retention predicate (``_retained``)."""
         dirs = self._chain_dirs(base, version, healed_through)
+        by_tier = keys[0] == "tier"
+        empty = False
+        if by_tier:
+            leaves = [
+                (n[len("tier="):], os.path.join(d, n))
+                for d in dirs
+                for n in sorted(os.listdir(d))
+                if n.startswith("tier=")
+            ]
+            dirs = [p for t, p in leaves if tiers is None or t in tiers]
+            empty = not dirs
+            dirs = dirs or [p for _, p in leaves[:1]]
         if not dirs:
             return None
+        path = F.col("_metadata.file_path")
         df = self.spark.read.parquet(*dirs).withColumn(
-            "_e", F.regexp_extract(F.col("_metadata.file_path"), _ENTRY_RE, 1)
+            "_e", F.regexp_extract(path, _ENTRY_RE, 1)
         )
+        if by_tier:
+            df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 2))
+            if bounds:
+                df = df.filter(_retained(bounds))
+        if empty:
+            df = df.limit(0)
         if touched is not None:
             df = df.join(touched, touched_on or keys, "left_semi")
-        if bound_us is not None:
-            df = df.filter(F.col("window_start_us") >= F.lit(bound_us))
         w = Window.partitionBy(*keys).orderBy(F.desc("_e"))
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -327,38 +394,42 @@ class IncrementalRollup:
 
     # -- readers --------------------------------------------------------
     def conv_state(self, version: int) -> DataFrame | None:
-        if version == 0:
-            return None
         state = self._maybe_recover(self._read_ckpt())
         return self._resolve_chain(
-            self._state_base(),
+            self._base("state"),
             version,
-            ["conv_id"],
+            _CONV_KEYS,
             healed_through=state["healed_through"],
         )
 
     def tier(self, tier: str, version: int | None = None) -> DataFrame | None:
-        return self._read_family(self._tier_base(tier), tier, version)
+        state = self._maybe_recover(self._read_ckpt())
+        return self._read_family("tiers", tier, state, version)
 
     def packed_tier(self, tier: str, version: int | None = None) -> DataFrame | None:
-        return self._read_family(self._packed_base(tier), tier, version)
+        state = self._maybe_recover(self._read_ckpt())
+        return self._read_family("packed", tier, state, version)
 
     def _read_family(
-        self, base: str, tier: str, version: int | None
+        self, family: str, tier: str, state: dict, version: int | None = None
     ) -> DataFrame | None:
-        """A window-keyed family at ``version`` (default: committed), with
-        the tier's committed retention bound; one checkpoint read."""
-        state = self._maybe_recover(self._read_ckpt())
-        v = version if version is not None else state["version"]
-        if v == 0:
-            return None
+        """One tier of a window-keyed family at ``version`` (default: the
+        committed one of ``state``, the checkpoint the public call read),
+        with the committed retention bounds."""
         return self._resolve_chain(
-            base,
-            v,
+            self._base(family),
+            version if version is not None else state["version"],
             _WINDOW_KEYS,
-            bound_us=state["retention_bounds"].get(tier),
+            bounds=state["retention_bounds"],
             healed_through=state["healed_through"],
+            tiers=(tier,),
         )
+
+    def _read_tiers(self, state: dict) -> dict[str, DataFrame]:
+        """Every aggregate tier at the committed version of ``state`` (none
+        before the first commit)."""
+        tiers = ((t, self._read_family("tiers", t, state)) for t in TIERS)
+        return {t: df for t, df in tiers if df is not None}
 
     def metrics_table(self) -> DataFrame | None:
         p = os.path.join(self.work_dir, "metrics")
@@ -405,6 +476,7 @@ class IncrementalRollup:
         tag = f"commit d{snap_id:08d}"
         prev_version = state["version"]
         ht = state["healed_through"]
+        bounds = state["retention_bounds"]
         with self._phase(f"{tag} read"):
             raw = self.spark.read.parquet(snap_path)
         delta_m = derive_turn_metrics(raw)
@@ -415,9 +487,9 @@ class IncrementalRollup:
         # resolved down the chain.
         with self._phase(f"{tag} state read"):
             prev_state = self._resolve_chain(
-                self._state_base(),
+                self._base("state"),
                 prev_version,
-                ["conv_id"],
+                _CONV_KEYS,
                 touched=raw.select("conv_id").distinct(),
                 healed_through=ht,
             )
@@ -469,66 +541,65 @@ class IncrementalRollup:
             conv.observe(ooo_obs, F.count_if("_ooo").alias("ooo")).drop(
                 "_ooo"
             ).write.mode("overwrite").parquet(
-                self._delta_path(self._state_base(), snap_id)
+                self._delta_path(self._base("state"), snap_id)
             )
         (ooo_convs,) = _observed(ooo_obs, "ooo")
         if ooo_convs:
             with self._phase(f"{tag} heal pending"):
                 conv.filter("_ooo").select("conv_id").write.mode(
                     "overwrite"
-                ).parquet(self._delta_path(self._pending_base(), snap_id))
+                ).parquet(self._delta_path(self._base("heal_pending"), snap_id))
 
-        tier_walls = []
-        for tier in TIERS:
-            delta = rollup_from_turns(delta_m, tier)
-            # late data older than the committed retention bound is
-            # dropped at ingest — it would be invisible (read-filtered)
-            # and immediately eviction-eligible anyway, and admitting it
-            # would let the running totals drift from what reads see
-            lo = state["retention_bounds"].get(tier)
-            if lo is not None:
-                delta = delta.filter(F.col("window_start_us") >= F.lit(lo))
-            delta = delta.persist()
-            # rollup-count totals: previous committed totals + what the
-            # MERGE write itself observed — windows and points it wrote
-            # minus those of the previous rows it replaced. No re-read.
-            prev_obs, out_obs = Observation(), Observation()
-            with self._phase(f"{tag} {tier} merge"):
-                # previous values of ONLY the touched windows — a
-                # semi-join down the chain, never a full-table read
-                prev_rows = self._resolve_chain(
-                    self._tier_base(tier),
-                    prev_version,
-                    _WINDOW_KEYS,
-                    touched=delta.select(*_WINDOW_KEYS),
-                    bound_us=lo,
-                    healed_through=ht,
-                )
-                lower = delta
-                if prev_rows is not None:
-                    lower = _observe_totals(prev_rows, prev_obs).unionByName(delta)
-                merged = _observe_totals(rollup_from_tier(lower, tier), out_obs)
-                merged.write.mode("overwrite").parquet(
-                    self._delta_path(self._tier_base(tier), snap_id)
-                )
-            new_w, new_p = _observed(out_obs, "w", "p")
-            # every previous row keys a row of the MERGE output, so a MERGE
-            # that wrote nothing replaced nothing (its delta was empty, and
-            # the optimiser may have pruned the empty semi-join together
-            # with its observation)
-            prev_w, prev_p = (
-                _observed(prev_obs, "w", "p")
-                if prev_rows is not None and new_w
-                else (0, 0)
+        # every tier's delta in one frame. Late data older than the
+        # committed retention bound is dropped at ingest — it would be
+        # invisible (read-filtered) and immediately eviction-eligible
+        # anyway, and admitting it would let the running totals drift
+        # from what reads see
+        delta = (
+            _union([rollup_from_turns(delta_m, t) for t in TIERS])
+            .filter(_retained(bounds))
+            .persist()
+        )
+        # rollup-count totals: previous committed totals + what the MERGE
+        # write itself observed per tier — windows and points it wrote
+        # minus those of the previous rows it replaced. No re-read.
+        prev_obs, out_obs = Observation(), Observation()
+        with self._phase(f"{tag} tiers merge"):
+            # previous values of ONLY the touched windows — a semi-join
+            # down the chain, never a full-table read
+            prev_rows = self._resolve_chain(
+                self._base("tiers"),
+                prev_version,
+                _WINDOW_KEYS,
+                touched=delta.select(*_WINDOW_KEYS),
+                bounds=bounds,
+                healed_through=ht,
             )
-            tot = state["totals"].setdefault(tier, {"n_windows": 0, "n_points": 0})
-            tot["n_windows"] += new_w - prev_w
-            tot["n_points"] += new_p - prev_p
-            delta.unpersist()
-            tier_walls.append((tier, time.time() - t0))
-        for tier in self.pack_tiers:
-            with self._phase(f"{tag} pack {tier}"):
-                self._update_packed(state, snap_id, delta_m, tier)
+            lower = delta
+            if prev_rows is not None:
+                lower = _observe_totals(prev_rows, prev_obs).unionByName(delta)
+            _write_by_tier(
+                _observe_totals(merge_tiers(lower), out_obs),
+                self._delta_path(self._base("tiers"), snap_id),
+            )
+        wall = time.time() - t0
+        new = {t: _observed(out_obs, f"w_{t}", f"p_{t}") for t in TIERS}
+        # every previous row keys a row of the MERGE output, so a MERGE
+        # that wrote nothing replaced nothing (its delta was empty, and
+        # the optimiser may have pruned the empty semi-join together with
+        # its observation)
+        replaced = prev_rows is not None and any(w for w, _ in new.values())
+        for t in TIERS:
+            prev_w, prev_p = (
+                _observed(prev_obs, f"w_{t}", f"p_{t}") if replaced else (0, 0)
+            )
+            tot = state["totals"].setdefault(t, {"n_windows": 0, "n_points": 0})
+            tot["n_windows"] += new[t][0] - prev_w
+            tot["n_points"] += new[t][1] - prev_p
+        delta.unpersist()
+        if self.pack_tiers:
+            with self._phase(f"{tag} pack"):
+                self._update_packed(state, snap_id, delta_m)
         conv.unpersist()
         delta_m.unpersist()
         if prev_state is not None:
@@ -552,7 +623,7 @@ class IncrementalRollup:
                     ooo_convs,
                     chain_len,
                 )
-                for tier, wall in tier_walls
+                for tier in TIERS
             ],
             "run_id string, snapshot_id int, tier string, n_windows long,"
             " n_points long, lineage string, wall_s double, ooo_convs long,"
@@ -567,84 +638,77 @@ class IncrementalRollup:
                 os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
             )
 
-    def _update_packed(
-        self, state: dict, snap_id: int, delta_m: DataFrame, tier: str
-    ) -> None:
-        """Re-encode only the windows the delta touches (class doc).
-        ``state`` is the checkpoint the commit holds (not yet advanced to
-        ``snap_id``)."""
-        from ..operators.pack import pack_tier, unpack_tier
-
-        pt_cols = ["conv_id", "turn_idx", "ts_us", "latency_us", "token_count"]
-        delta_pts = delta_m.select(
+    def _update_packed(self, state: dict, snap_id: int, delta_m: DataFrame) -> None:
+        """Re-encode only the windows the delta touches (class doc), every
+        pack tier in one chain resolve and one write. ``state`` is the
+        checkpoint the commit holds (not yet advanced to ``snap_id``)."""
+        bounds = state["retention_bounds"]
+        pts = delta_m.select(
             "conv_id",
             F.col("turn_idx").cast("long").alias("turn_idx"),
             "ts_us",
             F.col("latency_us").cast("double").alias("latency_us"),
             F.col("token_count").cast("double").alias("token_count"),
         )
-        # same ingest-time retention drop as the aggregate path
-        lo = state["retention_bounds"].get(tier)
-        if lo is not None:
-            delta_pts = delta_pts.filter(
-                window_start_col(F.col("ts_us"), tier) >= F.lit(lo)
-            )
-        touched = delta_pts.select(
-            "conv_id",
-            window_start_col(F.col("ts_us"), tier).alias("window_start_us"),
-        ).distinct()
-        # chain read pruned to the touched CONVERSATIONS (semi-join below
+        # chain read pruned to the delta's CONVERSATIONS (semi-join below
         # the latest-wins window): all windows of a touched conversation
         # are needed to restore old points' turn_idx from cumulative
         # n_points — a metadata scan; only the touched windows' payloads
         # are decoded below
         prev = self._resolve_chain(
-            self._packed_base(tier),
+            self._base("packed"),
             state["version"],
             _WINDOW_KEYS,
-            touched=touched.select("conv_id").distinct(),
+            touched=delta_m.select("conv_id").distinct(),
             touched_on=["conv_id"],
-            bound_us=lo,
+            bounds=bounds,
             healed_through=state["healed_through"],
+            tiers=self.pack_tiers,
         )
-        if prev is None:
-            pts = delta_pts
-        else:
-            woff = (
-                Window.partitionBy("conv_id")
-                .orderBy("window_start_us")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            offsets = prev.select(
-                "conv_id",
-                "window_start_us",
-                F.coalesce(F.sum("n_points").over(woff), F.lit(0)).alias("_off"),
-            )
-            old_touched = prev.join(
-                touched, ["conv_id", "window_start_us"], "left_semi"
-            )
-            old_pts = (
-                unpack_tier(old_touched, with_pos=True)
-                .join(offsets, ["conv_id", "window_start_us"])
-                .select(
+        woff = (
+            Window.partitionBy("conv_id")
+            .orderBy("window_start_us")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        packed = []
+        for t in self.pack_tiers:
+            ws = window_start_col(F.col("ts_us"), t)
+            # same ingest-time retention drop as the aggregate path
+            tier_pts = pts.filter(_retained(bounds, t, ws))
+            if prev is not None:
+                prev_t = prev.filter(F.col("tier") == t)
+                offsets = prev_t.select(
                     "conv_id",
-                    (F.col("_off") + F.col("pos")).alias("turn_idx"),
-                    "ts_us",
-                    F.col("latency_us_f").alias("latency_us"),
-                    F.col("token_count_f").alias("token_count"),
+                    "window_start_us",
+                    F.coalesce(F.sum("n_points").over(woff), F.lit(0)).alias("_off"),
                 )
-            )
-            pts = old_pts.unionByName(delta_pts.select(*pt_cols))
-        pack_tier(pts, tier).write.mode("overwrite").parquet(
-            self._packed_delta_path(snap_id, tier)
-        )
+                touched = tier_pts.select(
+                    "conv_id", ws.alias("window_start_us")
+                ).distinct()
+                old_touched = prev_t.join(
+                    touched, ["conv_id", "window_start_us"], "left_semi"
+                )
+                old_pts = (
+                    unpack_tier(old_touched, with_pos=True)
+                    .join(offsets, ["conv_id", "window_start_us"])
+                    .select(
+                        "conv_id",
+                        (F.col("_off") + F.col("pos")).alias("turn_idx"),
+                        "ts_us",
+                        F.col("latency_us_f").alias("latency_us"),
+                        F.col("token_count_f").alias("token_count"),
+                    )
+                )
+                tier_pts = old_pts.unionByName(tier_pts)
+            packed.append(pack_tier(tier_pts, t))
+        _write_by_tier(_union(packed), self._delta_path(self._base("packed"), snap_id))
 
     # -- heal (mst_groupheal analogue) ----------------------------------
     def heal(self) -> int:
         """Repair every conversation flagged out-of-order since the last
         heal: re-derive its per-turn metrics from ALL raw snapshots (the
-        batch path is order-insensitive), then write corrective ``d{v}h``
-        chain entries for every table family — aggregate tiers, packed
+        batch path is order-insensitive), then write one corrective
+        ``d{v}h`` chain entry per table family — aggregate tiers, packed
         tiers, conv state. Afterwards all reads are byte-identical to a
         full recompute (tests assert) and incremental mode resumes.
 
@@ -662,7 +726,8 @@ class IncrementalRollup:
         written, so a mid-heal crash leaves reads exactly as before the
         heal and the rerun replays clean. Stale heal debris above the
         watermark is garbage-collected first, so a later heal cannot
-        resurrect it. Returns the number of conversations healed."""
+        resurrect it. Returns the number of conversations healed, as
+        observed on the conv-state write (one row per conversation)."""
         state = self._maybe_recover(self._read_ckpt())
         v = state["version"]
         if v == 0:
@@ -675,7 +740,7 @@ class IncrementalRollup:
         # also arrive from the streaming path at an already-healed
         # version (streaming/rollup_stream.route_ooo_to_pending); a
         # watermark filter here would drop those forever.
-        base = self._pending_base()
+        base = self._base("heal_pending")
         pend_dirs = (
             [
                 os.path.join(base, n)
@@ -688,60 +753,42 @@ class IncrementalRollup:
         if not pend_dirs:
             return 0
         tag = f"heal d{v:08d}"
-        with self._phase(f"{tag} convs"):
-            convs = (
-                reduce(
-                    DataFrame.unionByName,
-                    [self.spark.read.parquet(p) for p in pend_dirs],
-                )
-                .select("conv_id")
-                .distinct()
-                .persist()
+        snap_paths = [p for sid, p in list_snapshots(self.input_dir) if sid <= v]
+        with self._phase(f"{tag} read"):
+            convs = _union([self.spark.read.parquet(p) for p in pend_dirs])
+            raw = self.spark.read.parquet(*snap_paths).join(
+                convs.select("conv_id").distinct(), "conv_id", "left_semi"
             )
-            n_convs = convs.count()
-        if n_convs:
-            snap_paths = [
-                p for sid, p in list_snapshots(self.input_dir) if sid <= v
-            ]
-            with self._phase(f"{tag} read"):
-                raw = self.spark.read.parquet(*snap_paths).join(
-                    convs, "conv_id", "left_semi"
+        healed_m = derive_turn_metrics(raw).persist()
+        # respect committed evictions: healed rows never resurrect windows
+        # behind the retention bound
+        kept = _retained(state["retention_bounds"])
+        with self._phase(f"{tag} tiers"):
+            _write_by_tier(
+                _union([rollup_from_turns(healed_m, t) for t in TIERS]).filter(kept),
+                self._delta_path(self._base("tiers"), v, heal=True),
+            )
+        if self.pack_tiers:
+            with self._phase(f"{tag} pack"):
+                _write_by_tier(
+                    _union([pack_tier(healed_m, t) for t in self.pack_tiers]).filter(
+                        kept
+                    ),
+                    self._delta_path(self._base("packed"), v, heal=True),
                 )
-            healed_m = derive_turn_metrics(raw).persist()
-            for tier in TIERS:
-                rows = rollup_from_turns(healed_m, tier)
-                # respect committed evictions: healed rows never resurrect
-                # windows behind the retention bound
-                lo = state["retention_bounds"].get(tier)
-                if lo is not None:
-                    rows = rows.filter(F.col("window_start_us") >= F.lit(lo))
-                with self._phase(f"{tag} {tier}"):
-                    rows.write.mode("overwrite").parquet(
-                        self._delta_path(self._tier_base(tier), v, heal=True)
-                    )
-            from ..operators.pack import pack_tier
-
-            for tier in self.pack_tiers:
-                packed = pack_tier(healed_m, tier)
-                lo = state["retention_bounds"].get(tier)
-                if lo is not None:
-                    packed = packed.filter(F.col("window_start_us") >= F.lit(lo))
-                with self._phase(f"{tag} pack {tier}"):
-                    packed.write.mode("overwrite").parquet(
-                        self._delta_path(self._packed_base(tier), v, heal=True)
-                    )
-            with self._phase(f"{tag} state"):
-                healed_m.groupBy("conv_id").agg(
-                    F.max(F.struct("turn_idx", "ts_us")).alias("_l")
-                ).select(
-                    "conv_id",
-                    F.col("_l.turn_idx").alias("last_turn_idx"),
-                    F.col("_l.ts_us").alias("last_ts_us"),
-                ).write.mode("overwrite").parquet(
-                    self._delta_path(self._state_base(), v, heal=True)
-                )
-            healed_m.unpersist()
-        convs.unpersist()
+        convs_obs = Observation()
+        with self._phase(f"{tag} state"):
+            healed_m.groupBy("conv_id").agg(
+                F.max(F.struct("turn_idx", "ts_us")).alias("_l")
+            ).select(
+                "conv_id",
+                F.col("_l.turn_idx").alias("last_turn_idx"),
+                F.col("_l.ts_us").alias("last_ts_us"),
+            ).observe(convs_obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(self._delta_path(self._base("state"), v, heal=True))
+        (n_convs,) = _observed(convs_obs, "n")
+        healed_m.unpersist()
         state["healed_through"] = v
         self._commit_ckpt(state)
         # delete the processed pending dirs only now: a crash before this
@@ -769,13 +816,8 @@ class IncrementalRollup:
         ``now_us`` rewrites it keyed-idempotently). Physical space is
         reclaimed later by ``compact()``. Returns the accounting rows."""
         state = self._maybe_recover(self._read_ckpt())
-        v = state["version"]
         with self._phase("retention sweep"):
-            tiers = {
-                t: df
-                for t in TIERS
-                if (df := self.tier(t, v)) is not None
-            }
+            tiers = self._read_tiers(state)
             sweep = retention_sweep(tiers, now_us, horizons) if tiers else None
             rows = list(sweep.collect()) if sweep is not None else []
         # packed-tier accounting: same bound as the tier of the same name
@@ -783,7 +825,7 @@ class IncrementalRollup:
         packed_rows = []
         for t in self.pack_tiers:
             with self._phase(f"retention sweep packed {t}"):
-                pdf = self.packed_tier(t, v)
+                pdf = self._read_family("packed", t, state)
                 if pdf is None:
                     continue
                 pr = retention_sweep({t: pdf}, now_us, horizons).collect()[0]
@@ -825,34 +867,17 @@ class IncrementalRollup:
         retained tier per age band (operators/retention.serve_tiered),
         read straight off the delta chains. Pure prunable predicates +
         union — the query a dashboard runs against this store."""
-        from ..operators.retention import serve_tiered
-
-        tiers = {
-            t: df for t in TIERS if (df := self.tier(t)) is not None
-        }
-        return serve_tiered(tiers, now_us, horizons)
+        state = self._maybe_recover(self._read_ckpt())
+        return serve_tiered(self._read_tiers(state), now_us, horizons)
 
     # -- maintenance ----------------------------------------------------
-    def _compact_jobs(self, state: dict) -> list[tuple[str, list[str], int | None]]:
-        """(base, keys, retention bound) for every chained table family."""
-        jobs = [
-            (self._tier_base(t), _WINDOW_KEYS, state["retention_bounds"].get(t))
-            for t in TIERS
-        ]
-        jobs += [
-            (self._packed_base(t), _WINDOW_KEYS, state["retention_bounds"].get(t))
-            for t in self.pack_tiers
-        ]
-        jobs.append((self._state_base(), ["conv_id"], None))
-        return jobs
-
     def _gc_uncommitted_heal(self, state: dict) -> None:
         """Remove heal dirs whose version exceeds the committed
         ``healed_through`` — debris from a crashed heal(). Without this GC
         a later heal at a higher version would advance the watermark past
         the orphan and resurrect its torn contents into chain reads."""
         ht = state["healed_through"]
-        for base, _, _ in self._compact_jobs(state):
+        for base, _ in self._compact_jobs():
             if not os.path.isdir(base):
                 continue
             for name in os.listdir(base):
@@ -878,7 +903,7 @@ class IncrementalRollup:
         _maybe_recover on the next entry point, which re-runs this loop —
         families with no staged tmp left are skipped)."""
         v = state["compact_intent"]
-        for base, _, _ in self._compact_jobs(state):
+        for base, _ in self._compact_jobs():
             tmp = os.path.join(base, "_compact_tmp")
             if not os.path.isdir(tmp):
                 continue  # never staged, or already swapped on a prior run
@@ -892,15 +917,13 @@ class IncrementalRollup:
         self._commit_ckpt(state)
 
     def chain_length(self, state: dict | None = None) -> int:
-        """Longest delta chain across all table families (auto-compaction
-        trigger metric; also what an operator would alert on)."""
+        """Longest delta chain across the three table families
+        (auto-compaction trigger metric; also what an operator would
+        alert on)."""
         state = state or self._read_ckpt()
         return max(
-            (
-                len(self._chain_dirs(b, state["version"], state["healed_through"]))
-                for b, _, _ in self._compact_jobs(state)
-            ),
-            default=0,
+            len(self._chain_dirs(b, state["version"], state["healed_through"]))
+            for b, _ in self._compact_jobs()
         )
 
     def compact(self) -> None:
@@ -924,22 +947,23 @@ class IncrementalRollup:
         never served."""
         state = self._maybe_recover(self._read_ckpt())
         v = state["version"]
-        if v == 0:
-            return
         # heal debris would otherwise be resurrected once healed_through
         # advances; compacting is the natural GC point
         self._gc_uncommitted_heal(state)
         staged = 0
-        for base, keys, bound in self._compact_jobs(state):
-            dirs = self._chain_dirs(base, v, state["healed_through"])
-            if not dirs:
+        for base, keys in self._compact_jobs():
+            df = self._resolve_chain(
+                base, v, keys, bounds=state["retention_bounds"],
+                healed_through=state["healed_through"],
+            )
+            if df is None:
                 continue
             tmp = os.path.join(base, "_compact_tmp")
-            with self._phase(f"compact {os.path.relpath(base, self.work_dir)}"):
-                self._resolve_chain(
-                    base, v, keys, bound_us=bound,
-                    healed_through=state["healed_through"],
-                ).write.mode("overwrite").parquet(tmp)
+            with self._phase(f"compact {os.path.basename(base)}"):
+                if keys == _WINDOW_KEYS:
+                    _write_by_tier(df, tmp)
+                else:
+                    df.write.mode("overwrite").parquet(tmp)
             staged += 1
         if staged == 0:
             return

@@ -88,8 +88,3 @@ def read_tier(
         df = df.filter(F.col("window_start_us") <= ts_max_us)
         df = df.filter(F.col("window_day") <= F.to_date(F.timestamp_micros(F.lit(ts_max_us))))
     return df
-
-
-def write_metrics(metrics_df: DataFrame, path: str) -> None:
-    """Append-only run metrics/lineage (writemetadata analogue)."""
-    metrics_df.write.mode("append").parquet(path)

@@ -129,18 +129,6 @@ def test_vectorized_multi_stream():
 
 
 @pytest.mark.parametrize("name", sorted(SERIES))
-def test_fast_decoder_matches_oracle(name):
-    from decode_fast_oracle import decode_blob_fast
-
-    ts, vals = SERIES[name]
-    vb = _bits(vals)
-    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
-    slow = oracle.decode_blob(blob, expect_xn=vb[-1])
-    fast = decode_blob_fast(blob, expect_xn=vb[-1])
-    assert fast == slow
-
-
-@pytest.mark.parametrize("name", sorted(SERIES))
 def test_vec_decoder_matches_oracle(name):
     from sac2mseed_spark.codec.decode_vec import decode_blob_vec
 
@@ -208,16 +196,6 @@ def test_vec_decoder_xn_check():
     blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
     with pytest.raises(ValueError, match="Xn mismatch"):
         decode_blob_vec(blob, expect_xn=vb[-1] ^ 1)
-
-
-def test_fast_decoder_xn_check():
-    from decode_fast_oracle import decode_blob_fast
-
-    ts, vals = SERIES["const_rate/int_like"]
-    vb = _bits(vals)
-    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
-    with pytest.raises(ValueError, match="Xn mismatch"):
-        decode_blob_fast(blob, expect_xn=vb[-1] ^ 1)
 
 
 def test_nan_roundtrip_preserves_bit_pattern():

@@ -62,10 +62,10 @@ def test_uncommitted_heal_dirs_invisible_and_gcd(spark, snapshots, tmp_path):
 
     # plant poison: a valid-schema heal entry at version 2 with absurd
     # values, healed_through still 0 -> must stay invisible
-    poison_dir = os.path.join(work, "tiers", "1h", "d00000002h")
+    poison_dir = os.path.join(work, "tiers", "d00000002h")
     inc.tier("1h").limit(5).withColumn(
         "n_points", F.lit(999_999)
-    ).write.mode("overwrite").parquet(poison_dir)
+    ).write.partitionBy("tier").mode("overwrite").parquet(poison_dir)
     assert _agg_as_dict(inc.tier("1h")) == clean, "uncommitted heal dir leaked"
 
     # a real heal cycle later (simulate: flag one conversation pending at
@@ -77,6 +77,21 @@ def test_uncommitted_heal_dirs_invisible_and_gcd(spark, snapshots, tmp_path):
     assert inc.heal() == 1
     assert not os.path.isdir(poison_dir), "orphan heal debris not GC'd"
     assert _agg_as_dict(inc.tier("1h")) == clean, "heal changed clean data"
+
+
+def _stage_compaction(inc, state, v):
+    """Phase 1 of compact() by hand: every family's resolved chain staged
+    under ``_compact_tmp`` in the family's own layout."""
+    for base, keys in inc._compact_jobs():
+        r = inc._resolve_chain(
+            base, v, keys, bounds=state["retention_bounds"],
+            healed_through=state["healed_through"],
+        )
+        if r is not None:
+            w = r.write.mode("overwrite")
+            if "tier" in keys:
+                w = w.partitionBy("tier")
+            w.parquet(os.path.join(base, "_compact_tmp"))
 
 
 @pytest.mark.parametrize("crash_step", ["staged", "intent", "mid_rmtree", "mid_swap"])
@@ -94,16 +109,10 @@ def test_compact_crash_matrix(spark, snapshots, tmp_path, monkeypatch, crash_ste
 
     if crash_step == "staged":
         # crash after phase 1: tmps staged, no intent committed
-        for base, keys, bound in inc._compact_jobs(state):
-            r = inc._resolve_chain(base, v, keys, bound_us=bound)
-            if r is not None:
-                r.write.mode("overwrite").parquet(os.path.join(base, "_compact_tmp"))
+        _stage_compaction(inc, state, v)
     elif crash_step == "intent":
         # crash right after phase 2: intent committed, nothing swapped
-        for base, keys, bound in inc._compact_jobs(state):
-            r = inc._resolve_chain(base, v, keys, bound_us=bound)
-            if r is not None:
-                r.write.mode("overwrite").parquet(os.path.join(base, "_compact_tmp"))
+        _stage_compaction(inc, state, v)
         state["compact_intent"] = v
         inc._commit_ckpt(state)
     else:
@@ -140,7 +149,7 @@ def test_compact_crash_matrix(spark, snapshots, tmp_path, monkeypatch, crash_ste
     # and an explicit compact() completes the fold
     inc2.compact()
     assert _agg_as_dict(inc2.tier("1h")) == want, f"{crash_step} post-compact"
-    base = os.path.join(work, "tiers", "1h")
+    base = os.path.join(work, "tiers")
     assert sorted(os.listdir(base)) == [f"d{v:08d}"], crash_step
 
 
@@ -182,33 +191,30 @@ def test_chain_reads_are_delta_sized(spark, snapshots, tmp_path):
     calls = []
 
     class SpyInc(IncrementalRollup):
-        def _resolve_chain(self, base, version, keys, touched=None,
-                           bound_us=None, healed_through=None):
-            df = super()._resolve_chain(
-                base, version, keys, touched=touched, bound_us=bound_us,
-                healed_through=healed_through,
-            )
+        def _resolve_chain(self, base, version, keys, touched=None, **kw):
+            df = super()._resolve_chain(base, version, keys, touched=touched, **kw)
             calls.append((base, touched is not None, df))
             return df
 
-    inc = SpyInc(spark, staged, str(tmp_path / "w2"), pack_tiers=())
+    work = str(tmp_path / "w2")
+    inc = SpyInc(spark, staged, work, pack_tiers=())
     inc.process_pending()
     snap2 = spark.read.parquet(os.path.join(staged, "snap_00000002"))
     delta_m = derive_turn_metrics(snap2)
     tier_resolves = [
-        (base, has_touched, df)
+        (has_touched, df)
         for base, has_touched, df in calls
-        if os.sep + os.path.join("tiers", "") in base + os.sep
-        and "_convstate" not in base and df is not None
+        if base == os.path.join(work, "tiers") and df is not None
     ]
     assert tier_resolves, "no tier-chain resolves recorded"
-    for base, has_touched, df in tier_resolves:
-        tier = os.path.basename(base)
-        assert has_touched, f"{tier}: chain resolve without touched pruning"
-        n_delta_windows = (
-            rollup_from_turns(delta_m, tier)
-            .select("conv_id", "window_start_us").distinct().count()
-        )
-        assert df.count() <= n_delta_windows, (
-            f"{tier}: resolve returned more rows than the delta touches"
-        )
+    for has_touched, df in tier_resolves:
+        assert has_touched, "tier-chain resolve without touched pruning"
+        got = {r["tier"]: r["count"] for r in df.groupBy("tier").count().collect()}
+        for tier, n_got in got.items():
+            n_delta_windows = (
+                rollup_from_turns(delta_m, tier)
+                .select("conv_id", "window_start_us").distinct().count()
+            )
+            assert n_got <= n_delta_windows, (
+                f"{tier}: resolve returned more rows than the delta touches"
+            )

@@ -158,7 +158,7 @@ def test_heal_crash_replay(spark, ooo_snapshots, tmp_path):
     assert inc.heal() > 0
     state_after = inc._read_ckpt()
     assert state_after["healed_through"] == 4
-    shutil.rmtree(os.path.join(work, "packed", "1m", "d00000004h"))
+    shutil.rmtree(os.path.join(work, "packed", "d00000004h"))
     shutil.rmtree(pend, ignore_errors=True)
     shutil.copytree(pend_copy, pend)
     state_after["healed_through"] = state_before["healed_through"]
@@ -230,3 +230,54 @@ def test_pending_only_for_ooo_snapshot_and_totals_match(spark, ooo_snapshots, tm
     assert inc.heal() == len(want["d00000003"])
     assert not os.listdir(pend)
     check_totals()
+
+
+def test_tier_wholly_behind_bound_writes_no_leaf(spark, tmp_path):
+    """A late snapshot whose 1m windows all lie behind the committed 1m
+    bound writes no ``tier=1m`` leaf, yet reads, running totals, heal()
+    and compact() still equal the batch path (1m and packed 1m read as
+    empty frames with their usual columns)."""
+    t = generate_transcripts(spark, "t_small", seed=42)
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "w")
+    os.makedirs(src)
+    # snapshot 2 delivers every conversation's first 20 turns late
+    t.filter(F.col("turn_idx") >= 20).write.parquet(os.path.join(src, "snap_00000001"))
+    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+    assert inc.process_pending() == 1
+    cols = {"1m": inc.tier("1m").columns, "packed": inc.packed_tier("1m").columns}
+    hi_us = t.agg(F.max(F.unix_micros(F.col("ts").cast("timestamp")))).collect()[0][0]
+    # the 1m bound lies past the newest turn; 1h and 1d keep everything
+    inc.apply_retention(hi_us + 120_000_000, {"1m": 60_000_000, "1h": None, "1d": None})
+    t.filter(F.col("turn_idx") < 20).write.parquet(os.path.join(src, "snap_00000002"))
+    assert inc.process_pending() == 1
+
+    entry = os.path.join(work, "tiers", "d00000002")
+    assert sorted(n for n in os.listdir(entry) if n.startswith("tier=")) == [
+        "tier=1d", "tier=1h",
+    ]
+    full_m = derive_turn_metrics(t)
+
+    def check(after):
+        for tier in ("1h", "1d"):
+            assert _agg_as_dict(inc.tier(tier)) == _agg_as_dict(
+                rollup_from_turns(full_m, tier)
+            ), (after, tier)
+        for df, key in ((inc.tier("1m"), "1m"), (inc.packed_tier("1m"), "packed")):
+            assert df.columns == cols[key] and df.count() == 0, (after, key)
+        # the running totals of snapshot 2 (after the eviction)
+        for r in inc.metrics_table().filter("snapshot_id = 2").collect():
+            direct = inc.tier(r["tier"]).agg(
+                F.count(F.lit(1)).alias("w"),
+                F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
+            ).collect()[0]
+            assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"]), (
+                after, r["tier"]
+            )
+
+    # every conversation with more than 20 turns arrived out of order
+    n_ooo = t.filter(F.col("turn_idx") >= 20).select("conv_id").distinct().count()
+    assert inc.heal() == n_ooo
+    check("heal")
+    inc.compact()
+    check("compact")

@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sac2mseed_spark.functions.metrics import derive_turn_metrics, ts_us_col
+from sac2mseed_spark.operators.pack import pack_tier
 from sac2mseed_spark.operators.rollup import rollup_from_turns
 from sac2mseed_spark.plans.pipeline import IncrementalRollup, list_snapshots
 from sac2mseed_spark.sources.transcripts import generate_transcripts
@@ -145,13 +146,13 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
     calls = []
     orig = IncrementalRollup._resolve_chain
 
-    def spy(self, base, version, keys, touched=None, bound_us=None,
-            healed_through=None, touched_on=None):
+    def spy(self, base, version, keys, touched=None, touched_on=None,
+            tiers=None, **kw):
         calls.append({"base": base, "version": version, "keys": keys,
-                      "touched": touched, "touched_on": touched_on})
+                      "touched": touched, "touched_on": touched_on,
+                      "tiers": tiers})
         return orig(self, base, version, keys, touched=touched,
-                    bound_us=bound_us, healed_through=healed_through,
-                    touched_on=touched_on)
+                    touched_on=touched_on, tiers=tiers, **kw)
 
     IncrementalRollup._resolve_chain = spy
     try:
@@ -159,33 +160,46 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
     finally:
         IncrementalRollup._resolve_chain = orig
 
+    def per_tier(df):
+        """Row count per tier (one group for the conv-keyed state chain)."""
+        if df is None:
+            return {}
+        if "tier" not in df.columns:
+            return {None: df.count()}
+        return {r["tier"]: r["count"] for r in df.groupBy("tier").count().collect()}
+
     assert calls, "no chain reads spied"
     window_checked = conv_checked = 0
     for c in calls:
         # EVERY chain read issued while processing a snapshot is pruned —
-        # tier merges by touched window, packed re-encode and conv-state
-        # by touched conversation. A None here is a regression to a
-        # full-table merge.
+        # the tier merge by touched window, packed re-encode and
+        # conv-state by touched conversation. A None here is a regression
+        # to a full-table merge.
         assert c["touched"] is not None, f"un-pruned chain read: {c['base']}"
-        n_touched = c["touched"].distinct().count()
-        full = orig(inc, c["base"], c["version"], c["keys"])
-        got = orig(inc, c["base"], c["version"], c["keys"],
-                   touched=c["touched"], touched_on=c["touched_on"])
-        n_full = full.count() if full is not None else 0
-        n_got = got.count() if got is not None else 0
+        full = per_tier(orig(inc, c["base"], c["version"], c["keys"],
+                             tiers=c["tiers"]))
+        got = per_tier(orig(inc, c["base"], c["version"], c["keys"],
+                            touched=c["touched"], touched_on=c["touched_on"],
+                            tiers=c["tiers"]))
         if (c["touched_on"] or c["keys"]) == c["keys"]:
-            # window-keyed prune: the merge read is bounded by |touched|,
-            # and snapshot 3 (turns >= 60) touches a strict subset of the
-            # 1m windows so pruning must actually bite
-            assert n_got <= n_touched, (c["base"], n_got, n_touched)
-            if "1m" in c["base"]:
-                assert n_got < n_full, "semi-join did not prune any rows"
+            # window-keyed prune: the merge read is bounded, per tier, by
+            # the keys it touches, and snapshot 3 (turns >= 60) touches a
+            # strict subset of the 1m windows so pruning must actually bite
+            touched = c["touched"].distinct()
+            n_touched = per_tier(touched) if "tier" in touched.columns else {
+                None: touched.count()
+            }
+            for t, n_got in got.items():
+                assert n_got <= n_touched.get(t, 0), (c["base"], t, n_got)
+            if "1m" in full:
+                assert got.get("1m", 0) < full["1m"], "semi-join did not prune"
                 window_checked += 1
         else:
             # conv-keyed prune (packed path): bounded by the touched
             # conversations' windows — strictly fewer rows than the
             # chain holds (snapshot 3 touches only the >60-turn convs)
-            assert n_got < n_full, (c["base"], n_got, n_full)
+            for t, n_full in full.items():
+                assert got.get(t, 0) < n_full, (c["base"], t, got, n_full)
             conv_checked += 1
     assert window_checked >= 1 and conv_checked >= 1
 
@@ -315,3 +329,34 @@ def test_observed_totals_snapshot_behind_retention_bound(spark, snapshots, tmp_p
     assert inc.process_pending() == 1
     rows = _assert_totals_equal_scan(inc, 2)
     assert {(r["n_windows"], r["n_points"]) for r in rows.values()} == {(0, 0)}
+
+
+def test_one_entry_per_family_per_commit(spark, snapshots, tmp_path):
+    """A commit adds exactly one ``d{n}`` entry to each of the three
+    chains, holding every tier as a ``tier={t}`` leaf; a tier read scans
+    only its own leaves and keeps the batch path's columns, in order."""
+    src, full_t = snapshots
+    staged = str(tmp_path / "staged")
+    work = str(tmp_path / "w")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, work, max_chain=None)
+    families = ("tiers", "packed", "state")
+    for snap_id in (1, 2):
+        _stage(src, staged, snap_id)
+        before = {
+            f: set(os.listdir(os.path.join(work, f))) if snap_id > 1 else set()
+            for f in families
+        }
+        assert inc.process_pending() == 1
+        for f in families:
+            added = set(os.listdir(os.path.join(work, f))) - before[f]
+            assert added == {f"d{snap_id:08d}"}, (f, added)
+    leaves = os.listdir(os.path.join(work, "tiers", "d00000002"))
+    assert sorted(n for n in leaves if n.startswith("tier=")) == [
+        "tier=1d", "tier=1h", "tier=1m",
+    ]
+    files = inc.tier("1h").inputFiles()
+    assert files and all("/tier=1h/" in f for f in files), files
+    full_m = derive_turn_metrics(full_t)
+    assert inc.tier("1h").columns == rollup_from_turns(full_m, "1h").columns
+    assert inc.packed_tier("1m").columns == pack_tier(full_m, "1m").columns

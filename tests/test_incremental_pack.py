@@ -74,7 +74,8 @@ def test_incremental_pack_survives_crash_replay(spark, snapshots, tmp_path):
     # crash AFTER the packed delta write but BEFORE the checkpoint commit:
     # the orphan d00000002 exists; the rerun must overwrite it
     inc._process_one(state, *snaps[1])
-    assert os.path.isdir(inc._packed_delta_path(2, "1m"))
+    orphan = os.path.join(str(tmp_path / "w2"), "packed", "d00000002", "tier=1m")
+    assert os.path.isdir(orphan)
     assert inc.process_pending() == 2
     got = _packed_as_dict(inc.packed_tier("1m"))
     want = _packed_as_dict(pack_tier(derive_turn_metrics(full_t), "1m"))
@@ -91,7 +92,9 @@ def test_delta_dirs_hold_only_touched_windows(spark, snapshots, tmp_path):
     from sac2mseed_spark.operators.rollup import window_start_col
 
     for snap_id, (lo, hi) in enumerate(BOUNDS, start=1):
-        delta_rows = spark.read.parquet(inc._packed_delta_path(snap_id, "1m"))
+        delta_rows = spark.read.parquet(
+            os.path.join(str(tmp_path / "w3"), "packed", f"d{snap_id:08d}", "tier=1m")
+        )
         got_keys = {
             (r["conv_id"], r["window_start_us"])
             for r in delta_rows.select("conv_id", "window_start_us").collect()

@@ -118,3 +118,12 @@ def test_knn_lsh_grouped_scoring_exact(spark):
     for qi in qidx:
         for (q, ni, rank, sim) in exp[qi]:
             assert got[(q, rank)] == (ni, pytest.approx(sim, abs=0)), (q, rank)
+
+
+def test_knn_lsh_empty_queries(spark):
+    """An empty query set gives no rows, with the non-empty result's schema."""
+    df = _df(spark, _vectors())
+    want = knn_lsh(df, df.filter(F.col("vec_id") == 0), k=K).schema
+    got = knn_lsh(df, df.filter(F.lit(False)), k=K)
+    assert got.count() == 0
+    assert got.schema == want

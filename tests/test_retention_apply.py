@@ -175,9 +175,10 @@ def test_compact_is_logically_invisible(spark, snapshots, tmp_path):
     inc.compact()
     for t in ("1m", "1h", "1d"):
         assert _rows_as_set(inc.tier(t)) == before_aggs[t], t
-        # chain folded to a single base directory
-        base = os.path.join(str(tmp_path / "w3"), "tiers", t)
-        assert sorted(os.listdir(base)) == ["d00000003"]
+    # every family's chain folded to a single base directory
+    for family in ("tiers", "packed", "state"):
+        base = os.path.join(str(tmp_path / "w3"), family)
+        assert sorted(os.listdir(base)) == ["d00000003"], family
     after_packed = {
         (r["conv_id"], r["window_start_us"]): bytes(r["payload"])
         for r in inc.packed_tier("1m").collect()
