@@ -230,9 +230,10 @@ def main():
         round_walls.append(round(time.perf_counter() - r0, 3))
         round_steal.append(meter.pct())
 
-    # compression measured at 1h (1m windows on this fixture hold ~4 points,
-    # so fixed headers dominate there — same physics as short miniSEED
-    # records); raw point = 8B ts + 8B per value stream (2 streams)
+    # compression measured at 1m and 1h (1m windows on this fixture hold
+    # ~4 points, so the varint headers are a larger share there — same
+    # physics as short miniSEED records); raw point = 8B ts + 8B per value
+    # stream (2 streams)
     comp = {
         tier: pack_tier(m, tier)
         .agg(F.sum(F.length("payload")).alias("b"), F.sum("n_points").alias("p"))

@@ -5,8 +5,8 @@ Inspired by (NOT a port of) EarthScope/sac2mseed's record-packing pipeline
 (reference at /root/reference): traces keyed by source id become per-conv_id
 turn streams; fixed-length miniSEED records become fixed-epoch windows at
 1m/1h/1d retention tiers; Steim1/2 delta frame packing becomes delta-of-delta
-timestamp compression + Gorilla XOR float packing inside Arrow-vectorized
-pandas UDFs.
+timestamp compression + integer residual (or Gorilla XOR float) streams
+inside Arrow-vectorized kernels.
 
 Design principles (see SURVEY.md):
   * DataFrame/SQL only — Catalyst plans every scan/filter/agg/join.

@@ -1,39 +1,179 @@
 """Vectorized blob decoder — numpy wavefront kernel, symmetric to the
 encoder in codec/vectorized.py.
 
-Decodes an entire Arrow batch of payload blobs at once. The prefix-coded
-bitstreams are inherently sequential *within* a chunk, but chunks are
-mutually independent, so the kernel advances ONE point index at a time
-across ALL chunks simultaneously ("wavefront"): each iteration is a handful
-of flat numpy gathers/shifts over every still-active chunk. Chunks are
-processed in descending point-count order so the active set is always a
-prefix and per-iteration work is proportional to live chunks. Total cost is
-O(total_points) vector element-ops — the read-side twin of
-encode_chunks_raw, with no per-point interpreted loop (the
-reference's read path is *bigger* than its write path:
-/root/reference/libmseed/unpackdata.c:35-564, 530 LoC, and 24 of its 31
-golden tests are read tests — the decode side must be first-class).
+Decodes an entire Arrow batch of payload blobs at once. The varint headers
+are parsed one field at a time across every blob (a wavefront over chunk
+index, never a loop over blobs). The prefix-coded bitstreams are
+inherently sequential *within* a section, but sections are mutually
+independent, so the kernel advances ONE code index at a time across ALL
+sections simultaneously ("wavefront"): each iteration is a handful of
+flat numpy gathers/shifts over every still-active section. Timestamp and
+integer-mode sections share one bucket-code wavefront, Gorilla sections
+run a second one; sections are processed in descending code-count order so
+the active set is always a prefix. Segmented prefix sums then rebuild the
+timestamps and integer values. Total cost is O(total_points) vector
+element-ops — the read-side twin of encode_chunks_raw, with no per-point
+interpreted loop (the reference's read path is *bigger* than its write
+path: libmseed/unpackdata.c:35-564, 530 LoC, and 24 of its
+31 golden tests are read tests — the decode side must be first-class).
 
 Values are bit-identical to codec/oracle.py's decode_blob (tests assert),
-including the Xn final-value integrity check (unpackdata.c:556-561).
+including the Xn final-value integrity check (unpackdata.c:556-561), and
+every malformed payload the oracle rejects raises ValueError here too.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import BLOB_HEADER_LEN, MAGIC, VERSION
+from . import (
+    CANONICAL_NAN,
+    DOD_BUCKETS,
+    FIRST_NAN,
+    GOR_LZ_BITS,
+    GOR_MLEN_BITS,
+    MODE_BYTES,
+    MODE_DELTA,
+    MODE_FLOAT,
+    MODE_PREV,
+    VERSION,
+)
 
 _U64 = np.uint64
 _ONE = _U64(1)
+_MODE_BYTES = np.array(MODE_BYTES, dtype=np.uint8)
+# Bucket codes by table: the top _TOP bits of a code name its bucket
+# (0 = the lone '0' bit of a zero residual, b = DOD_BUCKETS[b - 1]), and a
+# payload below 64 bits is (w << prefix length) >> (64 - payload bits);
+# the last bucket's 64-bit literal is read whole.
+_TOP = max(pl for _, pl, _ in DOD_BUCKETS)
+_BUCKET_OF_TOP = np.zeros(1 << _TOP, dtype=np.int64)
+for _b, (_p, _pl, _) in reversed(list(enumerate(DOD_BUCKETS, 1))):
+    _BUCKET_OF_TOP[_p << (_TOP - _pl) : (_p + 1) << (_TOP - _pl)] = _b
+_BUCKET_BITS = np.array([1] + [pl + b for _, pl, b in DOD_BUCKETS], dtype=np.int64)
+_BUCKET_SHL = np.array([0] + [pl for _, pl, _ in DOD_BUCKETS], dtype=_U64)
+_BUCKET_SHR = np.array([63] + [(64 - b) % 64 for _, _, b in DOD_BUCKETS], dtype=_U64)
+# 7-bit groups of 2, 4, then 8 bytes packed: keep the low half of each
+# lane, shift the high half down by the gaps below it
+_PACK_STEPS = [
+    (_U64(0x00FF00FF00FF00FF), _U64(1)),
+    (_U64(0x0000FFFF0000FFFF), _U64(2)),
+    (_U64(0x00000000FFFFFFFF), _U64(4)),
+]
+_GOR_HDR = 1 + GOR_LZ_BITS + GOR_MLEN_BITS
 
 
-def _gather_le(data: np.ndarray, off: np.ndarray, nbytes: int) -> np.ndarray:
-    """Little-endian unsigned ints of ``nbytes`` gathered at byte offsets."""
-    v = data[off].astype(_U64)
-    for j in range(1, nbytes):
-        v |= data[off + j].astype(_U64) << _U64(8 * j)
-    return v
+def _read_varints(buf: np.ndarray, off: np.ndarray, end: np.ndarray):
+    """(uint64 values, offsets after them) of the varints at ``off``; each
+    must end before its lane's ``end`` within 10 bytes and fit 64 bits.
+    ``buf`` carries >= 16 bytes of slack past the data.
+
+    A varint of up to 8 bytes is read as one unaligned little-endian word:
+    its last byte is the lowest one with the top bit clear, and three
+    mask-and-shift steps pack the 7-bit groups. A 9- or 10-byte varint
+    adds its last bytes to that."""
+    w = np.ndarray((len(buf) - 7,), dtype="<u8", buffer=buf, strides=(1,))[off]
+    t = ~w & _U64(0x8080808080808080)
+    low = t & (~t + _ONE)  # 2^(8i+7) for the last byte i; 0 past 8 bytes
+    n = (np.frexp(low.astype(np.float64))[1] >> 3).astype(np.int64)
+    v = w & ((low << _ONE) - _ONE) & _U64(0x7F7F7F7F7F7F7F7F)
+    for m, sh in _PACK_STEPS:
+        v = (v & m) | ((v & ~m) >> sh)
+    long = np.flatnonzero(low == 0)
+    if len(long):
+        b8, b9 = buf[off[long] + 8], buf[off[long] + 9]
+        ten = b8 >= 0x80
+        if (ten & (b9 > 1)).any():
+            raise ValueError("varint overflows 64 bits")
+        v[long] |= (b8 & 0x7F).astype(_U64) << _U64(56)
+        v[long] |= np.where(ten, b9.astype(_U64) << _U64(63), _U64(0))
+        n[long] = np.where(ten, 10, 9)
+    if (off + n > end).any():
+        raise ValueError("truncated varint")
+    return v, off + n
+
+
+def _unzigzag(z: np.ndarray) -> np.ndarray:
+    return ((z >> _ONE) ^ (_U64(0) - (z & _ONE))).view(np.int64)
+
+
+def _read_section(buf, off, end):
+    """(bit origin, bit end, offset after) of ``varint nbytes + bytes``."""
+    nb, off = _read_varints(buf, off, end)
+    if (nb > (end - off).view(_U64)).any():
+        raise ValueError("section length past blob end")
+    stop = off + nb.astype(np.int64)
+    return off << 3, stop << 3, stop
+
+
+def _parse(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+    """Walk blob + chunk headers, vectorized over blobs.
+
+    The chunk-offset chain is sequential per blob (each chunk's size depends
+    on its varints and section lengths), so iterate over *chunk index* and
+    read every blob's c-th chunk header field by field in one shot —
+    max(n_chunks) iterations of flat work, never a per-blob Python walk.
+    """
+    B = len(starts)
+    if B == 0:
+        raise ValueError("empty batch")
+    if (ends - starts < 2).any():
+        raise ValueError("blob shorter than its header")
+    if not np.all(buf[starts] == VERSION):
+        raise ValueError("unsupported version")
+    ns_arr = buf[starts + 1].astype(np.int64)
+    if not np.all(ns_arr == ns_arr[0]):
+        raise ValueError("mixed n_streams in batch")
+    S = int(ns_arr[0])
+    n_chunks, cur = _read_varints(buf, starts + 2, ends)
+    if (n_chunks > (ends - cur).view(_U64)).any():
+        raise ValueError("chunk count exceeds blob length")
+    n_chunks = n_chunks.astype(np.int64)
+    max_pts = (8 * (ends - starts) + 2).view(_U64)
+
+    C = int(n_chunks.sum())
+    base = np.zeros(B, dtype=np.int64)
+    np.cumsum(n_chunks[:-1], out=base[1:])
+    cn = np.empty(C, np.int64)
+    ct0 = np.empty(C, np.int64)
+    cd0 = np.zeros(C, np.int64)
+    ts_org = np.zeros(C, np.int64)  # absolute bit offsets
+    ts_end = np.zeros(C, np.int64)
+    smode = np.empty((S, C), np.uint8)
+    sfirst = np.zeros((S, C), np.int64)
+    s_org = np.empty((S, C), np.int64)
+    s_end = np.empty((S, C), np.int64)
+
+    for c in range(int(n_chunks.max())):
+        act = np.flatnonzero(n_chunks > c)
+        o, e, idx = cur[act], ends[act], base[act] + c
+        n, o = _read_varints(buf, o, e)
+        if ((n == 0) | (n > max_pts[act])).any():
+            raise ValueError("chunk point count out of range")
+        cn[idx] = n = n.astype(np.int64)
+        z, o = _read_varints(buf, o, e)
+        ct0[idx] = _unzigzag(z)
+        g = np.flatnonzero(n >= 2)
+        z, o[g] = _read_varints(buf, o[g], e[g])
+        cd0[idx[g]] = _unzigzag(z)
+        g = np.flatnonzero(n >= 3)
+        ts_org[idx[g]], ts_end[idx[g]], o[g] = _read_section(buf, o[g], e[g])
+        for s in range(S):
+            if (o >= e).any():
+                raise ValueError("truncated stream header")
+            m = buf[o]
+            if not np.isin(m, _MODE_BYTES).all():
+                raise ValueError("unknown stream mode")
+            smode[s, idx] = m
+            o = o + 1
+            g = np.flatnonzero((m == MODE_PREV) | (m == MODE_DELTA))
+            z, o[g] = _read_varints(buf, o[g], e[g])
+            sfirst[s, idx[g]] = _unzigzag(z)
+            s_org[s, idx], s_end[s, idx], o = _read_section(buf, o, e)
+        cur[act] = o
+    if not np.array_equal(cur, ends):
+        raise ValueError("trailing bytes in blob")
+    return S, n_chunks, cn, ct0, cd0, ts_org, ts_end, smode, sfirst, s_org, s_end
 
 
 def _peek64(words: np.ndarray, bitpos: np.ndarray) -> np.ndarray:
@@ -41,9 +181,11 @@ def _peek64(words: np.ndarray, bitpos: np.ndarray) -> np.ndarray:
 
     ``words`` is the padded buffer viewed as native uint64 words holding
     big-endian byte order (one byteswap up front); a read at bit p spans at
-    most words[p>>6] and the following word.
+    most words[p>>6] and the following word. A cursor run past the buffer
+    (a malformed section) reads the last words; the caller's end check
+    rejects it.
     """
-    w = bitpos >> 6
+    w = np.minimum(bitpos >> 6, len(words) - 2)
     off = (bitpos & 63).astype(_U64)
     v = words[w]
     v2 = words[w + 1]
@@ -52,143 +194,78 @@ def _peek64(words: np.ndarray, bitpos: np.ndarray) -> np.ndarray:
     return np.where(off == 0, v, (v << off) | lo)
 
 
-def _parse(data: np.ndarray, starts: np.ndarray, ends: np.ndarray):
-    """Walk blob + chunk headers, vectorized over blobs.
-
-    The chunk-offset chain is sequential per blob (each chunk's size depends
-    on its section lengths), so iterate over *chunk index* and gather every
-    blob's c-th chunk header in one shot — max(n_chunks) iterations of flat
-    work instead of a per-chunk Python walk.
-    """
-    B = len(starts)
-    if B == 0:
-        raise ValueError("empty batch")
-    if not (np.all(data[starts] == MAGIC[0]) and np.all(data[starts + 1] == MAGIC[1])):
-        raise ValueError("bad magic")
-    if not np.all(data[starts + 2] == VERSION):
-        raise ValueError("unsupported version")
-    ns_arr = data[starts + 3].astype(np.int64)
-    if not np.all(ns_arr == ns_arr[0]):
-        raise ValueError("mixed n_streams in batch")
-    n_streams = int(ns_arr[0])
-    n_chunks = _gather_le(data, starts + 4, 4).astype(np.int64)
-    blob_pts = _gather_le(data, starts + 8, 8).astype(np.int64)
-
-    total_chunks = int(n_chunks.sum())
-    base = np.zeros(B, dtype=np.int64)
-    np.cumsum(n_chunks[:-1], out=base[1:])
-    cn = np.empty(total_chunks, np.int64)
-    ct0 = np.empty(total_chunks, np.int64)
-    cd0 = np.empty(total_chunks, np.int64)
-    ts_org = np.empty(total_chunks, np.int64)  # absolute bit offsets
-    s_org = [np.empty(total_chunks, np.int64) for _ in range(n_streams)]
-
-    cur = (starts + BLOB_HEADER_LEN).astype(np.int64)
-    max_c = int(n_chunks.max()) if B else 0
-    for c in range(max_c):
-        act = np.flatnonzero(n_chunks > c)
-        o = cur[act]
-        idx = base[act] + c
-        cn[idx] = _gather_le(data, o, 4).astype(np.int64)
-        ct0[idx] = _gather_le(data, o + 4, 8).view(np.int64)
-        cd0[idx] = _gather_le(data, o + 12, 8).view(np.int64)
-        ts_len = _gather_le(data, o + 20, 4).astype(np.int64)
-        ts_org[idx] = (o + 24) << 3
-        so = o + 24 + ts_len
-        for s in range(n_streams):
-            slen = _gather_le(data, so, 4).astype(np.int64)
-            s_org[s][idx] = (so + 4) << 3
-            so = so + 4 + slen
-        cur[act] = so
-    if not np.array_equal(cur, ends):
-        raise ValueError("trailing bytes in blob")
-    if (cn <= 0).any():
-        # a zero-point chunk would make its output offset collide with the
-        # next chunk's and silently clobber decoded values — fail loudly
-        # like every other header check
-        raise ValueError("chunk with non-positive point count")
-    # header n_points must equal the chunk sum per blob
-    csum = np.zeros(total_chunks + 1, np.int64)
-    np.cumsum(cn, out=csum[1:])
-    seg = csum[base + n_chunks] - csum[base]
-    if not np.array_equal(seg, blob_pts):
-        raise ValueError("blob n_points header disagrees with chunk sum")
-    return n_streams, n_chunks, blob_pts, cn, ct0, cd0, ts_org, s_org
+def _lanes(org, end, count, out_at):
+    """Sections sorted by descending code count, so each wavefront step's
+    active set is a prefix."""
+    order = np.argsort(-count, kind="stable")
+    return org[order], end[order], count[order], out_at[order]
 
 
-_CONSUME = np.array([1, 9, 15, 24, 37, 69], dtype=np.int64)
+def _check_end(cur, end):
+    if (cur > end).any():
+        raise ValueError("bitstream overruns its section")
 
 
-def _decode_ts(words, cn, ct0, cd0, ts_org, order, n_s, pos0, out):
-    """Delta-of-delta wavefront: one iteration per point index >= 2."""
-    out[pos0] = ct0[order]
-    ge2 = n_s >= 2
-    d0_s = cd0[order]
-    out[pos0[ge2] + 1] = ct0[order][ge2] + d0_s[ge2]
-
-    cur = ts_org[order].copy()
-    delta = d0_s.copy()
-    prev = np.where(ge2, ct0[order] + d0_s, ct0[order])
-    M = len(cn)
-    maxn = int(n_s[0]) if M else 0
-    asc = n_s[::-1]
-    for j in range(2, maxn):
-        k = M - int(np.searchsorted(asc, j, side="right"))
-        w = _peek64(words, cur[:k])
-        is0 = (w >> _U64(63)) == 0
-        p2 = (w >> _U64(62)) == _U64(0b10)
-        p3 = (w >> _U64(61)) == _U64(0b110)
-        p4 = (w >> _U64(60)) == _U64(0b1110)
-        top5 = w >> _U64(59)
-        p5 = top5 == _U64(0b11110)
-        p6 = top5 == _U64(0b11111)
-        z = np.zeros(k, _U64)
-        np.copyto(z, (w >> _U64(55)) & _U64(0x7F), where=p2)
-        np.copyto(z, (w >> _U64(49)) & _U64(0xFFF), where=p3)
-        np.copyto(z, (w >> _U64(40)) & _U64(0xFFFFF), where=p4)
-        np.copyto(z, (w >> _U64(27)) & _U64(0xFFFFFFFF), where=p5)
-        if p6.any():
-            i64 = np.flatnonzero(p6)
-            z[i64] = _peek64(words, cur[:k][i64] + 5)
-        sel = (
-            p2.astype(np.int8)
-            + 2 * p3.astype(np.int8)
-            + 3 * p4.astype(np.int8)
-            + 4 * p5.astype(np.int8)
-            + 5 * p6.astype(np.int8)
-        )
-        dod = ((z >> _ONE) ^ (_U64(0) - (z & _ONE))).view(np.int64)
-        dod[is0] = 0
-        delta[:k] += dod
-        ts = prev[:k] + delta[:k]
-        out[pos0[:k] + j] = ts
-        prev[:k] = ts
-        cur[:k] += _CONSUME[sel]
+def _decode_buckets(words, org, end, count, out_at, out):
+    """Bucket-code wavefront: section i's j-th residual -> out[out_at[i]+j]."""
+    org, end, count, out_at = _lanes(org, end, count, out_at)
+    cur = org.copy()
+    L = len(count)
+    asc = count[::-1]
+    for j in range(int(count[0]) if L else 0):
+        k = L - int(np.searchsorted(asc, j, side="right"))
+        c = cur[:k]
+        w = _peek64(words, c)
+        sel = _BUCKET_OF_TOP[w >> _U64(64 - _TOP)]
+        z = (w << _BUCKET_SHL[sel]) >> _BUCKET_SHR[sel]
+        lit = sel == len(DOD_BUCKETS)
+        if lit.any():
+            z[lit] = _peek64(words, c[lit] + DOD_BUCKETS[-1][1])
+        out[out_at[:k] + j] = _unzigzag(z)
+        cur[:k] += _BUCKET_BITS[sel]
+    _check_end(cur, end)
 
 
-def _decode_stream(words, org, order, n_s, pos0, out):
-    """Gorilla XOR wavefront: raw first value, then one iteration per index."""
-    org_s = org[order]
-    first = _peek64(words, org_s)
-    out[pos0] = first
+def _decode_gorilla(words, org, end, count, out_at, out):
+    """Gorilla XOR wavefront: raw first value, then one step per index."""
+    org, end, count, out_at = _lanes(org, end, count, out_at)
+    first = _peek64(words, org)
+    out[out_at] = first
     prev = first.copy()
-    cur = org_s + 64
-    M = len(org_s)
-    maxn = int(n_s[0]) if M else 0
-    asc = n_s[::-1]
-    for j in range(1, maxn):
-        k = M - int(np.searchsorted(asc, j, side="right"))
+    cur = org + 64
+    L = len(count)
+    asc = count[::-1]
+    for j in range(1, int(count[0]) if L else 0):
+        k = L - int(np.searchsorted(asc, j, side="right"))
         w = _peek64(words, cur[:k])
         same = (w >> _U64(63)) == 0
-        lz = ((w >> _U64(58)) & _U64(31)).astype(np.int64)
-        ml = (((w >> _U64(52)) & _U64(63)) + _U64(1)).astype(np.int64)
-        w2 = _peek64(words, cur[:k] + 12)
+        lz = ((w >> _U64(64 - 1 - GOR_LZ_BITS)) & _U64((1 << GOR_LZ_BITS) - 1)).astype(np.int64)
+        ml = (((w >> _U64(64 - _GOR_HDR)) & _U64((1 << GOR_MLEN_BITS) - 1)) + _ONE).astype(np.int64)
+        w2 = _peek64(words, cur[:k] + _GOR_HDR)
         m = w2 >> ((_U64(64) - ml.view(_U64)) & _U64(63))  # ml==64 -> shift 0
         sh = np.maximum(64 - lz - ml, 0).astype(_U64)  # clamp garbage lanes
         nv = np.where(same, prev[:k], prev[:k] ^ (m << sh))
-        out[pos0[:k] + j] = nv
+        out[out_at[:k] + j] = nv
         prev[:k] = nv
-        cur[:k] += np.where(same, 1, 12 + ml)
+        cur[:k] += np.where(same, 1, _GOR_HDR + ml)
+    _check_end(cur, end)
+
+
+def _gather_lanes(secs, cn, first):
+    """(bit origin, bit end, code count, output index) of every section
+    lane, from (chunk indices, origins, ends, first coded point, output
+    base) per section kind."""
+    cols = [
+        (org[ix], end[ix], cn[ix] - skip, base + first[ix] + skip)
+        for ix, org, end, skip, base in secs
+    ]
+    return [np.concatenate(c) for c in zip(*cols)]
+
+
+def _seg_cumsum(x: np.ndarray, first: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Prefix sums restarting at each segment start (int64, wrapping)."""
+    c = np.cumsum(x)
+    return c - np.repeat(c[first] - x[first], counts)
 
 
 def decode_concat(data: np.ndarray, starts: np.ndarray, ends: np.ndarray):
@@ -204,33 +281,62 @@ def decode_concat(data: np.ndarray, starts: np.ndarray, ends: np.ndarray):
     data = np.ascontiguousarray(data, dtype=np.uint8)
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.asarray(ends, dtype=np.int64)
-    n_streams, n_chunks, blob_pts, cn, ct0, cd0, ts_org, s_org = _parse(
-        data, starts, ends
-    )
+    if len(starts) and ((starts < 0).any() or (ends > len(data)).any()):
+        raise ValueError("blob span outside the buffer")
     pad = (-len(data)) % 8 + 16
     buf = np.concatenate([data, np.zeros(pad, np.uint8)])
+    S, n_chunks, cn, ct0, cd0, ts_org, ts_end, smode, sfirst, s_org, s_end = _parse(
+        buf, starts, ends
+    )
     words = buf.view(np.uint64)
     if np.little_endian:
         words = words.byteswap()
 
-    out_off = np.zeros(len(cn) + 1, dtype=np.int64)
-    np.cumsum(cn, out=out_off[1:])
-    N = int(out_off[-1])
-    # descending point count -> active wavefront is always a prefix
-    order = np.argsort(-cn, kind="stable")
-    n_s = cn[order]
-    pos0 = out_off[:-1][order]
+    C = len(cn)
+    first = np.zeros(C, dtype=np.int64)
+    np.cumsum(cn[:-1], out=first[1:])
+    N = int(cn.sum())
 
-    ts_out = np.empty(N, dtype=np.int64)
-    _decode_ts(words, cn, ct0, cd0, ts_org, order, n_s, pos0, ts_out)
+    # timestamp and integer-mode residuals: one wavefront, one buffer
+    resid = np.zeros((1 + S) * N, dtype=np.int64)
+    kind = smode & ~np.uint8(FIRST_NAN)
+    secs = [(np.flatnonzero(cn >= 3), ts_org, ts_end, 2, 0)]
+    secs += [
+        (np.flatnonzero((kind[s] != MODE_FLOAT) & (cn >= 2)), s_org[s], s_end[s], 1,
+         (1 + s) * N)
+        for s in range(S)
+    ]
+    _decode_buckets(words, *_gather_lanes(secs, cn, first), resid)
+    gbits = np.zeros(S * N, dtype=_U64)
+    secs = [(np.flatnonzero(kind[s] == MODE_FLOAT), s_org[s], s_end[s], 0, s * N)
+            for s in range(S)]
+    if any(len(sec[0]) for sec in secs):
+        _decode_gorilla(words, *_gather_lanes(secs, cn, first), gbits)
+
+    # delta[k] = ts[k] - ts[k-1]: delta0, then the running dod sums
+    dd = resid[:N]
+    g2 = cn >= 2
+    dd[first[g2] + 1] = cd0[g2]
+    delta = _seg_cumsum(dd, first, cn)
+    y = delta.copy()
+    y[first] = ct0
+    ts_out = _seg_cumsum(y, first, cn)
+
     streams = []
-    for s in range(n_streams):
-        so = np.empty(N, dtype=np.uint64)
-        _decode_stream(words, s_org[s], order, n_s, pos0, so)
-        streams.append(so)
+    for s in range(S):
+        r = resid[(1 + s) * N : (2 + s) * N]
+        pm = np.repeat(kind[s], cn)
+        r[first] = sfirst[s]
+        v = np.where(pm == MODE_PREV, _seg_cumsum(r, first, cn), delta + r)
+        v[first] = sfirst[s]
+        out = v.astype(np.float64).view(_U64)
+        out[first[(smode[s] & FIRST_NAN) != 0]] = CANONICAL_NAN
+        flt = pm == MODE_FLOAT
+        out[flt] = gbits[s * N : (s + 1) * N][flt]
+        streams.append(out)
 
-    point_off = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(blob_pts, out=point_off[1:])
+    point_off = np.concatenate([[0], np.cumsum(cn)])[np.cumsum(np.append(0, n_chunks))]
+    blob_pts = np.diff(point_off)
     return blob_pts, point_off, ts_out, streams
 
 

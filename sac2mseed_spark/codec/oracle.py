@@ -1,34 +1,42 @@
 """Pure-Python reference codec — the parity oracle.
 
-Slow, obviously-correct mirror of the chunk format, structured like the
-reference's encoder/decoder pair (packdata.c / unpackdata.c): a bit writer,
-per-point greedy bucket choice, prefix-sum reconstruction on decode, and an
-Xn-style final-value integrity check. The vectorized kernel must reproduce
-these bytes exactly (tests/test_codec.py).
+Slow, obviously-correct mirror of the payload format (layout in
+codec/__init__.py), structured like the reference's encoder/decoder pair
+(packdata.c / unpackdata.c): a bit writer, per-point greedy bucket
+choice, per-stream mode choice by encoded size, prefix-sum reconstruction
+on decode, and an Xn-style final-value integrity check. The vectorized
+kernels must reproduce these bytes and values exactly (tests/test_codec.py).
 
-Chunk layout (little-endian scalars, MSB-first bitstreams):
+Chunk layout (varints little-endian base-128, bitstreams MSB-first):
 
-    u32 n_points | i64 t0_us | i64 delta0_us
-    u32 ts_nbytes  + ts bitstream   (delta-of-delta codes for points i>=2)
-    per stream: u32 nbytes + value bitstream
-                (first value: raw 64 bits of the float64; then XOR codes)
+    varint n | varint zigzag(t0) | varint zigzag(delta0)      (n >= 2)
+    varint ts_nbytes + ts bitstream                           (n >= 3)
+    per stream: u8 mode | head | varint nbytes + bitstream
+        mode 0: no head; first value raw 64 bits, then XOR codes
+        mode 1/2: head = varint zigzag(first) (absent under FIRST_NAN);
+                  bucket codes of the residuals of points 1..n-1
 
 Blob layout:
 
-    'T' 'R' | u8 version | u8 n_streams | u32 n_chunks | u64 n_points
-    chunk bytes, concatenated in chunk order
+    u8 version | u8 n_streams | varint n_chunks | chunk bytes, in order
 """
 
 from __future__ import annotations
 
+import math
 import struct
 
 from . import (
-    BLOB_HEADER_LEN,
+    CANONICAL_NAN,
     DOD_BUCKETS,
+    FIRST_NAN,
     GOR_LZ_BITS,
     GOR_MLEN_BITS,
-    MAGIC,
+    INT_LIMIT,
+    MODE_BYTES,
+    MODE_DELTA,
+    MODE_FLOAT,
+    MODE_PREV,
     VERSION,
 )
 
@@ -54,6 +62,9 @@ class BitWriter:
 
 
 class BitReader:
+    """Reads MSB-first fields; reading past the end raises ValueError
+    (a negative shift count)."""
+
     __slots__ = ("val", "total", "pos")
 
     def __init__(self, data: bytes):
@@ -69,28 +80,76 @@ class BitReader:
         return out
 
 
+def _wrap(v: int) -> int:
+    """v as a two's-complement int64 (the vectorized kernels' arithmetic)."""
+    return ((v + (1 << 63)) & _MASK64) - (1 << 63)
+
+
 def _zigzag(v: int) -> int:
-    return ((v << 1) ^ (v >> 63)) & _MASK64 if v < 0 else (v << 1)
+    v = _wrap(v)
+    return ((v << 1) ^ (v >> 63)) & _MASK64
 
 
 def _unzigzag(z: int) -> int:
     return (z >> 1) ^ -(z & 1)
 
 
-def _encode_dod_stream(ts: list[int]) -> bytes:
+def _varint(u: int) -> bytes:
+    out = bytearray()
+    while u >= 0x80:
+        out.append((u & 0x7F) | 0x80)
+        u >>= 7
+    out.append(u)
+    return bytes(out)
+
+
+def _read_varint(buf: bytes, off: int) -> tuple[int, int]:
+    """(value, offset after it); a varint must end inside ``buf`` within 10
+    bytes and fit 64 bits."""
+    out = 0
+    for j in range(10):
+        if off >= len(buf):
+            raise ValueError("truncated varint")
+        b = buf[off]
+        off += 1
+        out |= (b & 0x7F) << (7 * j)
+        if b < 0x80:
+            if out > _MASK64:
+                raise ValueError("varint overflows 64 bits")
+            return out, off
+    raise ValueError("varint longer than 10 bytes")
+
+
+def _encode_buckets(residuals: list[int]) -> bytes:
+    """Bucket codes of int64 residuals: '0' for zero, else prefix + zigzag."""
     w = BitWriter()
-    for i in range(2, len(ts)):
-        dod = (ts[i] - ts[i - 1]) - (ts[i - 1] - ts[i - 2])
-        if dod == 0:
+    for r in residuals:
+        if r == 0:
             w.write(0, 1)
             continue
-        z = _zigzag(dod)
+        z = _zigzag(r)
         for prefix, plen, bits in DOD_BUCKETS:
-            if z < (1 << bits) or bits == 64:
+            if z < (1 << bits):
                 w.write(prefix, plen)
                 w.write(z, bits)
                 break
     return w.getvalue()
+
+
+def _decode_buckets(data: bytes, count: int) -> list[int]:
+    r = BitReader(data)
+    out = []
+    for _ in range(count):
+        if r.read(1) == 0:
+            out.append(0)
+            continue
+        for prefix, plen, bits in DOD_BUCKETS[:-1]:
+            if r.read(1) == 0:
+                out.append(_unzigzag(r.read(bits)))
+                break
+        else:
+            out.append(_unzigzag(r.read(64)))
+    return out
 
 
 def _clz64(x: int) -> int:
@@ -122,87 +181,148 @@ def _encode_gorilla_stream(bits: list[int]) -> bytes:
     return w.getvalue()
 
 
+def _decode_gorilla_stream(data: bytes, n: int) -> list[int]:
+    r = BitReader(data)
+    vals = [r.read(64)]
+    for _ in range(n - 1):
+        if r.read(1) == 0:
+            vals.append(vals[-1])
+        else:
+            lz = r.read(GOR_LZ_BITS)
+            mlen = r.read(GOR_MLEN_BITS) + 1
+            tz = 64 - lz - mlen
+            vals.append(vals[-1] ^ (r.read(mlen) << tz))
+    return vals
+
+
+def _as_int(b: int) -> int | None:
+    """The integer a float64 bit pattern holds exactly, or None."""
+    v = bits_to_float(b)
+    if not math.isfinite(v) or abs(v) >= INT_LIMIT:
+        return None
+    i = int(v)
+    return i if float_to_bits(float(i)) == b else None  # rejects -0.0
+
+
+def _encode_stream(ts: list[int], bits: list[int]) -> bytes:
+    """One stream section, in the mode with the fewest bytes."""
+    body = _encode_gorilla_stream(bits)
+    best = bytes([MODE_FLOAT]) + _varint(len(body)) + body
+    nan_first = bits[0] == CANONICAL_NAN
+    ints = [None if nan_first else _as_int(bits[0])] + [_as_int(b) for b in bits[1:]]
+    if any(v is None for v in ints[int(nan_first):]):
+        return best
+    head = b"" if nan_first else _varint(_zigzag(ints[0]))
+    flag = FIRST_NAN if nan_first else 0
+    prev = 0 if nan_first else ints[0]
+    for mode in (MODE_PREV, MODE_DELTA):
+        if mode == MODE_PREV:
+            preds = [prev] + ints[1:-1]
+        else:
+            preds = [ts[k] - ts[k - 1] for k in range(1, len(ts))]
+        body = _encode_buckets([_wrap(v - p) for v, p in zip(ints[1:], preds)])
+        sec = bytes([mode | flag]) + head + _varint(len(body)) + body
+        if len(sec) < len(best):
+            best = sec
+    return best
+
+
 def encode_chunk(ts: list[int], streams: list[list[int]]) -> bytes:
     """Encode one chunk. ``ts`` are epoch-us ints; ``streams`` are lists of
     uint64 float-bit patterns (use float_to_bits)."""
     n = len(ts)
     assert n > 0 and all(len(s) == n for s in streams)
-    t0 = ts[0]
-    delta0 = ts[1] - ts[0] if n >= 2 else 0
-    out = [struct.pack("<Iqq", n, t0, delta0)]
-    ts_bits = _encode_dod_stream(ts) if n >= 3 else b""
-    out.append(struct.pack("<I", len(ts_bits)))
-    out.append(ts_bits)
-    for s in streams:
-        sb = _encode_gorilla_stream(s)
-        out.append(struct.pack("<I", len(sb)))
-        out.append(sb)
+    out = [_varint(n), _varint(_zigzag(ts[0]))]
+    if n >= 2:
+        out.append(_varint(_zigzag(ts[1] - ts[0])))
+    if n >= 3:
+        dods = [(ts[i] - ts[i - 1]) - (ts[i - 1] - ts[i - 2]) for i in range(2, n)]
+        ts_bits = _encode_buckets([_wrap(d) for d in dods])
+        out += [_varint(len(ts_bits)), ts_bits]
+    out += [_encode_stream(ts, s) for s in streams]
     return b"".join(out)
 
 
-def assemble_blob(chunks: list[bytes], n_streams: int, n_points: int) -> bytes:
-    head = MAGIC + struct.pack("<BBIQ", VERSION, n_streams, len(chunks), n_points)
-    return head + b"".join(chunks)
+def assemble_blob(chunks: list[bytes], n_streams: int) -> bytes:
+    return bytes([VERSION, n_streams]) + _varint(len(chunks)) + b"".join(chunks)
+
+
+def _read_section(blob: bytes, off: int) -> tuple[bytes, int]:
+    nbytes, off = _read_varint(blob, off)
+    if off + nbytes > len(blob):
+        raise ValueError("section length past blob end")
+    return blob[off : off + nbytes], off + nbytes
+
+
+def _blob_header(blob: bytes) -> tuple[int, int, int]:
+    """(n_streams, n_chunks, offset of the first chunk)."""
+    if len(blob) < 2:
+        raise ValueError("blob shorter than its header")
+    if blob[0] != VERSION:
+        raise ValueError(f"unsupported version {blob[0]}")
+    n_chunks, off = _read_varint(blob, 2)
+    return blob[1], n_chunks, off
 
 
 def iter_chunks(blob: bytes):
-    """Yield (n_points, t0, delta0, ts_bits, [stream_bits...]) per chunk."""
-    if blob[:2] != MAGIC:
-        raise ValueError("bad magic")
-    version, n_streams, n_chunks, _n_points = struct.unpack_from("<BBIQ", blob, 2)
-    if version != VERSION:
-        raise ValueError(f"unsupported version {version}")
-    off = BLOB_HEADER_LEN
+    """Yield (n_points, t0, delta0, ts_bits, [(mode_byte, first, bits)...])
+    per chunk; ``first`` is the integer modes' head value (None for mode 0
+    and under FIRST_NAN)."""
+    n_streams, n_chunks, off = _blob_header(blob)
     for _ in range(n_chunks):
-        n, t0, delta0 = struct.unpack_from("<Iqq", blob, off)
-        off += 20
-        (ts_len,) = struct.unpack_from("<I", blob, off)
-        off += 4
-        ts_bits = blob[off : off + ts_len]
-        off += ts_len
+        n, off = _read_varint(blob, off)
+        if not 0 < n <= 8 * len(blob) + 2:
+            raise ValueError(f"chunk point count {n} out of range")
+        z, off = _read_varint(blob, off)
+        t0 = _unzigzag(z)
+        delta0 = 0
+        if n >= 2:
+            z, off = _read_varint(blob, off)
+            delta0 = _unzigzag(z)
+        ts_bits = b""
+        if n >= 3:
+            ts_bits, off = _read_section(blob, off)
         streams = []
         for _s in range(n_streams):
-            (slen,) = struct.unpack_from("<I", blob, off)
-            off += 4
-            streams.append(blob[off : off + slen])
-            off += slen
+            if off >= len(blob):
+                raise ValueError("truncated stream header")
+            mode = blob[off]
+            off += 1
+            if mode not in MODE_BYTES:
+                raise ValueError(f"unknown stream mode {mode:#x}")
+            first = None
+            if mode in (MODE_PREV, MODE_DELTA):
+                z, off = _read_varint(blob, off)
+                first = _unzigzag(z)
+            sb, off = _read_section(blob, off)
+            streams.append((mode, first, sb))
         yield n, t0, delta0, ts_bits, streams
     if off != len(blob):
         raise ValueError("trailing bytes in blob")
 
 
-def decode_chunk(n, t0, delta0, ts_bits, stream_bits):
+def decode_chunk(n, t0, delta0, ts_bits, stream_secs):
     ts = [t0]
     if n >= 2:
-        ts.append(t0 + delta0)
-    r = BitReader(ts_bits)
+        ts.append(_wrap(t0 + delta0))
     delta = delta0
-    for _ in range(n - 2):
-        if r.read(1) == 0:
-            dod = 0
-        else:
-            for prefix, plen, bits in DOD_BUCKETS[:-1]:
-                if r.read(1) == 0:
-                    dod = _unzigzag(r.read(bits))
-                    break
-            else:
-                dod = _unzigzag(r.read(64))
-        delta += dod
-        ts.append(ts[-1] + delta)
+    for dod in _decode_buckets(ts_bits, n - 2):
+        delta = _wrap(delta + dod)
+        ts.append(_wrap(ts[-1] + delta))
 
     streams = []
-    for sb in stream_bits:
-        r = BitReader(sb)
-        vals = [r.read(64)]
-        for _ in range(n - 1):
-            if r.read(1) == 0:
-                vals.append(vals[-1])
-            else:
-                lz = r.read(GOR_LZ_BITS)
-                mlen = r.read(GOR_MLEN_BITS) + 1
-                tz = 64 - lz - mlen
-                x = r.read(mlen) << tz
-                vals.append(vals[-1] ^ x)
+    for mode, first, sb in stream_secs:
+        if mode == MODE_FLOAT:
+            streams.append(_decode_gorilla_stream(sb, n))
+            continue
+        nan_first = bool(mode & FIRST_NAN)
+        vs_prev = (mode & ~FIRST_NAN) == MODE_PREV
+        vals = [CANONICAL_NAN if nan_first else float_to_bits(float(first))]
+        prev = 0 if nan_first else first
+        for k, r in enumerate(_decode_buckets(sb, n - 1), start=1):
+            pred = prev if vs_prev else ts[k] - ts[k - 1]
+            prev = _wrap(pred + r)
+            vals.append(float_to_bits(float(prev)))
         streams.append(vals)
     return ts, streams
 
@@ -214,10 +334,9 @@ def decode_blob(blob: bytes, expect_xn: int | None = None):
     it like the reference checks Steim Xn (unpackdata.c:556-561).
     """
     ts_all: list[int] = []
-    n_streams = blob[3]
-    streams_all: list[list[int]] = [[] for _ in range(n_streams)]
-    for n, t0, delta0, ts_bits, stream_bits in iter_chunks(blob):
-        ts, streams = decode_chunk(n, t0, delta0, ts_bits, stream_bits)
+    streams_all: list[list[int]] = [[] for _ in range(_blob_header(blob)[0])]
+    for n, t0, delta0, ts_bits, stream_secs in iter_chunks(blob):
+        ts, streams = decode_chunk(n, t0, delta0, ts_bits, stream_secs)
         ts_all.extend(ts)
         for acc, s in zip(streams_all, streams):
             acc.extend(s)
@@ -231,3 +350,7 @@ def decode_blob(blob: bytes, expect_xn: int | None = None):
 
 def float_to_bits(v: float) -> int:
     return struct.unpack("<Q", struct.pack("<d", v))[0]
+
+
+def bits_to_float(b: int) -> float:
+    return struct.unpack("<d", struct.pack("<Q", b))[0]

@@ -1,12 +1,14 @@
 """Vectorized (numpy) chunk encoder — the production kernel.
 
 Encodes a whole Arrow batch of chunks in one shot: every per-point code in
-the delta-of-delta and Gorilla-XOR streams is a pure function of at most two
-consecutive points, so code values, code lengths, bit offsets (segmented
-prefix sums) and the final bit-scatter are all flat array operations across
-ALL chunks at once. No per-chunk Python loop — per-batch cost is O(total
-points) numpy work, which is what lets a 1000-executor cluster keep its
-cores busy instead of burning them on per-group interpreter overhead.
+the timestamp, integer-residual and Gorilla-XOR streams is a pure function
+of at most two consecutive points, so code values, code lengths, each
+chunk's stream mode (the smallest of three per-chunk byte counts), bit
+offsets (segmented prefix sums), the varint headers and the final
+bit-scatter are all flat array operations across ALL chunks at once. No
+per-chunk Python loop — per-batch cost is O(total points) numpy work,
+which is what lets a 1000-executor cluster keep its cores busy instead of
+burning them on per-group interpreter overhead.
 
 Greedy bucket choice parallels the reference's per-word Steim2 level choice
 (/root/reference/libmseed/packdata.c:515-686); unlike Steim2 (which errors
@@ -22,6 +24,16 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import (
+    CANONICAL_NAN,
+    DOD_BUCKETS,
+    FIRST_NAN,
+    GOR_LZ_BITS,
+    GOR_MLEN_BITS,
+    INT_LIMIT,
+    MODE_FLOAT,
+)
+
 _U64 = np.uint64
 _I64 = np.int64
 
@@ -33,6 +45,22 @@ for _v in range(1, 256):
 _CTZ8 = np.full(256, 8, dtype=np.uint8)
 for _v in range(1, 256):
     _CTZ8[_v] = (_v & -_v).bit_length() - 1
+
+# Residual bucket index b (0 = zero residual, b = i + 1 for DOD_BUCKETS[i])
+# -> code layout. Slot 0 holds the prefix, plus the payload when both fit
+# 32 bits; a wider payload is split in halves over slots 1 and 2.
+_BUCKET_LIMITS = np.array([1] + [1 << b for _, _, b in DOD_BUCKETS[:-1]], dtype=_U64)
+_BUCKET_BITS = np.array([1] + [pl + b for _, pl, b in DOD_BUCKETS], dtype=np.int64)
+_HALF = np.array([0] + [0 if pl + b <= 32 else b // 2 for _, pl, b in DOD_BUCKETS],
+                 dtype=np.int64)
+_SLOT0_VAL = np.array(
+    [0] + [p << b if pl + b <= 32 else p for p, pl, b in DOD_BUCKETS], dtype=_U64
+)
+_SLOT0_LEN = np.array(
+    [1] + [pl + b if pl + b <= 32 else pl for _, pl, b in DOD_BUCKETS], dtype=np.int64
+)
+_VARINT_LIMITS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=_U64)
+_NO_MODE = np.int64(1 << 62)  # byte count of an integer mode a chunk may not use
 
 
 def _clz64(x: np.ndarray) -> np.ndarray:
@@ -64,43 +92,40 @@ def _zigzag(d: np.ndarray) -> np.ndarray:
     return ((d << np.int64(1)) ^ (d >> np.int64(63))).view(_U64)
 
 
-def _dod_slots(dod: np.ndarray):
-    """(N,3) value/length slot arrays for delta-of-delta codes."""
-    n = len(dod)
-    z = _zigzag(dod)
-    vals = np.zeros((n, 3), dtype=_U64)
-    lens = np.zeros((n, 3), dtype=np.int64)
+def varint_len(u: np.ndarray) -> np.ndarray:
+    """Bytes of each uint64 as a base-128 varint."""
+    return np.searchsorted(_VARINT_LIMITS, u, side="right") + 1
 
-    zero = dod == 0
-    b7 = ~zero & (z < _U64(1 << 7))
-    b12 = ~zero & ~b7 & (z < _U64(1 << 12))
-    b20 = ~zero & ~b7 & ~b12 & (z < _U64(1 << 20))
-    b32 = ~zero & ~b7 & ~b12 & ~b20 & (z < _U64(1 << 32))
-    b64 = ~zero & ~b7 & ~b12 & ~b20 & ~b32
 
-    # prefix+payload combined into slot 0 when total <= 32 bits
-    vals[b7, 0] = (_U64(0b10 << 7)) | z[b7]
-    lens[b7, 0] = 9
-    vals[b12, 0] = (_U64(0b110 << 12)) | z[b12]
-    lens[b12, 0] = 15
-    vals[b20, 0] = (_U64(0b1110 << 20)) | z[b20]
-    lens[b20, 0] = 24
-    # 32-bit payload: prefix slot + hi16 + lo16 (keeps every slot <= 32)
-    vals[b32, 0] = _U64(0b11110)
-    lens[b32, 0] = 5
-    vals[b32, 1] = z[b32] >> _U64(16)
-    lens[b32, 1] = 16
-    vals[b32, 2] = z[b32] & _U64(0xFFFF)
-    lens[b32, 2] = 16
-    # 64-bit literal: prefix + hi32 + lo32
-    vals[b64, 0] = _U64(0b11111)
-    lens[b64, 0] = 5
-    vals[b64, 1] = z[b64] >> _U64(32)
-    lens[b64, 1] = 32
-    vals[b64, 2] = z[b64] & _U64(0xFFFFFFFF)
-    lens[b64, 2] = 32
-    # dod == 0: single '0' bit
-    lens[zero, 0] = 1
+def put_varints(buf: np.ndarray, start: np.ndarray, u: np.ndarray, lens: np.ndarray):
+    """Write ``u[i]`` as a little-endian base-128 varint of ``lens[i]``
+    bytes at ``buf[start[i]]``, one pass per byte position."""
+    u = u.astype(_U64, copy=False)
+    for j in range(int(lens.max(initial=0))):
+        m = lens > j
+        byte = (u[m] >> _U64(7 * j)) & _U64(0x7F)
+        byte |= np.where(lens[m] > j + 1, _U64(0x80), _U64(0))
+        buf[start[m] + j] = byte.astype(np.uint8)
+
+
+def _bucket_codes(r: np.ndarray):
+    """(bucket index, zigzag) of int64 residuals; index 0 = zero residual."""
+    z = _zigzag(r)
+    return np.searchsorted(_BUCKET_LIMITS, z, side="right"), z
+
+
+def _bucket_slots(idx: np.ndarray, z: np.ndarray):
+    """(N,3) value/length slot arrays of bucket codes."""
+    half = _HALF[idx]
+    h = half.view(_U64)
+    vals = np.empty((len(z), 3), dtype=_U64)
+    lens = np.empty((len(z), 3), dtype=np.int64)
+    vals[:, 0] = _SLOT0_VAL[idx] | np.where(half == 0, z, _U64(0))
+    lens[:, 0] = _SLOT0_LEN[idx]
+    vals[:, 1] = z >> h  # ignored where half == 0 (zero length)
+    lens[:, 1] = half
+    vals[:, 2] = z & ((_U64(1) << h) - _U64(1))
+    lens[:, 2] = half
     return vals, lens
 
 
@@ -113,7 +138,7 @@ def _gorilla_slots(bits: np.ndarray, pos: np.ndarray):
     n = len(bits)
     prev = np.empty_like(bits)
     prev[1:] = bits[:-1]
-    prev[0] = 0
+    prev[:1] = 0
     x = bits ^ prev
 
     vals = np.zeros((n, 3), dtype=_U64)
@@ -132,15 +157,16 @@ def _gorilla_slots(bits: np.ndarray, pos: np.ndarray):
     nz = rest & (x != 0)
     if nz.any():
         xs = x[nz]
-        lz = np.minimum(_clz64(xs), 31).astype(_U64)
+        lz = np.minimum(_clz64(xs), (1 << GOR_LZ_BITS) - 1).astype(_U64)
         tz = _ctz64(xs).astype(_U64)
         mlen = _U64(64) - lz - tz
         m = xs >> tz
-        vals_nz0 = (_U64(1 << 11)) | (lz << _U64(6)) | (mlen - _U64(1))
+        hdr = 1 + GOR_LZ_BITS + GOR_MLEN_BITS
+        vals_nz0 = (_U64(1 << (hdr - 1))) | (lz << _U64(GOR_MLEN_BITS)) | (mlen - _U64(1))
         lo_len = np.minimum(mlen, _U64(32))
         hi_len = mlen - lo_len
         vals[nz, 0] = vals_nz0
-        lens[nz, 0] = 12
+        lens[nz, 0] = hdr
         vals[nz, 1] = np.where(hi_len > 0, m >> lo_len, 0)
         lens[nz, 1] = hi_len.astype(np.int64)
         vals[nz, 2] = m & ((_U64(1) << lo_len) - _U64(1))
@@ -150,9 +176,7 @@ def _gorilla_slots(bits: np.ndarray, pos: np.ndarray):
 
 def _section_bits(lens: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """Total bit length per chunk for one stream's (N,3) len matrix."""
-    per_elem = lens.sum(axis=1, dtype=np.int64)
-    cum = np.concatenate([[0], np.cumsum(per_elem)])
-    return cum[offsets[1:]] - cum[offsets[:-1]]
+    return np.add.reduceat(lens.sum(axis=1, dtype=np.int64), offsets[:-1])
 
 
 def _scatter(buf: np.ndarray, vals: np.ndarray, lens: np.ndarray, bitpos: np.ndarray):
@@ -200,6 +224,77 @@ def _scatter(buf: np.ndarray, vals: np.ndarray, lens: np.ndarray, bitpos: np.nda
         view[uq] += comb
 
 
+def _sized(bits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nbytes, varint nbytes + nbytes) of bitstream sections of ``bits``."""
+    nb = (bits + 7) >> 3
+    return nb, varint_len(nb.view(_U64)) + nb
+
+
+def _encode_stream(bits, pos, starts, counts, d):
+    """One value stream's per-chunk mode and its sections.
+
+    Returns (mode byte, head value, head varint length, section nbytes,
+    section slot vals, section slot lens) per chunk / per point."""
+    f = bits.view(np.float64)
+    first = pos == 0
+    nan_first = first & (bits == _U64(CANONICAL_NAN))
+    fin = np.abs(f) < INT_LIMIT  # False for NaN and +-inf
+    iv = np.where(fin, f, 0.0).astype(_I64)
+    ok = (iv.astype(np.float64).view(_U64) == bits) | nan_first  # rejects -0.0
+    elig = np.logical_and.reduceat(ok, starts)
+
+    prev = np.empty_like(iv)
+    prev[1:] = iv[:-1]
+    prev[:1] = 0
+    codes = [_bucket_codes(iv - prev), _bucket_codes(iv - d)]
+
+    cnan = nan_first[starts]
+    head_val = _zigzag(iv[starts])
+    head_len = np.where(cnan, 0, varint_len(head_val))
+    nbs, sizes = [], []
+    for idx, _ in codes:
+        pbits = _BUCKET_BITS[idx]
+        pbits[first] = 0
+        nb, sec = _sized(np.add.reduceat(pbits, starts))
+        nbs.append(nb)
+        sizes.append(np.where(elig, 1 + head_len + sec, _NO_MODE))
+
+    # Gorilla costs >= 64 bits, then 1 bit per repeat and 13 per change:
+    # where an integer mode is already smaller, skip the exact XOR codes
+    prev_bits = np.empty_like(bits)
+    prev_bits[1:] = bits[:-1]
+    prev_bits[:1] = 0
+    lb = np.where(first, 64, np.where(bits == prev_bits, 1, 2 + GOR_LZ_BITS + GOR_MLEN_BITS))
+    need = np.minimum(*sizes) >= 1 + _sized(np.add.reduceat(lb, starts))[1]
+    need_pt = np.repeat(need, counts)
+    gv, gl = _gorilla_slots(bits[need_pt], pos[need_pt])
+    nb0 = np.zeros(len(starts), dtype=np.int64)
+    if need.any():
+        sub_off = np.concatenate([[0], np.cumsum(counts[need])])
+        nb0[need] = _sized(_section_bits(gl, sub_off))[0]
+    sizes.insert(0, np.where(need, 1 + varint_len(nb0.view(_U64)) + nb0, _NO_MODE))
+    nbs.insert(0, nb0)
+    mode = np.argmin(np.stack(sizes), axis=0)  # ties -> lower mode
+    nbytes = np.choose(mode, nbs)
+
+    pm = np.repeat(mode, counts)
+    use1 = pm == 1
+    vals, lens = _bucket_slots(
+        np.where(use1, codes[0][0], codes[1][0]), np.where(use1, codes[0][1], codes[1][1])
+    )
+    lens[first] = 0
+    flt = pm == MODE_FLOAT
+    if flt.any():
+        sel = flt[need_pt]
+        vals[flt] = gv[sel]
+        lens[flt] = gl[sel]
+
+    is_int = mode != MODE_FLOAT
+    mode_byte = mode | np.where(is_int & cnan, FIRST_NAN, 0)
+    head_len = np.where(is_int, head_len, 0)
+    return mode_byte, head_val, head_len, nbytes, vals, lens
+
+
 def encode_chunks_raw(
     ts_flat: np.ndarray, offsets: np.ndarray, streams_flat: list[np.ndarray]
 ):
@@ -216,89 +311,78 @@ def encode_chunks_raw(
     """
     ts_flat = np.asarray(ts_flat, dtype=_I64)
     offsets = np.asarray(offsets, dtype=np.int64)
-    M = len(offsets) - 1
     N = len(ts_flat)
     counts = offsets[1:] - offsets[:-1]
     if (counts <= 0).any():
         raise ValueError("empty chunk")
-    pos = np.arange(N) - np.repeat(offsets[:-1], counts)
+    starts = offsets[:-1]
+    pos = np.arange(N) - np.repeat(starts, counts)
 
-    # deltas and delta-of-deltas (valid only where pos allows)
+    # deltas and delta-of-deltas (valid only where pos allows); int64
+    # arithmetic wraps, like the oracle's
     d = np.zeros(N, dtype=_I64)
     d[1:] = ts_flat[1:] - ts_flat[:-1]
     dod = np.zeros(N, dtype=_I64)
     dod[2:] = d[2:] - d[1:-1]
-    ts_vals, ts_lens = _dod_slots(dod)
-    mask01 = pos < 2
-    ts_vals[mask01] = 0
-    ts_lens[mask01] = 0
+    ts_vals, ts_lens = _bucket_slots(*_bucket_codes(dod))
+    ts_lens[pos < 2] = 0
+    ts_nbytes = (_section_bits(ts_lens, offsets) + 7) >> 3  # 0 where n < 3
 
-    sv_list, sl_list = [], []
-    for s in streams_flat:
-        s = np.ascontiguousarray(s, dtype=_U64)
-        sv, sl = _gorilla_slots(s, pos)
-        sv_list.append(sv)
-        sl_list.append(sl)
+    # ---- chunk header: n | zigzag(t0) | zigzag(delta0) | ts section ----
+    t0 = ts_flat[starts]
+    zt0 = _zigzag(t0)
+    zd0 = _zigzag(d[np.minimum(starts + 1, N - 1)])
+    len_n = varint_len(counts.view(_U64))
+    len_t0 = varint_len(zt0)
+    len_d0 = np.where(counts >= 2, varint_len(zd0), 0)
+    len_tsn = np.where(counts >= 3, varint_len(ts_nbytes.view(_U64)), 0)
+    chunk_sizes = len_n + len_t0 + len_d0 + len_tsn + ts_nbytes
 
-    # section sizes per chunk
-    ts_bits = _section_bits(ts_lens, offsets)
-    ts_nbytes = (ts_bits + 7) >> 3
-    s_bits = [_section_bits(sl, offsets) for sl in sl_list]
-    s_nbytes = [(b + 7) >> 3 for b in s_bits]
+    enc = [_encode_stream(np.ascontiguousarray(s, dtype=_U64), pos, starts, counts, d)
+           for s in streams_flat]
+    for _, _, head_len, nbytes, _, _ in enc:
+        chunk_sizes = chunk_sizes + 1 + head_len + varint_len(nbytes.view(_U64)) + nbytes
+    chunk_off = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(chunk_sizes, out=chunk_off[1:])
+    buf = np.zeros(int(chunk_off[-1]) + 16, dtype=np.uint8)  # slack for 64-bit windows
 
-    k = len(streams_flat)
-    chunk_sizes = 20 + 4 + ts_nbytes
-    for nb in s_nbytes:
-        chunk_sizes = chunk_sizes + 4 + nb
-    chunk_off = np.concatenate([[0], np.cumsum(chunk_sizes)])
-    total = int(chunk_off[-1])
-    buf = np.zeros(total + 16, dtype=np.uint8)  # slack for 64-bit windows
-
-    # ---- fixed headers (vectorized byte scatters) ----
-    def put_le(start: np.ndarray, value: np.ndarray, nbytes: int):
-        v = value.astype(np.uint64)
-        for j in range(nbytes):
-            buf[start + j] = ((v >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
-
-    t0 = ts_flat[offsets[:-1]]
-    delta0 = np.where(counts >= 2, ts_flat[np.minimum(offsets[:-1] + 1, N - 1)] - t0, 0)
-    base = chunk_off[:-1]
-    put_le(base + 0, counts.astype(np.uint64), 4)
-    put_le(base + 4, t0.view(np.uint64) if t0.dtype == _I64 else t0.astype(np.uint64), 8)
-    put_le(base + 12, delta0.astype(_I64).view(np.uint64), 8)
-    put_le(base + 20, ts_nbytes.astype(np.uint64), 4)
-
-    sec_start = base + 24  # byte offset where the ts bitstream begins
-    ts_sec_start = sec_start.copy()
-    stream_sec_starts = []
-    cursor = sec_start + ts_nbytes
-    for si in range(k):
-        put_le(cursor, s_nbytes[si].astype(np.uint64), 4)
-        stream_sec_starts.append(cursor + 4)
-        cursor = cursor + 4 + s_nbytes[si]
-
-    # ---- bitstream scatters ----
-    def scatter_stream(vals, lens, sec_byte_start):
+    def scatter_section(vals, lens, sec_byte_start):
         flat_lens = lens.reshape(-1)
         cum = np.concatenate([[0], np.cumsum(flat_lens)])[:-1]  # exclusive
-        first_field = offsets[:-1] * 3
         # one repeat: per-chunk (section bit origin - chunk's first bit)
-        base = sec_byte_start * 8 - cum[first_field]
-        abs_bit = np.repeat(base, counts * 3) + cum
-        _scatter(buf, vals.reshape(-1), flat_lens, abs_bit)
+        base = sec_byte_start * 8 - cum[starts * 3]
+        _scatter(buf, vals.reshape(-1), flat_lens, np.repeat(base, counts * 3) + cum)
 
-    scatter_stream(ts_vals, ts_lens, ts_sec_start)
-    for si in range(k):
-        scatter_stream(sv_list[si], sl_list[si], stream_sec_starts[si])
+    cur = chunk_off[:-1].copy()
+    put_varints(buf, cur, counts, len_n)
+    cur += len_n
+    put_varints(buf, cur, zt0, len_t0)
+    cur += len_t0
+    put_varints(buf, cur, zd0, len_d0)
+    cur += len_d0
+    put_varints(buf, cur, ts_nbytes, len_tsn)
+    cur += len_tsn
+    scatter_section(ts_vals, ts_lens, cur)
+    cur += ts_nbytes
+    for mode_byte, head_val, head_len, nbytes, vals, lens in enc:
+        buf[cur] = mode_byte.astype(np.uint8)
+        cur += 1
+        put_varints(buf, cur, head_val, head_len)
+        cur += head_len
+        nb_len = varint_len(nbytes.view(_U64))
+        put_varints(buf, cur, nbytes, nb_len)
+        cur += nb_len
+        scatter_section(vals, lens, cur)
+        cur += nbytes
 
     stats = {
         "n_points": counts,
         "first_ts": t0,
         "last_ts": ts_flat[offsets[1:] - 1],
     }
-    if k:
+    if streams_flat:
         s0 = np.ascontiguousarray(streams_flat[0], dtype=_U64)
-        stats["x0"] = s0[offsets[:-1]]
+        stats["x0"] = s0[starts]
         stats["xn"] = s0[offsets[1:] - 1]
     return buf, chunk_off, stats
 

@@ -18,15 +18,15 @@ Continuity of Xn -> next X0 is verified after the fact by
 verify_continuity() instead of being a sequential dependence at pack time
 (StreamState, libmseed.h:458-465).
 
-Design decision — blob granularity stays ONE WINDOW per blob
------------------------------------------------------------
-`tools/profile_unpack.py` showed the t_bench 1m tier is blob-bound:
-~416k blobs of ~4 points each (conversations emit ~2 turns/min) put the
-16-byte header + per-blob parse above the payload cost, and 1m
-bytes/point sits at ~22.6. The reference amortizes this by packing
-multiple frames per record (/root/reference/libmseed/pack.c:314-337),
-and a multi-window segment blob here would similarly cut header share.
-It is deliberately NOT adopted:
+Design decision — blob granularity stays ONE WINDOW per blob (DR-1)
+--------------------------------------------------------------------
+The 1m tier is blob-heavy: conversations emit ~2 turns/min, so a 1m blob
+carries ~3.6-4.2 points. Under payload format v1 its fixed framing (a
+16-byte blob header, a 20-byte chunk header, u32 section lengths and two
+raw 8-byte first values) put 1m bytes/point at ~24.5. The reference
+amortizes framing by packing multiple frames per record
+(libmseed/pack.c:314-337), and a multi-window segment blob here would
+similarly cut header share. It is deliberately NOT adopted:
 
   * the incremental pipeline's unit of overwrite is the (conv, window)
     key (plans/pipeline.py snapshot MERGE) — a blob spanning windows forces
@@ -40,9 +40,11 @@ It is deliberately NOT adopted:
   * serving-path selections prune on (conv, window) parquet ranges; a
     segment blob would widen every point lookup to its segment.
 
-So ~22.6 bytes/point at 1m is recorded as the accepted floor for
-fine-tier freshness, not an oversight. Revisit only if a deployment
-holds months of data at 1m granularity (i.e. misuses the tier system).
+The framing, not the unit, was the cost: format v2 (codec/__init__.py)
+codes the headers as varints and the two integer streams as residuals
+(latency against the timestamp delta, tokens against the previous
+value), which brings the benchmark fixture to ~10.3 B/point at 1m and
+~5.9 at 1h with the unit unchanged.
 """
 
 from __future__ import annotations
@@ -64,8 +66,8 @@ from pyspark.sql.types import (
 )
 
 from .. import TIERS
-from ..codec import BLOB_HEADER_LEN, CHUNK_POINTS, MAGIC, VERSION
-from ..codec.vectorized import encode_chunks_raw
+from ..codec import CHUNK_POINTS, VERSION
+from ..codec.vectorized import encode_chunks_raw, put_varints, varint_len
 from .rollup import window_start_col
 
 # value streams packed per window, in order (stream 0 carries the x0/xn
@@ -121,10 +123,10 @@ def _run_block_arrow(tbl):
     """Encode + assemble one contiguous sorted block; returns a RecordBatch.
 
     Fully vectorized: chunk bytes come back as one buffer from
-    encode_chunks_raw; window blobs are built by writing 16-byte headers at
-    computed offsets and gathering chunk spans; the Arrow binary column is
-    constructed directly from (offsets, data) buffers — zero python string
-    or bytes objects anywhere.
+    encode_chunks_raw; window blobs are built by writing their varint
+    headers at computed offsets and gathering chunk spans; the Arrow
+    binary column is constructed directly from (offsets, data) buffers —
+    zero python string or bytes objects anywhere.
     """
     import pyarrow as pa
 
@@ -156,22 +158,19 @@ def _run_block_arrow(tbl):
     win_row_end = np.concatenate([win_starts[1:], [n]])
     n_points = (win_row_end - win_starts).astype(np.int64)
 
-    # blob layout: per window a 16-byte header + its contiguous chunk span
+    # blob layout: per window version | n_streams | varint n_chunks, then
+    # its contiguous chunk span
     span_start = chunk_off[win_chunk_start]
     span = chunk_off[win_chunk_end] - span_start
+    len_nc = varint_len(n_chunks.astype(np.uint64))
     out_off = np.zeros(W + 1, dtype=np.int64)
-    np.cumsum(BLOB_HEADER_LEN + span, out=out_off[1:])
+    np.cumsum(2 + len_nc + span, out=out_off[1:])
     out = np.empty(int(out_off[-1]), dtype=np.uint8)
     h = out_off[:-1]
-    out[h] = MAGIC[0]
-    out[h + 1] = MAGIC[1]
-    out[h + 2] = VERSION
-    out[h + 3] = len(STREAMS)
-    for j in range(4):  # n_chunks, little-endian u32
-        out[h + 4 + j] = ((n_chunks.astype(np.uint64) >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
-    for j in range(8):  # n_points, little-endian u64
-        out[h + 8 + j] = ((n_points.astype(np.uint64) >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
-    out[_ranges(h + BLOB_HEADER_LEN, span)] = buf[_ranges(span_start, span)]
+    out[h] = VERSION
+    out[h + 1] = len(STREAMS)
+    put_varints(out, h + 2, n_chunks, len_nc)
+    out[_ranges(h + 2 + len_nc, span)] = buf[_ranges(span_start, span)]
 
     mv = memoryview(out)
     crcs = np.fromiter(

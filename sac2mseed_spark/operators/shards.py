@@ -111,12 +111,21 @@ def pack_shards(
             [(s, int(stats[s][0]), w) for s, w in width.items()],
             "stratum string, lo long, w long",
         )
+        # a NULL key (every key of an all-NULL stratum, which has no
+        # span) takes bucket -1, below every range: NULL keys sort first,
+        # as in Spark's ascending nulls-first order
         base = base.join(F.broadcast(width_df), ["stratum"], "left").withColumn(
             "bucket",
-            F.floor((F.col("key").cast("long") - F.col("lo")) / F.col("w")),
+            F.coalesce(
+                F.floor((F.col("key").cast("long") - F.col("lo")) / F.col("w")),
+                F.lit(-1),
+            ),
         ).drop("lo", "w")
     elif isinstance(key_type, StringType):
-        base = base.withColumn("bucket", F.substring("key", 1, _PREFIX_LEN))
+        # NULL keys share the lowest bucket, "", so they sort first too
+        base = base.withColumn(
+            "bucket", F.coalesce(F.substring("key", 1, _PREFIX_LEN), F.lit(""))
+        )
     else:  # exotic key types: single bucket per stratum (documented
         # degenerate case; both production callers use numeric keys)
         base = base.withColumn("bucket", F.lit(0))

@@ -1,7 +1,7 @@
 """Codec round-trip + oracle/vectorized bit-exactness (FIXTURES.md §2).
 
 Mirrors the reference's pack/unpack golden tests: deterministic series
-engineered to hit every delta-of-delta bucket and Gorilla XOR case
+engineered to hit every residual bucket, Gorilla XOR case and stream mode
 (/root/reference/libmseed/test/lmtestpack.c:32-83 strategy), encode→decode
 bit-exact, Xn invariant enforced (unpackdata.c:556-561 analogue).
 """
@@ -71,7 +71,7 @@ def test_oracle_roundtrip(name):
     ts, vals = SERIES[name]
     vb = _bits(vals)
     chunk = oracle.encode_chunk(ts, [vb])
-    blob = oracle.assemble_blob([chunk], 1, len(ts))
+    blob = oracle.assemble_blob([chunk], 1)
     ts2, streams = oracle.decode_blob(blob, expect_xn=vb[-1])
     assert ts2 == ts
     assert streams[0] == vb
@@ -122,7 +122,7 @@ def test_vectorized_multi_stream():
         [floats_to_bits(np.array(s1)), floats_to_bits(np.array(s2))],
     )
     assert got[0] == exp
-    blob = oracle.assemble_blob(got, 2, 300)
+    blob = oracle.assemble_blob(got, 2)
     ts2, streams = oracle.decode_blob(blob)
     assert ts2 == ts
     assert streams[0] == _bits(s1) and streams[1] == _bits(s2)
@@ -134,7 +134,7 @@ def test_vec_decoder_matches_oracle(name):
 
     ts, vals = SERIES[name]
     vb = _bits(vals)
-    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
+    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1)
     slow = oracle.decode_blob(blob, expect_xn=vb[-1])
     vec = decode_blob_vec(blob, expect_xn=vb[-1])
     assert vec[0] == slow[0]
@@ -163,7 +163,7 @@ def test_vec_decoder_many_blobs_concat():
             s2 = _bits(rng.integers(0, 100, n).astype(float))
             chunks.append((ts, [s1, s2]))
         enc = [oracle.encode_chunk(ts, ss) for ts, ss in chunks]
-        blobs.append(oracle.assemble_blob(enc, 2, sum(len(t) for t, _ in chunks)))
+        blobs.append(oracle.assemble_blob(enc, 2))
         exp.append(
             (
                 sum((t for t, _ in chunks), []),
@@ -193,7 +193,7 @@ def test_vec_decoder_xn_check():
 
     ts, vals = SERIES["const_rate/int_like"]
     vb = _bits(vals)
-    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
+    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1)
     with pytest.raises(ValueError, match="Xn mismatch"):
         decode_blob_vec(blob, expect_xn=vb[-1] ^ 1)
 
@@ -203,7 +203,7 @@ def test_nan_roundtrip_preserves_bit_pattern():
     nan_bits = struct.unpack("<Q", struct.pack("<d", float("nan")))[0]
     vals_bits = [nan_bits, nan_bits, oracle.float_to_bits(1.5), nan_bits]
     chunk = oracle.encode_chunk(ts, [vals_bits])
-    blob = oracle.assemble_blob([chunk], 1, 4)
+    blob = oracle.assemble_blob([chunk], 1)
     _, streams = oracle.decode_blob(blob)
     assert streams[0] == vals_bits
 
@@ -211,7 +211,7 @@ def test_nan_roundtrip_preserves_bit_pattern():
 def test_xn_mismatch_detected():
     ts, vals = SERIES["const_rate/int_like"]
     vb = _bits(vals)
-    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, len(ts))
+    blob = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1)
     with pytest.raises(ValueError, match="Xn mismatch"):
         oracle.decode_blob(blob, expect_xn=vb[-1] ^ 1)
 
@@ -223,12 +223,188 @@ def test_chunked_equals_single_when_split():
     (codec.CHUNK_POINTS)."""
     ts, vals = ts_jitter(1000), val_sinusoid(1000)
     vb = _bits(vals)
-    whole = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1, 1000)
+    whole = oracle.assemble_blob([oracle.encode_chunk(ts, [vb])], 1)
     parts = [
         oracle.encode_chunk(ts[:512], [vb[:512]]),
         oracle.encode_chunk(ts[512:], [vb[512:]]),
     ]
-    split = oracle.assemble_blob(parts, 1, 1000)
+    split = oracle.assemble_blob(parts, 1)
     for blob in (whole, split):
         ts2, streams = oracle.decode_blob(blob, expect_xn=vb[-1])
         assert ts2 == ts and streams[0] == vb
+
+
+# ---- format v2: stream modes, fallbacks, degenerate chunks, bad input ----
+
+NAN = float("nan")
+CANON_NAN = oracle.float_to_bits(NAN)
+NONCANON_NAN = CANON_NAN | 1
+
+
+def _latency(ts, first=NAN):
+    """latency_us as functions/metrics.py derives it: ts[k] - ts[k-1]."""
+    return [first] + [float(b - a) for a, b in zip(ts, ts[1:])]
+
+
+def _blob_both(ts, streams_bits):
+    """Oracle and vectorized encodings of one chunk (asserted identical),
+    as a blob."""
+    exp = oracle.encode_chunk(ts, streams_bits)
+    got, _ = encode_chunks_vec(
+        np.array(ts, dtype=np.int64),
+        np.array([0, len(ts)], dtype=np.int64),
+        [np.array(s, dtype=np.uint64) for s in streams_bits],
+    )
+    assert got[0] == exp
+    return oracle.assemble_blob([exp], len(streams_bits))
+
+
+def _decode_both(blob):
+    """Oracle and decode_vec results of one blob (asserted identical)."""
+    from sac2mseed_spark.codec.decode_vec import decode_blob_vec
+
+    slow = oracle.decode_blob(blob)
+    assert decode_blob_vec(blob) == (slow[0], slow[1])
+    return slow
+
+
+def _modes(blob):
+    return [[m for m, _, _ in ch[4]] for ch in oracle.iter_chunks(blob)]
+
+
+_TS = ts_jitter(40)[:5] + [ts_jitter(40)[4] + 7_000_000 * k for k in range(1, 30)]
+
+MODE_CASES = {
+    # name: (ts, values, expected mode byte)
+    "float/sinusoid": (_TS, val_sinusoid(len(_TS)), 0x00),
+    "int/tokens": (_TS, [float(7 + 3 * (i % 5)) for i in range(len(_TS))], 0x01),
+    "int/tokens_null_first": (_TS, [NAN] + [5.0] * (len(_TS) - 1), 0x81),
+    "int/latency": (_TS, _latency(_TS, first=123_456.0), 0x02),
+    "int/latency_null_first": (_TS, _latency(_TS), 0x82),
+    "int/constant": (_TS, [-3.0] * len(_TS), 0x01),
+}
+
+
+@pytest.mark.parametrize("name", sorted(MODE_CASES))
+def test_stream_mode_choice(name):
+    ts, vals, mode = MODE_CASES[name]
+    vb = _bits(vals)
+    blob = _blob_both(ts, [vb])
+    assert _modes(blob) == [[mode]]
+    assert _decode_both(blob) == (ts, [vb])
+
+
+FALLBACK_CASES = {
+    "neg_zero": [0.0, 1.0, -0.0, 2.0],
+    "noncanonical_nan_first": [NONCANON_NAN, 1.0, 2.0, 3.0],
+    "negative_nan_first": [CANON_NAN | (1 << 63), 1.0, 2.0, 3.0],
+    "pos_inf": [1.0, float("inf"), 2.0, 3.0],
+    "neg_inf": [1.0, 2.0, 3.0, float("-inf")],
+    "two_pow_53": [1.0, 2.0**53, 2.0, 3.0],
+    "minus_two_pow_53": [1.0, 2.0, -(2.0**53), 3.0],
+    "nan_not_first": [1.0, 2.0, NAN, 3.0],
+}
+
+
+@pytest.mark.parametrize("name", sorted(FALLBACK_CASES))
+def test_non_integer_chunks_fall_back_to_float(name):
+    """A chunk whose values do not all round-trip through int64 (or whose
+    NaN is not a canonical first value) codes as mode 0, bit-exactly."""
+    vb = [v if isinstance(v, int) else oracle.float_to_bits(v) for v in FALLBACK_CASES[name]]
+    ts = ts_constant_rate(len(vb))
+    blob = _blob_both(ts, [vb])
+    assert _modes(blob) == [[0]]
+    assert _decode_both(blob) == (ts, [vb])
+
+
+@pytest.mark.parametrize("sign", [1, -1])
+def test_largest_exact_integers_stay_integer(sign):
+    vals = [sign * float(2**53 - k) for k in (1, 2, 1, 3)]
+    ts = ts_constant_rate(4)
+    blob = _blob_both(ts, [_bits(vals)])
+    assert _modes(blob) == [[1]]
+    assert _decode_both(blob) == (ts, [_bits(vals)])
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_short_chunks(n):
+    ts = ts_jitter(n)
+    streams = [_bits(_latency(ts)), _bits([float(10 * i) for i in range(n)]),
+               _bits(val_sinusoid(n))]
+    blob = _blob_both(ts, streams)
+    assert _decode_both(blob) == (ts, streams)
+
+
+def test_ts_gap_takes_64_bit_literal():
+    gap = 2**40  # zigzag(dod) > 2^32: the 64-bit DOD literal
+    ts = [1_700_000_000_000_000, 1_700_000_000_000_001, 1_700_000_000_000_002 + gap,
+          1_700_000_000_000_003 + gap]
+    streams = [_bits(_latency(ts)), _bits([1.0, 2.0, 3.0, 4.0])]
+    blob = _blob_both(ts, streams)
+    assert _decode_both(blob) == (ts, streams)
+
+
+def test_vec_encoder_mixed_modes_batch():
+    """Chunks of every mode in one batch: per-chunk bytes equal the oracle,
+    and one decode_concat over the blobs equals the oracle's decode."""
+    from sac2mseed_spark.codec.decode_vec import decode_concat
+
+    cases = [MODE_CASES[k] for k in sorted(MODE_CASES)]
+    cases += [(ts_constant_rate(4), v, None) for v in FALLBACK_CASES.values()]
+    ts_flat = np.concatenate([np.array(c[0], np.int64) for c in cases])
+    bits = [_bits(v) if not any(isinstance(x, int) for x in v)
+            else [x if isinstance(x, int) else oracle.float_to_bits(x) for x in v]
+            for _, v, _ in cases]
+    offsets = np.concatenate([[0], np.cumsum([len(c[0]) for c in cases])])
+    got, _ = encode_chunks_vec(ts_flat, offsets, [np.concatenate(
+        [np.array(b, np.uint64) for b in bits])])
+    blobs = []
+    for (ts, _, _), b, chunk in zip(cases, bits, got):
+        assert chunk == oracle.encode_chunk(ts, [b])
+        blobs.append(oracle.assemble_blob([chunk], 1))
+    lens = np.array([len(b) for b in blobs], np.int64)
+    ends = np.cumsum(lens)
+    _, po, ts_out, streams = decode_concat(
+        np.frombuffer(b"".join(blobs), np.uint8), ends - lens, ends
+    )
+    assert ts_out.tolist() == ts_flat.tolist()
+    assert streams[0].tolist() == sum(bits, [])
+
+
+def _varint(u):
+    out = bytearray()
+    while u >= 0x80:
+        out.append(u & 0x7F | 0x80)
+        u >>= 7
+    return bytes(out + bytes([u]))
+
+
+def _bad_payloads():
+    """name -> (payload, the error both decoders must raise)."""
+    ts = ts_constant_rate(5)
+    good = oracle.assemble_blob(
+        [oracle.encode_chunk(ts, [_bits(_latency(ts))])], 1
+    )
+    head = bytes([oracle.VERSION, 0]) + _varint(1) + _varint(3) + _varint(2 * ts[0])
+    return {
+        # t0 is an 8-byte varint: cut it after 3 of its bytes
+        "truncated_varint": (good[:7], "truncated varint"),
+        "section_past_end": (
+            head + _varint(1_000_000) + _varint(100) + b"\x00" * 3,
+            "section length past blob end",
+        ),
+        "trailing_bytes": (good + b"\x00", "trailing bytes"),
+        "version_1": (bytes([1]) + good[1:], "unsupported version"),
+        "version_3": (bytes([3]) + good[1:], "unsupported version"),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_bad_payloads()))
+def test_malformed_payload_raises(name):
+    from sac2mseed_spark.codec.decode_vec import decode_blob_vec
+
+    blob, err = _bad_payloads()[name]
+    with pytest.raises(ValueError, match=err):
+        oracle.decode_blob(blob)
+    with pytest.raises(ValueError, match=err):
+        decode_blob_vec(blob)

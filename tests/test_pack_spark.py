@@ -63,6 +63,19 @@ def test_unpack_roundtrip_values(spark, packed_1m):
     assert bad.count() == 0
 
 
+# Payload bytes per point of the t_small seed-42 fixture, as measured for
+# format v2 (v1 gave 23.92 at 1m and 11.30 at 1h). A format change that
+# grows them more than 5 % fails here, not only in the benchmark.
+BYTES_PER_POINT_V2 = {"1m": 10.0442, "1h": 5.7503}
+
+
+def test_packed_size_budget(spark, packed_1m):
+    m, packed = packed_1m
+    for tier, df in (("1m", packed), ("1h", pack_tier(m, "1h"))):
+        b, p = df.agg(F.sum(F.length("payload")), F.sum("n_points")).collect()[0]
+        assert b / p <= BYTES_PER_POINT_V2[tier] * 1.05, (tier, b / p)
+
+
 def test_parallelism_invariance(spark):
     """Identical payload bytes at 1 vs 8 upstream partitions (chunk
     boundaries depend only on turn_idx, codec.CHUNK_POINTS)."""
@@ -177,7 +190,6 @@ def test_hot_windows_match_oracle(spark):
                 for _, c in sorted(chunks.items())
             ],
             len(STREAMS),
-            len(rows),
         )
         got = packed[key]
         assert bytes(got["payload"]) == want, key

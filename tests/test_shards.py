@@ -103,3 +103,28 @@ def test_string_keys_supported(spark):
         assert r["shard_offset"] == start % 20
         cum[r["stratum"]] = start + r["n_tokens"]
     assert len(out) == 60
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_null_keys_sort_first(spark, key_type):
+    """A NULL key sorts first in its stratum (Spark's ascending
+    nulls-first order), and a stratum whose keys are all NULL still gets
+    shards."""
+    key = int if key_type == "long" else str
+    rows = [
+        (None, "en", "a b c"),
+        (key(1), "en", "d e"),
+        (key(2), "en", "f"),
+        (None, "xx", "g h"),
+    ]
+    docs = spark.createDataFrame(rows, f"doc_id {key_type}, lang string, text string")
+    got = {
+        (r["key"], r["stratum"]): (r["n_tokens"], r["shard_id"], r["shard_offset"])
+        for r in pack_shards(docs, 4, n_parts=2).collect()
+    }
+    assert got == {
+        (None, "en"): (3, 0, 0),
+        (key(1), "en"): (2, 0, 3),
+        (key(2), "en"): (1, 1, 1),
+        (None, "xx"): (2, 0, 0),
+    }
