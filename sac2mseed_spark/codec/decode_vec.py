@@ -194,21 +194,14 @@ def _peek64(words: np.ndarray, bitpos: np.ndarray) -> np.ndarray:
     return np.where(off == 0, v, (v << off) | lo)
 
 
-def _lanes(org, end, count, out_at):
-    """Sections sorted by descending code count, so each wavefront step's
-    active set is a prefix."""
-    order = np.argsort(-count, kind="stable")
-    return org[order], end[order], count[order], out_at[order]
-
-
 def _check_end(cur, end):
     if (cur > end).any():
         raise ValueError("bitstream overruns its section")
 
 
 def _decode_buckets(words, org, end, count, out_at, out):
-    """Bucket-code wavefront: section i's j-th residual -> out[out_at[i]+j]."""
-    org, end, count, out_at = _lanes(org, end, count, out_at)
+    """Bucket-code wavefront over _gather_lanes output: section i's j-th
+    residual -> out[out_at[i] + j]."""
     cur = org.copy()
     L = len(count)
     asc = count[::-1]
@@ -227,8 +220,8 @@ def _decode_buckets(words, org, end, count, out_at, out):
 
 
 def _decode_gorilla(words, org, end, count, out_at, out):
-    """Gorilla XOR wavefront: raw first value, then one step per index."""
-    org, end, count, out_at = _lanes(org, end, count, out_at)
+    """Gorilla XOR wavefront over _gather_lanes output: raw first value,
+    then one step per index."""
     first = _peek64(words, org)
     out[out_at] = first
     prev = first.copy()
@@ -254,12 +247,15 @@ def _decode_gorilla(words, org, end, count, out_at, out):
 def _gather_lanes(secs, cn, first):
     """(bit origin, bit end, code count, output index) of every section
     lane, from (chunk indices, origins, ends, first coded point, output
-    base) per section kind."""
+    base) per section kind; sorted by descending code count, so each
+    wavefront step's active set is a prefix."""
     cols = [
         (org[ix], end[ix], cn[ix] - skip, base + first[ix] + skip)
         for ix, org, end, skip, base in secs
     ]
-    return [np.concatenate(c) for c in zip(*cols)]
+    org, end, count, out_at = (np.concatenate(c) for c in zip(*cols))
+    order = np.argsort(-count, kind="stable")
+    return org[order], end[order], count[order], out_at[order]
 
 
 def _seg_cumsum(x: np.ndarray, first: np.ndarray, counts: np.ndarray) -> np.ndarray:
