@@ -22,9 +22,10 @@ belongs wholly to the coarser band — documented, boundary-exact).
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Default horizons: how far back each tier is retained. None = forever.
@@ -40,42 +41,53 @@ def retention_bound_us(tier: str, now_us: int, horizons=None) -> int | None:
     return None if h is None else now_us - h
 
 
-def retention_filter(
-    tier_df: DataFrame, tier: str, now_us: int, horizons=None
-) -> DataFrame:
-    """Rows of one tier table that the policy RETAINS (prunable predicate)."""
-    lo = retention_bound_us(tier, now_us, horizons)
-    return tier_df if lo is None else tier_df.filter(F.col("window_start_us") >= lo)
+def retention_bounds(now_us: int, horizons=None) -> dict[str, int]:
+    """tier -> eviction bound of every tier with a finite horizon."""
+    hz = horizons or DEFAULT_HORIZONS_US
+    return {t: lo for t in hz if (lo := retention_bound_us(t, now_us, hz)) is not None}
+
+
+def retained(bounds: dict, tier: str | None = None, ws: Column | None = None) -> Column:
+    """The retention predicate, the one definition (the metadata-only
+    ``DELETE WHERE window_start_us < bound`` per tier): a row of ``tier``
+    (default: the frame's ``tier`` column) whose window starts at ``ws``
+    (default: ``window_start_us``) is kept iff it is not behind that
+    tier's bound in ``bounds`` (tier -> bound; a tier without one keeps
+    everything)."""
+    tier = F.col("tier") if tier is None else F.lit(tier)
+    ws = F.col("window_start_us") if ws is None else ws
+    return reduce(
+        operator.and_,
+        [(tier != t) | (ws >= F.lit(lo)) for t, lo in bounds.items()],
+        F.lit(True),
+    )
 
 
 def retention_sweep(
-    tiers: dict[str, DataFrame], now_us: int, horizons=None
+    tiers: dict[str, DataFrame] | DataFrame, now_us: int, horizons=None
 ) -> DataFrame:
     """Eviction accounting per tier: (tier, n_kept, n_evicted, pts_kept,
     pts_evicted) — the report a retention job writes to the metrics table
-    after its metadata-only DELETE. One pass per tier, no joins."""
-    outs = []
-    for tier, df in tiers.items():
-        lo = retention_bound_us(tier, now_us, horizons)
-        keep = (
-            F.lit(True) if lo is None else (F.col("window_start_us") >= F.lit(lo))
-        ).alias("keep")
-        outs.append(
-            df.select(F.col("n_points"), keep)
-            .groupBy()
-            .agg(
-                F.count(F.when(F.col("keep"), 1)).alias("n_kept"),
-                F.count(F.when(~F.col("keep"), 1)).alias("n_evicted"),
-                F.coalesce(
-                    F.sum(F.when(F.col("keep"), F.col("n_points"))), F.lit(0)
-                ).alias("pts_kept"),
-                F.coalesce(
-                    F.sum(F.when(~F.col("keep"), F.col("n_points"))), F.lit(0)
-                ).alias("pts_evicted"),
-            )
-            .select(F.lit(tier).alias("tier"), "*")
+    after its metadata-only DELETE. ``tiers`` is a table per tier, or one
+    table of rows of any tiers keyed by its ``tier`` column (a window-keyed
+    chain). One grouped pass, no joins; a tier without rows reports no
+    row."""
+    if isinstance(tiers, dict):
+        tiers = reduce(
+            DataFrame.unionByName,
+            [
+                df.select("window_start_us", "n_points", F.lit(t).alias("tier"))
+                for t, df in tiers.items()
+            ],
         )
-    return reduce(DataFrame.unionByName, outs)
+    keep = retained(retention_bounds(now_us, horizons))
+    pts = F.col("n_points")
+    return tiers.groupBy("tier").agg(
+        F.count_if(keep).alias("n_kept"),
+        F.count_if(~keep).alias("n_evicted"),
+        F.coalesce(F.sum(F.when(keep, pts)), F.lit(0)).alias("pts_kept"),
+        F.coalesce(F.sum(F.when(~keep, pts)), F.lit(0)).alias("pts_evicted"),
+    )
 
 
 def band_edges_us(

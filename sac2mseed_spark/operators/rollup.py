@@ -6,12 +6,18 @@ each conversation's turn stream into fixed-epoch windows per tier. Higher
 tiers re-aggregate lower tiers (the msrepack pattern, SURVEY.md §3.3) —
 1m is computed from raw turns, 1h from 1m, 1d from 1h.
 
-Bit-exactness contract: every additive statistic is kept in the INTEGER
-domain (counts, sums of microseconds, sums of token counts), so cascaded
-re-aggregation is exactly associative and the 1h/1d tiers are bit-identical
-whether computed from raw turns or from the 1m tier (asserted by tests).
-Ratios (avg latency, turn rate) are derived at read time by a single float64
-division — the same division in every path.
+One aggregate: a turn is a one-point tier row (``turn_rows``), and every
+tier row — from turns, from a lower tier re-windowed, or merged with the
+previous rows of an incremental commit — comes out of ``merge_tiers``,
+which merges each statistic declared in ``TIER_STATS``.
+
+Bit-exactness contract: every statistic is kept in the INTEGER domain
+(counts, sums of microseconds, sums of token counts, min/max), and every
+merge is an integer sum, min or max, so merging is exactly associative:
+the 1h/1d tiers are bit-identical whether computed from raw turns or from
+the 1m tier, and an incremental commit bit-identical to a batch recompute
+(asserted by tests). Ratios (avg latency, turn rate) are derived at read
+time by a single float64 division — the same division in every path.
 """
 
 from __future__ import annotations
@@ -22,17 +28,16 @@ from pyspark.sql import functions as F
 from .. import TIERS
 
 # The eight tier statistics, each declared once:
-# (column, aggregate over turns, merge of lower-tier values of the column).
-# Every merge is an integer sum/min/max, so re-aggregation is exact.
+# (column, its value for one turn, merge of values of the column).
 TIER_STATS = (
-    ("n_points", lambda: F.count(F.lit(1)), F.sum),
-    ("n_latency", lambda: F.count("latency_us"), F.sum),
-    ("sum_latency_us", lambda: F.sum("latency_us"), F.sum),
-    ("min_latency_us", lambda: F.min("latency_us"), F.min),
-    ("max_latency_us", lambda: F.max("latency_us"), F.max),
-    ("sum_tokens", lambda: F.sum("token_count"), F.sum),
-    ("min_ts_us", lambda: F.min("ts_us"), F.min),
-    ("max_ts_us", lambda: F.max("ts_us"), F.max),
+    ("n_points", lambda: F.lit(1).cast("long"), F.sum),
+    ("n_latency", lambda: F.col("latency_us").isNotNull().cast("long"), F.sum),
+    ("sum_latency_us", lambda: F.col("latency_us"), F.sum),
+    ("min_latency_us", lambda: F.col("latency_us"), F.min),
+    ("max_latency_us", lambda: F.col("latency_us"), F.max),
+    ("sum_tokens", lambda: F.col("token_count"), F.sum),
+    ("min_ts_us", lambda: F.col("ts_us"), F.min),
+    ("max_ts_us", lambda: F.col("ts_us"), F.max),
 )
 
 # Aggregate column set of a tier table (pre-payload; operators/pack.py adds
@@ -46,49 +51,50 @@ def window_start_col(ts_us_col, tier: str):
     return (F.floor(ts_us_col / w) * w).cast("long")
 
 
-def _aggregate(df: DataFrame, window_start, aggs, tier: str | None) -> DataFrame:
-    """One hash-aggregate (partial map-side combine + final) on
-    (conv_id, window_start) into ``tier`` — no window functions, no sort.
-    With ``tier`` None, ``df``'s own tier column joins the key, so rows of
-    several tiers aggregate in one pass. Emits conv_id, window_start_us,
-    *TIER_AGG_COLS, tier."""
-    keys = [F.col("conv_id"), window_start.alias("window_start_us")]
-    if tier is None:
-        return (
-            df.groupBy(*keys, "tier")
-            .agg(*aggs)
-            .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
-        )
-    return df.groupBy(*keys).agg(*aggs).withColumn("tier", F.lit(tier))
+def turn_rows(metrics: DataFrame, tier: str, window_start=None) -> DataFrame:
+    """Each turn of ``metrics`` as a one-point row of ``tier``, in the
+    window ``window_start`` (default: the turn's fixed-epoch ``tier``
+    window) — no aggregate; ``merge_tiers`` makes the windows."""
+    if window_start is None:
+        window_start = window_start_col(F.col("ts_us"), tier)
+    return metrics.select(
+        "conv_id",
+        window_start.alias("window_start_us"),
+        *[turn().alias(c) for c, turn, _ in TIER_STATS],
+        F.lit(tier).alias("tier"),
+    )
 
 
-def _from_turns(metrics: DataFrame, window_start, tier: str) -> DataFrame:
-    aggs = [turns().alias(c) for c, turns, _ in TIER_STATS]
-    return _aggregate(metrics, window_start, aggs, tier)
+def merge_tiers(rows: DataFrame) -> DataFrame:
+    """The one tier aggregate: merge tier rows of ANY tiers per
+    (conv_id, window_start_us, tier) in one hash aggregate (partial
+    map-side combine + final; no window functions, no sort),
+    integer-exact. Rows may be turn rows, re-windowed lower-tier rows, or
+    an incremental commit's previous rows ∪ the turn rows of every tier."""
+    return (
+        rows.groupBy("conv_id", "window_start_us", "tier")
+        .agg(*[merge(c).alias(c) for c, _, merge in TIER_STATS])
+        .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
+    )
 
 
 def rollup_from_turns(metrics: DataFrame, tier: str) -> DataFrame:
     """Aggregate per-turn metrics directly into one tier."""
-    return _from_turns(metrics, window_start_col(F.col("ts_us"), tier), tier)
-
-
-def _merge(rows: DataFrame, window_start, tier: str | None) -> DataFrame:
-    aggs = [merge(c).alias(c) for c, _, merge in TIER_STATS]
-    return _aggregate(rows, window_start, aggs, tier)
-
-
-def merge_tiers(rows: DataFrame) -> DataFrame:
-    """The incremental MERGE: re-aggregate tier rows of ANY tiers per
-    (conv_id, window_start_us, tier) in one pass (integer-exact) — the
-    previous rows ∪ delta rows of every tier at once."""
-    return _merge(rows, F.col("window_start_us"), None)
+    return merge_tiers(turn_rows(metrics, tier))
 
 
 def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
     """Re-aggregate tier rows into ``tier`` (integer-exact): the cascade
-    step, the same merge as ``merge_tiers`` with the window start floored
-    to ``tier`` (floor(ws / w) * w is the identity on aligned starts)."""
-    return _merge(lower, window_start_col(F.col("window_start_us"), tier), tier)
+    step, ``merge_tiers`` over the rows re-windowed to ``tier``
+    (floor(ws / w) * w is the identity on aligned starts)."""
+    return merge_tiers(
+        lower.select(
+            "conv_id",
+            window_start_col(F.col("window_start_us"), tier).alias("window_start_us"),
+            *TIER_AGG_COLS,
+            F.lit(tier).alias("tier"),
+        )
+    )
 
 
 def rollup_cascade(metrics: DataFrame) -> dict[str, DataFrame]:
@@ -116,10 +122,10 @@ def rollup_calendar(metrics: DataFrame, unit: str = "month") -> DataFrame:
     and identical in any engine. Same integer-domain statistics as the
     fixed tiers, so cascading/retention logic composes unchanged.
 
-    Differs from rollup_from_turns only in the bucket expression.
+    Differs from rollup_from_turns only in the window of each turn row.
     """
     units = {"week", "month", "quarter", "year"}
     if unit not in units:
         raise ValueError(f"unit must be one of {sorted(units)}, got {unit!r}")
     ws = F.unix_micros(F.date_trunc(unit, F.timestamp_micros(F.col("ts_us"))))
-    return _from_turns(metrics, ws, unit)
+    return merge_tiers(turn_rows(metrics, unit, ws))

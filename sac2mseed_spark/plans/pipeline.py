@@ -20,13 +20,16 @@ EVERY table family is a delta chain: snapshot n writes ONLY the rows its
 delta touches to a ``d{n}`` directory, and reads resolve
 latest-version-wins per key (aggregate and packed tiers key on
 (tier, conv_id, window_start_us); conv state keys on conv_id). There are
-three families whatever ``TIERS`` and ``pack_tiers`` hold, and a commit
-runs one resolve, one MERGE and one write per family. A chain is
-resolved in ONE scan of its entries (of a window-keyed chain, of the
-``tier={t}`` leaf dirs the read needs), each row ranked by the name of
-the entry directory it was read from. Per-snapshot write volume is
-therefore proportional to the delta, not the table — the
-reference merges into only the touched trace the same way
+three families whatever ``TIERS`` and ``pack_tiers`` hold, and one
+writer (``_write_entries``) fills an entry of each from per-turn metrics:
+one resolve, one MERGE and one write per family. The tier MERGE is the
+one tier aggregate, ``merge_tiers``, over the previous rows of the
+touched windows ∪ the delta's turns as one-point rows of every tier
+(operators/rollup.py). A chain is resolved in ONE scan of its entries
+(of a window-keyed chain, of the ``tier={t}`` leaf dirs the read needs),
+each row ranked by the name of the entry directory it was read from.
+Per-snapshot write volume is therefore proportional to the delta, not
+the table — the reference merges into only the touched trace the same way
 (/root/reference/libmseed/tracelist.c:135-606 fast paths), and an Iceberg
 deployment expresses the same chain as MERGE + positional deletes (no
 Iceberg jars in this sandbox, so parquet dirs + this resolver stand in).
@@ -53,12 +56,14 @@ by an observation on that write; only when the count is > 0 are the
 affected conv_ids written under ``heal_pending/``. ``heal()`` then
 re-derives ONLY those conversations from all raw snapshots and writes
 corrective ``d{n}h`` chain entries (ranked after ``d{n}``) for every
-table family — after which all tiers are byte-identical to a full
-recompute (tests assert), and incremental processing resumes unchanged.
+table family. A heal is a commit without previous rows: the same writer,
+given the conversations' whole history, no carried state and nothing to
+merge with. Afterwards all tiers are byte-identical to a full recompute
+(tests assert), and incremental processing resumes unchanged.
 
 Retention (downsample-and-expire): ``apply_retention`` commits per-tier
 eviction BOUNDS into the checkpoint — eviction is a pure predicate on
-window_start_us (built once, by ``_retained``) applied by every chain
+window_start_us (operators/retention.retained) applied by every chain
 read and every write, i.e. the metadata-only
 ``DELETE WHERE window_start_us < bound`` of operators/retention.py, with
 the sweep accounting row written to ``retention/``. No data files are
@@ -83,8 +88,9 @@ of the previous rows it replaced, crash-safe inside the same checkpoint),
 never by re-scanning the table: both figures come from
 ``DataFrame.observe`` on the MERGE write itself, so a commit runs no
 bookkeeping job — its only Spark actions are its writes. Each action
-carries a job description naming its phase (``commit d00000002 tiers
-merge``, ``heal d00000002 pack``, ``compact tiers``).
+carries a job description naming its phase (``commit d00000002 tiers``,
+``heal d00000002 pack``, ``compact tiers``); a commit and a heal share
+the phases ``state``, ``tiers`` and ``pack``.
 
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
@@ -107,7 +113,6 @@ maintenance action.
 from __future__ import annotations
 
 import json
-import operator
 import os
 import re
 import shutil
@@ -117,14 +122,19 @@ from contextlib import contextmanager
 from functools import reduce
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import TIERS
 from ..functions.metrics import derive_turn_metrics
 from ..operators.pack import pack_tier, unpack_tier
-from ..operators.retention import retention_bound_us, retention_sweep, serve_tiered
-from ..operators.rollup import merge_tiers, rollup_from_turns, window_start_col
+from ..operators.retention import (
+    retained,
+    retention_bounds,
+    retention_sweep,
+    serve_tiered,
+)
+from ..operators.rollup import merge_tiers, turn_rows, window_start_col
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 # d{version}[h]: plain snapshot deltas rank before the heal delta of the
@@ -138,21 +148,6 @@ _CONV_KEYS = ["conv_id"]
 # (the fixed-width names sort in resolution order); in a window-keyed
 # family, its tier: the tier={t} leaf dir between entry and file
 _ENTRY_RE = r"/(d[0-9]{8}h?)/(?:tier=([^/]+)/)?[^/]+$"
-
-
-def _retained(bounds: dict, tier: str | None = None, ws: Column | None = None):
-    """The committed retention predicate (the metadata-only ``DELETE WHERE
-    window_start_us < bound`` per tier, module doc): a row of ``tier``
-    (default: the frame's ``tier`` column) whose window starts at ``ws``
-    (default: ``window_start_us``) is kept iff it is not behind that
-    tier's bound. Every chain read and every write applies it."""
-    tier = F.col("tier") if tier is None else F.lit(tier)
-    ws = F.col("window_start_us") if ws is None else ws
-    return reduce(
-        operator.and_,
-        [(tier != t) | (ws >= F.lit(lo)) for t, lo in bounds.items()],
-        F.lit(True),
-    )
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -357,7 +352,7 @@ class IncrementalRollup:
         (default: all), and its ``tier`` column, last, comes from the
         path; if no entry holds a row of ``tiers``, the result is an empty
         frame of the family's columns. ``bounds`` (tier -> bound) applies
-        the committed retention predicate (``_retained``)."""
+        the committed retention predicate (operators/retention.retained)."""
         dirs = self._chain_dirs(base, version, healed_through)
         by_tier = keys[0] == "tier"
         empty = False
@@ -380,7 +375,7 @@ class IncrementalRollup:
         if by_tier:
             df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 2))
             if bounds:
-                df = df.filter(_retained(bounds))
+                df = df.filter(retained(bounds))
         if empty:
             df = df.limit(0)
         if touched is not None:
@@ -474,9 +469,6 @@ class IncrementalRollup:
     def _process_one(self, state: dict, snap_id: int, snap_path: str) -> None:
         t0 = time.time()
         tag = f"commit d{snap_id:08d}"
-        prev_version = state["version"]
-        ht = state["healed_through"]
-        bounds = state["retention_bounds"]
         with self._phase(f"{tag} read"):
             raw = self.spark.read.parquet(snap_path)
         delta_m = derive_turn_metrics(raw)
@@ -486,124 +478,27 @@ class IncrementalRollup:
         # is delta-sized too: only the snapshot's own conversations are
         # resolved down the chain.
         with self._phase(f"{tag} state read"):
-            prev_state = self._resolve_chain(
+            carry = self._resolve_chain(
                 self._base("state"),
-                prev_version,
+                state["version"],
                 _CONV_KEYS,
                 touched=raw.select("conv_id").distinct(),
-                healed_through=ht,
+                healed_through=state["healed_through"],
             )
-        if prev_state is not None:
-            prev_state = prev_state.persist()
-            delta_m = delta_m.join(prev_state, "conv_id", "left").withColumn(
+        if carry is not None:
+            carry = carry.persist()
+            delta_m = delta_m.join(carry, "conv_id", "left").withColumn(
                 "latency_us",
                 F.coalesce(
                     F.col("latency_us"), F.col("ts_us") - F.col("last_ts_us")
                 ),
             ).drop("last_turn_idx", "last_ts_us")
         delta_m = delta_m.persist()
-
-        # conv-state delta: ONLY the touched conversations' new last turn,
-        # plus the out-of-order flag (heal trigger, module doc): arriving
-        # turns at or before the carried last_turn_idx mean this
-        # conversation's derived latencies are provisional until heal()
-        span = delta_m.groupBy("conv_id").agg(
-            F.min("turn_idx").alias("_min_turn"),
-            F.max(F.struct("turn_idx", "ts_us")).alias("_l"),
-        )
-        if prev_state is None:
-            conv = span.withColumn("_ooo", F.lit(False))
-        else:
-            conv = span.join(prev_state, "conv_id", "left").select(
-                "conv_id",
-                F.greatest(
-                    F.col("_l"),
-                    F.when(
-                        F.col("last_turn_idx").isNotNull(),
-                        F.struct(
-                            F.col("last_turn_idx").alias("turn_idx"),
-                            F.col("last_ts_us").alias("ts_us"),
-                        ),
-                    ),
-                ).alias("_l"),
-                F.coalesce(
-                    F.col("_min_turn") <= F.col("last_turn_idx"), F.lit(False)
-                ).alias("_ooo"),
-            )
-        conv = conv.select(
-            "conv_id",
-            F.col("_l.turn_idx").alias("last_turn_idx"),
-            F.col("_l.ts_us").alias("last_ts_us"),
-            "_ooo",
-        ).persist()
-        ooo_obs = Observation()
-        with self._phase(f"{tag} state"):
-            conv.observe(ooo_obs, F.count_if("_ooo").alias("ooo")).drop(
-                "_ooo"
-            ).write.mode("overwrite").parquet(
-                self._delta_path(self._base("state"), snap_id)
-            )
-        (ooo_convs,) = _observed(ooo_obs, "ooo")
-        if ooo_convs:
-            with self._phase(f"{tag} heal pending"):
-                conv.filter("_ooo").select("conv_id").write.mode(
-                    "overwrite"
-                ).parquet(self._delta_path(self._base("heal_pending"), snap_id))
-
-        # every tier's delta in one frame. Late data older than the
-        # committed retention bound is dropped at ingest — it would be
-        # invisible (read-filtered) and immediately eviction-eligible
-        # anyway, and admitting it would let the running totals drift
-        # from what reads see
-        delta = (
-            _union([rollup_from_turns(delta_m, t) for t in TIERS])
-            .filter(_retained(bounds))
-            .persist()
-        )
-        # rollup-count totals: previous committed totals + what the MERGE
-        # write itself observed per tier — windows and points it wrote
-        # minus those of the previous rows it replaced. No re-read.
-        prev_obs, out_obs = Observation(), Observation()
-        with self._phase(f"{tag} tiers merge"):
-            # previous values of ONLY the touched windows — a semi-join
-            # down the chain, never a full-table read
-            prev_rows = self._resolve_chain(
-                self._base("tiers"),
-                prev_version,
-                _WINDOW_KEYS,
-                touched=delta.select(*_WINDOW_KEYS),
-                bounds=bounds,
-                healed_through=ht,
-            )
-            lower = delta
-            if prev_rows is not None:
-                lower = _observe_totals(prev_rows, prev_obs).unionByName(delta)
-            _write_by_tier(
-                _observe_totals(merge_tiers(lower), out_obs),
-                self._delta_path(self._base("tiers"), snap_id),
-            )
+        _, ooo_convs = self._write_entries(state, snap_id, tag, delta_m, carry)
         wall = time.time() - t0
-        new = {t: _observed(out_obs, f"w_{t}", f"p_{t}") for t in TIERS}
-        # every previous row keys a row of the MERGE output, so a MERGE
-        # that wrote nothing replaced nothing (its delta was empty, and
-        # the optimiser may have pruned the empty semi-join together with
-        # its observation)
-        replaced = prev_rows is not None and any(w for w, _ in new.values())
-        for t in TIERS:
-            prev_w, prev_p = (
-                _observed(prev_obs, f"w_{t}", f"p_{t}") if replaced else (0, 0)
-            )
-            tot = state["totals"].setdefault(t, {"n_windows": 0, "n_points": 0})
-            tot["n_windows"] += new[t][0] - prev_w
-            tot["n_points"] += new[t][1] - prev_p
-        delta.unpersist()
-        if self.pack_tiers:
-            with self._phase(f"{tag} pack"):
-                self._update_packed(state, snap_id, delta_m)
-        conv.unpersist()
         delta_m.unpersist()
-        if prev_state is not None:
-            prev_state.unpersist()
+        if carry is not None:
+            carry.unpersist()
 
         # lineage: what the commit did, from driver-side facts only
         lineage = ",".join(
@@ -638,12 +533,128 @@ class IncrementalRollup:
                 os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
             )
 
-    def _update_packed(self, state: dict, snap_id: int, delta_m: DataFrame) -> None:
-        """Re-encode only the windows the delta touches (class doc), every
-        pack tier in one chain resolve and one write. ``state`` is the
-        checkpoint the commit holds (not yet advanced to ``snap_id``)."""
+    def _write_entries(
+        self,
+        state: dict,
+        version: int,
+        tag: str,
+        metrics: DataFrame,
+        carry: DataFrame | None = None,
+        heal: bool = False,
+    ) -> tuple[int, int]:
+        """Write the ``d{version}`` entry of every table family (``d{version}h``
+        for a heal) from the per-turn ``metrics`` of the conversations it
+        touches: their conv state, their windows of every tier, their
+        blobs of every pack tier. A commit merges with what is committed at
+        ``state["version"]`` — the carried conv state ``carry`` and the
+        touched windows' rows — and keeps the running totals. A heal holds
+        its conversations' whole history, so it has no carry and no
+        previous rows, and it changes no window's count or points, so the
+        totals stand. Late data behind a committed retention bound is
+        dropped: it would be read-filtered and eviction-eligible anyway,
+        and admitting it would let the totals drift from what reads see.
+        Returns (conversations written, of them out of order)."""
         bounds = state["retention_bounds"]
-        pts = delta_m.select(
+        # conv state: each conversation's new last turn, plus the
+        # out-of-order flag (heal trigger, module doc): arriving turns at
+        # or before the carried last_turn_idx mean this conversation's
+        # derived latencies are provisional until heal()
+        span = metrics.groupBy("conv_id").agg(
+            F.min("turn_idx").alias("_min_turn"),
+            F.max(F.struct("turn_idx", "ts_us")).alias("_l"),
+        )
+        if carry is None:
+            conv = span.withColumn("_ooo", F.lit(False))
+        else:
+            conv = span.join(carry, "conv_id", "left").select(
+                "conv_id",
+                F.greatest(
+                    F.col("_l"),
+                    F.when(
+                        F.col("last_turn_idx").isNotNull(),
+                        F.struct(
+                            F.col("last_turn_idx").alias("turn_idx"),
+                            F.col("last_ts_us").alias("ts_us"),
+                        ),
+                    ),
+                ).alias("_l"),
+                F.coalesce(
+                    F.col("_min_turn") <= F.col("last_turn_idx"), F.lit(False)
+                ).alias("_ooo"),
+            )
+        conv = conv.select(
+            "conv_id",
+            F.col("_l.turn_idx").alias("last_turn_idx"),
+            F.col("_l.ts_us").alias("last_ts_us"),
+            "_ooo",
+        ).persist()
+        conv_obs = Observation()
+        with self._phase(f"{tag} state"):
+            conv.observe(
+                conv_obs, F.count(F.lit(1)).alias("n"), F.count_if("_ooo").alias("ooo")
+            ).drop("_ooo").write.mode("overwrite").parquet(
+                self._delta_path(self._base("state"), version, heal)
+            )
+        n_convs, ooo_convs = _observed(conv_obs, "n", "ooo")
+        if ooo_convs:
+            with self._phase(f"{tag} heal pending"):
+                conv.filter("_ooo").select("conv_id").write.mode(
+                    "overwrite"
+                ).parquet(self._delta_path(self._base("heal_pending"), version))
+        conv.unpersist()
+
+        # tiers: ONE aggregate over the turn rows of every tier (a turn is
+        # a one-point tier row) and, on a commit, the previous rows of
+        # ONLY the windows they touch — a semi-join down the chain, never
+        # a full-table read. Running totals: previous committed totals +
+        # what this write itself observed per tier — windows and points it
+        # wrote minus those of the previous rows it replaced. No re-read.
+        rows = _union([turn_rows(metrics, t) for t in TIERS]).filter(retained(bounds))
+        prev_rows, prev_obs, out_obs = None, Observation(), Observation()
+        with self._phase(f"{tag} tiers"):
+            if not heal:
+                prev_rows = self._resolve_chain(
+                    self._base("tiers"),
+                    state["version"],
+                    _WINDOW_KEYS,
+                    touched=rows.select(*_WINDOW_KEYS),
+                    bounds=bounds,
+                    healed_through=state["healed_through"],
+                )
+            if prev_rows is not None:
+                rows = _observe_totals(prev_rows, prev_obs).unionByName(rows)
+            _write_by_tier(
+                _observe_totals(merge_tiers(rows), out_obs),
+                self._delta_path(self._base("tiers"), version, heal),
+            )
+        if not heal:
+            new = {t: _observed(out_obs, f"w_{t}", f"p_{t}") for t in TIERS}
+            # every previous row keys a row of the merge output, so a merge
+            # that wrote nothing replaced nothing (its delta was empty, and
+            # the optimiser may have pruned the empty semi-join together
+            # with its observation)
+            replaced = prev_rows is not None and any(w for w, _ in new.values())
+            for t in TIERS:
+                prev_w, prev_p = (
+                    _observed(prev_obs, f"w_{t}", f"p_{t}") if replaced else (0, 0)
+                )
+                tot = state["totals"].setdefault(t, {"n_windows": 0, "n_points": 0})
+                tot["n_windows"] += new[t][0] - prev_w
+                tot["n_points"] += new[t][1] - prev_p
+        if self.pack_tiers:
+            with self._phase(f"{tag} pack"):
+                self._write_packed(state, version, metrics, heal)
+        return n_convs, ooo_convs
+
+    def _write_packed(
+        self, state: dict, version: int, metrics: DataFrame, heal: bool
+    ) -> None:
+        """Pack every pack tier's touched windows in one write. A commit
+        re-encodes only the windows its delta touches (class doc), from
+        one chain resolve at ``state["version"]``; a heal packs its
+        conversations' whole history."""
+        bounds = state["retention_bounds"]
+        pts = metrics.select(
             "conv_id",
             F.col("turn_idx").cast("long").alias("turn_idx"),
             "ts_us",
@@ -655,11 +666,11 @@ class IncrementalRollup:
         # are needed to restore old points' turn_idx from cumulative
         # n_points — a metadata scan; only the touched windows' payloads
         # are decoded below
-        prev = self._resolve_chain(
+        prev = None if heal else self._resolve_chain(
             self._base("packed"),
             state["version"],
             _WINDOW_KEYS,
-            touched=delta_m.select("conv_id").distinct(),
+            touched=metrics.select("conv_id").distinct(),
             touched_on=["conv_id"],
             bounds=bounds,
             healed_through=state["healed_through"],
@@ -673,8 +684,8 @@ class IncrementalRollup:
         packed = []
         for t in self.pack_tiers:
             ws = window_start_col(F.col("ts_us"), t)
-            # same ingest-time retention drop as the aggregate path
-            tier_pts = pts.filter(_retained(bounds, t, ws))
+            # same retention drop as the aggregate tiers
+            tier_pts = pts.filter(retained(bounds, t, ws))
             if prev is not None:
                 prev_t = prev.filter(F.col("tier") == t)
                 offsets = prev_t.select(
@@ -701,23 +712,27 @@ class IncrementalRollup:
                 )
                 tier_pts = old_pts.unionByName(tier_pts)
             packed.append(pack_tier(tier_pts, t))
-        _write_by_tier(_union(packed), self._delta_path(self._base("packed"), snap_id))
+        _write_by_tier(
+            _union(packed), self._delta_path(self._base("packed"), version, heal)
+        )
 
     # -- heal (mst_groupheal analogue) ----------------------------------
     def heal(self) -> int:
         """Repair every conversation flagged out-of-order since the last
         heal: re-derive its per-turn metrics from ALL raw snapshots (the
-        batch path is order-insensitive), then write one corrective
-        ``d{v}h`` chain entry per table family — aggregate tiers, packed
-        tiers, conv state. Afterwards all reads are byte-identical to a
-        full recompute (tests assert) and incremental mode resumes.
+        batch path is order-insensitive), then write them as one
+        corrective ``d{v}h`` chain entry per table family — the commit's
+        own writer (``_write_entries``) with no carry and no previous
+        rows. Afterwards all reads are byte-identical to a full recompute
+        (tests assert) and incremental mode resumes.
 
         The reference's analogue walks a broken trace group and re-sorts
-        / re-merges its segments in place (mst_groupheal,
-        /root/reference/libmseed/traceutils.c:776-915; out-of-order
-        insertion tracelist.c:392-556); here the "group" is the affected
-        conversation set and the repair is a scoped batch recompute —
-        O(affected conversations), never O(table).
+        / re-merges its segments in place with the merge it uses on
+        insert (mst_groupheal, /root/reference/libmseed/traceutils.c:
+        776-915; out-of-order insertion tracelist.c:392-556); here the
+        "group" is the affected conversation set and the repair is a
+        scoped batch recompute — O(affected conversations), never
+        O(table).
 
         Crash-safe: heal dirs are deterministic overwrites keyed by the
         committed version, and a ``d{v}h`` entry is INVISIBLE to chain
@@ -760,34 +775,7 @@ class IncrementalRollup:
                 convs.select("conv_id").distinct(), "conv_id", "left_semi"
             )
         healed_m = derive_turn_metrics(raw).persist()
-        # respect committed evictions: healed rows never resurrect windows
-        # behind the retention bound
-        kept = _retained(state["retention_bounds"])
-        with self._phase(f"{tag} tiers"):
-            _write_by_tier(
-                _union([rollup_from_turns(healed_m, t) for t in TIERS]).filter(kept),
-                self._delta_path(self._base("tiers"), v, heal=True),
-            )
-        if self.pack_tiers:
-            with self._phase(f"{tag} pack"):
-                _write_by_tier(
-                    _union([pack_tier(healed_m, t) for t in self.pack_tiers]).filter(
-                        kept
-                    ),
-                    self._delta_path(self._base("packed"), v, heal=True),
-                )
-        convs_obs = Observation()
-        with self._phase(f"{tag} state"):
-            healed_m.groupBy("conv_id").agg(
-                F.max(F.struct("turn_idx", "ts_us")).alias("_l")
-            ).select(
-                "conv_id",
-                F.col("_l.turn_idx").alias("last_turn_idx"),
-                F.col("_l.ts_us").alias("last_ts_us"),
-            ).observe(convs_obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(self._delta_path(self._base("state"), v, heal=True))
-        (n_convs,) = _observed(convs_obs, "n")
+        n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)
         healed_m.unpersist()
         state["healed_through"] = v
         self._commit_ckpt(state)
@@ -816,27 +804,31 @@ class IncrementalRollup:
         ``now_us`` rewrites it keyed-idempotently). Physical space is
         reclaimed later by ``compact()``. Returns the accounting rows."""
         state = self._maybe_recover(self._read_ckpt())
-        with self._phase("retention sweep"):
-            tiers = self._read_tiers(state)
-            sweep = retention_sweep(tiers, now_us, horizons) if tiers else None
-            rows = list(sweep.collect()) if sweep is not None else []
-        # packed-tier accounting: same bound as the tier of the same name
-        # (windows are the unit of eviction for both representations)
-        packed_rows = []
-        for t in self.pack_tiers:
-            with self._phase(f"retention sweep packed {t}"):
-                pdf = self._read_family("packed", t, state)
-                if pdf is None:
+        # one resolve and one grouped sweep per family; packed rows are
+        # named ``packed:{t}`` (windows are the unit of eviction for both
+        # representations, so each shares its aggregate twin's bound)
+        rows = []
+        families = [("tiers", "", None)]
+        if self.pack_tiers:
+            families.append(("packed", "packed:", self.pack_tiers))
+        for family, prefix, tiers in families:
+            with self._phase(f"retention sweep {family}"):
+                df = self._resolve_chain(
+                    self._base(family),
+                    state["version"],
+                    _WINDOW_KEYS,
+                    bounds=state["retention_bounds"],
+                    healed_through=state["healed_through"],
+                    tiers=tiers,
+                )
+                if df is None:
                     continue
-                pr = retention_sweep({t: pdf}, now_us, horizons).collect()[0]
-            packed_rows.append((f"packed:{t}", pr))
-        for r in rows:
-            tier = r["tier"]
-            lo = retention_bound_us(tier, now_us, horizons)
-            if lo is None:
-                continue
+                swept = retention_sweep(df, now_us, horizons).collect()
+            rows += sorted((prefix + r["tier"], r) for r in swept)
+        for tier, lo in retention_bounds(now_us, horizons).items():
             old = state["retention_bounds"].get(tier)
-            state["retention_bounds"][tier] = max(old or lo, lo)
+            state["retention_bounds"][tier] = lo if old is None else max(old, lo)
+        for tier, r in rows:
             tot = state["totals"].get(tier)
             if tot is not None:
                 tot["n_windows"] -= int(r["n_evicted"])
@@ -844,14 +836,9 @@ class IncrementalRollup:
         self._commit_ckpt(state)
         acct = self.spark.createDataFrame(
             [
-                (int(now_us), r["tier"], r["n_kept"], r["n_evicted"],
-                 r["pts_kept"], r["pts_evicted"])
-                for r in rows
-            ]
-            + [
                 (int(now_us), name, r["n_kept"], r["n_evicted"],
                  r["pts_kept"], r["pts_evicted"])
-                for name, r in packed_rows
+                for name, r in rows
             ],
             "swept_at_us long, tier string, n_kept long, n_evicted long,"
             " pts_kept long, pts_evicted long",

@@ -13,7 +13,8 @@ pack.c:337). Spark mapping (SURVEY.md §2.9):
 
 The streaming aggregate (stream_rollup) emits a fixed subset of the tier
 statistics in operators/rollup.TIER_STATS: n_points, sum_tokens,
-min_ts_us and max_ts_us, with the same integer-domain definitions. It has
+min_ts_us and max_ts_us, each the TIER_STATS merge of its per-turn value
+— the batch definitions, not a second declaration. It has
 no latency statistics (stream_turn_metrics derives no latency), so those
 four columns are bit-compatible with a batch recompute, but a streaming
 1m tier is not a full tier table that rollup_from_tier can cascade.
@@ -24,8 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import TIERS
+from ..operators.rollup import TIER_STATS
 
+# the tier statistics stream_rollup keeps, in TIER_STATS order
+_STREAM_STATS = ("n_points", "sum_tokens", "min_ts_us", "max_ts_us")
 _TIER_INTERVAL = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
 
@@ -194,18 +197,16 @@ def stream_rollup(
         .withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", interval).alias("win"))
         .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("token_count").alias("sum_tokens"),
-            F.min("ts_us").alias("min_ts_us"),
-            F.max("ts_us").alias("max_ts_us"),
+            *[
+                merge(turn()).alias(c)
+                for c, turn, merge in TIER_STATS
+                if c in _STREAM_STATS
+            ]
         )
         .select(
             "conv_id",
             F.unix_micros(F.col("win.start")).alias("window_start_us"),
-            "n_points",
-            "sum_tokens",
-            "min_ts_us",
-            "max_ts_us",
+            *_STREAM_STATS,
             F.lit(tier).alias("tier"),
         )
     )

@@ -281,3 +281,36 @@ def test_tier_wholly_behind_bound_writes_no_leaf(spark, tmp_path):
     check("heal")
     inc.compact()
     check("compact")
+
+
+def test_commit_and_heal_share_one_tier_aggregate(
+    spark, ooo_snapshots, tmp_path, monkeypatch
+):
+    """Every commit and every heal writes its tier entry with ONE
+    ``merge_tiers`` — over the previous rows ∪ the turn rows of every
+    tier — and never aggregates a tier of turns on its own."""
+    from sac2mseed_spark.operators import rollup
+    from sac2mseed_spark.plans import pipeline as pl
+
+    calls = []
+
+    def counted(name, fn):
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(pl, "merge_tiers", counted("merge_tiers", pl.merge_tiers))
+    per_tier = counted("rollup_from_turns", rollup.rollup_from_turns)
+    monkeypatch.setattr(rollup, "rollup_from_turns", per_tier)
+    # and the pipeline's own binding, should it import the name
+    monkeypatch.setattr(pl, "rollup_from_turns", per_tier, raising=False)
+
+    src, full_t = ooo_snapshots
+    inc = IncrementalRollup(spark, src, str(tmp_path / "w"), pack_tiers=("1m",))
+    assert inc.process_pending() == len(OOO_BOUNDS)
+    assert calls == ["merge_tiers"] * len(OOO_BOUNDS)
+    calls.clear()
+    assert inc.heal() > 0
+    assert calls == ["merge_tiers"]

@@ -7,6 +7,7 @@ and cross-record StreamState (libmseed.h:458-465) at snapshot granularity.
 import json
 import os
 import shutil
+import time
 import uuid
 
 import pytest
@@ -360,3 +361,79 @@ def test_one_entry_per_family_per_commit(spark, snapshots, tmp_path):
     full_m = derive_turn_metrics(full_t)
     assert inc.tier("1h").columns == rollup_from_turns(full_m, "1h").columns
     assert inc.packed_tier("1m").columns == pack_tier(full_m, "1m").columns
+
+
+def test_empty_snapshot_commits_like_any_other(spark, snapshots, tmp_path):
+    """A zero-row snapshot, first or later, still commits: the version
+    advances, each family gains one entry, the tiers and the packed bytes
+    stay at batch parity, and the running totals equal a scan — the one
+    tier aggregate sees an empty delta and its observations still
+    report."""
+    src, full_t = snapshots
+    parts = str(tmp_path / "parts")
+    staged = str(tmp_path / "staged")
+    work = str(tmp_path / "w")
+    os.makedirs(staged)
+    empty = full_t.limit(0)
+    empty.write.parquet(os.path.join(parts, "snap_00000001"))
+    shutil.copytree(
+        os.path.join(src, "snap_00000001"), os.path.join(parts, "snap_00000002")
+    )
+    empty.write.parquet(os.path.join(parts, "snap_00000003"))
+    inc = IncrementalRollup(spark, staged, work, max_chain=None)
+    families = ("tiers", "packed", "state")
+    for snap_id, upto_turn in ((1, 0), (2, 20), (3, 20)):
+        _stage(parts, staged, snap_id)
+        before = {
+            f: set(os.listdir(os.path.join(work, f))) if snap_id > 1 else set()
+            for f in families
+        }
+        assert inc.process_pending() == 1
+        assert inc._read_ckpt()["version"] == snap_id
+        for f in families:
+            added = set(os.listdir(os.path.join(work, f))) - before[f]
+            assert added == {f"d{snap_id:08d}"}, (snap_id, f, added)
+        want_m = derive_turn_metrics(full_t.filter(F.col("turn_idx") < upto_turn))
+        for tier in ("1m", "1h", "1d"):
+            assert _tiers_as_dict(inc.tier(tier)) == _tiers_as_dict(
+                rollup_from_turns(want_m, tier)
+            ), (snap_id, tier)
+        got = {
+            (r["conv_id"], r["window_start_us"]): bytes(r["payload"])
+            for r in inc.packed_tier("1m").collect()
+        }
+        want = {
+            (r["conv_id"], r["window_start_us"]): bytes(r["payload"])
+            for r in pack_tier(want_m, "1m").collect()
+        }
+        assert got == want, snap_id
+        _assert_totals_equal_scan(inc, snap_id)
+
+
+def test_wall_covers_the_pack_phase(spark, snapshots, tmp_path, monkeypatch):
+    """A commit's ``wall_s`` spans its whole write path, the packed
+    re-encode included: a pack phase slowed by 1.5 s shows in it."""
+    from sac2mseed_spark.plans import pipeline as pl
+
+    src, _ = snapshots
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    _stage(src, staged, 1)
+    real_pack = pl.pack_tier
+    packed_at = []
+
+    def slow_pack(*args, **kwargs):
+        time.sleep(1.5)
+        out = real_pack(*args, **kwargs)
+        packed_at.append(time.time())
+        return out
+
+    monkeypatch.setattr(pl, "pack_tier", slow_pack)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"))
+    started = time.time()
+    assert inc.process_pending() == 1
+    assert packed_at, "the commit packed nothing"
+    (wall,) = {r["wall_s"] for r in inc.metrics_table().collect()}
+    # the commit starts within 0.5 s of process_pending; a wall taken
+    # before the pack phase would miss the whole 1.5 s sleep
+    assert wall >= packed_at[-1] - started - 0.5, (wall, packed_at[-1] - started)

@@ -4,7 +4,8 @@ from pyspark.sql import functions as F
 from sac2mseed_spark.functions.metrics import derive_turn_metrics, slim_metrics
 from sac2mseed_spark.operators.retention import (
     DEFAULT_HORIZONS_US,
-    retention_filter,
+    retained,
+    retention_bounds,
     retention_sweep,
     serve_tiered,
 )
@@ -55,8 +56,9 @@ def test_retention_filter_matches_sweep(tiers):
     m, t = tiers
     now = _now(m)
     rows = {r.tier: r for r in retention_sweep(t, now, H).collect()}
+    bounds = retention_bounds(now, H)
     for tier in ("1m", "1h", "1d"):
-        assert retention_filter(t[tier], tier, now, H).count() == rows[tier].n_kept
+        assert t[tier].filter(retained(bounds, tier)).count() == rows[tier].n_kept
 
 
 def test_serve_bands_partition_points_exactly(tiers):
