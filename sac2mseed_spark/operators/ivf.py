@@ -28,7 +28,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _list_matrix, _PAIR_SCHEMA, _rank_topk, _seq_dot
+from .similarity import (
+    _list_matrix,
+    _PAIR_SCHEMA,
+    _rank_topk,
+    _seq_dot,
+    _topk_candidates,
+)
 
 N_CENTROIDS = 8
 NPROBE = 2
@@ -200,7 +206,6 @@ def knn_ivf(
             cid2q.setdefault(int(ci), []).append(qi)
     cid2q = {c: np.asarray(v, dtype=np.int64) for c, v in cid2q.items()}
     bc = spark.sparkContext.broadcast((qids, Q, qn, cid2q, M, cnorm))
-    _MARGIN = 1.1e-6
 
     def kernel(batches) -> Iterator:
         import pyarrow as pa
@@ -232,16 +237,7 @@ def knn_ivf(
                 for d in range(Cs.shape[1]):
                     acc += Cs[:, d, None] * Qs[None, :, d]
                 sim = acc / (cs_n[:, None] * qs_n[None, :])
-                masked = np.where(
-                    cs_ids[:, None] == qs_ids[None, :], -np.inf, sim
-                )
-                nrows = masked.shape[0]
-                if nrows > k:
-                    kth = np.partition(masked, nrows - k, axis=0)[nrows - k, :]
-                    keep = masked >= (kth[None, :] - _MARGIN)
-                else:
-                    keep = masked > -np.inf
-                rr, qq_ = np.nonzero(keep)
+                rr, qq_ = _topk_candidates(sim, cs_ids, qs_ids, k)
                 out_q.append(qs_ids[qq_])
                 out_n.append(cs_ids[rr])
                 out_s.append(sim[rr, qq_])

@@ -334,7 +334,9 @@ def _binary_spans(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return data, off[:-1], off[1:]
 
 
-def _decode_partition_arrow(batches, with_pos: bool = False) -> "Iterator":
+def _decode_partition_arrow(
+    batches, with_pos: bool = False, pos_offset: str | None = None
+) -> "Iterator":
     """Vectorized unpack of a whole Arrow batch of payload blobs: one
     decode_concat call per batch (codec/decode_vec.py wavefront kernel),
     output columns built from flat numpy arrays."""
@@ -362,12 +364,16 @@ def _decode_partition_arrow(batches, with_pos: bool = False) -> "Iterator":
         out_names += [f"{s}_f" for s in STREAMS]
         if with_pos:
             pos = np.arange(len(ts_out)) - np.repeat(point_off[:-1], blob_pts)
+            if pos_offset is not None:
+                pos += rb.column(names.index(pos_offset)).to_numpy()[idx]
             arrays.append(pa.array(pos))
             out_names.append("pos")
         yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
 
-def unpack_tier(packed: DataFrame, with_pos: bool = False) -> DataFrame:
+def unpack_tier(
+    packed: DataFrame, with_pos: bool = False, pos_offset: str | None = None
+) -> DataFrame:
     """Inverse of pack_tier: explode blobs back into per-point rows with the
     Xn integrity check (unpackdata.c:556-561 analogue) enforced per window.
 
@@ -375,11 +381,17 @@ def unpack_tier(packed: DataFrame, with_pos: bool = False) -> DataFrame:
     unpack suite is larger than its pack suite, libmseed/unpackdata.c):
     one mapInArrow pass, whole-batch numpy wavefront decode, zero per-point
     Python. ``with_pos=True`` also emits each point's index within its
-    blob — the deterministic intra-window order repack relies on."""
+    blob — the deterministic intra-window order repack relies on — plus,
+    with ``pos_offset``, that long column of its blob (e.g. the window's
+    first turn index, so ``pos`` is the point's turn index)."""
+    with_pos = with_pos or pos_offset is not None
     cols = ["conv_id", "window_start_us", "payload", "xn"]
+    if pos_offset is not None:
+        cols.append(pos_offset)
     schema = _POINT_SCHEMA_POS if with_pos else _POINT_SCHEMA
     return packed.select(*cols).mapInArrow(
-        lambda batches: _decode_partition_arrow(batches, with_pos), schema=schema
+        lambda batches: _decode_partition_arrow(batches, with_pos, pos_offset),
+        schema=schema,
     )
 
 

@@ -113,6 +113,35 @@ def _cosine_pairs_arrow(batches) -> Iterator:
         )
 
 
+# Per-batch candidate pruning: the final ranker keeps top-k per query by
+# (round(sim, 6) desc, neighbor_id asc). A row can only be pushed out of
+# the global top-k by rows whose UNROUNDED sim exceeds its own by more
+# than 1e-6 (two sims within 1e-6 can round equal, and round(x) >
+# round(r) implies x > r); so emitting every row within 1.1e-6 of the
+# batch's k-th best (self-pairs masked) provably preserves the exact
+# global result while shrinking the kernel output from |batch| x
+# |queries| rows to ~k+ties per query per batch.
+_MARGIN = 1.1e-6
+
+
+def _topk_candidates(
+    sim: np.ndarray, row_ids: np.ndarray, q_ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, query) indexes of the pairs of ``sim`` (rows x queries) that
+    can reach a query's top-k: within ``_MARGIN`` of the batch's k-th
+    best, self-pairs excluded. A NaN sim (a zero-norm vector) counts as
+    +inf, since Spark's descending sort ranks NaN first."""
+    masked = np.where(np.isnan(sim), np.inf, sim)
+    masked = np.where(row_ids[:, None] == q_ids[None, :], -np.inf, masked)
+    nrows = masked.shape[0]
+    if nrows > k:
+        kth = np.partition(masked, nrows - k, axis=0)[nrows - k, :]
+        keep = masked >= (kth[None, :] - _MARGIN)
+    else:
+        keep = masked > -np.inf
+    return np.nonzero(keep)
+
+
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -140,7 +169,7 @@ def knn_bruteforce(
     broadcast-join — each corpus vector crosses the Arrow boundary once
     per batch, not once per query. The kernel emits only rows within a
     provably-safe rounding margin of each query's per-batch top-k (see
-    the _MARGIN note in the body), so the rank window sees ~k rows per
+    the _MARGIN note), so the rank window sees ~k rows per
     query per batch instead of |corpus| x |queries| pair rows.
 
     Bit-determinism: the per-dimension outer-product fold reproduces the
@@ -154,16 +183,6 @@ def knn_bruteforce(
     Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
     qq = np.sqrt(_seq_dot(Q, Q))
     bq = corpus.sparkSession.sparkContext.broadcast((qids, Q, qq))
-
-    # Per-batch candidate pruning: the final ranker keeps top-k per query
-    # by (round(sim, 6) desc, neighbor_id asc). A row can only be pushed
-    # out of the global top-k by rows whose UNROUNDED sim exceeds its own
-    # by more than 1e-6 (two sims within 1e-6 can round equal, and
-    # round(x) > round(r) implies x > r); so emitting every row within
-    # 1.1e-6 of the batch's k-th best (self-pairs masked) provably
-    # preserves the exact global result while shrinking the kernel output
-    # from |batch| x |queries| rows to ~k+ties per query per batch.
-    _MARGIN = 1.1e-6
 
     def kernel(batches) -> Iterator:
         import pyarrow as pa
@@ -189,14 +208,7 @@ def knn_bruteforce(
             cids = rb.column(names.index("neighbor_id")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
-            masked = np.where(cids[:, None] == qids_b[None, :], -np.inf, sim)
-            nrows = masked.shape[0]
-            if nrows > k:
-                kth = np.partition(masked, nrows - k, axis=0)[nrows - k, :]
-                keep = masked >= (kth[None, :] - _MARGIN)
-            else:
-                keep = masked > -np.inf
-            ci, qi = np.nonzero(keep)
+            ci, qi = _topk_candidates(sim, cids, qids_b, k)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(qids_b[qi]),

@@ -92,6 +92,29 @@ carries a job description naming its phase (``commit d00000002 tiers``,
 ``heal d00000002 pack``, ``compact tiers``); a commit and a heal share
 the phases ``state``, ``tiers`` and ``pack``.
 
+The jobs of a commit are fixed costs, so each is cut where it arises:
+
+  * schema-on-read: every parquet read takes its schema from the footer
+    of its first data file, read with pyarrow (``_read_parquet`` — the
+    one footer Spark reads itself with ``mergeSchema`` off), so the
+    ``read`` and ``state read`` phases of a commit and a heal's ``read``
+    start no job. Their semi-joins take plain key columns: a left-semi
+    join needs no unique keys, and a ``distinct`` would be a shuffle;
+  * one persisted frame per commit: the per-turn delta keeps the carried
+    ``last_turn_idx`` / ``last_ts_us`` columns, and the conv state is one
+    ``groupBy("conv_id")`` over it, which needs no exchange because the
+    cache is hash-partitioned on conv_id by the metrics' lag window;
+  * the packed chain is resolved clustered on conv_id, so its
+    latest-wins window and the cumulative point-offset window that
+    restores old points' turn_idx share one exchange, and the offset
+    rides through the decode (``unpack_tier(pos_offset=...)``) instead
+    of a join. The union of old and new points then always reaches the
+    pack kernel through pack_tier's own conv_id exchange: one plan shape,
+    whatever the optimiser makes of the union.
+
+The tier MERGE is deliberately not co-partitioned with its resolve: that
+saves a job but spreads the tier entry over more, smaller files.
+
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
 
@@ -121,9 +144,11 @@ import uuid
 from contextlib import contextmanager
 from functools import reduce
 
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import TIERS
 from ..functions.metrics import derive_turn_metrics
@@ -152,6 +177,19 @@ _ENTRY_RE = r"/(d[0-9]{8}h?)/(?:tier=([^/]+)/)?[^/]+$"
 
 def _union(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
+
+
+def _read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` of parquet dirs without its
+    schema-inference job: the schema is the footer of the first data file
+    of the first dir that has one, read with pyarrow — the one footer
+    Spark itself reads with ``mergeSchema`` off."""
+    for p in paths:
+        files = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+        if files:
+            schema = from_arrow_schema(pq.read_schema(os.path.join(p, files[0])))
+            return spark.read.schema(schema).parquet(*paths)
+    return spark.read.parquet(*paths)
 
 
 def _write_by_tier(df: DataFrame, path: str) -> None:
@@ -345,7 +383,9 @@ class IncrementalRollup:
         the scan down to the rows a merge needs, so the rows shuffled are
         delta-sized. ``touched_on`` may be a subset of the keys (e.g. just
         conv_id when the caller needs every window of the touched
-        conversations — the packed re-encode path).
+        conversations — the packed re-encode path); the rows are then
+        clustered on it, so the latest-wins window and a caller's window
+        over ``touched_on`` share one exchange.
 
         A window-keyed family (``keys`` lead with ``tier``) is read from
         the ``tier={t}`` leaf dirs of its entries, only those of ``tiers``
@@ -369,7 +409,7 @@ class IncrementalRollup:
         if not dirs:
             return None
         path = F.col("_metadata.file_path")
-        df = self.spark.read.parquet(*dirs).withColumn(
+        df = _read_parquet(self.spark, *dirs).withColumn(
             "_e", F.regexp_extract(path, _ENTRY_RE, 1)
         )
         if by_tier:
@@ -380,6 +420,8 @@ class IncrementalRollup:
             df = df.limit(0)
         if touched is not None:
             df = df.join(touched, touched_on or keys, "left_semi")
+        if touched_on:
+            df = df.repartition(*touched_on)
         w = Window.partitionBy(*keys).orderBy(F.desc("_e"))
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -470,35 +512,35 @@ class IncrementalRollup:
         t0 = time.time()
         tag = f"commit d{snap_id:08d}"
         with self._phase(f"{tag} read"):
-            raw = self.spark.read.parquet(snap_path)
+            raw = _read_parquet(self.spark, snap_path)
         delta_m = derive_turn_metrics(raw)
 
         # StreamState carry: seed each conversation's first-in-snapshot
         # latency from the previous snapshot's last turn. The state read
         # is delta-sized too: only the snapshot's own conversations are
-        # resolved down the chain.
+        # resolved down the chain. The carried columns stay on the one
+        # persisted frame, for the conv-state write.
         with self._phase(f"{tag} state read"):
             carry = self._resolve_chain(
                 self._base("state"),
                 state["version"],
                 _CONV_KEYS,
-                touched=raw.select("conv_id").distinct(),
+                touched=raw.select("conv_id"),
                 healed_through=state["healed_through"],
             )
         if carry is not None:
-            carry = carry.persist()
             delta_m = delta_m.join(carry, "conv_id", "left").withColumn(
                 "latency_us",
                 F.coalesce(
                     F.col("latency_us"), F.col("ts_us") - F.col("last_ts_us")
                 ),
-            ).drop("last_turn_idx", "last_ts_us")
+            )
         delta_m = delta_m.persist()
-        _, ooo_convs = self._write_entries(state, snap_id, tag, delta_m, carry)
+        _, ooo_convs = self._write_entries(
+            state, snap_id, tag, delta_m, carried=carry is not None
+        )
         wall = time.time() - t0
         delta_m.unpersist()
-        if carry is not None:
-            carry.unpersist()
 
         # lineage: what the commit did, from driver-side facts only
         lineage = ",".join(
@@ -527,9 +569,10 @@ class IncrementalRollup:
         # keyed-by-snapshot OVERWRITE, not a blind append: a crash between
         # this write and the checkpoint commit makes the rerun rewrite the
         # same directory instead of double-appending the snapshot's rows —
-        # metrics share the tier tables' replay-idempotence guarantee
+        # metrics share the tier tables' replay-idempotence guarantee. One
+        # file per snapshot: its rows are one per tier.
         with self._phase(f"{tag} metrics"):
-            metrics_df.write.mode("overwrite").parquet(
+            metrics_df.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
             )
 
@@ -539,34 +582,39 @@ class IncrementalRollup:
         version: int,
         tag: str,
         metrics: DataFrame,
-        carry: DataFrame | None = None,
+        carried: bool = False,
         heal: bool = False,
     ) -> tuple[int, int]:
         """Write the ``d{version}`` entry of every table family (``d{version}h``
         for a heal) from the per-turn ``metrics`` of the conversations it
         touches: their conv state, their windows of every tier, their
         blobs of every pack tier. A commit merges with what is committed at
-        ``state["version"]`` — the carried conv state ``carry`` and the
-        touched windows' rows — and keeps the running totals. A heal holds
-        its conversations' whole history, so it has no carry and no
-        previous rows, and it changes no window's count or points, so the
-        totals stand. Late data behind a committed retention bound is
-        dropped: it would be read-filtered and eviction-eligible anyway,
-        and admitting it would let the totals drift from what reads see.
-        Returns (conversations written, of them out of order)."""
+        ``state["version"]`` — the carried conv state (``carried``: the
+        ``last_turn_idx`` and ``last_ts_us`` columns of ``metrics``, null
+        for a new conversation) and the touched windows' rows — and keeps
+        the running totals. A heal holds its conversations' whole history,
+        so it has no carry and no previous rows, and it changes no window's
+        count or points, so the totals stand. Late data behind a committed
+        retention bound is dropped: it would be read-filtered and
+        eviction-eligible anyway, and admitting it would let the totals
+        drift from what reads see. Returns (conversations written, of them
+        out of order)."""
         bounds = state["retention_bounds"]
         # conv state: each conversation's new last turn, plus the
         # out-of-order flag (heal trigger, module doc): arriving turns at
         # or before the carried last_turn_idx mean this conversation's
-        # derived latencies are provisional until heal()
-        span = metrics.groupBy("conv_id").agg(
+        # derived latencies are provisional until heal(). The carried
+        # columns are constant per conversation, so they group with it:
+        # one aggregate over ``metrics``, no join.
+        carry_cols = ["last_turn_idx", "last_ts_us"] if carried else []
+        conv = metrics.groupBy("conv_id", *carry_cols).agg(
             F.min("turn_idx").alias("_min_turn"),
             F.max(F.struct("turn_idx", "ts_us")).alias("_l"),
         )
-        if carry is None:
-            conv = span.withColumn("_ooo", F.lit(False))
+        if not carried:
+            conv = conv.withColumn("_ooo", F.lit(False))
         else:
-            conv = span.join(carry, "conv_id", "left").select(
+            conv = conv.select(
                 "conv_id",
                 F.greatest(
                     F.col("_l"),
@@ -587,7 +635,7 @@ class IncrementalRollup:
             F.col("_l.turn_idx").alias("last_turn_idx"),
             F.col("_l.ts_us").alias("last_ts_us"),
             "_ooo",
-        ).persist()
+        )
         conv_obs = Observation()
         with self._phase(f"{tag} state"):
             conv.observe(
@@ -601,7 +649,6 @@ class IncrementalRollup:
                 conv.filter("_ooo").select("conv_id").write.mode(
                     "overwrite"
                 ).parquet(self._delta_path(self._base("heal_pending"), version))
-        conv.unpersist()
 
         # tiers: ONE aggregate over the turn rows of every tier (a turn is
         # a one-point tier row) and, on a commit, the previous rows of
@@ -676,6 +723,9 @@ class IncrementalRollup:
             healed_through=state["healed_through"],
             tiers=self.pack_tiers,
         )
+        # cumulative point count of the conversation's earlier windows: the
+        # turn index of each window's first point (the resolve is clustered
+        # on conv_id, so this window needs no exchange of its own)
         woff = (
             Window.partitionBy("conv_id")
             .orderBy("window_start_us")
@@ -687,28 +737,22 @@ class IncrementalRollup:
             # same retention drop as the aggregate tiers
             tier_pts = pts.filter(retained(bounds, t, ws))
             if prev is not None:
-                prev_t = prev.filter(F.col("tier") == t)
-                offsets = prev_t.select(
-                    "conv_id",
-                    "window_start_us",
-                    F.coalesce(F.sum("n_points").over(woff), F.lit(0)).alias("_off"),
-                )
                 touched = tier_pts.select(
                     "conv_id", ws.alias("window_start_us")
                 ).distinct()
-                old_touched = prev_t.join(
-                    touched, ["conv_id", "window_start_us"], "left_semi"
-                )
-                old_pts = (
-                    unpack_tier(old_touched, with_pos=True)
-                    .join(offsets, ["conv_id", "window_start_us"])
-                    .select(
-                        "conv_id",
-                        (F.col("_off") + F.col("pos")).alias("turn_idx"),
-                        "ts_us",
-                        F.col("latency_us_f").alias("latency_us"),
-                        F.col("token_count_f").alias("token_count"),
+                old_touched = (
+                    prev.filter(F.col("tier") == t)
+                    .withColumn(
+                        "_off", F.coalesce(F.sum("n_points").over(woff), F.lit(0))
                     )
+                    .join(touched, ["conv_id", "window_start_us"], "left_semi")
+                )
+                old_pts = unpack_tier(old_touched, pos_offset="_off").select(
+                    "conv_id",
+                    F.col("pos").alias("turn_idx"),
+                    "ts_us",
+                    F.col("latency_us_f").alias("latency_us"),
+                    F.col("token_count_f").alias("token_count"),
                 )
                 tier_pts = old_pts.unionByName(tier_pts)
             packed.append(pack_tier(tier_pts, t))
@@ -769,10 +813,13 @@ class IncrementalRollup:
             return 0
         tag = f"heal d{v:08d}"
         snap_paths = [p for sid, p in list_snapshots(self.input_dir) if sid <= v]
+        # a left-semi join needs no unique keys: a conversation flagged in
+        # several pending dirs (or appended twice) is healed once
         with self._phase(f"{tag} read"):
-            convs = _union([self.spark.read.parquet(p) for p in pend_dirs])
-            raw = self.spark.read.parquet(*snap_paths).join(
-                convs.select("conv_id").distinct(), "conv_id", "left_semi"
+            raw = _read_parquet(self.spark, *snap_paths).join(
+                _read_parquet(self.spark, *pend_dirs).select("conv_id"),
+                "conv_id",
+                "left_semi",
             )
         healed_m = derive_turn_metrics(raw).persist()
         n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)

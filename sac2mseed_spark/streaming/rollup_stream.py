@@ -130,8 +130,8 @@ def route_ooo_to_pending(metrics_batch: DataFrame, work_dir: str) -> int:
 
     The pending dir is keyed by the pipeline's current committed version
     (or 1 before any commit) and written in append mode: replayed
-    micro-batches at-least-once-append duplicates, which heal's
-    ``distinct()`` absorbs — same idempotence story as the snapshot path.
+    micro-batches at-least-once-append duplicates, which heal's left-semi
+    join absorbs — same idempotence story as the snapshot path.
     """
     import os
 

@@ -1,5 +1,7 @@
+import collections
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -18,3 +20,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def phase_jobs(spark):
+    """``run(fn)`` calls ``fn()`` under a fresh job group and returns the
+    Spark jobs it started, counted per job description (an engine phase
+    such as ``commit d00000002 tiers``; None for undescribed jobs). A
+    phase that started no job is absent."""
+    sc = spark.sparkContext
+
+    def run(fn) -> collections.Counter:
+        gid = f"test-phases-{uuid.uuid4()}"
+        sc.setJobGroup(gid, "phases")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("test-idle", "idle")
+        # the status store is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)
+        per = collections.Counter()
+        for i in range(jobs.length()):
+            j = jobs.apply(i)
+            if j.jobGroup().isDefined() and j.jobGroup().get() == gid:
+                per[j.description().get() if j.description().isDefined() else None] += 1
+        return per
+
+    return run

@@ -8,7 +8,6 @@ import json
 import os
 import shutil
 import time
-import uuid
 
 import pytest
 from pyspark.sql import Window
@@ -123,6 +122,10 @@ def test_metrics_lineage(spark, snapshots, tmp_path):
     # checkpoint file records version 3
     with open(os.path.join(work, "_checkpoint.json")) as f:
         assert json.load(f)["version"] == 3
+    # each snapshot's rows (one per tier) are written as one file
+    for snap_id in (1, 2, 3):
+        d = os.path.join(work, "metrics", f"snap_{snap_id:08d}")
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
 
 
 def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
@@ -211,21 +214,6 @@ def _stage(src, staged, snap_id):
     shutil.copytree(os.path.join(src, name), os.path.join(staged, name))
 
 
-def _commit_jobs(spark, inc):
-    """Process the one pending snapshot; return the Spark jobs it ran,
-    counted under a job group the way perfbench's JobCounter does."""
-    sc = spark.sparkContext
-    gid = f"test-commit-{uuid.uuid4()}"
-    sc.setJobGroup(gid, "commit")
-    try:
-        assert inc.process_pending() == 1
-    finally:
-        sc.setJobGroup("test-idle", "idle")
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def _assert_totals_equal_scan(inc, snap_id):
     """The metrics rows of ``snap_id`` carry the running totals the commit
     observed; they must equal a direct scan of each tier at that version."""
@@ -246,7 +234,7 @@ def _assert_totals_equal_scan(inc, snap_id):
     return rows
 
 
-def test_commit_jobs_do_not_grow_with_chain(spark, tmp_path):
+def test_commit_jobs_do_not_grow_with_chain(spark, tmp_path, phase_jobs):
     """An in-order commit resolves every chain in one scan and keeps its
     running totals from observations, so its Spark jobs do not rise with
     the chain length (no compaction: the chain grows by one per commit)."""
@@ -259,16 +247,38 @@ def test_commit_jobs_do_not_grow_with_chain(spark, tmp_path):
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
     inc = IncrementalRollup(spark, staged, str(tmp_path / "w"), max_chain=None)
+
+    def commit_one():
+        assert inc.process_pending() == 1
+
     jobs = {}
     for snap_id in (1, 2, 3, 4):
         _stage(src, staged, snap_id)
-        jobs[snap_id] = _commit_jobs(spark, inc)
+        jobs[snap_id] = sum(phase_jobs(commit_one).values())
     chain = {
         r["snapshot_id"]: r["chain_len"] for r in inc.metrics_table().collect()
     }
     assert chain == {1: 1, 2: 2, 3: 3, 4: 4}
     assert {r["ooo_convs"] for r in inc.metrics_table().collect()} == {0}
     assert jobs[4] <= jobs[2], jobs
+
+
+def test_commit_read_phases_start_no_job(spark, snapshots, tmp_path, phase_jobs):
+    """A commit's ``read`` and ``state read`` phases only build plans: each
+    parquet read takes its schema from one footer read with pyarrow, and
+    the state read semi-joins on the snapshot's plain conv_id column, so
+    neither starts a Spark job — with no state chain yet (snapshot 1) and
+    with one (snapshot 2)."""
+    src, _ = snapshots
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"))
+    for snap_id in (1, 2):
+        _stage(src, staged, snap_id)
+        per = phase_jobs(inc.process_pending)
+        tag = f"commit d{snap_id:08d}"
+        assert per[f"{tag} state"] > 0, per  # the commit's jobs are described
+        assert per[f"{tag} read"] == per[f"{tag} state read"] == 0, per
 
 
 def test_observed_totals_existing_and_new_windows(spark, tmp_path):

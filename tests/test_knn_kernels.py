@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from sac2mseed_spark.operators.ivf import knn_ivf
 from sac2mseed_spark.operators.similarity import (
     _plane_matrix,
     _seq_dot,
@@ -84,6 +85,33 @@ def test_bruteforce_kernel_pruning_exact(spark):
     for qi in qidx:
         for (q, ni, rank, sim) in exp[qi]:
             assert got[(q, rank)] == (ni, pytest.approx(sim, abs=0)), (q, rank)
+
+
+def test_zero_norm_corpus_vector_ranks_first(spark):
+    """A zero-norm corpus vector has a NaN cosine with every query, and
+    Spark's descending sort ranks NaN first: the pruning kernels of
+    knn_bruteforce and knn_ivf keep it, so it is every query's rank-1
+    neighbor, followed by the exact top-(k-1) of the other vectors."""
+    v = _vectors()
+    v[5] = 0.0
+    df = _df(spark, v)
+    qidx = [0, 9, 27, 63]
+    queries = df.filter(F.col("vec_id").isin(qidx))
+    others = {qi: [n for n in range(len(v)) if n != 5] for qi in qidx}
+    exp = _expected_topk(v, qidx, others)
+    for result in (
+        knn_bruteforce(df, queries, k=K),
+        knn_ivf(df, queries, k=K, n_centroids=1, nprobe=1),
+    ):
+        got = {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"])
+            for r in result.collect()
+        }
+        for qi in qidx:
+            ni, sim = got[(qi, 1)]
+            assert ni == 5 and np.isnan(sim), (qi, ni, sim)
+            for (q, ni, rank, sim) in exp[qi][: K - 1]:
+                assert got[(q, rank + 1)] == (ni, pytest.approx(sim, abs=0)), (q, rank)
 
 
 def test_knn_lsh_grouped_scoring_exact(spark):
