@@ -195,6 +195,20 @@ def minhash_signatures(
     )
 
 
+def size_ratio_may_verify(sza: str, szb: str, threshold: float):
+    """LOSSLESS size-ratio prefilter of the Jaccard verify: jaccard <=
+    min(|A|,|B|) / max(|A|,|B|), so a pair whose set sizes are more
+    lopsided than the threshold cannot verify. The verify compares
+    ``round(jaccard, 6)``, which lifts a jaccard up to 5e-7 below the
+    threshold onto it, so the slack is 6e-7 of the larger size, plus 0.5
+    for the binary representation error of the threshold literal (sizes
+    are ints, so |double(t)-t| * max « 0.5)."""
+    big = F.greatest(sza, szb).cast("double")
+    return F.least(sza, szb).cast("double") >= F.lit(threshold) * big - (
+        0.5 + 6e-7 * big
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -254,21 +268,13 @@ def minhash_lsh_pairs(
         cand_ids, "doc", "left_semi"
     )
     sizes = ss.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    # LOSSLESS size-ratio prefilter before the verify explode: jaccard
-    # <= min(|A|,|B|) / max(|A|,|B|), so any pair whose set sizes are
-    # more lopsided than the threshold cannot verify — drop it BEFORE
-    # its shingles are materialized. The 0.5 slack absorbs the binary
-    # representation error of the threshold literal (sizes are ints, so
-    # |double(t)-t| * max « 0.5 can never drop a qualifying pair).
+    # drop lopsided pairs BEFORE their shingles are materialized
     cand_f = (
         cand.join(
             F.broadcast(sizes.toDF("a", "sza")), "a"
         )
         .join(F.broadcast(sizes.toDF("b", "szb")), "b")
-        .filter(
-            F.least("sza", "szb").cast("double")
-            >= F.lit(threshold) * F.greatest("sza", "szb").cast("double") - 0.5
-        )
+        .filter(size_ratio_may_verify("sza", "szb", threshold))
         .select("a", "b")
     )
     # equi-join on (doc, sh_h) so the intersection materializes only the

@@ -89,6 +89,13 @@ PACKED_SCHEMA = StructType(
     ]
 )
 
+# the rows of one blob share these key columns; the kernel keys on those
+# its input carries (``tier`` is optional) and passes ``tier`` through
+_BLOB_KEYS = ("tier", "conv_id", "window_start_us")
+_PACKED_TIER_SCHEMA = StructType(
+    PACKED_SCHEMA.fields + [StructField("tier", StringType())]
+)
+
 
 def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     """Concatenated [s, s+len) index ranges (the segmented-arange trick)."""
@@ -99,23 +106,24 @@ def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     return rep + np.arange(total, dtype=np.int64)
 
 
+def _keys(tbl) -> list[str]:
+    return [k for k in _BLOB_KEYS if k in tbl.column_names]
+
+
 def _conv_ws_change(tbl) -> np.ndarray:
-    """Boolean array: row starts a new (conv_id, window_start_us) group.
-    Comparison happens inside Arrow — no per-row python strings."""
+    """Boolean array: row starts a new ([tier,] conv_id, window_start_us)
+    group. Comparison happens inside Arrow — no per-row python strings."""
     import pyarrow.compute as pc
 
     n = tbl.num_rows
     new = np.ones(n, dtype=bool)
     if n > 1:
-        conv = tbl.column("conv_id").chunk(0)
-        ws = tbl.column("window_start_us").chunk(0)
-        c = pc.not_equal(conv.slice(1, n - 1), conv.slice(0, n - 1)).to_numpy(
-            zero_copy_only=False
-        )
-        w = pc.not_equal(ws.slice(1, n - 1), ws.slice(0, n - 1)).to_numpy(
-            zero_copy_only=False
-        )
-        new[1:] = c | w
+        new[1:] = False
+        for k in _keys(tbl):
+            col = tbl.column(k).chunk(0)
+            new[1:] |= pc.not_equal(
+                col.slice(1, n - 1), col.slice(0, n - 1)
+            ).to_numpy(zero_copy_only=False)
     return new
 
 
@@ -192,7 +200,9 @@ def _run_block_arrow(tbl):
         W,
         [None, pa.py_buffer(out_off.astype(np.int32)), pa.py_buffer(out)],
     )
-    conv_out = tbl.column("conv_id").chunk(0).take(pa.array(win_starts))
+    first = pa.array(win_starts)
+    conv_out = tbl.column("conv_id").chunk(0).take(first)
+    tier = [tbl.column("tier").chunk(0).take(first)] if "tier" in _keys(tbl) else []
     return pa.RecordBatch.from_arrays(
         [
             conv_out,
@@ -205,19 +215,9 @@ def _run_block_arrow(tbl):
             pa.array(stats["xn"][win_chunk_end - 1].view(np.int64)),
             payload,
             pa.array(crcs),
+            *tier,
         ],
-        names=[
-            "conv_id",
-            "window_start_us",
-            "n_points",
-            "n_chunks",
-            "first_ts_us",
-            "last_ts_us",
-            "x0",
-            "xn",
-            "payload",
-            "crc32",
-        ],
+        names=PACKED_SCHEMA.names + ["tier"] * len(tier),
     )
 
 
@@ -229,7 +229,7 @@ def _concat(parts):
 
 
 def _row_key(tbl, i: int) -> tuple:
-    return tbl.column("conv_id")[i].as_py(), tbl.column("window_start_us")[i].as_py()
+    return tuple(tbl.column(k)[i].as_py() for k in _keys(tbl))
 
 
 def _pack_flat_arrow(batches) -> Iterator:
@@ -262,6 +262,36 @@ def _pack_flat_arrow(batches) -> Iterator:
         yield _run_block_arrow(_concat(carry))
 
 
+def tier_points(metrics: DataFrame, tier: str) -> DataFrame:
+    """metrics (derive_turn_metrics output) -> the flat points of ``tier``
+    that ``pack_points`` packs: (tier, conv_id, window_start_us, turn_idx,
+    ts_us, *STREAMS)."""
+    return metrics.select(
+        F.lit(tier).alias("tier"),
+        "conv_id",
+        window_start_col(F.col("ts_us"), tier).alias("window_start_us"),
+        F.col("turn_idx").cast("long").alias("turn_idx"),
+        "ts_us",
+        *[F.col(s).cast("double").alias(s) for s in STREAMS],
+    )
+
+
+def pack_points(
+    flat: DataFrame, clustered_by_conv: bool = False, assume_sorted: bool = False
+) -> DataFrame:
+    """Flat points of ANY tiers (``tier_points`` rows) -> one packed blob
+    per (tier, conv_id, window_start_us), ``tier`` last: one exchange and
+    one kernel pass whatever the number of tiers. ``clustered_by_conv``
+    and ``assume_sorted`` as in ``pack_tier``."""
+    if not (clustered_by_conv or assume_sorted):
+        flat = flat.repartition("conv_id")
+    if not assume_sorted:
+        flat = flat.sortWithinPartitions(
+            "conv_id", "tier", "window_start_us", "turn_idx", "ts_us", *STREAMS
+        )
+    return flat.mapInArrow(_pack_flat_arrow, schema=_PACKED_TIER_SCHEMA)
+
+
 def pack_tier(
     metrics: DataFrame,
     tier: str,
@@ -287,20 +317,7 @@ def pack_tier(
     a full materialization of every row — the pack stage becomes one
     cache-scan + one Arrow pass.
     """
-    flat = metrics.select(
-        "conv_id",
-        window_start_col(F.col("ts_us"), tier).alias("window_start_us"),
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        "ts_us",
-        *[F.col(s).cast("double").alias(s) for s in STREAMS],
-    )
-    keys = ["conv_id", "window_start_us"]
-    if not (clustered_by_conv or assume_sorted):
-        flat = flat.repartition("conv_id")
-    if not assume_sorted:
-        flat = flat.sortWithinPartitions(*keys, "turn_idx", "ts_us", *STREAMS)
-    packed = flat.mapInArrow(_pack_flat_arrow, schema=PACKED_SCHEMA)
-    return packed.withColumn("tier", F.lit(tier))
+    return pack_points(tier_points(metrics, tier), clustered_by_conv, assume_sorted)
 
 
 # ----------------------------------------------------------------------
@@ -335,7 +352,10 @@ def _binary_spans(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def _decode_partition_arrow(
-    batches, with_pos: bool = False, pos_offset: str | None = None
+    batches,
+    with_pos: bool = False,
+    pos_offset: str | None = None,
+    keep: tuple[str, ...] = (),
 ) -> "Iterator":
     """Vectorized unpack of a whole Arrow batch of payload blobs: one
     decode_concat call per batch (codec/decode_vec.py wavefront kernel),
@@ -368,11 +388,17 @@ def _decode_partition_arrow(
                 pos += rb.column(names.index(pos_offset)).to_numpy()[idx]
             arrays.append(pa.array(pos))
             out_names.append("pos")
+        for c in keep:
+            arrays.append(rb.column(names.index(c)).take(pa.array(idx)))
+        out_names += keep
         yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
 
 def unpack_tier(
-    packed: DataFrame, with_pos: bool = False, pos_offset: str | None = None
+    packed: DataFrame,
+    with_pos: bool = False,
+    pos_offset: str | None = None,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Inverse of pack_tier: explode blobs back into per-point rows with the
     Xn integrity check (unpackdata.c:556-561 analogue) enforced per window.
@@ -383,14 +409,19 @@ def unpack_tier(
     Python. ``with_pos=True`` also emits each point's index within its
     blob — the deterministic intra-window order repack relies on — plus,
     with ``pos_offset``, that long column of its blob (e.g. the window's
-    first turn index, so ``pos`` is the point's turn index)."""
+    first turn index, so ``pos`` is the point's turn index). The blob
+    columns named in ``keep`` (e.g. ``tier``) follow, repeated on each of
+    its points."""
     with_pos = with_pos or pos_offset is not None
     cols = ["conv_id", "window_start_us", "payload", "xn"]
     if pos_offset is not None:
         cols.append(pos_offset)
     schema = _POINT_SCHEMA_POS if with_pos else _POINT_SCHEMA
-    return packed.select(*cols).mapInArrow(
-        lambda batches: _decode_partition_arrow(batches, with_pos, pos_offset),
+    schema = StructType(schema.fields + [packed.schema[c] for c in keep])
+    return packed.select(*cols, *keep).mapInArrow(
+        lambda batches: _decode_partition_arrow(
+            batches, with_pos, pos_offset, keep
+        ),
         schema=schema,
     )
 

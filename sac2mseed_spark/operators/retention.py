@@ -47,15 +47,14 @@ def retention_bounds(now_us: int, horizons=None) -> dict[str, int]:
     return {t: lo for t in hz if (lo := retention_bound_us(t, now_us, hz)) is not None}
 
 
-def retained(bounds: dict, tier: str | None = None, ws: Column | None = None) -> Column:
+def retained(bounds: dict, tier: str | None = None) -> Column:
     """The retention predicate, the one definition (the metadata-only
     ``DELETE WHERE window_start_us < bound`` per tier): a row of ``tier``
-    (default: the frame's ``tier`` column) whose window starts at ``ws``
-    (default: ``window_start_us``) is kept iff it is not behind that
-    tier's bound in ``bounds`` (tier -> bound; a tier without one keeps
-    everything)."""
+    (default: the frame's ``tier`` column) is kept iff its
+    ``window_start_us`` is not behind that tier's bound in ``bounds``
+    (tier -> bound; a tier without one keeps everything)."""
     tier = F.col("tier") if tier is None else F.lit(tier)
-    ws = F.col("window_start_us") if ws is None else ws
+    ws = F.col("window_start_us")
     return reduce(
         operator.and_,
         [(tier != t) | (ws >= F.lit(lo)) for t, lo in bounds.items()],

@@ -100,17 +100,20 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
     ``read`` and ``state read`` phases of a commit and a heal's ``read``
     start no job. Their semi-joins take plain key columns: a left-semi
     join needs no unique keys, and a ``distinct`` would be a shuffle;
-  * one persisted frame per commit: the per-turn delta keeps the carried
-    ``last_turn_idx`` / ``last_ts_us`` columns, and the conv state is one
+  * one persisted frame per commit: the per-turn delta, only the
+    columns the writers read (``SLIM_COLS``) plus the carried
+    ``last_turn_idx`` / ``last_ts_us``; the conv state is one
     ``groupBy("conv_id")`` over it, which needs no exchange because the
     cache is hash-partitioned on conv_id by the metrics' lag window;
-  * the packed chain is resolved clustered on conv_id, so its
-    latest-wins window and the cumulative point-offset window that
-    restores old points' turn_idx share one exchange, and the offset
-    rides through the decode (``unpack_tier(pos_offset=...)``) instead
-    of a join. The union of old and new points then always reaches the
-    pack kernel through pack_tier's own conv_id exchange: one plan shape,
-    whatever the optimiser makes of the union.
+  * the packed chain is resolved once for every pack tier, clustered on
+    conv_id, so its latest-wins window and the cumulative point-offset
+    window that restores old points' turn_idx (per tier and
+    conversation) share one exchange, and the offset and the tier ride
+    through one decode (``unpack_tier(pos_offset=..., keep=("tier",))``)
+    instead of a join. The union of old and new points of every pack
+    tier then reaches ONE pack (``pack_points``) through its own conv_id
+    exchange: one plan shape, whatever the optimiser makes of the union,
+    and as many jobs for two pack tiers as for one.
 
 The tier MERGE is deliberately not co-partitioned with its resolve: that
 saves a job but spreads the tier entry over more, smaller files.
@@ -151,15 +154,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import TIERS
-from ..functions.metrics import derive_turn_metrics
-from ..operators.pack import pack_tier, unpack_tier
+from ..functions.metrics import SLIM_COLS, derive_turn_metrics, slim_metrics
+from ..operators.pack import pack_points, tier_points, unpack_tier
 from ..operators.retention import (
     retained,
     retention_bounds,
     retention_sweep,
     serve_tiered,
 )
-from ..operators.rollup import merge_tiers, turn_rows, window_start_col
+from ..operators.rollup import merge_tiers, turn_rows
+from ..sinks.tier_tables import table_writer
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 # d{version}[h]: plain snapshot deltas rank before the heal delta of the
@@ -197,10 +201,10 @@ def _write_by_tier(df: DataFrame, path: str) -> None:
     tier with rows. An entry with no row at all gets an empty ``tier=``
     leaf instead (no tier reads it by name), so a read of a tier without
     rows still finds the family's columns."""
-    df.write.partitionBy("tier").mode("overwrite").parquet(path)
+    table_writer(df).partitionBy("tier").mode("overwrite").parquet(path)
     if not any(n.startswith("tier=") for n in os.listdir(path)):
         schema = df.drop("tier").schema
-        df.sparkSession.createDataFrame([], schema).write.parquet(
+        table_writer(df.sparkSession.createDataFrame([], schema)).parquet(
             os.path.join(path, "tier=")
         )
 
@@ -519,7 +523,9 @@ class IncrementalRollup:
         # latency from the previous snapshot's last turn. The state read
         # is delta-sized too: only the snapshot's own conversations are
         # resolved down the chain. The carried columns stay on the one
-        # persisted frame, for the conv-state write.
+        # persisted frame, for the conv-state write; the raw text, role
+        # and tool do not (the writers read SLIM_COLS), so they are pruned
+        # below the metrics' lag window.
         with self._phase(f"{tag} state read"):
             carry = self._resolve_chain(
                 self._base("state"),
@@ -528,14 +534,16 @@ class IncrementalRollup:
                 touched=raw.select("conv_id"),
                 healed_through=state["healed_through"],
             )
+        carry_cols = []
         if carry is not None:
+            carry_cols = ["last_turn_idx", "last_ts_us"]
             delta_m = delta_m.join(carry, "conv_id", "left").withColumn(
                 "latency_us",
                 F.coalesce(
                     F.col("latency_us"), F.col("ts_us") - F.col("last_ts_us")
                 ),
             )
-        delta_m = delta_m.persist()
+        delta_m = delta_m.select(*SLIM_COLS, *carry_cols).persist()
         _, ooo_convs = self._write_entries(
             state, snap_id, tag, delta_m, carried=carry is not None
         )
@@ -572,7 +580,7 @@ class IncrementalRollup:
         # metrics share the tier tables' replay-idempotence guarantee. One
         # file per snapshot: its rows are one per tier.
         with self._phase(f"{tag} metrics"):
-            metrics_df.coalesce(1).write.mode("overwrite").parquet(
+            table_writer(metrics_df.coalesce(1)).mode("overwrite").parquet(
                 os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
             )
 
@@ -638,15 +646,19 @@ class IncrementalRollup:
         )
         conv_obs = Observation()
         with self._phase(f"{tag} state"):
-            conv.observe(
-                conv_obs, F.count(F.lit(1)).alias("n"), F.count_if("_ooo").alias("ooo")
-            ).drop("_ooo").write.mode("overwrite").parquet(
+            table_writer(
+                conv.observe(
+                    conv_obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if("_ooo").alias("ooo"),
+                ).drop("_ooo")
+            ).mode("overwrite").parquet(
                 self._delta_path(self._base("state"), version, heal)
             )
         n_convs, ooo_convs = _observed(conv_obs, "n", "ooo")
         if ooo_convs:
             with self._phase(f"{tag} heal pending"):
-                conv.filter("_ooo").select("conv_id").write.mode(
+                table_writer(conv.filter("_ooo").select("conv_id")).mode(
                     "overwrite"
                 ).parquet(self._delta_path(self._base("heal_pending"), version))
 
@@ -698,15 +710,13 @@ class IncrementalRollup:
     ) -> None:
         """Pack every pack tier's touched windows in one write. A commit
         re-encodes only the windows its delta touches (class doc), from
-        one chain resolve at ``state["version"]``; a heal packs its
-        conversations' whole history."""
+        one chain resolve and one decode of every pack tier at
+        ``state["version"]``; a heal packs its conversations' whole
+        history. The points of all pack tiers go through one pack."""
         bounds = state["retention_bounds"]
-        pts = metrics.select(
-            "conv_id",
-            F.col("turn_idx").cast("long").alias("turn_idx"),
-            "ts_us",
-            F.col("latency_us").cast("double").alias("latency_us"),
-            F.col("token_count").cast("double").alias("token_count"),
+        # same retention drop as the aggregate tiers
+        pts = _union([tier_points(metrics, t) for t in self.pack_tiers]).filter(
+            retained(bounds)
         )
         # chain read pruned to the delta's CONVERSATIONS (semi-join below
         # the latest-wins window): all windows of a touched conversation
@@ -723,41 +733,31 @@ class IncrementalRollup:
             healed_through=state["healed_through"],
             tiers=self.pack_tiers,
         )
-        # cumulative point count of the conversation's earlier windows: the
-        # turn index of each window's first point (the resolve is clustered
-        # on conv_id, so this window needs no exchange of its own)
-        woff = (
-            Window.partitionBy("conv_id")
-            .orderBy("window_start_us")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        packed = []
-        for t in self.pack_tiers:
-            ws = window_start_col(F.col("ts_us"), t)
-            # same retention drop as the aggregate tiers
-            tier_pts = pts.filter(retained(bounds, t, ws))
-            if prev is not None:
-                touched = tier_pts.select(
-                    "conv_id", ws.alias("window_start_us")
-                ).distinct()
-                old_touched = (
-                    prev.filter(F.col("tier") == t)
-                    .withColumn(
-                        "_off", F.coalesce(F.sum("n_points").over(woff), F.lit(0))
-                    )
-                    .join(touched, ["conv_id", "window_start_us"], "left_semi")
-                )
-                old_pts = unpack_tier(old_touched, pos_offset="_off").select(
-                    "conv_id",
-                    F.col("pos").alias("turn_idx"),
-                    "ts_us",
-                    F.col("latency_us_f").alias("latency_us"),
-                    F.col("token_count_f").alias("token_count"),
-                )
-                tier_pts = old_pts.unionByName(tier_pts)
-            packed.append(pack_tier(tier_pts, t))
+        if prev is not None:
+            # cumulative point count of the conversation's earlier windows
+            # of the tier: the turn index of each window's first point (the
+            # resolve is clustered on conv_id, so this window needs no
+            # exchange of its own)
+            woff = (
+                Window.partitionBy("tier", "conv_id")
+                .orderBy("window_start_us")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
+            old_touched = prev.withColumn(
+                "_off", F.coalesce(F.sum("n_points").over(woff), F.lit(0))
+            ).join(pts.select(*_WINDOW_KEYS), _WINDOW_KEYS, "left_semi")
+            old_pts = unpack_tier(old_touched, pos_offset="_off", keep=("tier",))
+            pts = old_pts.select(
+                "tier",
+                "conv_id",
+                "window_start_us",
+                F.col("pos").alias("turn_idx"),
+                "ts_us",
+                F.col("latency_us_f").alias("latency_us"),
+                F.col("token_count_f").alias("token_count"),
+            ).unionByName(pts)
         _write_by_tier(
-            _union(packed), self._delta_path(self._base("packed"), version, heal)
+            pack_points(pts), self._delta_path(self._base("packed"), version, heal)
         )
 
     # -- heal (mst_groupheal analogue) ----------------------------------
@@ -821,7 +821,7 @@ class IncrementalRollup:
                 "conv_id",
                 "left_semi",
             )
-        healed_m = derive_turn_metrics(raw).persist()
+        healed_m = slim_metrics(derive_turn_metrics(raw)).persist()
         n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)
         healed_m.unpersist()
         state["healed_through"] = v
@@ -891,7 +891,7 @@ class IncrementalRollup:
             " pts_kept long, pts_evicted long",
         )
         with self._phase("retention accounting"):
-            acct.write.mode("overwrite").parquet(
+            table_writer(acct).mode("overwrite").parquet(
                 os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}")
             )
         return acct
@@ -997,7 +997,7 @@ class IncrementalRollup:
                 if keys == _WINDOW_KEYS:
                     _write_by_tier(df, tmp)
                 else:
-                    df.write.mode("overwrite").parquet(tmp)
+                    table_writer(df).mode("overwrite").parquet(tmp)
             staged += 1
         if staged == 0:
             return

@@ -15,12 +15,28 @@ Layout choices for 100 TB:
   * selections (conv glob + time window, selection.c:32-104) become
     filters BEFORE decode; Catalyst pushes them into the scan
     (PushedFilters on conv_id/window_day/window_start_us)
+  * one codec for every table the engine writes, decided in
+    ``table_writer``: zstd, at its default level. Over the benchmark's
+    backfill output it stores 35.9 B/turn where SNAPPY stored 44.3: the
+    packed 1m payload column shrinks 484 -> 429 KB and its six int64
+    metadata columns 520 -> 360 KB; the ~190 KB of footers over 80 files
+    do not move. The batch write needs no sort for it: its rows already
+    arrive in (conv_id, window_start_us) order in every file.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+
+def table_writer(df: DataFrame) -> DataFrameWriter:
+    """``df.write`` with the engine's parquet codec: zstd, at its default
+    level. Every table the engine owns is written through here. The codec
+    is an option of each write, not of the session: an entry point may be
+    handed a session its caller built, and the stored bytes must not
+    depend on it, nor may the caller's own tables change codec."""
+    return df.write.option("compression", "zstd")
 
 
 def with_partition_cols(tier_df: DataFrame) -> DataFrame:
@@ -62,7 +78,7 @@ def write_tier(
             .sortWithinPartitions("tier", "window_day", "_zkey")
             .drop("_zkey")
         )
-    df.write.mode(mode).partitionBy("tier", "window_day").parquet(path)
+    table_writer(df).mode(mode).partitionBy("tier", "window_day").parquet(path)
 
 
 def read_tier(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.rollup import TIER_STATS
+from ..sinks.tier_tables import table_writer
 
 # the tier statistics stream_rollup keeps, in TIER_STATS order
 _STREAM_STATS = ("n_points", "sum_tokens", "min_ts_us", "max_ts_us")
@@ -143,7 +144,7 @@ def route_ooo_to_pending(metrics_batch: DataFrame, work_dir: str) -> int:
         return 0
     inc = IncrementalRollup(metrics_batch.sparkSession, "/nonexistent", work_dir)
     v = max(inc._read_ckpt()["version"], 1)
-    flagged.write.mode("append").parquet(
+    table_writer(flagged).mode("append").parquet(
         os.path.join(work_dir, "heal_pending", f"d{v:08d}")
     )
     return n
@@ -165,7 +166,7 @@ def stateful_metrics_sink(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
-        batch_df.write.mode("append").parquet(out_path)
+        table_writer(batch_df).mode("append").parquet(out_path)
         if work_dir is not None:
             route_ooo_to_pending(batch_df, work_dir)
         batch_df.unpersist()
@@ -272,7 +273,7 @@ def incremental_sink(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         path = os.path.join(snapshot_dir, f"snap_{batch_id + 1:08d}")
-        batch_df.write.mode("overwrite").parquet(path)
+        table_writer(batch_df).mode("overwrite").parquet(path)
         IncrementalRollup(
             batch_df.sparkSession, snapshot_dir, work_dir, pack_tiers
         ).process_pending()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from sac2mseed_spark.operators.dedup import (
     capped_shingle_sets,
     ngram_jaccard_pairs,
+    size_ratio_may_verify,
 )
 
 
@@ -106,3 +107,31 @@ def test_dup_ngram_coverage_closed_form(spark):
         4: (1, 1, 1.0),
         5: (1, 1, 1.0),
     }
+
+
+def test_size_ratio_prefilter_keeps_pairs_rounding_to_threshold(spark):
+    """The size-ratio prefilter drops no pair whose best-case jaccard,
+    min/max, verifies after ``round(jaccard, 6)`` — at shingle-set sizes
+    past 10^6 too — and still drops a lopsided pair."""
+    t = 0.666667
+    pairs = [
+        (2_000_000, 3_000_000),  # 0.6666667 rounds up to t
+        (3_000_000, 2_000_000),
+        (4_000_000, 6_000_000),
+        (20, 30),                # 0.6666667: dropped only at large sizes
+        (666_667, 1_000_000),    # exactly t
+        (1_999_997, 3_000_000),  # 0.666666 — below t after rounding
+        (1, 3_000_000),
+    ]
+    df = spark.createDataFrame(pairs, "sza long, szb long")
+    got = {
+        (r["sza"], r["szb"]): r["keep"]
+        for r in df.select(
+            "sza", "szb", size_ratio_may_verify("sza", "szb", t).alias("keep")
+        ).collect()
+    }
+    for (a, b), keep in got.items():
+        if round(min(a, b) / max(a, b), 6) >= t:
+            assert keep, (a, b)
+    assert not got[(1_999_997, 3_000_000)]
+    assert not got[(1, 3_000_000)]

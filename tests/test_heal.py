@@ -370,3 +370,50 @@ def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path):
     ]
     for d in dirs:
         assert _read_parquet(spark, d).schema == spark.read.parquet(d).schema, d
+
+
+def test_two_pack_tiers_pack_phase_job_budget(spark, ooo_snapshots, tmp_path, phase_jobs):
+    """One resolve, one decode and one pack serve every pack tier: with
+    two pack tiers the out-of-order commit's ``pack`` phase runs as many
+    jobs as with one (measured: 5), and the heal's one."""
+    src, _ = ooo_snapshots
+    staged = str(tmp_path / "staged")
+    _stage_upto(src, staged, 2)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"), pack_tiers=("1m", "1h"))
+    assert inc.process_pending() == 2
+    _stage_upto(src, staged, 3)
+
+    def commit_and_heal():
+        assert inc.process_pending() == 1
+        assert inc.heal() > 0
+
+    per = phase_jobs(commit_and_heal)
+    assert 0 < per["commit d00000003 pack"] <= 5, per
+    assert per["heal d00000003 pack"] <= 1, per
+
+
+def test_commit_and_heal_persist_only_the_columns_the_writers_read(
+    spark, ooo_snapshots, tmp_path, monkeypatch
+):
+    """The one frame each commit and each heal persists holds SLIM_COLS
+    (plus a commit's carried last turn), never the raw text, role or
+    tool columns."""
+    from sac2mseed_spark.functions.metrics import SLIM_COLS
+
+    persisted = []
+    cls = type(spark.range(1))
+    persist = cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self.columns)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    src, _ = ooo_snapshots
+    inc = IncrementalRollup(spark, src, str(tmp_path / "w"), pack_tiers=("1m",))
+    assert inc.process_pending() == len(OOO_BOUNDS)
+    assert inc.heal() > 0
+    carried = SLIM_COLS + ["last_turn_idx", "last_ts_us"]
+    # the first commit has no carried state yet; the heal carries none
+    want = [SLIM_COLS] + [carried] * (len(OOO_BOUNDS) - 1) + [SLIM_COLS]
+    assert persisted == want

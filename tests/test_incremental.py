@@ -429,7 +429,7 @@ def test_wall_covers_the_pack_phase(spark, snapshots, tmp_path, monkeypatch):
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
     _stage(src, staged, 1)
-    real_pack = pl.pack_tier
+    real_pack = pl.pack_points
     packed_at = []
 
     def slow_pack(*args, **kwargs):
@@ -438,7 +438,7 @@ def test_wall_covers_the_pack_phase(spark, snapshots, tmp_path, monkeypatch):
         packed_at.append(time.time())
         return out
 
-    monkeypatch.setattr(pl, "pack_tier", slow_pack)
+    monkeypatch.setattr(pl, "pack_points", slow_pack)
     inc = IncrementalRollup(spark, staged, str(tmp_path / "w"))
     started = time.time()
     assert inc.process_pending() == 1
