@@ -8,10 +8,12 @@ inherently sequential *within* a section, but sections are mutually
 independent, so the kernel advances ONE code index at a time across ALL
 sections simultaneously ("wavefront"): each iteration is a handful of
 flat numpy gathers/shifts over every still-active section. Timestamp and
-integer-mode sections share one bucket-code wavefront, Gorilla sections
-run a second one; sections are processed in descending code-count order so
-the active set is always a prefix. Segmented prefix sums then rebuild the
-timestamps and integer values. Total cost is O(total_points) vector
+integer-mode sections share one Rice wavefront (a unary quotient is the
+count of leading ones of the next 64 bits), Gorilla sections run a second
+one; sections are processed in descending code-count order so the active
+set is always a prefix. An empty Rice section decodes to zeros without a
+lane. Segmented prefix sums then rebuild the timestamps and integer
+values. Total cost is O(total_points) vector
 element-ops — the read-side twin of encode_chunks_raw, with no per-point
 interpreted loop (the reference's read path is *bigger* than its write
 path: libmseed/unpackdata.c:35-564, 530 LoC, and 24 of its
@@ -28,31 +30,31 @@ import numpy as np
 
 from . import (
     CANONICAL_NAN,
-    DOD_BUCKETS,
     FIRST_NAN,
     GOR_LZ_BITS,
     GOR_MLEN_BITS,
-    MODE_BYTES,
+    MODE_BITS,
+    MODE_CODES,
     MODE_DELTA,
     MODE_FLOAT,
     MODE_PREV,
+    RICE_CAP,
+    RICE_K_BITS,
+    RICE_K_MAX,
     VERSION,
+    mode_bytes,
 )
 
 _U64 = np.uint64
 _ONE = _U64(1)
-_MODE_BYTES = np.array(MODE_BYTES, dtype=np.uint8)
-# Bucket codes by table: the top _TOP bits of a code name its bucket
-# (0 = the lone '0' bit of a zero residual, b = DOD_BUCKETS[b - 1]), and a
-# payload below 64 bits is (w << prefix length) >> (64 - payload bits);
-# the last bucket's 64-bit literal is read whole.
-_TOP = max(pl for _, pl, _ in DOD_BUCKETS)
-_BUCKET_OF_TOP = np.zeros(1 << _TOP, dtype=np.int64)
-for _b, (_p, _pl, _) in reversed(list(enumerate(DOD_BUCKETS, 1))):
-    _BUCKET_OF_TOP[_p << (_TOP - _pl) : (_p + 1) << (_TOP - _pl)] = _b
-_BUCKET_BITS = np.array([1] + [pl + b for _, pl, b in DOD_BUCKETS], dtype=np.int64)
-_BUCKET_SHL = np.array([0] + [pl for _, pl, _ in DOD_BUCKETS], dtype=_U64)
-_BUCKET_SHR = np.array([63] + [(64 - b) % 64 for _, _, b in DOD_BUCKETS], dtype=_U64)
+_MODE_CODES = np.array(MODE_CODES, dtype=np.uint8)
+# a code's top RICE_CAP bits -> its unary's length: the leading ones (clz
+# of the inverted word) and the '0' after them, RICE_CAP + 1 for the escape
+_UNARY_LEN = (
+    RICE_CAP
+    + 1
+    - np.frexp((~np.arange(1 << RICE_CAP) & ((1 << RICE_CAP) - 1)).astype(np.float64))[1]
+).astype(_U64)
 # 7-bit groups of 2, 4, then 8 bytes packed: keep the low half of each
 # lane, shift the high half down by the gaps below it
 _PACK_STEPS = [
@@ -119,13 +121,14 @@ def _parse(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray):
         raise ValueError("empty batch")
     if (ends - starts < 2).any():
         raise ValueError("blob shorter than its header")
-    if not np.all(buf[starts] == VERSION):
+    if not np.all(buf[starts] >> 4 == VERSION):
         raise ValueError("unsupported version")
-    ns_arr = buf[starts + 1].astype(np.int64)
+    ns_arr = (buf[starts] & 0xF).astype(np.int64)
     if not np.all(ns_arr == ns_arr[0]):
         raise ValueError("mixed n_streams in batch")
     S = int(ns_arr[0])
-    n_chunks, cur = _read_varints(buf, starts + 2, ends)
+    n_mode = mode_bytes(S)
+    n_chunks, cur = _read_varints(buf, starts + 1, ends)
     if (n_chunks > (ends - cur).view(_U64)).any():
         raise ValueError("chunk count exceeds blob length")
     n_chunks = n_chunks.astype(np.int64)
@@ -158,14 +161,19 @@ def _parse(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray):
         cd0[idx[g]] = _unzigzag(z)
         g = np.flatnonzero(n >= 3)
         ts_org[idx[g]], ts_end[idx[g]], o[g] = _read_section(buf, o[g], e[g])
+        if (o + n_mode > e).any():
+            raise ValueError("truncated stream header")
+        packed = np.zeros(len(o), dtype=_U64)
+        for j in range(n_mode):
+            packed |= buf[o + j].astype(_U64) << _U64(8 * j)
+        o = o + n_mode
+        if (packed >> _U64(MODE_BITS * S)).any():
+            raise ValueError("unknown stream mode in the padding bits")
         for s in range(S):
-            if (o >= e).any():
-                raise ValueError("truncated stream header")
-            m = buf[o]
-            if not np.isin(m, _MODE_BYTES).all():
+            m = ((packed >> _U64(MODE_BITS * s)) & _U64((1 << MODE_BITS) - 1)).astype(np.uint8)
+            if not np.isin(m, _MODE_CODES).all():
                 raise ValueError("unknown stream mode")
             smode[s, idx] = m
-            o = o + 1
             g = np.flatnonzero((m == MODE_PREV) | (m == MODE_DELTA))
             z, o[g] = _read_varints(buf, o[g], e[g])
             sfirst[s, idx[g]] = _unzigzag(z)
@@ -186,12 +194,9 @@ def _peek64(words: np.ndarray, bitpos: np.ndarray) -> np.ndarray:
     rejects it.
     """
     w = np.minimum(bitpos >> 6, len(words) - 2)
-    off = (bitpos & 63).astype(_U64)
-    v = words[w]
-    v2 = words[w + 1]
-    sh = (_U64(64) - off) & _U64(63)
-    lo = np.where(off == 0, _U64(0), v2 >> sh)
-    return np.where(off == 0, v, (v << off) | lo)
+    off = (bitpos & 63).view(_U64)
+    # two shifts, so an aligned read takes none of the next word
+    return (words[w] << off) | ((words[w + 1] >> _ONE) >> (_U64(63) - off))
 
 
 def _check_end(cur, end):
@@ -199,24 +204,38 @@ def _check_end(cur, end):
         raise ValueError("bitstream overruns its section")
 
 
-def _decode_buckets(words, org, end, count, out_at, out):
-    """Bucket-code wavefront over _gather_lanes output: section i's j-th
-    residual -> out[out_at[i] + j]."""
-    cur = org.copy()
+def _decode_rice(words, org, end, count, out_at, out):
+    """Rice wavefront over _gather_lanes output (non-empty sections only):
+    section i's j-th zigzag residual -> out[out_at[i] + j]."""
     L = len(count)
+    if not L:
+        return
+    k = _peek64(words, org) >> _U64(64 - RICE_K_BITS)
+    if (k > RICE_K_MAX).any():
+        raise ValueError("Rice parameter out of range")
+    sh = _U64(63) - k
+    cur = org + RICE_K_BITS
     asc = count[::-1]
-    for j in range(int(count[0]) if L else 0):
-        k = L - int(np.searchsorted(asc, j, side="right"))
-        c = cur[:k]
+    for j in range(int(count[0])):
+        m = L - int(np.searchsorted(asc, j, side="right"))
+        c = cur[:m]
+        km = k[:m]
         w = _peek64(words, c)
-        sel = _BUCKET_OF_TOP[w >> _U64(64 - _TOP)]
-        z = (w << _BUCKET_SHL[sel]) >> _BUCKET_SHR[sel]
-        lit = sel == len(DOD_BUCKETS)
-        if lit.any():
-            z[lit] = _peek64(words, c[lit] + DOD_BUCKETS[-1][1])
-        out[out_at[:k] + j] = _unzigzag(z)
-        cur[:k] += _BUCKET_BITS[sel]
+        u = _UNARY_LEN[w >> _U64(64 - RICE_CAP)]
+        # the quotient, then the k bits after the unary (two shifts, so
+        # k = 0 reads none)
+        z = ((u - _ONE) << km) | (((w << u) >> _ONE) >> sh[:m])
+        step = u + km
+        esc = u > RICE_CAP
+        if esc.any():
+            e = np.flatnonzero(esc)
+            z[e] = _peek64(words, c[e] + RICE_CAP)
+            step[e] = RICE_CAP + 64
+        out[out_at[:m] + j] = z.view(np.int64)
+        cur[:m] += step.view(np.int64)
     _check_end(cur, end)
+    if (end - cur >= 8).any():
+        raise ValueError("section longer than its codes")
 
 
 def _decode_gorilla(words, org, end, count, out_at, out):
@@ -293,16 +312,20 @@ def decode_concat(data: np.ndarray, starts: np.ndarray, ends: np.ndarray):
     np.cumsum(cn[:-1], out=first[1:])
     N = int(cn.sum())
 
-    # timestamp and integer-mode residuals: one wavefront, one buffer
+    # timestamp and integer-mode residuals: one wavefront over the
+    # non-empty sections, one buffer (an empty section's residuals are 0)
     resid = np.zeros((1 + S) * N, dtype=np.int64)
     kind = smode & ~np.uint8(FIRST_NAN)
-    secs = [(np.flatnonzero(cn >= 3), ts_org, ts_end, 2, 0)]
+    if ((kind != MODE_FLOAT) & (cn == 1) & (s_end > s_org)).any():
+        raise ValueError("non-empty section without residuals")
+    secs = [(np.flatnonzero((cn >= 3) & (ts_end > ts_org)), ts_org, ts_end, 2, 0)]
     secs += [
-        (np.flatnonzero((kind[s] != MODE_FLOAT) & (cn >= 2)), s_org[s], s_end[s], 1,
-         (1 + s) * N)
+        (np.flatnonzero((kind[s] != MODE_FLOAT) & (cn >= 2) & (s_end[s] > s_org[s])),
+         s_org[s], s_end[s], 1, (1 + s) * N)
         for s in range(S)
     ]
-    _decode_buckets(words, *_gather_lanes(secs, cn, first), resid)
+    _decode_rice(words, *_gather_lanes(secs, cn, first), resid)
+    resid = _unzigzag(resid.view(_U64))
     gbits = np.zeros(S * N, dtype=_U64)
     secs = [(np.flatnonzero(kind[s] == MODE_FLOAT), s_org[s], s_end[s], 0, s * N)
             for s in range(S)]

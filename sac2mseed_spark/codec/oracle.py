@@ -1,24 +1,12 @@
 """Pure-Python reference codec — the parity oracle.
 
-Slow, obviously-correct mirror of the payload format (layout in
-codec/__init__.py), structured like the reference's encoder/decoder pair
-(packdata.c / unpackdata.c): a bit writer, per-point greedy bucket
-choice, per-stream mode choice by encoded size, prefix-sum reconstruction
-on decode, and an Xn-style final-value integrity check. The vectorized
-kernels must reproduce these bytes and values exactly (tests/test_codec.py).
-
-Chunk layout (varints little-endian base-128, bitstreams MSB-first):
-
-    varint n | varint zigzag(t0) | varint zigzag(delta0)      (n >= 2)
-    varint ts_nbytes + ts bitstream                           (n >= 3)
-    per stream: u8 mode | head | varint nbytes + bitstream
-        mode 0: no head; first value raw 64 bits, then XOR codes
-        mode 1/2: head = varint zigzag(first) (absent under FIRST_NAN);
-                  bucket codes of the residuals of points 1..n-1
-
-Blob layout:
-
-    u8 version | u8 n_streams | varint n_chunks | chunk bytes, in order
+Slow, obviously-correct mirror of the payload format (codec/__init__.py
+holds its grammar), structured like the reference's encoder/decoder pair
+(packdata.c / unpackdata.c): a bit writer, a per-section Rice parameter
+chosen by trying each one, per-stream mode choice by encoded size,
+prefix-sum reconstruction on decode, and an Xn-style final-value integrity
+check. The vectorized kernels must reproduce these bytes and values
+exactly (tests/test_codec.py).
 """
 
 from __future__ import annotations
@@ -28,16 +16,21 @@ import struct
 
 from . import (
     CANONICAL_NAN,
-    DOD_BUCKETS,
     FIRST_NAN,
     GOR_LZ_BITS,
     GOR_MLEN_BITS,
     INT_LIMIT,
-    MODE_BYTES,
+    MODE_BITS,
+    MODE_CODES,
     MODE_DELTA,
     MODE_FLOAT,
     MODE_PREV,
+    RICE_CAP,
+    RICE_K_BITS,
+    RICE_K_MAX,
     VERSION,
+    blob_head,
+    mode_bytes,
 )
 
 _MASK64 = (1 << 64) - 1
@@ -62,8 +55,7 @@ class BitWriter:
 
 
 class BitReader:
-    """Reads MSB-first fields; reading past the end raises ValueError
-    (a negative shift count)."""
+    """Reads MSB-first fields; reading past the end raises ValueError."""
 
     __slots__ = ("val", "total", "pos")
 
@@ -75,6 +67,8 @@ class BitReader:
     def read(self, length: int) -> int:
         if length == 0:
             return 0
+        if self.pos + length > self.total:
+            raise ValueError("bitstream overruns its section")
         out = (self.val >> (self.total - self.pos - length)) & ((1 << length) - 1)
         self.pos += length
         return out
@@ -120,35 +114,51 @@ def _read_varint(buf: bytes, off: int) -> tuple[int, int]:
     raise ValueError("varint longer than 10 bytes")
 
 
-def _encode_buckets(residuals: list[int]) -> bytes:
-    """Bucket codes of int64 residuals: '0' for zero, else prefix + zigzag."""
+def _rice_bits(z: int, k: int) -> int:
+    q = z >> k
+    return q + 1 + k if q < RICE_CAP else RICE_CAP + 64
+
+
+def _encode_rice(residuals: list[int]) -> bytes:
+    """Rice section of int64 residuals; empty when every one is zero."""
+    zs = [_zigzag(r) for r in residuals]
+    if not any(zs):
+        return b""
+    # from the longest code's bit length on, every quotient is 0 and each
+    # larger k costs one more bit per code: the argmin lies at or below it
+    top = min(max(z.bit_length() for z in zs), RICE_K_MAX)
+    k = min(range(top + 1), key=lambda k: sum(_rice_bits(z, k) for z in zs))
     w = BitWriter()
-    for r in residuals:
-        if r == 0:
-            w.write(0, 1)
-            continue
-        z = _zigzag(r)
-        for prefix, plen, bits in DOD_BUCKETS:
-            if z < (1 << bits):
-                w.write(prefix, plen)
-                w.write(z, bits)
-                break
+    w.write(k, RICE_K_BITS)
+    for z in zs:
+        q = z >> k
+        if q < RICE_CAP:
+            w.write((1 << (q + 1)) - 2, q + 1)
+            w.write(z, k)
+        else:
+            w.write((1 << RICE_CAP) - 1, RICE_CAP)
+            w.write(z, 64)
     return w.getvalue()
 
 
-def _decode_buckets(data: bytes, count: int) -> list[int]:
+def _decode_rice(data: bytes, count: int) -> list[int]:
+    if not data:
+        return [0] * count
+    if count == 0:
+        raise ValueError("non-empty section without residuals")
     r = BitReader(data)
+    k = r.read(RICE_K_BITS)
+    if k > RICE_K_MAX:
+        raise ValueError("Rice parameter out of range")
     out = []
     for _ in range(count):
-        if r.read(1) == 0:
-            out.append(0)
-            continue
-        for prefix, plen, bits in DOD_BUCKETS[:-1]:
-            if r.read(1) == 0:
-                out.append(_unzigzag(r.read(bits)))
-                break
-        else:
-            out.append(_unzigzag(r.read(64)))
+        q = 0
+        while q < RICE_CAP and r.read(1):
+            q += 1
+        z = r.read(64) if q == RICE_CAP else (q << k) | r.read(k)
+        out.append(_unzigzag(z))
+    if r.total - r.pos >= 8:
+        raise ValueError("section longer than its codes")
     return out
 
 
@@ -204,10 +214,11 @@ def _as_int(b: int) -> int | None:
     return i if float_to_bits(float(i)) == b else None  # rejects -0.0
 
 
-def _encode_stream(ts: list[int], bits: list[int]) -> bytes:
-    """One stream section, in the mode with the fewest bytes."""
+def _encode_stream(ts: list[int], bits: list[int]) -> tuple[int, bytes]:
+    """(mode code, head + section) of one stream, in the mode with the
+    fewest bytes."""
     body = _encode_gorilla_stream(bits)
-    best = bytes([MODE_FLOAT]) + _varint(len(body)) + body
+    best = MODE_FLOAT, _varint(len(body)) + body
     nan_first = bits[0] == CANONICAL_NAN
     ints = [None if nan_first else _as_int(bits[0])] + [_as_int(b) for b in bits[1:]]
     if any(v is None for v in ints[int(nan_first):]):
@@ -220,10 +231,10 @@ def _encode_stream(ts: list[int], bits: list[int]) -> bytes:
             preds = [prev] + ints[1:-1]
         else:
             preds = [ts[k] - ts[k - 1] for k in range(1, len(ts))]
-        body = _encode_buckets([_wrap(v - p) for v, p in zip(ints[1:], preds)])
-        sec = bytes([mode | flag]) + head + _varint(len(body)) + body
-        if len(sec) < len(best):
-            best = sec
+        body = _encode_rice([_wrap(v - p) for v, p in zip(ints[1:], preds)])
+        sec = head + _varint(len(body)) + body
+        if len(sec) < len(best[1]):
+            best = mode | flag, sec
     return best
 
 
@@ -237,14 +248,17 @@ def encode_chunk(ts: list[int], streams: list[list[int]]) -> bytes:
         out.append(_varint(_zigzag(ts[1] - ts[0])))
     if n >= 3:
         dods = [(ts[i] - ts[i - 1]) - (ts[i - 1] - ts[i - 2]) for i in range(2, n)]
-        ts_bits = _encode_buckets([_wrap(d) for d in dods])
+        ts_bits = _encode_rice([_wrap(d) for d in dods])
         out += [_varint(len(ts_bits)), ts_bits]
-    out += [_encode_stream(ts, s) for s in streams]
+    coded = [_encode_stream(ts, s) for s in streams]
+    packed = sum(code << (MODE_BITS * i) for i, (code, _) in enumerate(coded))
+    out.append(packed.to_bytes(mode_bytes(len(streams)), "little"))
+    out += [sec for _, sec in coded]
     return b"".join(out)
 
 
 def assemble_blob(chunks: list[bytes], n_streams: int) -> bytes:
-    return bytes([VERSION, n_streams]) + _varint(len(chunks)) + b"".join(chunks)
+    return bytes([blob_head(n_streams)]) + _varint(len(chunks)) + b"".join(chunks)
 
 
 def _read_section(blob: bytes, off: int) -> tuple[bytes, int]:
@@ -258,14 +272,14 @@ def _blob_header(blob: bytes) -> tuple[int, int, int]:
     """(n_streams, n_chunks, offset of the first chunk)."""
     if len(blob) < 2:
         raise ValueError("blob shorter than its header")
-    if blob[0] != VERSION:
-        raise ValueError(f"unsupported version {blob[0]}")
-    n_chunks, off = _read_varint(blob, 2)
-    return blob[1], n_chunks, off
+    if blob[0] >> 4 != VERSION:
+        raise ValueError(f"unsupported version {blob[0] >> 4}")
+    n_chunks, off = _read_varint(blob, 1)
+    return blob[0] & 0xF, n_chunks, off
 
 
 def iter_chunks(blob: bytes):
-    """Yield (n_points, t0, delta0, ts_bits, [(mode_byte, first, bits)...])
+    """Yield (n_points, t0, delta0, ts_bits, [(mode code, first, bits)...])
     per chunk; ``first`` is the integer modes' head value (None for mode 0
     and under FIRST_NAN)."""
     n_streams, n_chunks, off = _blob_header(blob)
@@ -282,13 +296,17 @@ def iter_chunks(blob: bytes):
         ts_bits = b""
         if n >= 3:
             ts_bits, off = _read_section(blob, off)
+        nb = mode_bytes(n_streams)
+        if off + nb > len(blob):
+            raise ValueError("truncated stream header")
+        packed = int.from_bytes(blob[off : off + nb], "little")
+        off += nb
+        if packed >> (MODE_BITS * n_streams):
+            raise ValueError("unknown stream mode in the padding bits")
         streams = []
-        for _s in range(n_streams):
-            if off >= len(blob):
-                raise ValueError("truncated stream header")
-            mode = blob[off]
-            off += 1
-            if mode not in MODE_BYTES:
+        for s in range(n_streams):
+            mode = (packed >> (MODE_BITS * s)) & ((1 << MODE_BITS) - 1)
+            if mode not in MODE_CODES:
                 raise ValueError(f"unknown stream mode {mode:#x}")
             first = None
             if mode in (MODE_PREV, MODE_DELTA):
@@ -306,7 +324,7 @@ def decode_chunk(n, t0, delta0, ts_bits, stream_secs):
     if n >= 2:
         ts.append(_wrap(t0 + delta0))
     delta = delta0
-    for dod in _decode_buckets(ts_bits, n - 2):
+    for dod in _decode_rice(ts_bits, max(n - 2, 0)):
         delta = _wrap(delta + dod)
         ts.append(_wrap(ts[-1] + delta))
 
@@ -319,7 +337,7 @@ def decode_chunk(n, t0, delta0, ts_bits, stream_secs):
         vs_prev = (mode & ~FIRST_NAN) == MODE_PREV
         vals = [CANONICAL_NAN if nan_first else float_to_bits(float(first))]
         prev = 0 if nan_first else first
-        for k, r in enumerate(_decode_buckets(sb, n - 1), start=1):
+        for k, r in enumerate(_decode_rice(sb, n - 1), start=1):
             pred = prev if vs_prev else ts[k] - ts[k - 1]
             prev = _wrap(pred + r)
             vals.append(float_to_bits(float(prev)))

@@ -1,21 +1,20 @@
 """Vectorized (numpy) chunk encoder — the production kernel.
 
-Encodes a whole Arrow batch of chunks in one shot: every per-point code in
-the timestamp, integer-residual and Gorilla-XOR streams is a pure function
-of at most two consecutive points, so code values, code lengths, each
-chunk's stream mode (the smallest of three per-chunk byte counts), bit
-offsets (segmented prefix sums), the varint headers and the final
-bit-scatter are all flat array operations across ALL chunks at once. No
-per-chunk Python loop — per-batch cost is O(total points) numpy work,
-which is what lets a 1000-executor cluster keep its cores busy instead of
-burning them on per-group interpreter overhead.
-
-Greedy bucket choice parallels the reference's per-word Steim2 level choice
-(/root/reference/libmseed/packdata.c:515-686); unlike Steim2 (which errors
-on >30-bit diffs, packdata.c:681-686) the final bucket is a 64-bit literal.
+Encodes a whole Arrow batch of chunks in one shot: every per-point
+residual in the timestamp, integer and Gorilla-XOR streams is a pure
+function of at most two consecutive points, and each Rice section's
+parameter is an argmin over a few k scored from its residuals' bit
+lengths and quotients, so code values, code lengths, each chunk's Rice
+parameters and stream modes (the smallest of three per-chunk byte
+counts), bit offsets (segmented prefix sums), the varint headers and the
+final bit-scatter are all flat array operations across ALL chunks at
+once. No per-chunk Python
+loop — per-batch cost is O(total points) numpy work, which is what lets a
+1000-executor cluster keep its cores busy instead of burning them on
+per-group interpreter overhead.
 
 Bytes produced are IDENTICAL to codec/oracle.py (asserted by tests): a
-field list of (value, bitlen) pairs per point — prefix slot ≤32 bits,
+field list of (value, bitlen) pairs per point — a head slot ≤32 bits,
 payload-hi ≤32, payload-lo ≤32 — scattered MSB-first into one output buffer
 whose section/chunk offsets are computed analytically.
 """
@@ -26,16 +25,22 @@ import numpy as np
 
 from . import (
     CANONICAL_NAN,
-    DOD_BUCKETS,
     FIRST_NAN,
     GOR_LZ_BITS,
     GOR_MLEN_BITS,
     INT_LIMIT,
+    MODE_BITS,
     MODE_FLOAT,
+    RICE_CAP,
+    RICE_CAP_BITS,
+    RICE_K_BITS,
+    RICE_K_MAX,
+    mode_bytes,
 )
 
 _U64 = np.uint64
 _I64 = np.int64
+_ONE = _U64(1)
 
 # byte -> number of leading zeros within that byte (8 for 0)
 _CLZ8 = np.full(256, 8, dtype=np.uint8)
@@ -46,21 +51,9 @@ _CTZ8 = np.full(256, 8, dtype=np.uint8)
 for _v in range(1, 256):
     _CTZ8[_v] = (_v & -_v).bit_length() - 1
 
-# Residual bucket index b (0 = zero residual, b = i + 1 for DOD_BUCKETS[i])
-# -> code layout. Slot 0 holds the prefix, plus the payload when both fit
-# 32 bits; a wider payload is split in halves over slots 1 and 2.
-_BUCKET_LIMITS = np.array([1] + [1 << b for _, _, b in DOD_BUCKETS[:-1]], dtype=_U64)
-_BUCKET_BITS = np.array([1] + [pl + b for _, pl, b in DOD_BUCKETS], dtype=np.int64)
-_HALF = np.array([0] + [0 if pl + b <= 32 else b // 2 for _, pl, b in DOD_BUCKETS],
-                 dtype=np.int64)
-_SLOT0_VAL = np.array(
-    [0] + [p << b if pl + b <= 32 else p for p, pl, b in DOD_BUCKETS], dtype=_U64
-)
-_SLOT0_LEN = np.array(
-    [1] + [pl + b if pl + b <= 32 else pl for _, pl, b in DOD_BUCKETS], dtype=np.int64
-)
 _VARINT_LIMITS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=_U64)
 _NO_MODE = np.int64(1 << 62)  # byte count of an integer mode a chunk may not use
+_BYTE_SHIFTS = np.array([56, 48, 40, 32, 24], dtype=_U64)  # a window's top 5 bytes
 
 
 def _clz64(x: np.ndarray) -> np.ndarray:
@@ -108,24 +101,118 @@ def put_varints(buf: np.ndarray, start: np.ndarray, u: np.ndarray, lens: np.ndar
         buf[start[m] + j] = byte.astype(np.uint8)
 
 
-def _bucket_codes(r: np.ndarray):
-    """(bucket index, zigzag) of int64 residuals; index 0 = zero residual."""
-    z = _zigzag(r)
-    return np.searchsorted(_BUCKET_LIMITS, z, side="right"), z
+def _bitlen(z: np.ndarray) -> np.ndarray:
+    """Bit length of each uint64 (0 for 0), int64."""
+    e = np.frexp(z.astype(np.float64))[1].astype(np.int64)
+    big = np.flatnonzero(z >= _U64(INT_LIMIT))
+    if len(big):  # past 2^53 the float may round up to the next power of two
+        eb = np.minimum(e[big], 64)
+        e[big] = eb - ((z[big] >> (eb - 1).view(_U64)) == 0)
+    return e
 
 
-def _bucket_slots(idx: np.ndarray, z: np.ndarray):
-    """(N,3) value/length slot arrays of bucket codes."""
-    half = _HALF[idx]
-    h = half.view(_U64)
+def _rice_choice(pz, pl, ps, n):
+    """(k, bits) of Rice sections: ``pz`` and ``pl`` are the non-zero
+    zigzag residuals and their bit lengths, in section order, ``ps`` their
+    sections, ``n`` each section's count of residuals, zeros included.
+    Bits are 0 for an empty section (every residual zero).
+
+    At parameter k a residual of bit length L escapes (RICE_CAP + 64 bits)
+    when L > k + RICE_CAP_BITS, and otherwise takes 1 + k bits plus its
+    quotient z >> k, which is non-zero only for k in L - RICE_CAP_BITS ..
+    L - 1. So a section's bits are flat while every non-zero residual
+    escapes, and grow with k between those ranges (by one per zero or
+    shorter residual); k = max L costs no less than max L - 1, and below
+    min L - 2 each lower k costs a bit more per non-zero residual (its
+    quotient is 4 or more) and saves one per zero residual. The argmin is
+    therefore in [min L - 2, max L - 1] over the non-zero residuals, or,
+    when the section holds zeros, in [min L - RICE_CAP_BITS, max L - 1]
+    or 0, where every non-zero residual escapes. Each section's bits are
+    computed on that window (cut at RICE_K_MAX) alone, from the quotients
+    and escape ranges of its non-zero residuals, and compared with k = 0
+    where every non-zero residual escapes there."""
+    k = np.zeros(len(n), dtype=np.int64)
+    bits = np.zeros(len(n), dtype=np.int64)
+    if not len(ps):
+        return k, bits
+    c = RICE_CAP_BITS
+    new = np.ones(len(ps), dtype=bool)
+    np.not_equal(ps[1:], ps[:-1], out=new[1:])
+    first = np.flatnonzero(new)
+    sec = ps[first]  # the chunks with a non-zero residual, one section each
+    rs = np.cumsum(new) - 1  # each point's section
+    ns = n[sec]
+    zeros = ns - np.diff(np.append(first, len(ps)))
+    top = np.minimum(np.maximum.reduceat(pl, first) - 1, RICE_K_MAX)
+    least = np.minimum.reduceat(pl, first)
+    lo = np.minimum(np.maximum(least - np.where(zeros > 0, c, 2), 0), top)
+    width = top - lo + 1
+    base = np.zeros(len(sec) + 1, dtype=np.int64)
+    np.cumsum(width, out=base[1:])
+    T = int(base[-1])
+    kw = np.arange(T) - np.repeat(base[:-1] - lo, width)  # the k of each window slot
+
+    # quotients: z >> k at k = L - j, j = 1..RICE_CAP_BITS, inside the
+    # window (slot T collects the others)
+    lo_p, top_p = lo[rs], top[rs]
+    kq = pl[:, None] - np.arange(1, c + 1)
+    ok = (kq >= lo_p[:, None]) & (kq <= top_p[:, None])
+    quot = np.bincount(
+        np.where(ok, (base[rs] - lo_p)[:, None] + kq, T).ravel(),
+        weights=(pz[:, None] >> np.maximum(kq, 0).view(_U64)).astype(np.float64).ravel(),
+        minlength=T + 1,
+    )
+    # escapes: from the window's first k up to L - RICE_CAP_BITS - 1
+    e = np.minimum(pl - c, top_p + 1) - lo_p
+    m = e > 0
+    esc = np.cumsum(
+        np.bincount(base[rs[m]], minlength=T + 1)
+        - np.bincount(base[rs[m]] + e[m], minlength=T + 1)
+    )[:T]
+
+    cost = (
+        quot[:T].astype(np.int64)
+        + np.repeat(ns, width) * (1 + kw)
+        + esc * (RICE_CAP + 63 - kw)
+    )
+    # the least (bits, k) per section: ties -> lower k
+    key = np.minimum.reduceat(cost << 6 | kw, base[:-1])
+    best, ks = key >> 6, key & 63
+    f0 = zeros + (RICE_CAP + 64) * (ns - zeros)
+    zero = (least > c) & (lo > 0) & (f0 <= best)
+    k[sec] = np.where(zero, 0, ks)
+    bits[sec] = RICE_K_BITS + np.where(zero, f0, best)
+    return k, bits
+
+
+def _rice_slots(z: np.ndarray, k: np.ndarray, keep: np.ndarray, head: np.ndarray):
+    """(N,3) value/length slot arrays of the Rice codes of ``z`` at per-point
+    parameter ``k``, zero-length where not ``keep``; a ``head`` point (its
+    section's first code) also carries the section's k. Slot 0 holds [k +]
+    the unary, and the k low bits too when all of it fits 32 bits;
+    otherwise slots 1 and 2 hold the high and low halves of the k low
+    bits, or of the escape's 64-bit literal."""
+    if not keep.any():
+        return np.zeros((len(z), 3), dtype=_U64), np.zeros((len(z), 3), dtype=np.int64)
+    ku = k.view(_U64)
+    q = np.minimum(z >> ku, _U64(RICE_CAP))
+    esc = q == RICE_CAP
+    low = np.where(esc, z, z & ((_U64(1) << ku) - _U64(1)))
+    # [k +] q ones and a zero, or RICE_CAP ones for the escape
+    unary = (np.where(head, ku, _U64(0)) << q + _ONE | (_U64(2) << q) - _U64(2)) >> esc
+    ulen = np.where(esc, RICE_CAP, q.view(np.int64) + 1) + head * RICE_K_BITS
+    llen = np.where(esc, 64, k)
+    one = ulen + llen <= 32
+    lo_len = np.where(one, 0, np.minimum(llen, 32))
     vals = np.empty((len(z), 3), dtype=_U64)
     lens = np.empty((len(z), 3), dtype=np.int64)
-    vals[:, 0] = _SLOT0_VAL[idx] | np.where(half == 0, z, _U64(0))
-    lens[:, 0] = _SLOT0_LEN[idx]
-    vals[:, 1] = z >> h  # ignored where half == 0 (zero length)
-    lens[:, 1] = half
-    vals[:, 2] = z & ((_U64(1) << h) - _U64(1))
-    lens[:, 2] = half
+    vals[:, 0] = np.where(one, unary << ku | low, unary)
+    lens[:, 0] = np.where(one, ulen + llen, ulen)
+    vals[:, 1] = low >> lo_len.view(_U64)
+    lens[:, 1] = np.where(one, 0, llen - lo_len)
+    vals[:, 2] = low & ((_U64(1) << lo_len.view(_U64)) - _U64(1))
+    lens[:, 2] = lo_len
+    lens *= keep[:, None]
     return vals, lens
 
 
@@ -183,45 +270,22 @@ def _scatter(buf: np.ndarray, vals: np.ndarray, lens: np.ndarray, bitpos: np.nda
     """OR variable-width MSB-first fields into buf at absolute bit offsets.
 
     Each field is <= 32 bits, so with the sub-byte shift (<= 7) it spans at
-    most ceil(39/8) = 5 bytes of a 64-bit big-endian window; disjoint bit
-    ranges mean add == or. The accumulation uses np.bincount (fast C
-    histogram) instead of np.add.at (unbuffered ufunc, ~10x slower); byte
-    sums cannot exceed 255 because contributions to one byte occupy
-    disjoint bits.
+    most 5 bytes from its first one. Fields occupy disjoint bits, so the
+    bytes of every field are summed per byte position in one np.bincount
+    (add == or; no byte sum exceeds 255) and added to the buffer.
     """
     keep = (lens > 0).reshape(-1)
     v = vals.reshape(-1)[keep]
-    ln = lens.reshape(-1)[keep].view(_U64)  # reinterpret: values in [1,64]
+    ln = lens.reshape(-1)[keep].view(_U64)  # reinterpret: values in [1,32]
     p = bitpos[keep]
     B = p >> 3
-    r = (p & 7).view(_U64)
-    w = v << (_U64(64) - r - ln)
-
-    # B is non-decreasing (fields are emitted in byte order), so group by
-    # B mod 8: within a group, two windows either coincide exactly (same
-    # byte, disjoint bits -> add == or) or are fully disjoint 8-byte
-    # ranges. Coinciding runs collapse with one reduceat, then a single
-    # aligned uint64 fancy-add writes each window — no unbuffered ufunc.
-    rem = (B & 7).astype(np.int64, copy=False)
-    q = B >> 3
-    for rr in range(8):
-        m = rem == rr
-        if not m.any():
-            continue
-        qq = q[m]
-        ww = w[m]
-        first = np.empty(len(qq), dtype=bool)
-        first[0] = True
-        np.not_equal(qq[1:], qq[:-1], out=first[1:])
-        starts = np.flatnonzero(first)
-        comb = np.add.reduceat(ww, starts)
-        uq = qq[starts]
-        # native-endian add of the byteswapped window: disjoint bits mean
-        # no carries, so byte-wise add commutes with the byte swap
-        view = buf[rr : rr + ((len(buf) - rr) >> 3 << 3)].view(np.uint64)
-        if np.little_endian:
-            comb = comb.byteswap()
-        view[uq] += comb
+    w = v << (_U64(64) - (p & 7).view(_U64) - ln)  # MSB-aligned at byte B
+    lo = int(B.min(initial=0))
+    acc = np.bincount(
+        (B[:, None] - lo + np.arange(5)).ravel(),
+        weights=((w[:, None] >> _BYTE_SHIFTS) & _U64(0xFF)).astype(np.float64).ravel(),
+    )
+    buf[lo : lo + len(acc)] += acc.astype(np.uint8)
 
 
 def _sized(bits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -230,13 +294,11 @@ def _sized(bits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return nb, varint_len(nb.view(_U64)) + nb
 
 
-def _encode_stream(bits, pos, starts, counts, d):
-    """One value stream's per-chunk mode and its sections.
-
-    Returns (mode byte, head value, head varint length, section nbytes,
-    section slot vals, section slot lens) per chunk / per point."""
+def _int_candidates(bits, first, starts, counts, d):
+    """One value stream's integer modes: (the values as int64, the first
+    values that are CANONICAL_NAN, then per mode its zigzag residuals,
+    their bit lengths and the chunks where it may win)."""
     f = bits.view(np.float64)
-    first = pos == 0
     nan_first = first & (bits == _U64(CANONICAL_NAN))
     fin = np.abs(f) < INT_LIMIT  # False for NaN and +-inf
     iv = np.where(fin, f, 0.0).astype(_I64)
@@ -246,18 +308,40 @@ def _encode_stream(bits, pos, starts, counts, d):
     prev = np.empty_like(iv)
     prev[1:] = iv[:-1]
     prev[:1] = 0
-    codes = [_bucket_codes(iv - prev), _bucket_codes(iv - d)]
+    zs = [_zigzag(iv - prev), _zigzag(iv - d)]
+    Ls = [_bitlen(z) for z in zs]
+    # Bounds on a section's bits, from its residuals' bit lengths L: at
+    # best each code costs L + 1, and at k = max L - 1 none costs more than
+    # max L + 1 (past RICE_K_MAX, an escape at most). A mode whose lower
+    # bound exceeds the other's upper bound cannot win: it is not sized.
+    n = counts - 1
+    lbs, ubs = [], []
+    for L in Ls:
+        top = np.maximum.reduceat(np.where(first, 0, L), starts)
+        per = np.where(top <= RICE_K_MAX + 1, top + 1, RICE_CAP + 64)
+        lb = np.add.reduceat(L, starts) - L[starts]
+        lbs.append(np.where(top > 0, _sized(RICE_K_BITS + n + lb)[1], 1))
+        ubs.append(np.where(top > 0, _sized(RICE_K_BITS + n * per)[1], 1))
+    wants = [elig & (lbs[0] <= ubs[1]), elig & (lbs[1] <= ubs[0])]
+    return iv, nan_first, zs, Ls, wants
 
+
+def _encode_stream(bits, pos, starts, counts, cand, ks, rbits):
+    """One value stream's per-chunk mode and its sections, from its
+    ``_int_candidates`` and the two modes' Rice parameters and bits.
+
+    Returns (mode code, head value, head varint length, section nbytes,
+    section slot vals, section slot lens) per chunk / per point."""
+    first = pos == 0
+    iv, nan_first, zs, _, wants = cand
     cnan = nan_first[starts]
     head_val = _zigzag(iv[starts])
     head_len = np.where(cnan, 0, varint_len(head_val))
     nbs, sizes = [], []
-    for idx, _ in codes:
-        pbits = _BUCKET_BITS[idx]
-        pbits[first] = 0
-        nb, sec = _sized(np.add.reduceat(pbits, starts))
+    for b, w in zip(rbits, wants):
+        nb, sec = _sized(b)
         nbs.append(nb)
-        sizes.append(np.where(elig, 1 + head_len + sec, _NO_MODE))
+        sizes.append(np.where(w, head_len + sec, _NO_MODE))
 
     # Gorilla costs >= 64 bits, then 1 bit per repeat and 13 per change:
     # where an integer mode is already smaller, skip the exact XOR codes
@@ -265,24 +349,26 @@ def _encode_stream(bits, pos, starts, counts, d):
     prev_bits[1:] = bits[:-1]
     prev_bits[:1] = 0
     lb = np.where(first, 64, np.where(bits == prev_bits, 1, 2 + GOR_LZ_BITS + GOR_MLEN_BITS))
-    need = np.minimum(*sizes) >= 1 + _sized(np.add.reduceat(lb, starts))[1]
+    need = np.minimum(*sizes) >= _sized(np.add.reduceat(lb, starts))[1]
     need_pt = np.repeat(need, counts)
     gv, gl = _gorilla_slots(bits[need_pt], pos[need_pt])
     nb0 = np.zeros(len(starts), dtype=np.int64)
     if need.any():
         sub_off = np.concatenate([[0], np.cumsum(counts[need])])
         nb0[need] = _sized(_section_bits(gl, sub_off))[0]
-    sizes.insert(0, np.where(need, 1 + varint_len(nb0.view(_U64)) + nb0, _NO_MODE))
+    sizes.insert(0, np.where(need, varint_len(nb0.view(_U64)) + nb0, _NO_MODE))
     nbs.insert(0, nb0)
     mode = np.argmin(np.stack(sizes), axis=0)  # ties -> lower mode
     nbytes = np.choose(mode, nbs)
 
     pm = np.repeat(mode, counts)
     use1 = pm == 1
-    vals, lens = _bucket_slots(
-        np.where(use1, codes[0][0], codes[1][0]), np.where(use1, codes[0][1], codes[1][1])
+    vals, lens = _rice_slots(
+        np.where(use1, zs[0], zs[1]),
+        np.repeat(np.where(mode == 1, ks[0], ks[1]), counts),
+        ~first & np.repeat(nbytes > 0, counts),
+        pos == 1,
     )
-    lens[first] = 0
     flt = pm == MODE_FLOAT
     if flt.any():
         sel = flt[need_pt]
@@ -290,9 +376,9 @@ def _encode_stream(bits, pos, starts, counts, d):
         lens[flt] = gl[sel]
 
     is_int = mode != MODE_FLOAT
-    mode_byte = mode | np.where(is_int & cnan, FIRST_NAN, 0)
+    mode_code = mode | np.where(is_int & cnan, FIRST_NAN, 0)
     head_len = np.where(is_int, head_len, 0)
-    return mode_byte, head_val, head_len, nbytes, vals, lens
+    return mode_code, head_val, head_len, nbytes, vals, lens
 
 
 def encode_chunks_raw(
@@ -317,6 +403,8 @@ def encode_chunks_raw(
         raise ValueError("empty chunk")
     starts = offsets[:-1]
     pos = np.arange(N) - np.repeat(starts, counts)
+    M = len(counts)
+    seg = np.repeat(np.arange(M), counts)
 
     # deltas and delta-of-deltas (valid only where pos allows); int64
     # arithmetic wraps, like the oracle's
@@ -324,9 +412,29 @@ def encode_chunks_raw(
     d[1:] = ts_flat[1:] - ts_flat[:-1]
     dod = np.zeros(N, dtype=_I64)
     dod[2:] = d[2:] - d[1:-1]
-    ts_vals, ts_lens = _bucket_slots(*_bucket_codes(dod))
-    ts_lens[pos < 2] = 0
-    ts_nbytes = (_section_bits(ts_lens, offsets) + 7) >> 3  # 0 where n < 3
+    zd = _zigzag(dod)
+    streams = [np.ascontiguousarray(s, dtype=_U64) for s in streams_flat]
+    first = pos == 0
+    cands = [_int_candidates(b, first, starts, counts, d) for b in streams]
+
+    # every Rice section of the batch in one choice, from its non-zero
+    # residuals: the timestamps', then each stream's integer modes in the
+    # chunks where they may win
+    fams = [(zd, _bitlen(zd), pos >= 2)]
+    for _, _, zs, Ls, wants in cands:
+        fams += [(z, L, ~first & w[seg]) for z, L, w in zip(zs, Ls, wants)]
+    parts = []
+    for i, (z, L, coded) in enumerate(fams):
+        at = np.flatnonzero(coded & (L > 0))
+        parts.append((z[at], L[at], seg[at] + i * M))
+    n = np.concatenate([np.maximum(counts - 2, 0)] + [counts - 1] * (len(fams) - 1))
+    ks, rbits = _rice_choice(*(np.concatenate(c) for c in zip(*parts)), n)
+    ks, rbits = ks.reshape(-1, M), rbits.reshape(-1, M)
+
+    ts_vals, ts_lens = _rice_slots(
+        zd, np.repeat(ks[0], counts), (pos >= 2) & np.repeat(rbits[0] > 0, counts), pos == 2
+    )
+    ts_nbytes = (rbits[0] + 7) >> 3  # 0 where n < 3 or every dod is 0
 
     # ---- chunk header: n | zigzag(t0) | zigzag(delta0) | ts section ----
     t0 = ts_flat[starts]
@@ -336,19 +444,25 @@ def encode_chunks_raw(
     len_t0 = varint_len(zt0)
     len_d0 = np.where(counts >= 2, varint_len(zd0), 0)
     len_tsn = np.where(counts >= 3, varint_len(ts_nbytes.view(_U64)), 0)
-    chunk_sizes = len_n + len_t0 + len_d0 + len_tsn + ts_nbytes
+    n_mode = mode_bytes(len(streams_flat))
+    chunk_sizes = len_n + len_t0 + len_d0 + len_tsn + ts_nbytes + n_mode
 
-    enc = [_encode_stream(np.ascontiguousarray(s, dtype=_U64), pos, starts, counts, d)
-           for s in streams_flat]
-    for _, _, head_len, nbytes, _, _ in enc:
-        chunk_sizes = chunk_sizes + 1 + head_len + varint_len(nbytes.view(_U64)) + nbytes
-    chunk_off = np.zeros(len(counts) + 1, dtype=np.int64)
+    enc = [
+        _encode_stream(b, pos, starts, counts, cand, ks[1 + 2 * i : 3 + 2 * i],
+                       rbits[1 + 2 * i : 3 + 2 * i])
+        for i, (b, cand) in enumerate(zip(streams, cands))
+    ]
+    packed = np.zeros(M, dtype=_U64)
+    for i, (mode_code, _, head_len, nbytes, _, _) in enumerate(enc):
+        chunk_sizes = chunk_sizes + head_len + varint_len(nbytes.view(_U64)) + nbytes
+        packed |= mode_code.astype(_U64) << _U64(MODE_BITS * i)
+    chunk_off = np.zeros(M + 1, dtype=np.int64)
     np.cumsum(chunk_sizes, out=chunk_off[1:])
     buf = np.zeros(int(chunk_off[-1]) + 16, dtype=np.uint8)  # slack for 64-bit windows
 
     def scatter_section(vals, lens, sec_byte_start):
         flat_lens = lens.reshape(-1)
-        cum = np.concatenate([[0], np.cumsum(flat_lens)])[:-1]  # exclusive
+        cum = np.cumsum(flat_lens) - flat_lens  # exclusive
         # one repeat: per-chunk (section bit origin - chunk's first bit)
         base = sec_byte_start * 8 - cum[starts * 3]
         _scatter(buf, vals.reshape(-1), flat_lens, np.repeat(base, counts * 3) + cum)
@@ -364,9 +478,10 @@ def encode_chunks_raw(
     cur += len_tsn
     scatter_section(ts_vals, ts_lens, cur)
     cur += ts_nbytes
-    for mode_byte, head_val, head_len, nbytes, vals, lens in enc:
-        buf[cur] = mode_byte.astype(np.uint8)
-        cur += 1
+    for j in range(n_mode):
+        buf[cur + j] = (packed >> _U64(8 * j)).astype(np.uint8)
+    cur += n_mode
+    for _, head_val, head_len, nbytes, vals, lens in enc:
         put_varints(buf, cur, head_val, head_len)
         cur += head_len
         nb_len = varint_len(nbytes.view(_U64))
@@ -380,10 +495,9 @@ def encode_chunks_raw(
         "first_ts": t0,
         "last_ts": ts_flat[offsets[1:] - 1],
     }
-    if streams_flat:
-        s0 = np.ascontiguousarray(streams_flat[0], dtype=_U64)
-        stats["x0"] = s0[starts]
-        stats["xn"] = s0[offsets[1:] - 1]
+    if streams:
+        stats["x0"] = streams[0][starts]
+        stats["xn"] = streams[0][offsets[1:] - 1]
     return buf, chunk_off, stats
 
 
@@ -392,9 +506,9 @@ def encode_chunks_vec(
 ):
     """Compatibility wrapper: per-chunk python ``bytes`` + stats."""
     buf, chunk_off, stats = encode_chunks_raw(ts_flat, offsets, streams_flat)
-    M = len(chunk_off) - 1
-    out_bytes = [bytes(buf[chunk_off[i] : chunk_off[i + 1]]) for i in range(M)]
-    return out_bytes, stats
+    raw = buf.tobytes()
+    edges = chunk_off.tolist()
+    return [raw[a:b] for a, b in zip(edges, edges[1:])], stats
 
 
 def floats_to_bits(a: np.ndarray) -> np.ndarray:

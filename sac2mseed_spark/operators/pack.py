@@ -40,11 +40,13 @@ similarly cut header share. It is deliberately NOT adopted:
   * serving-path selections prune on (conv, window) parquet ranges; a
     segment blob would widen every point lookup to its segment.
 
-The framing, not the unit, was the cost: format v2 (codec/__init__.py)
-codes the headers as varints and the two integer streams as residuals
-(latency against the timestamp delta, tokens against the previous
-value), which brings the benchmark fixture to ~10.3 B/point at 1m and
-~5.9 at 1h with the unit unchanged.
+The framing, not the unit, was the cost: the payload format
+(codec/__init__.py) codes the headers as varints and the two integer
+streams as residuals (latency against the timestamp delta, tokens against
+the previous value), and since v3 codes every integer section with one
+Rice parameter taken from its data, which brings the benchmark fixture to
+~8.8 B/point at 1m and ~4.1 at 1h with the unit unchanged (v2: 10.3 and
+5.9).
 """
 
 from __future__ import annotations
@@ -66,7 +68,7 @@ from pyspark.sql.types import (
 )
 
 from .. import TIERS
-from ..codec import CHUNK_POINTS, VERSION
+from ..codec import CHUNK_POINTS, blob_head
 from ..codec.vectorized import encode_chunks_raw, put_varints, varint_len
 from .rollup import window_start_col
 
@@ -166,19 +168,18 @@ def _run_block_arrow(tbl):
     win_row_end = np.concatenate([win_starts[1:], [n]])
     n_points = (win_row_end - win_starts).astype(np.int64)
 
-    # blob layout: per window version | n_streams | varint n_chunks, then
-    # its contiguous chunk span
+    # blob layout: per window the version + n_streams byte | varint
+    # n_chunks, then its contiguous chunk span
     span_start = chunk_off[win_chunk_start]
     span = chunk_off[win_chunk_end] - span_start
     len_nc = varint_len(n_chunks.astype(np.uint64))
     out_off = np.zeros(W + 1, dtype=np.int64)
-    np.cumsum(2 + len_nc + span, out=out_off[1:])
+    np.cumsum(1 + len_nc + span, out=out_off[1:])
     out = np.empty(int(out_off[-1]), dtype=np.uint8)
     h = out_off[:-1]
-    out[h] = VERSION
-    out[h + 1] = len(STREAMS)
-    put_varints(out, h + 2, n_chunks, len_nc)
-    out[_ranges(h + 2 + len_nc, span)] = buf[_ranges(span_start, span)]
+    out[h] = blob_head(len(STREAMS))
+    put_varints(out, h + 1, n_chunks, len_nc)
+    out[_ranges(h + 1 + len_nc, span)] = buf[_ranges(span_start, span)]
 
     mv = memoryview(out)
     crcs = np.fromiter(

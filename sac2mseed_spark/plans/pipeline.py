@@ -644,6 +644,9 @@ class IncrementalRollup:
             F.col("_l.ts_us").alias("last_ts_us"),
             "_ooo",
         )
+        # one file per entry for the state and the heal flags: they hold a
+        # few bytes per conversation, so more files would be mostly footer,
+        # and the next resolve reads every one
         conv_obs = Observation()
         with self._phase(f"{tag} state"):
             table_writer(
@@ -651,14 +654,16 @@ class IncrementalRollup:
                     conv_obs,
                     F.count(F.lit(1)).alias("n"),
                     F.count_if("_ooo").alias("ooo"),
-                ).drop("_ooo")
+                )
+                .drop("_ooo")
+                .coalesce(1)
             ).mode("overwrite").parquet(
                 self._delta_path(self._base("state"), version, heal)
             )
         n_convs, ooo_convs = _observed(conv_obs, "n", "ooo")
         if ooo_convs:
             with self._phase(f"{tag} heal pending"):
-                table_writer(conv.filter("_ooo").select("conv_id")).mode(
+                table_writer(conv.filter("_ooo").select("conv_id").coalesce(1)).mode(
                     "overwrite"
                 ).parquet(self._delta_path(self._base("heal_pending"), version))
 

@@ -1,7 +1,8 @@
 """Codec round-trip + oracle/vectorized bit-exactness (FIXTURES.md §2).
 
 Mirrors the reference's pack/unpack golden tests: deterministic series
-engineered to hit every residual bucket, Gorilla XOR case and stream mode
+engineered to hit Rice escapes and empty sections, every Gorilla XOR case
+and every stream mode
 (/root/reference/libmseed/test/lmtestpack.c:32-83 strategy), encode→decode
 bit-exact, Xn invariant enforced (unpackdata.c:556-561 analogue).
 """
@@ -12,7 +13,14 @@ import struct
 import numpy as np
 import pytest
 
-from sac2mseed_spark.codec import oracle
+from sac2mseed_spark.codec import (
+    FIRST_NAN,
+    MODE_DELTA,
+    MODE_PREV,
+    RICE_CAP,
+    blob_head,
+    oracle,
+)
 from sac2mseed_spark.codec.vectorized import (
     encode_chunks_vec,
     floats_to_bits,
@@ -234,7 +242,7 @@ def test_chunked_equals_single_when_split():
         assert ts2 == ts and streams[0] == vb
 
 
-# ---- format v2: stream modes, fallbacks, degenerate chunks, bad input ----
+# ---- stream modes, fallbacks, degenerate chunks, bad input ----
 
 NAN = float("nan")
 CANON_NAN = oracle.float_to_bits(NAN)
@@ -275,12 +283,12 @@ def _modes(blob):
 _TS = ts_jitter(40)[:5] + [ts_jitter(40)[4] + 7_000_000 * k for k in range(1, 30)]
 
 MODE_CASES = {
-    # name: (ts, values, expected mode byte)
+    # name: (ts, values, expected mode code)
     "float/sinusoid": (_TS, val_sinusoid(len(_TS)), 0x00),
     "int/tokens": (_TS, [float(7 + 3 * (i % 5)) for i in range(len(_TS))], 0x01),
-    "int/tokens_null_first": (_TS, [NAN] + [5.0] * (len(_TS) - 1), 0x81),
+    "int/tokens_null_first": (_TS, [NAN] + [5.0] * (len(_TS) - 1), MODE_PREV | FIRST_NAN),
     "int/latency": (_TS, _latency(_TS, first=123_456.0), 0x02),
-    "int/latency_null_first": (_TS, _latency(_TS), 0x82),
+    "int/latency_null_first": (_TS, _latency(_TS), MODE_DELTA | FIRST_NAN),
     "int/constant": (_TS, [-3.0] * len(_TS), 0x01),
 }
 
@@ -336,11 +344,16 @@ def test_short_chunks(n):
 
 
 def test_ts_gap_takes_64_bit_literal():
-    gap = 2**40  # zigzag(dod) > 2^32: the 64-bit DOD literal
-    ts = [1_700_000_000_000_000, 1_700_000_000_000_001, 1_700_000_000_000_002 + gap,
-          1_700_000_000_000_003 + gap]
-    streams = [_bits(_latency(ts)), _bits([1.0, 2.0, 3.0, 4.0])]
+    """One 2^40 us gap among jittered 1 s steps: the Rice parameter fits
+    the steps, so the gap's two delta-of-deltas escape to 64-bit literals."""
+    gap = 2**40
+    ts = [1_700_000_000_000_000 + 1_000_000 * i + (37 * i) % 11 + gap * (i >= 6)
+          for i in range(12)]
+    streams = [_bits(_latency(ts)), _bits([float(i) for i in range(12)])]
     blob = _blob_both(ts, streams)
+    [(_, _, _, ts_bits, _)] = oracle.iter_chunks(blob)
+    k = ts_bits[0] >> 2
+    assert (2 * gap) >> k >= RICE_CAP
     assert _decode_both(blob) == (ts, streams)
 
 
@@ -385,17 +398,41 @@ def _bad_payloads():
     good = oracle.assemble_blob(
         [oracle.encode_chunk(ts, [_bits(_latency(ts))])], 1
     )
-    head = bytes([oracle.VERSION, 0]) + _varint(1) + _varint(3) + _varint(2 * ts[0])
+    # a chunk of 3 points and no value stream, up to its timestamp section
+    head = bytes([blob_head(0)]) + _varint(1) + _varint(3) + _varint(2 * ts[0])
+    ts_sec = head + _varint(2_000_000)
+    # a chunk of 1 point and one value stream, up to its mode byte
+    one = bytes([blob_head(1)]) + _varint(1) + _varint(1) + _varint(2 * ts[0])
     return {
         # t0 is an 8-byte varint: cut it after 3 of its bytes
-        "truncated_varint": (good[:7], "truncated varint"),
+        "truncated_varint": (good[:6], "truncated varint"),
         "section_past_end": (
             head + _varint(1_000_000) + _varint(100) + b"\x00" * 3,
             "section length past blob end",
         ),
         "trailing_bytes": (good + b"\x00", "trailing bytes"),
-        "version_1": (bytes([1]) + good[1:], "unsupported version"),
-        "version_3": (bytes([3]) + good[1:], "unsupported version"),
+        "version_1": (bytes([1 << 4 | 1]) + good[1:], "unsupported version"),
+        "version_2": (bytes([2, 1]) + good[1:], "unsupported version"),
+        "version_4": (bytes([4 << 4 | 1]) + good[1:], "unsupported version"),
+        # k = 63 > RICE_K_MAX
+        "rice_k_out_of_range": (ts_sec + _varint(1) + b"\xfc", "Rice parameter out of range"),
+        # k = 0, then a unary run of ones to the end of the section
+        "unary_past_end": (ts_sec + _varint(1) + b"\x03", "bitstream overruns its section"),
+        # k = 0, RICE_CAP ones, then 2 of the escape literal's 64 bits
+        "escape_past_end": (
+            ts_sec + _varint(3) + b"\x03\xff\xfc", "bitstream overruns its section"
+        ),
+        # k = 0, one zero code, then a whole byte more
+        "section_longer_than_codes": (
+            ts_sec + _varint(2) + b"\x00\x00", "section longer than its codes"
+        ),
+        # mode 1 on a 1-point chunk: head 0, then a section with no residual
+        "section_without_residuals": (
+            one + b"\x01" + _varint(0) + _varint(1) + b"\x00",
+            "non-empty section without residuals",
+        ),
+        "unknown_mode_code": (one + b"\x03" + _varint(0), "unknown stream mode"),
+        "mode_padding_bits": (one + b"\x09" + _varint(0), "unknown stream mode"),
     }
 
 

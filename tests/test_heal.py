@@ -351,6 +351,28 @@ def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jo
     assert sum(per.values()) <= OOO_COMMIT_HEAL_JOBS, per
 
 
+def _parquet_files_per_entry(work, family):
+    base = os.path.join(work, family)
+    return {
+        f"{family}/{d}": sum(n.endswith(".parquet") for n in os.listdir(os.path.join(base, d)))
+        for d in os.listdir(base)
+    }
+
+
+def test_state_and_heal_flag_entries_are_one_file(spark, ooo_snapshots, tmp_path):
+    """Each ``state`` and ``heal_pending`` entry, of an in-order commit, an
+    out-of-order commit and a heal, is one parquet file."""
+    src, _ = ooo_snapshots
+    work = str(tmp_path / "w")
+    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+    assert inc.process_pending() == len(OOO_BOUNDS)
+    pending = _parquet_files_per_entry(work, "heal_pending")  # heal() deletes them
+    assert inc.heal() > 0
+    files = {**pending, **_parquet_files_per_entry(work, "state")}
+    assert "heal_pending/d00000003" in files and "state/d00000004h" in files, files
+    assert set(files.values()) == {1}, files
+
+
 def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path):
     """The schema every engine read takes from one footer equals the one
     Spark infers, for each kind of directory the engine reads: a snapshot,

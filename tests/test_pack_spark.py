@@ -63,17 +63,19 @@ def test_unpack_roundtrip_values(spark, packed_1m):
     assert bad.count() == 0
 
 
-# Payload bytes per point of the t_small seed-42 fixture, as measured for
-# format v2 (v1 gave 23.92 at 1m and 11.30 at 1h). A format change that
-# grows them more than 5 % fails here, not only in the benchmark.
-BYTES_PER_POINT_V2 = {"1m": 10.0442, "1h": 5.7503}
+# Payload bytes of the t_small seed-42 fixture's 2,263 points, as measured
+# for format v3 (8.617 B/point at 1m, 4.012 at 1h; v2 gave 22,730 and
+# 13,013 bytes, v1 23.92 and 11.30 B/point). A format change that grows
+# them more than 1 % fails here, not only in the benchmark.
+PAYLOAD_BYTES_V3 = {"1m": 19_500, "1h": 9_080}
 
 
 def test_packed_size_budget(spark, packed_1m):
     m, packed = packed_1m
     for tier, df in (("1m", packed), ("1h", pack_tier(m, "1h"))):
         b, p = df.agg(F.sum(F.length("payload")), F.sum("n_points")).collect()[0]
-        assert b / p <= BYTES_PER_POINT_V2[tier] * 1.05, (tier, b / p)
+        assert p == 2_263
+        assert b <= PAYLOAD_BYTES_V3[tier] * 1.01, (tier, b)
 
 
 def test_parallelism_invariance(spark):
