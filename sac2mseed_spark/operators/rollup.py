@@ -9,7 +9,9 @@ tiers re-aggregate lower tiers (the msrepack pattern, SURVEY.md §3.3) —
 One aggregate: a turn is a one-point tier row (``turn_rows``), and every
 tier row — from turns, from a lower tier re-windowed, or merged with the
 previous rows of an incremental commit — comes out of ``merge_tiers``,
-which merges each statistic declared in ``TIER_STATS``.
+which merges each statistic declared in ``TIER_STATS``. A commit hands it
+every entry's previous rows ranked, and the same aggregate picks each
+window's latest one (``merge_tiers`` doc).
 
 Bit-exactness contract: every statistic is kept in the INTEGER domain
 (counts, sums of microseconds, sums of token counts, min/max), and every
@@ -65,16 +67,55 @@ def turn_rows(metrics: DataFrame, tier: str, window_start=None) -> DataFrame:
     )
 
 
+# A fused MERGE's ranked rows: the entry rank of a previous row (null on
+# a turn row), and the column that carries, per output row, the n_points
+# of the previous row it replaced (null for a new window).
+RANK = "_e"
+REPLACED_POINTS = "_replaced_points"
+
+# Each merge of TIER_STATS as a null-aware merge of two values: a null
+# side (no previous row, no turn, no latency) is no value.
+_MERGE_TWO = {
+    F.sum: lambda a, b: F.coalesce(a + b, a, b),
+    F.min: F.least,
+    F.max: F.greatest,
+}
+
+
 def merge_tiers(rows: DataFrame) -> DataFrame:
     """The one tier aggregate: merge tier rows of ANY tiers per
     (conv_id, window_start_us, tier) in one hash aggregate (partial
     map-side combine + final; no window functions, no sort),
-    integer-exact. Rows may be turn rows, re-windowed lower-tier rows, or
-    an incremental commit's previous rows ∪ the turn rows of every tier."""
+    integer-exact. Rows may be turn rows or re-windowed lower-tier rows.
+
+    Rows with an entry rank ``RANK`` are a fused MERGE: every previous
+    row a chain holds for the touched windows, one per entry, ranked
+    (higher = later), ∪ the turn rows (``RANK`` null). The latest
+    previous row of a window is resolved in the same aggregate —
+    ``max_by(value, RANK)`` per statistic — and merged with that
+    statistic's merge over the window's turn rows, so a commit's resolve
+    needs no exchange of its own. Its output carries ``REPLACED_POINTS``
+    after ``tier``. Rows without ``RANK`` get the plain aggregate."""
+    keys = ("conv_id", "window_start_us", "tier")
+    if RANK not in rows.columns:
+        return (
+            rows.groupBy(*keys)
+            .agg(*[merge(c).alias(c) for c, _, merge in TIER_STATS])
+            .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
+        )
+    turn = F.col(RANK).isNull()
     return (
-        rows.groupBy("conv_id", "window_start_us", "tier")
-        .agg(*[merge(c).alias(c) for c, _, merge in TIER_STATS])
-        .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier")
+        rows.groupBy(*keys)
+        .agg(
+            *[
+                _MERGE_TWO[merge](
+                    F.max_by(c, RANK), merge(F.when(turn, F.col(c)))
+                ).alias(c)
+                for c, _, merge in TIER_STATS
+            ],
+            F.max_by("n_points", RANK).alias(REPLACED_POINTS),
+        )
+        .select("conv_id", "window_start_us", *TIER_AGG_COLS, "tier", REPLACED_POINTS)
     )
 
 

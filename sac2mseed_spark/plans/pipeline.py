@@ -27,7 +27,8 @@ one tier aggregate, ``merge_tiers``, over the previous rows of the
 touched windows ∪ the delta's turns as one-point rows of every tier
 (operators/rollup.py). A chain is resolved in ONE scan of its entries
 (of a window-keyed chain, of the ``tier={t}`` leaf dirs the read needs),
-each row ranked by the name of the entry directory it was read from.
+each row ranked by the entry directory it was read from; the tier
+resolve is fused into the MERGE (below).
 Per-snapshot write volume is therefore proportional to the delta, not
 the table — the reference merges into only the touched trace the same way
 (/root/reference/libmseed/tracelist.c:135-606 fast paths), and an Iceberg
@@ -51,9 +52,10 @@ minimum turn_idx for a conversation is <= the carried last_turn_idx is
 out-of-order — its within-snapshot latencies were derived against the
 wrong predecessor. ``_process_one`` still rolls it in (the aggregate
 merge is order-insensitive in structure, only the affected latency VALUES
-are provisional). The flag is a column of the conv-state delta, counted
-by an observation on that write; only when the count is > 0 are the
-affected conv_ids written under ``heal_pending/``. ``heal()`` then
+are provisional). The flag is a column of the conv-state delta; an
+observation on that write brings the flagged conv_ids back to the
+driver, which writes them under ``heal_pending/`` when there are any.
+``heal()`` then
 re-derives ONLY those conversations from all raw snapshots and writes
 corrective ``d{n}h`` chain entries (ranked after ``d{n}``) for every
 table family. A heal is a commit without previous rows: the same writer,
@@ -86,20 +88,38 @@ the metrics table are maintained ARITHMETICALLY (previous committed
 totals + the windows and points of each tier the MERGE wrote minus those
 of the previous rows it replaced, crash-safe inside the same checkpoint),
 never by re-scanning the table: both figures come from
-``DataFrame.observe`` on the MERGE write itself, so a commit runs no
-bookkeeping job — its only Spark actions are its writes. Each action
-carries a job description naming its phase (``commit d00000002 tiers``,
-``heal d00000002 pack``, ``compact tiers``); a commit and a heal share
-the phases ``state``, ``tiers`` and ``pack``.
+``DataFrame.observe`` on the MERGE write itself — each output row carries
+the ``n_points`` of the row it replaced — so a commit runs no
+bookkeeping job.
+
+A commit's Spark actions are its three family writes, nothing else:
+``state`` (the conv-state entry), ``tiers`` (the MERGE) and ``pack`` (the
+packed re-encode). Each carries a job description naming its phase
+(``commit d00000002 tiers``, ``heal d00000002 pack``, ``compact tiers``);
+a commit and a heal share these three phases. What the driver already
+holds it writes itself, with pyarrow (sinks/tier_tables
+.write_driver_table): the heal flags, from the state write's
+observation; the ``metrics/`` rows, from the checkpoint's totals and the
+snapshot's file listing; a retention sweep's ``retention/`` accounting,
+from the sweeps' collected rows. A Spark write of such rows would start a
+job and a Python worker for a few rows.
 
 The jobs of a commit are fixed costs, so each is cut where it arises:
 
   * schema-on-read: every parquet read takes its schema from the footer
-    of its first data file, read with pyarrow (``_read_parquet`` — the
-    one footer Spark reads itself with ``mergeSchema`` off), so the
-    ``read`` and ``state read`` phases of a commit and a heal's ``read``
-    start no job. Their semi-joins take plain key columns: a left-semi
-    join needs no unique keys, and a ``distinct`` would be a shuffle;
+    of its first data file, read with pyarrow (sources/tables
+    .read_parquet — the one footer Spark reads itself with
+    ``mergeSchema`` off), so the ``read`` and ``state read`` phases of a
+    commit and a heal's ``read`` start no job. Their semi-joins take
+    plain key columns: a left-semi join needs no unique keys, and a
+    ``distinct`` would be a shuffle;
+  * the tier resolve is fused into the MERGE: the resolve returns the
+    touched rows of EVERY chain entry with their entry rank and no
+    latest-wins window, and ``merge_tiers`` takes each window's
+    latest previous row per statistic (``max_by(value, rank)``) in the
+    same partial + final hash aggregate that merges the turn rows — one
+    exchange on the window keys where a window and the aggregate took
+    two;
   * one persisted frame per commit: the per-turn delta, only the
     columns the writers read (``SLIM_COLS``) plus the carried
     ``last_turn_idx`` / ``last_ts_us``; the conv state is one
@@ -114,9 +134,6 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
     tier then reaches ONE pack (``pack_points``) through its own conv_id
     exchange: one plan shape, whatever the optimiser makes of the union,
     and as many jobs for two pack tiers as for one.
-
-The tier MERGE is deliberately not co-partitioned with its resolve: that
-saves a job but spreads the tier entry over more, smaller files.
 
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
@@ -147,11 +164,10 @@ import uuid
 from contextlib import contextmanager
 from functools import reduce
 
-import pyarrow.parquet as pq
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import TIERS
 from ..functions.metrics import SLIM_COLS, derive_turn_metrics, slim_metrics
@@ -162,8 +178,9 @@ from ..operators.retention import (
     retention_sweep,
     serve_tiered,
 )
-from ..operators.rollup import merge_tiers, turn_rows
-from ..sinks.tier_tables import table_writer
+from ..operators.rollup import RANK, REPLACED_POINTS, merge_tiers, turn_rows
+from ..sinks.tier_tables import table_writer, write_driver_table
+from ..sources.tables import read_parquet
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 # d{version}[h]: plain snapshot deltas rank before the heal delta of the
@@ -173,27 +190,42 @@ _DELTA_RE = re.compile(r"^d(\d+)(h?)$")
 # latest-wins keys: a window-keyed family holds every tier in one chain
 _WINDOW_KEYS = ["tier", "conv_id", "window_start_us"]
 _CONV_KEYS = ["conv_id"]
-# chain entry of a row: the d{version:08d}[h] directory holding its file
-# (the fixed-width names sort in resolution order); in a window-keyed
-# family, its tier: the tier={t} leaf dir between entry and file
-_ENTRY_RE = r"/(d[0-9]{8}h?)/(?:tier=([^/]+)/)?[^/]+$"
+# chain entry of a row: the d{version:08d}[h] directory holding its file;
+# in a window-keyed family, its tier: the tier={t} leaf dir between entry
+# and file
+_ENTRY_RE = r"/d([0-9]{8})(h?)/(?:tier=([^/]+)/)?[^/]+$"
+
+# the rows a commit writes to ``metrics/``, one per tier
+_METRICS_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("snapshot_id", pa.int32()),
+        ("tier", pa.string()),
+        ("n_windows", pa.int64()),
+        ("n_points", pa.int64()),
+        ("lineage", pa.string()),
+        ("wall_s", pa.float64()),
+        ("ooo_convs", pa.int64()),
+        ("chain_len", pa.int32()),
+    ]
+)
+# the conversations a commit flags for heal()
+_PENDING_SCHEMA = pa.schema([("conv_id", pa.string())])
+# a retention sweep's accounting rows, one per swept tier
+_SWEEP_SCHEMA = pa.schema(
+    [
+        ("swept_at_us", pa.int64()),
+        ("tier", pa.string()),
+        ("n_kept", pa.int64()),
+        ("n_evicted", pa.int64()),
+        ("pts_kept", pa.int64()),
+        ("pts_evicted", pa.int64()),
+    ]
+)
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
-
-
-def _read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """``spark.read.parquet(*paths)`` of parquet dirs without its
-    schema-inference job: the schema is the footer of the first data file
-    of the first dir that has one, read with pyarrow — the one footer
-    Spark itself reads with ``mergeSchema`` off."""
-    for p in paths:
-        files = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
-        if files:
-            schema = from_arrow_schema(pq.read_schema(os.path.join(p, files[0])))
-            return spark.read.schema(schema).parquet(*paths)
-    return spark.read.parquet(*paths)
 
 
 def _write_by_tier(df: DataFrame, path: str) -> None:
@@ -209,19 +241,25 @@ def _write_by_tier(df: DataFrame, path: str) -> None:
         )
 
 
-def _observe_totals(df: DataFrame, obs: Observation) -> DataFrame:
-    """``df`` (rows of any tiers) with each tier's window count ``w_{t}``
-    and point sum ``p_{t}`` observed by ``obs``."""
+def _observe_totals(merged: DataFrame, obs: Observation) -> DataFrame:
+    """``merged`` (a MERGE's output rows of any tiers) with what it adds
+    to each tier's running totals observed by ``obs``: ``w_{t}`` windows
+    (those without a replaced row) and ``p_{t}`` points (minus the
+    ``REPLACED_POINTS`` of the row each replaced)."""
+    rep = F.col(REPLACED_POINTS) if REPLACED_POINTS in merged.columns else F.lit(None)
+    added = F.col("n_points") - F.coalesce(rep, F.lit(0))
     is_t = {t: F.col("tier") == t for t in TIERS}
-    pts = {t: F.sum(F.when(c, F.col("n_points"))) for t, c in is_t.items()}
-    return df.observe(
+    return merged.observe(
         obs,
-        *[F.count_if(c).alias(f"w_{t}") for t, c in is_t.items()],
-        *[F.coalesce(p, F.lit(0)).alias(f"p_{t}") for t, p in pts.items()],
+        *[F.count_if(c & rep.isNull()).alias(f"w_{t}") for t, c in is_t.items()],
+        *[
+            F.coalesce(F.sum(F.when(c, added)), F.lit(0)).alias(f"p_{t}")
+            for t, c in is_t.items()
+        ],
     )
 
 
-def _observed(obs: Observation, *names: str) -> tuple[int, ...]:
+def _observed(obs: Observation, *names: str) -> tuple:
     """The named metrics the finished action reported for ``obs``. A metric
     the plan did not report (its observed node was optimised away) raises:
     a running total must never silently count it as 0."""
@@ -232,7 +270,7 @@ def _observed(obs: Observation, *names: str) -> tuple[int, ...]:
     missing = [n for n in names if got.get(n) is None]
     if missing:
         raise RuntimeError(f"observation reported no value for {missing}")
-    return tuple(int(got[n]) for n in names)
+    return tuple(got[n] for n in names)
 
 
 def list_snapshots(input_dir: str) -> list[tuple[int, str]]:
@@ -313,7 +351,7 @@ class IncrementalRollup:
     @contextmanager
     def _phase(self, desc: str):
         """Describe the Spark jobs started inside as engine phase ``desc``
-        (e.g. ``commit d00000002 tiers merge``). The caller's description
+        (e.g. ``commit d00000002 tiers``). The caller's description
         is restored afterwards; its job group is left alone."""
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
@@ -377,12 +415,15 @@ class IncrementalRollup:
         healed_through: int | None = None,
         touched_on: list[str] | None = None,
         tiers: tuple[str, ...] | None = None,
+        ranked: bool = False,
     ) -> DataFrame | None:
         """MERGE-on-read: one scan of the chain <= version, latest entry
-        wins per key. Each row is ranked by the name of the entry
-        directory its file lives in (``_metadata.file_path``): the
-        fixed-width ``d{version:08d}[h]`` names sort in resolution order,
-        so a heal entry ranks after its plain twin. ``touched`` (a
+        wins per key. Each row is ranked by the entry directory its file
+        lives in (``_metadata.file_path``): ``d{v}`` ranks ``2v`` and its
+        heal twin ``d{v}h`` ``2v + 1``, so a heal entry ranks after its
+        plain twin. ``ranked`` returns every entry's rows with their rank
+        in ``RANK`` instead of the latest row per key: a fused MERGE
+        (``merge_tiers``) resolves them in its own aggregate. ``touched`` (a
         DataFrame of ``touched_on`` columns, default ``keys``) semi-joins
         the scan down to the rows a merge needs, so the rows shuffled are
         delta-sized. ``touched_on`` may be a subset of the keys (e.g. just
@@ -413,24 +454,28 @@ class IncrementalRollup:
         if not dirs:
             return None
         path = F.col("_metadata.file_path")
-        df = _read_parquet(self.spark, *dirs).withColumn(
-            "_e", F.regexp_extract(path, _ENTRY_RE, 1)
+        df = read_parquet(self.spark, *dirs).withColumn(
+            RANK,
+            F.regexp_extract(path, _ENTRY_RE, 1).cast("long") * 2
+            + (F.regexp_extract(path, _ENTRY_RE, 2) == "h").cast("long"),
         )
         if by_tier:
-            df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 2))
+            df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 3))
             if bounds:
                 df = df.filter(retained(bounds))
         if empty:
             df = df.limit(0)
         if touched is not None:
             df = df.join(touched, touched_on or keys, "left_semi")
+        if ranked:
+            return df
         if touched_on:
             df = df.repartition(*touched_on)
-        w = Window.partitionBy(*keys).orderBy(F.desc("_e"))
+        w = Window.partitionBy(*keys).orderBy(F.desc(RANK))
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_e", "_rn")
+            .drop(RANK, "_rn")
         )
 
     # -- readers --------------------------------------------------------
@@ -516,7 +561,7 @@ class IncrementalRollup:
         t0 = time.time()
         tag = f"commit d{snap_id:08d}"
         with self._phase(f"{tag} read"):
-            raw = _read_parquet(self.spark, snap_path)
+            raw = read_parquet(self.spark, snap_path)
         delta_m = derive_turn_metrics(raw)
 
         # StreamState carry: seed each conversation's first-in-snapshot
@@ -555,34 +600,27 @@ class IncrementalRollup:
             sorted(f for f in os.listdir(snap_path) if f.endswith(".parquet"))
         )
         chain_len = self.chain_length({**state, "version": snap_id})
-        metrics_df = self.spark.createDataFrame(
-            [
-                (
-                    state["run_id"],
-                    snap_id,
-                    tier,
-                    int(state["totals"][tier]["n_windows"]),
-                    int(state["totals"][tier]["n_points"]),
-                    lineage,
-                    float(wall),
-                    ooo_convs,
-                    chain_len,
-                )
-                for tier in TIERS
-            ],
-            "run_id string, snapshot_id int, tier string, n_windows long,"
-            " n_points long, lineage string, wall_s double, ooo_convs long,"
-            " chain_len int",
-        )
         # keyed-by-snapshot OVERWRITE, not a blind append: a crash between
         # this write and the checkpoint commit makes the rerun rewrite the
         # same directory instead of double-appending the snapshot's rows —
-        # metrics share the tier tables' replay-idempotence guarantee. One
-        # file per snapshot: its rows are one per tier.
-        with self._phase(f"{tag} metrics"):
-            table_writer(metrics_df.coalesce(1)).mode("overwrite").parquet(
-                os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}")
-            )
+        # metrics share the tier tables' replay-idempotence guarantee.
+        write_driver_table(
+            [
+                {
+                    "run_id": state["run_id"],
+                    "snapshot_id": snap_id,
+                    "tier": tier,
+                    **state["totals"][tier],
+                    "lineage": lineage,
+                    "wall_s": wall,
+                    "ooo_convs": ooo_convs,
+                    "chain_len": chain_len,
+                }
+                for tier in TIERS
+            ],
+            _METRICS_SCHEMA,
+            os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}"),
+        )
 
     def _write_entries(
         self,
@@ -644,71 +682,69 @@ class IncrementalRollup:
             F.col("_l.ts_us").alias("last_ts_us"),
             "_ooo",
         )
-        # one file per entry for the state and the heal flags: they hold a
-        # few bytes per conversation, so more files would be mostly footer,
-        # and the next resolve reads every one
+        # one file per entry for the state: it holds a few bytes per
+        # conversation, so more files would be mostly footer, and the next
+        # resolve reads every one. The write's observation also brings the
+        # flagged conversations back (a list bounded by the snapshot's
+        # out-of-order conversations, each of which heal() re-derives
+        # anyway); the driver writes them as the heal flags.
         conv_obs = Observation()
         with self._phase(f"{tag} state"):
             table_writer(
                 conv.observe(
                     conv_obs,
                     F.count(F.lit(1)).alias("n"),
-                    F.count_if("_ooo").alias("ooo"),
+                    F.collect_list(F.when(F.col("_ooo"), F.col("conv_id"))).alias("ooo"),
                 )
                 .drop("_ooo")
                 .coalesce(1)
             ).mode("overwrite").parquet(
                 self._delta_path(self._base("state"), version, heal)
             )
-        n_convs, ooo_convs = _observed(conv_obs, "n", "ooo")
-        if ooo_convs:
-            with self._phase(f"{tag} heal pending"):
-                table_writer(conv.filter("_ooo").select("conv_id").coalesce(1)).mode(
-                    "overwrite"
-                ).parquet(self._delta_path(self._base("heal_pending"), version))
+        n_convs, ooo = _observed(conv_obs, "n", "ooo")
+        if ooo:
+            write_driver_table(
+                [{"conv_id": c} for c in sorted(ooo)],
+                _PENDING_SCHEMA,
+                self._delta_path(self._base("heal_pending"), version),
+            )
 
         # tiers: ONE aggregate over the turn rows of every tier (a turn is
-        # a one-point tier row) and, on a commit, the previous rows of
-        # ONLY the windows they touch — a semi-join down the chain, never
-        # a full-table read. Running totals: previous committed totals +
-        # what this write itself observed per tier — windows and points it
-        # wrote minus those of the previous rows it replaced. No re-read.
+        # a one-point tier row) and, on a commit, every entry's ranked
+        # previous rows of ONLY the windows they touch — a semi-join down
+        # the chain, never a full-table read; the aggregate itself picks
+        # each window's latest previous row. Running totals: previous
+        # committed totals + what this write itself observed per tier —
+        # windows and points it wrote minus those of the rows it
+        # replaced. No re-read.
         rows = _union([turn_rows(metrics, t) for t in TIERS]).filter(retained(bounds))
-        prev_rows, prev_obs, out_obs = None, Observation(), Observation()
+        out_obs = Observation()
         with self._phase(f"{tag} tiers"):
-            if not heal:
-                prev_rows = self._resolve_chain(
-                    self._base("tiers"),
-                    state["version"],
-                    _WINDOW_KEYS,
-                    touched=rows.select(*_WINDOW_KEYS),
-                    bounds=bounds,
-                    healed_through=state["healed_through"],
-                )
-            if prev_rows is not None:
-                rows = _observe_totals(prev_rows, prev_obs).unionByName(rows)
+            prev = None if heal else self._resolve_chain(
+                self._base("tiers"),
+                state["version"],
+                _WINDOW_KEYS,
+                touched=rows.select(*_WINDOW_KEYS),
+                bounds=bounds,
+                healed_through=state["healed_through"],
+                ranked=True,
+            )
+            if prev is not None:
+                rows = prev.unionByName(rows, allowMissingColumns=True)
             _write_by_tier(
-                _observe_totals(merge_tiers(rows), out_obs),
+                _observe_totals(merge_tiers(rows), out_obs).drop(REPLACED_POINTS),
                 self._delta_path(self._base("tiers"), version, heal),
             )
         if not heal:
-            new = {t: _observed(out_obs, f"w_{t}", f"p_{t}") for t in TIERS}
-            # every previous row keys a row of the merge output, so a merge
-            # that wrote nothing replaced nothing (its delta was empty, and
-            # the optimiser may have pruned the empty semi-join together
-            # with its observation)
-            replaced = prev_rows is not None and any(w for w, _ in new.values())
             for t in TIERS:
-                prev_w, prev_p = (
-                    _observed(prev_obs, f"w_{t}", f"p_{t}") if replaced else (0, 0)
-                )
+                w, p = _observed(out_obs, f"w_{t}", f"p_{t}")
                 tot = state["totals"].setdefault(t, {"n_windows": 0, "n_points": 0})
-                tot["n_windows"] += new[t][0] - prev_w
-                tot["n_points"] += new[t][1] - prev_p
+                tot["n_windows"] += w
+                tot["n_points"] += p
         if self.pack_tiers:
             with self._phase(f"{tag} pack"):
                 self._write_packed(state, version, metrics, heal)
-        return n_convs, ooo_convs
+        return n_convs, len(ooo)
 
     def _write_packed(
         self, state: dict, version: int, metrics: DataFrame, heal: bool
@@ -821,8 +857,8 @@ class IncrementalRollup:
         # a left-semi join needs no unique keys: a conversation flagged in
         # several pending dirs (or appended twice) is healed once
         with self._phase(f"{tag} read"):
-            raw = _read_parquet(self.spark, *snap_paths).join(
-                _read_parquet(self.spark, *pend_dirs).select("conv_id"),
+            raw = read_parquet(self.spark, *snap_paths).join(
+                read_parquet(self.spark, *pend_dirs).select("conv_id"),
                 "conv_id",
                 "left_semi",
             )
@@ -886,20 +922,13 @@ class IncrementalRollup:
                 tot["n_windows"] -= int(r["n_evicted"])
                 tot["n_points"] -= int(r["pts_evicted"])
         self._commit_ckpt(state)
-        acct = self.spark.createDataFrame(
-            [
-                (int(now_us), name, r["n_kept"], r["n_evicted"],
-                 r["pts_kept"], r["pts_evicted"])
-                for name, r in rows
-            ],
-            "swept_at_us long, tier string, n_kept long, n_evicted long,"
-            " pts_kept long, pts_evicted long",
+        acct = write_driver_table(
+            [{"swept_at_us": now_us, **r.asDict(), "tier": name} for name, r in rows],
+            _SWEEP_SCHEMA,
+            os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}"),
         )
-        with self._phase("retention accounting"):
-            table_writer(acct).mode("overwrite").parquet(
-                os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}")
-            )
-        return acct
+        # a local relation of the rows: no job, no Python worker
+        return self.spark.createDataFrame(acct)
 
     def serve(self, now_us: int, horizons=None) -> DataFrame:
         """Age-banded serving view over the maintained tiers: the finest

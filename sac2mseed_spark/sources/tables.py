@@ -1,8 +1,13 @@
-"""Loading helpers for the driver-provided parquet star schema."""
+"""Loading helpers for parquet tables: the driver-provided star schema,
+and ``read_parquet``, the schema-on-read scan every engine read uses."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -39,6 +44,34 @@ def balance_scan(df: DataFrame) -> DataFrame:
 # for no parallelism gain (measured: +0.3 s on asof_attribution/
 # dedup_exact-style queries at sf1.0).
 _BALANCED_TABLES = {"documents", "embeddings"}
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first parquet data file under the dir ``path``, in name order,
+    descending into partition dirs (``slice=0/``); names Spark skips
+    (a leading ``_`` or ``.``) are skipped too."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(
+            f for f in files if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` of parquet dirs without its
+    schema-inference job: the schema is the footer of the first data file
+    of the first dir that has one, read with pyarrow — the one footer
+    Spark itself reads with ``mergeSchema`` off. Partition columns are
+    not in a footer; Spark still takes them from the paths."""
+    for p in paths:
+        first = _first_data_file(p)
+        if first is not None:
+            schema = from_arrow_schema(pq.read_schema(first))
+            return spark.read.schema(schema).parquet(*paths)
+    return spark.read.parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

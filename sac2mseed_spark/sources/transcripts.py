@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import read_parquet
+
 EPOCH0_US = 1_700_000_000_000_000  # 2023-11-14T22:13:20Z; any fixed origin
 
 _WORDS = (
@@ -239,8 +241,10 @@ def read_transcripts_table(
 ) -> DataFrame:
     """Read a materialized transcripts table; ``conv_slice=(p, P)`` keeps
     the p-th of P disjoint slices via partition pruning on the ``slice``
-    directory column (requires P | slice_mod of the writer)."""
-    df = spark.read.parquet(path)
+    directory column (requires P | slice_mod of the writer). The schema
+    comes from one footer (``tables.read_parquet``), so the read starts no
+    job."""
+    df = read_parquet(spark, path)
     if conv_slice is not None:
         p, np_ = conv_slice
         df = df.filter(F.pmod(F.col("slice"), F.lit(np_)) == p)

@@ -13,7 +13,7 @@ the same values in both. Runs are derandomized, so a failure repeats.
 import math
 
 import numpy as np
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, given, settings
 from hypothesis import strategies as st
 
 from sac2mseed_spark.codec import CANONICAL_NAN, INT_LIMIT, oracle
@@ -23,11 +23,14 @@ from sac2mseed_spark.codec.vectorized import encode_chunks_vec
 _I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
 DAY_US = 86_400_000_000
 
+# no shrink phase: a failing example is reported as generated — shrinking
+# one against the codec kernels takes minutes, not seconds
 SETTINGS = settings(
     derandomize=True,
     max_examples=150,
     deadline=5_000,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+    phases=(Phase.explicit, Phase.reuse, Phase.generate),
 )
 
 

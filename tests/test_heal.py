@@ -18,15 +18,21 @@ from pyspark.sql import functions as F
 from sac2mseed_spark.functions.metrics import derive_turn_metrics
 from sac2mseed_spark.operators.pack import pack_tier
 from sac2mseed_spark.operators.rollup import rollup_from_turns
-from sac2mseed_spark.plans.pipeline import IncrementalRollup, _read_parquet
-from sac2mseed_spark.sources.transcripts import generate_transcripts
+from sac2mseed_spark.plans.pipeline import IncrementalRollup
+from sac2mseed_spark.sources.tables import read_parquet
+from sac2mseed_spark.sources.transcripts import (
+    generate_transcripts,
+    read_transcripts_table,
+    write_transcripts_table,
+)
 
 # snapshot 3 arrives LATE: turns [20, 40) land after turns [40, 60)
 OOO_BOUNDS = [(0, 20), (40, 60), (20, 40), (60, 10_000)]
 # Spark jobs of the out-of-order commit of snapshot 3 plus the heal after
-# it (measured: 23, the same on repeated runs). Schema inference, a
-# persisted frame or an exchange that is not shared each adds a job.
-OOO_COMMIT_HEAL_JOBS = 23
+# it (measured: 20, the same on repeated runs). Schema inference, a
+# persisted frame, an exchange that is not shared or a Spark write of rows
+# the driver holds each adds a job.
+OOO_COMMIT_HEAL_JOBS = 20
 
 
 @pytest.fixture(scope="module")
@@ -320,6 +326,49 @@ def test_commit_and_heal_share_one_tier_aggregate(
     assert calls == ["merge_tiers"]
 
 
+def test_fused_merge_takes_the_heal_twin_by_rank(spark, ooo_snapshots, tmp_path):
+    """The commit after a heal merges windows whose previous rows sit in
+    ``d{n-1}``, in its heal twin ``d{n-1}h`` and in older entries, with
+    different values — the heal row's statistics are neither all larger
+    nor all smaller. The MERGE takes the heal row by its rank, not by
+    value: the tiers equal a batch recompute, and the observed running
+    totals equal a scan at every version."""
+    src, full_t = ooo_snapshots
+    staged = str(tmp_path / "staged")
+    work = str(tmp_path / "w")
+    _stage_upto(src, staged, 3)
+    inc = IncrementalRollup(spark, staged, work, pack_tiers=("1m",), max_chain=None)
+    assert inc.process_pending() == 3
+    assert inc.heal() > 0
+
+    def entry(name):
+        return _agg_as_dict(spark.read.parquet(os.path.join(work, "tiers", name)))
+
+    plain, healed = entry("d00000003"), entry("d00000003h")
+    differ = {k for k in plain.keys() & healed.keys() if plain[k] != healed[k]}
+    pairs = [
+        (p, h)
+        for k in differ
+        for p, h in zip(plain[k], healed[k])
+        if p is not None and h is not None
+    ]
+    assert any(h < p for p, h in pairs) and any(h > p for p, h in pairs)
+    _stage_upto(src, staged, 4)
+    assert inc.process_pending() == 1
+    # the commit re-merged windows of both twins
+    assert differ & entry("d00000004").keys()
+    full_m = derive_turn_metrics(full_t)
+    for tier in ("1m", "1h", "1d"):
+        assert _agg_as_dict(inc.tier(tier)) == _agg_as_dict(
+            rollup_from_turns(full_m, tier)
+        ), tier
+    for r in inc.metrics_table().collect():
+        direct = inc.tier(r["tier"], version=r["snapshot_id"]).agg(
+            F.count(F.lit(1)).alias("w"), F.sum("n_points").alias("p")
+        ).collect()[0]
+        assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"]), r
+
+
 def _stage_upto(src, staged, n):
     """Make snapshots 1..n of ``src`` visible in ``staged``."""
     os.makedirs(staged, exist_ok=True)
@@ -331,9 +380,12 @@ def _stage_upto(src, staged, n):
 
 def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jobs):
     """The out-of-order commit and the heal after it stay within the job
-    budget, and the heal's ``read`` phase starts no job (its reads take
-    their schema from a footer, and the flagged conversations semi-join
-    the snapshots without a distinct)."""
+    budget, and every job is described. The heal's ``read`` phase starts
+    no job (its reads take their schema from a footer, and the flagged
+    conversations semi-join the snapshots without a distinct); neither do
+    the commit's heal flags and ``metrics/`` rows, which the driver
+    writes; the commit's tier MERGE resolves the previous rows in its own
+    aggregate, so its ``tiers`` phase needs at most 3 jobs."""
     src, _ = ooo_snapshots
     staged = str(tmp_path / "staged")
     _stage_upto(src, staged, 2)
@@ -348,6 +400,9 @@ def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jo
     per = phase_jobs(commit_and_heal)
     assert per["heal d00000003 tiers"] > 0, per  # the heal's jobs are described
     assert per["heal d00000003 read"] == 0, per
+    assert per["commit d00000003 heal pending"] == per["commit d00000003 metrics"] == 0, per
+    assert per[None] == 0, per
+    assert 0 < per["commit d00000003 tiers"] <= 3, per
     assert sum(per.values()) <= OOO_COMMIT_HEAL_JOBS, per
 
 
@@ -373,15 +428,22 @@ def test_state_and_heal_flag_entries_are_one_file(spark, ooo_snapshots, tmp_path
     assert set(files.values()) == {1}, files
 
 
-def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path):
+def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path, phase_jobs):
     """The schema every engine read takes from one footer equals the one
     Spark infers, for each kind of directory the engine reads: a snapshot,
-    the state, tier and packed entries, and the heal flags."""
+    a ``slice=``-partitioned transcripts table (its partition column from
+    the path), the state, tier and packed entries, and the heal flags.
+    The transcripts table is read without a job."""
     src, _ = ooo_snapshots
     work = str(tmp_path / "w")
+    table = str(tmp_path / "table")
+    write_transcripts_table(spark, table, "t_small", seed=42)
+    assert phase_jobs(lambda: read_transcripts_table(spark, table)) == {}
+    assert "slice" in read_parquet(spark, table).columns
     inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
     assert inc.process_pending() == len(OOO_BOUNDS)
     dirs = [
+        table,
         os.path.join(src, "snap_00000001"),
         os.path.join(work, "state", "d00000002"),
         os.path.join(work, "heal_pending", "d00000003"),
@@ -391,7 +453,7 @@ def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path):
         for t in tiers
     ]
     for d in dirs:
-        assert _read_parquet(spark, d).schema == spark.read.parquet(d).schema, d
+        assert read_parquet(spark, d).schema == spark.read.parquet(d).schema, d
 
 
 def test_two_pack_tiers_pack_phase_job_budget(spark, ooo_snapshots, tmp_path, phase_jobs):

@@ -97,6 +97,11 @@ def test_metrics_lineage(spark, snapshots, tmp_path):
     inc = IncrementalRollup(spark, src, work)
     inc.process_pending()
     mt = inc.metrics_table()
+    assert mt.schema.simpleString() == (
+        "struct<run_id:string,snapshot_id:int,tier:string,n_windows:bigint,"
+        "n_points:bigint,lineage:string,wall_s:double,ooo_convs:bigint,"
+        "chain_len:int>"
+    )
     rows = mt.collect()
     # 3 snapshots x 3 tiers
     assert len(rows) == 9

@@ -59,7 +59,7 @@ def by_packed_eviction_recorded(sweep_rows):
     return len(packed) == 1 and next(iter(packed))[2] > 0
 
 
-def test_apply_retention_accounting_and_reads(spark, snapshots, tmp_path):
+def test_apply_retention_accounting_and_reads(spark, snapshots, tmp_path, phase_jobs):
     src, _t, lo_us, hi_us = snapshots
     now_us, hz = _horizons(lo_us, hi_us)
     inc = IncrementalRollup(spark, src, str(tmp_path / "w"), pack_tiers=("1m",))
@@ -79,7 +79,18 @@ def test_apply_retention_accounting_and_reads(spark, snapshots, tmp_path):
     }
     serve_pre = _rows_as_set(serve_tiered(pre, now_us, hz))
 
-    acct = inc.apply_retention(now_us, hz)
+    got = {}
+    per = phase_jobs(lambda: got.setdefault("acct", inc.apply_retention(now_us, hz)))
+    # the sweeps are Spark jobs; the accounting rows are written by the
+    # driver and returned as a local relation: no job, none undescribed
+    assert per["retention sweep tiers"] > 0, per
+    assert per["retention accounting"] == per[None] == 0, per
+    acct = got["acct"]
+    assert acct.schema.simpleString() == (
+        "struct<swept_at_us:bigint,tier:string,n_kept:bigint,n_evicted:bigint,"
+        "pts_kept:bigint,pts_evicted:bigint>"
+    )
+    assert inc.retention_table().schema == acct.schema
     got_sweep = {
         (r["tier"], r["n_kept"], r["n_evicted"], r["pts_kept"], r["pts_evicted"])
         for r in acct.collect()

@@ -1,6 +1,7 @@
 """Storage format of the tables the engine writes: every column chunk of
-every parquet file is zstd-compressed (sinks/tier_tables.table_writer),
-whichever writer produced it, and a batch tier write stays within its
+every parquet file is zstd-compressed (sinks/tier_tables.table_writer, or
+write_driver_table for the rows the driver writes), whichever writer
+produced it, and a batch tier write stays within its
 stored-bytes budget."""
 
 import os
