@@ -49,8 +49,7 @@ def token_count_col(text_col="text", single_space: bool = False):
     a cheap one-time corpus audit, and true by construction for the
     scale fixture): spaces+1 via a zero-regex length/replace chain.
     Measured 1.9x cheaper than the regex on real fixture text
-    (tools/profile_tokenize.py: 7.6s vs 14.0s per 7.4M turns on 4
-    cores) and allocation-lighter (no Matcher state), which matters in
+    (7.6s vs 14.0s per 7.4M turns on 4 cores) and allocation-lighter (no Matcher state), which matters in
     the hottest map stage. Exact-equal to the general definition on any
     single-space corpus (tests assert agreement on the generator output
     and divergence on a tab case, so the contract is explicit)."""

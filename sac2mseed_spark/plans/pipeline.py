@@ -37,18 +37,20 @@ Iceberg jars in this sandbox, so parquet dirs + this resolver stand in).
 ``compact()`` is the rewrite_data_files analogue that folds a long chain
 back into one base directory.
 
-Cross-snapshot state (the StreamState analogue, /root/reference/libmseed/
-libmseed.h:458-465): each snapshot also writes the touched conversations'
-new ``(conv_id, last_turn_idx, last_ts_us)`` so the first turn of a
-conversation's continuation in the next snapshot gets its true inter-turn
-latency — exactly how record N+1's first Steim difference is seeded from
-record N's last sample (pack.c:1003-1039). With that carry, the merged
-tiers are bit-identical to a full batch recompute over all snapshots for
-append-ordered input (tests assert).
+Cross-snapshot state (libmseed's StreamState, libmseed.h:458-465): each
+snapshot also writes the touched conversations' new ``(conv_id,
+last_turn_idx, last_ts_us)``. The next commit unions each of its
+conversations' last turn into the snapshot's turns as a ``_carried`` row,
+so the metrics' own lag window gives the first continued turn its true
+inter-turn latency — exactly how record N+1's first Steim difference is
+seeded from record N's last sample (pack.c:1003-1039). The writers drop
+the carried rows after the conv state has read them. With that carry, the
+merged tiers are bit-identical to a full batch recompute over all
+snapshots for append-ordered input (tests assert).
 
 Out-of-order input and the heal pass (the mst_groupheal analogue,
 /root/reference/src/../libmseed/traceutils.c:776-915): a snapshot whose
-minimum turn_idx for a conversation is <= the carried last_turn_idx is
+minimum turn_idx for a conversation is <= its carried turn's is
 out-of-order — its within-snapshot latencies were derived against the
 wrong predecessor. ``_process_one`` still rolls it in (the aggregate
 merge is order-insensitive in structure, only the affected latency VALUES
@@ -120,11 +122,12 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
     same partial + final hash aggregate that merges the turn rows — one
     exchange on the window keys where a window and the aggregate took
     two;
-  * one persisted frame per commit: the per-turn delta, only the
-    columns the writers read (``SLIM_COLS``) plus the carried
-    ``last_turn_idx`` / ``last_ts_us``; the conv state is one
-    ``groupBy("conv_id")`` over it, which needs no exchange because the
-    cache is hash-partitioned on conv_id by the metrics' lag window;
+  * one persisted frame per commit and per heal (``_turn_metrics``): the
+    per-turn delta with its carried turns, only the columns the writers
+    read (``SLIM_COLS``) plus the ``_carried`` flag; the conv state is
+    one ``groupBy("conv_id")`` over it, which needs no exchange because
+    the cache is hash-partitioned on conv_id by the metrics' lag window,
+    and no join: the carry is a row of the frame, not a column;
   * the packed chain is resolved once for every pack tier, clustered on
     conv_id, so its latest-wins window and the cumulative point-offset
     window that restores old points' turn_idx (per tier and
@@ -170,7 +173,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import TIERS
-from ..functions.metrics import SLIM_COLS, derive_turn_metrics, slim_metrics
+from ..functions.metrics import SLIM_COLS, derive_turn_metrics
 from ..operators.pack import pack_points, tier_points, unpack_tier
 from ..operators.retention import (
     retained,
@@ -226,6 +229,26 @@ _SWEEP_SCHEMA = pa.schema(
 
 def _union(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
+
+
+def _turn_metrics(raw: DataFrame, carry: DataFrame | None = None) -> DataFrame:
+    """The one frame a commit or a heal persists: the per-turn metrics of
+    the transcript rows ``raw``, only the columns the writers read
+    (``SLIM_COLS``) and ``_carried``. Each row of ``carry`` (conv state:
+    conv_id, last_turn_idx, last_ts_us) is added to the turns as its
+    conversation's committed last turn, flagged ``_carried``, so the lag
+    window gives the first continued turn its true latency. The raw text,
+    role and tool are pruned below that window."""
+    turns = raw.withColumn("_carried", F.lit(False))
+    if carry is not None:
+        last = carry.select(
+            "conv_id",
+            F.col("last_turn_idx").alias("turn_idx"),
+            F.timestamp_micros("last_ts_us").cast(raw.schema["ts"].dataType).alias("ts"),
+            F.lit(True).alias("_carried"),
+        )
+        turns = turns.unionByName(last, allowMissingColumns=True)
+    return derive_turn_metrics(turns).select(*SLIM_COLS, "_carried").persist()
 
 
 def _write_by_tier(df: DataFrame, path: str) -> None:
@@ -363,8 +386,9 @@ class IncrementalRollup:
 
     # -- chain layout ---------------------------------------------------
     def _base(self, family: str) -> str:
-        """Root of ``family``: a chain (``tiers``, ``packed``, ``state``)
-        or the ``heal_pending`` flags."""
+        """Root of ``family``: a chain (``tiers``, ``packed``, ``state``),
+        the ``heal_pending`` flags or a table written with pyarrow
+        (``metrics``, ``retention``)."""
         return os.path.join(self.work_dir, family)
 
     def _delta_path(self, base: str, version: int, heal: bool = False) -> str:
@@ -378,9 +402,7 @@ class IncrementalRollup:
             (self._base("state"), _CONV_KEYS),
         ]
 
-    def _chain_dirs(
-        self, base: str, version: int, healed_through: int | None = None
-    ) -> list[str]:
+    def _chain_dirs(self, base: str, version: int, healed_through: int) -> list[str]:
         """Committed chain entries <= version, in resolution order
         (ascending version; a heal entry ranks after its plain twin).
 
@@ -391,8 +413,6 @@ class IncrementalRollup:
         doc's reads-never-see-uncommitted-data invariant). Orphans from a
         crashed heal are garbage-collected by the next heal()/compact()
         before the watermark can advance past them."""
-        if healed_through is None:
-            healed_through = self._read_ckpt()["healed_through"]
         if not os.path.isdir(base):
             return []
         entries = []
@@ -410,9 +430,9 @@ class IncrementalRollup:
         base: str,
         version: int,
         keys: list[str],
+        healed_through: int,
         touched: DataFrame | None = None,
         bounds: dict | None = None,
-        healed_through: int | None = None,
         touched_on: list[str] | None = None,
         tiers: tuple[str, ...] | None = None,
         ranked: bool = False,
@@ -518,23 +538,23 @@ class IncrementalRollup:
         return {t: df for t, df in tiers if df is not None}
 
     def metrics_table(self) -> DataFrame | None:
-        p = os.path.join(self.work_dir, "metrics")
-        if not os.path.isdir(p):
-            return None
-        snaps = [n for n in os.listdir(p) if n.startswith("snap_")]
-        if not snaps:  # empty dir or stray non-snapshot files
-            return None
-        # mergeSchema: snapshot dirs written before a column was added
-        # read it as null
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(p, "snap_*")
-        )
+        return self._read_listed("metrics", "snap_")
 
     def retention_table(self) -> DataFrame | None:
-        p = os.path.join(self.work_dir, "retention")
-        if not os.path.isdir(p) or not os.listdir(p):
+        return self._read_listed("retention", "sweep_")
+
+    def _read_listed(self, family: str, prefix: str) -> DataFrame | None:
+        """The ``{prefix}*`` dirs of ``family``, a table written with
+        pyarrow (one dir per commit or sweep; none yet: None), read without
+        a job. The dirs are listed newest first, so the schema comes from
+        the newest footer and a dir written before a column existed reads
+        that column as null."""
+        p = self._base(family)
+        names = os.listdir(p) if os.path.isdir(p) else []
+        dirs = sorted((n for n in names if n.startswith(prefix)), reverse=True)
+        if not dirs:
             return None
-        return self.spark.read.parquet(os.path.join(p, "sweep_*"))
+        return read_parquet(self.spark, *(os.path.join(p, n) for n in dirs))
 
     # -- processing -----------------------------------------------------
     def process_pending(self) -> int:
@@ -562,15 +582,11 @@ class IncrementalRollup:
         tag = f"commit d{snap_id:08d}"
         with self._phase(f"{tag} read"):
             raw = read_parquet(self.spark, snap_path)
-        delta_m = derive_turn_metrics(raw)
-
-        # StreamState carry: seed each conversation's first-in-snapshot
-        # latency from the previous snapshot's last turn. The state read
-        # is delta-sized too: only the snapshot's own conversations are
-        # resolved down the chain. The carried columns stay on the one
-        # persisted frame, for the conv-state write; the raw text, role
-        # and tool do not (the writers read SLIM_COLS), so they are pruned
-        # below the metrics' lag window.
+        # StreamState carry: each touched conversation's committed last
+        # turn joins the snapshot as a row of its own, so the metrics' lag
+        # window seeds the first continued turn's latency from it. The
+        # state read is delta-sized too: only the snapshot's own
+        # conversations are resolved down the chain.
         with self._phase(f"{tag} state read"):
             carry = self._resolve_chain(
                 self._base("state"),
@@ -579,19 +595,8 @@ class IncrementalRollup:
                 touched=raw.select("conv_id"),
                 healed_through=state["healed_through"],
             )
-        carry_cols = []
-        if carry is not None:
-            carry_cols = ["last_turn_idx", "last_ts_us"]
-            delta_m = delta_m.join(carry, "conv_id", "left").withColumn(
-                "latency_us",
-                F.coalesce(
-                    F.col("latency_us"), F.col("ts_us") - F.col("last_ts_us")
-                ),
-            )
-        delta_m = delta_m.select(*SLIM_COLS, *carry_cols).persist()
-        _, ooo_convs = self._write_entries(
-            state, snap_id, tag, delta_m, carried=carry is not None
-        )
+        delta_m = _turn_metrics(raw, carry)
+        _, ooo_convs = self._write_entries(state, snap_id, tag, delta_m)
         wall = time.time() - t0
         delta_m.unpersist()
 
@@ -619,7 +624,7 @@ class IncrementalRollup:
                 for tier in TIERS
             ],
             _METRICS_SCHEMA,
-            os.path.join(self.work_dir, "metrics", f"snap_{snap_id:08d}"),
+            os.path.join(self._base("metrics"), f"snap_{snap_id:08d}"),
         )
 
     def _write_entries(
@@ -628,55 +633,37 @@ class IncrementalRollup:
         version: int,
         tag: str,
         metrics: DataFrame,
-        carried: bool = False,
         heal: bool = False,
     ) -> tuple[int, int]:
         """Write the ``d{version}`` entry of every table family (``d{version}h``
         for a heal) from the per-turn ``metrics`` of the conversations it
-        touches: their conv state, their windows of every tier, their
-        blobs of every pack tier. A commit merges with what is committed at
-        ``state["version"]`` — the carried conv state (``carried``: the
-        ``last_turn_idx`` and ``last_ts_us`` columns of ``metrics``, null
-        for a new conversation) and the touched windows' rows — and keeps
-        the running totals. A heal holds its conversations' whole history,
-        so it has no carry and no previous rows, and it changes no window's
-        count or points, so the totals stand. Late data behind a committed
-        retention bound is dropped: it would be read-filtered and
-        eviction-eligible anyway, and admitting it would let the totals
-        drift from what reads see. Returns (conversations written, of them
-        out of order)."""
+        touches (``_turn_metrics``): their conv state, their windows of
+        every tier, their blobs of every pack tier. A commit merges with
+        what is committed at ``state["version"]`` — the carried last turns
+        (the ``_carried`` rows of ``metrics``) and the touched windows'
+        rows — and keeps the running totals. A heal holds its
+        conversations' whole history, so it has no carried rows and no
+        previous rows, and it changes no window's count or points, so the
+        totals stand. Late data behind a committed retention bound is
+        dropped: it would be read-filtered and eviction-eligible anyway,
+        and admitting it would let the totals drift from what reads see.
+        Returns (conversations written, of them out of order)."""
         bounds = state["retention_bounds"]
-        # conv state: each conversation's new last turn, plus the
-        # out-of-order flag (heal trigger, module doc): arriving turns at
-        # or before the carried last_turn_idx mean this conversation's
-        # derived latencies are provisional until heal(). The carried
-        # columns are constant per conversation, so they group with it:
-        # one aggregate over ``metrics``, no join.
-        carry_cols = ["last_turn_idx", "last_ts_us"] if carried else []
-        conv = metrics.groupBy("conv_id", *carry_cols).agg(
-            F.min("turn_idx").alias("_min_turn"),
+        # conv state: each conversation's new last turn, the latest of its
+        # carried and new turns, plus the out-of-order flag (heal trigger,
+        # module doc): a new turn at or before the carried last turn means
+        # this conversation's derived latencies are provisional until
+        # heal(). One aggregate over ``metrics``, which the lag window left
+        # clustered on conv_id.
+        carried = F.col("_carried")
+        conv = metrics.groupBy("conv_id").agg(
             F.max(F.struct("turn_idx", "ts_us")).alias("_l"),
-        )
-        if not carried:
-            conv = conv.withColumn("_ooo", F.lit(False))
-        else:
-            conv = conv.select(
-                "conv_id",
-                F.greatest(
-                    F.col("_l"),
-                    F.when(
-                        F.col("last_turn_idx").isNotNull(),
-                        F.struct(
-                            F.col("last_turn_idx").alias("turn_idx"),
-                            F.col("last_ts_us").alias("ts_us"),
-                        ),
-                    ),
-                ).alias("_l"),
-                F.coalesce(
-                    F.col("_min_turn") <= F.col("last_turn_idx"), F.lit(False)
-                ).alias("_ooo"),
-            )
-        conv = conv.select(
+            F.coalesce(
+                F.min(F.when(~carried, F.col("turn_idx")))
+                <= F.max(F.when(carried, F.col("turn_idx"))),
+                F.lit(False),
+            ).alias("_ooo"),
+        ).select(
             "conv_id",
             F.col("_l.turn_idx").alias("last_turn_idx"),
             F.col("_l.ts_us").alias("last_ts_us"),
@@ -716,7 +703,8 @@ class IncrementalRollup:
         # each window's latest previous row. Running totals: previous
         # committed totals + what this write itself observed per tier —
         # windows and points it wrote minus those of the rows it
-        # replaced. No re-read.
+        # replaced. No re-read. The carried turns are committed already.
+        metrics = metrics.filter(~carried)
         rows = _union([turn_rows(metrics, t) for t in TIERS]).filter(retained(bounds))
         out_obs = Observation()
         with self._phase(f"{tag} tiers"):
@@ -862,7 +850,7 @@ class IncrementalRollup:
                 "conv_id",
                 "left_semi",
             )
-        healed_m = slim_metrics(derive_turn_metrics(raw)).persist()
+        healed_m = _turn_metrics(raw)
         n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)
         healed_m.unpersist()
         state["healed_through"] = v
@@ -925,7 +913,7 @@ class IncrementalRollup:
         acct = write_driver_table(
             [{"swept_at_us": now_us, **r.asDict(), "tier": name} for name, r in rows],
             _SWEEP_SCHEMA,
-            os.path.join(self.work_dir, "retention", f"sweep_{now_us:020d}"),
+            os.path.join(self._base("retention"), f"sweep_{now_us:020d}"),
         )
         # a local relation of the rows: no job, no Python worker
         return self.spark.createDataFrame(acct)

@@ -29,10 +29,10 @@ from sac2mseed_spark.sources.transcripts import (
 # snapshot 3 arrives LATE: turns [20, 40) land after turns [40, 60)
 OOO_BOUNDS = [(0, 20), (40, 60), (20, 40), (60, 10_000)]
 # Spark jobs of the out-of-order commit of snapshot 3 plus the heal after
-# it (measured: 20, the same on repeated runs). Schema inference, a
+# it (measured: 19, the same on repeated runs). Schema inference, a
 # persisted frame, an exchange that is not shared or a Spark write of rows
 # the driver holds each adds a job.
-OOO_COMMIT_HEAL_JOBS = 20
+OOO_COMMIT_HEAL_JOBS = 19
 
 
 @pytest.fixture(scope="module")
@@ -403,6 +403,7 @@ def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jo
     assert per["commit d00000003 heal pending"] == per["commit d00000003 metrics"] == 0, per
     assert per[None] == 0, per
     assert 0 < per["commit d00000003 tiers"] <= 3, per
+    assert per["commit d00000003 state"] <= 5, per
     assert sum(per.values()) <= OOO_COMMIT_HEAL_JOBS, per
 
 
@@ -480,8 +481,8 @@ def test_commit_and_heal_persist_only_the_columns_the_writers_read(
     spark, ooo_snapshots, tmp_path, monkeypatch
 ):
     """The one frame each commit and each heal persists holds SLIM_COLS
-    (plus a commit's carried last turn), never the raw text, role or
-    tool columns."""
+    and the ``_carried`` flag of a commit's carried last turns, never the
+    raw text, role or tool columns."""
     from sac2mseed_spark.functions.metrics import SLIM_COLS
 
     persisted = []
@@ -497,7 +498,5 @@ def test_commit_and_heal_persist_only_the_columns_the_writers_read(
     inc = IncrementalRollup(spark, src, str(tmp_path / "w"), pack_tiers=("1m",))
     assert inc.process_pending() == len(OOO_BOUNDS)
     assert inc.heal() > 0
-    carried = SLIM_COLS + ["last_turn_idx", "last_ts_us"]
-    # the first commit has no carried state yet; the heal carries none
-    want = [SLIM_COLS] + [carried] * (len(OOO_BOUNDS) - 1) + [SLIM_COLS]
-    assert persisted == want
+    # every commit and the heal persist the same columns
+    assert persisted == [SLIM_COLS + ["_carried"]] * (len(OOO_BOUNDS) + 1)

@@ -55,6 +55,32 @@ def test_incremental_equals_full_recompute(spark, snapshots, tmp_path):
         assert got == want, f"tier {tier} diverges from batch recompute"
 
 
+def test_carried_turn_at_a_duplicate_ts_equals_full_recompute(spark, tmp_path):
+    """t_edge split between turn 0 and turn 1: each continued
+    conversation's carried last turn is its turn 0, whose ts its turn 1
+    repeats (a zero latency across the snapshots); conversations have one
+    or two turns, some with empty text. Every tier and the packed 1m tier
+    equal the batch path's."""
+    src = tmp_path / "edge"
+    t = generate_transcripts(spark, "t_edge")
+    for i, part in enumerate((F.col("turn_idx") < 1, F.col("turn_idx") >= 1), start=1):
+        t.filter(part).write.parquet(str(src / f"snap_{i:08d}"))
+    full_m = derive_turn_metrics(t)
+    # precondition: the tie spans the split
+    assert full_m.filter("turn_idx = 1 AND latency_us = 0").count() > 0
+    inc = IncrementalRollup(spark, str(src), str(tmp_path / "w"), pack_tiers=("1m",))
+    assert inc.process_pending() == 2
+    for tier in ("1m", "1h", "1d"):
+        got = _tiers_as_dict(inc.tier(tier))
+        want = _tiers_as_dict(rollup_from_turns(full_m, tier))
+        assert got == want, f"tier {tier} diverges from batch recompute"
+    cols = ["conv_id", "window_start_us", "n_points", "first_ts_us", "last_ts_us",
+            "x0", "xn", "payload", "crc32"]
+    got = inc.packed_tier("1m").select(*cols).collect()
+    want = pack_tier(full_m, "1m").select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_resume_after_partial_failure(spark, snapshots, tmp_path):
     """Kill between tier write and checkpoint commit -> rerun must not
     double-count (orphan version is overwritten)."""
@@ -186,10 +212,10 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
         # to a full-table merge.
         assert c["touched"] is not None, f"un-pruned chain read: {c['base']}"
         full = per_tier(orig(inc, c["base"], c["version"], c["keys"],
-                             tiers=c["tiers"]))
+                             state["healed_through"], tiers=c["tiers"]))
         got = per_tier(orig(inc, c["base"], c["version"], c["keys"],
-                            touched=c["touched"], touched_on=c["touched_on"],
-                            tiers=c["tiers"]))
+                            state["healed_through"], touched=c["touched"],
+                            touched_on=c["touched_on"], tiers=c["tiers"]))
         if (c["touched_on"] or c["keys"]) == c["keys"]:
             # window-keyed prune: the merge read is bounded, per tier, by
             # the keys it touches, and snapshot 3 (turns >= 60) touches a

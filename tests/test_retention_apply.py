@@ -10,6 +10,7 @@ logically.
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +58,35 @@ def by_packed_eviction_recorded(sweep_rows):
     sweep rows exist for packed tiers, not just aggregate ones."""
     packed = {r for r in sweep_rows if r[0] == "packed:1m"}
     return len(packed) == 1 and next(iter(packed))[2] > 0
+
+
+def test_metrics_and_retention_tables_read_without_a_job(spark, snapshots, tmp_path, phase_jobs):
+    """``metrics_table`` and ``retention_table`` start no job and return
+    the schema Spark infers for their dirs; a metrics dir written before a
+    column existed reads that column as null."""
+    src, _t, lo_us, hi_us = snapshots
+    now_us, hz = _horizons(lo_us, hi_us)
+    work = str(tmp_path / "w")
+    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+    inc.process_pending()
+    inc.apply_retention(now_us, hz)
+    inc.apply_retention(now_us + DAY_US, hz)
+    got = {}
+    per = phase_jobs(
+        lambda: got.update(metrics=inc.metrics_table(), retention=inc.retention_table())
+    )
+    assert per == {}, per
+    for family, glob in (("metrics", "snap_*"), ("retention", "sweep_*")):
+        inferred = spark.read.parquet(os.path.join(work, family, glob)).schema
+        assert got[family].schema == inferred, family
+    assert got["retention"].count() == 2 * 4  # three tiers and packed:1m, twice
+    # snapshot 1's metrics as written before ``chain_len`` existed
+    d = os.path.join(work, "metrics", "snap_00000001")
+    (f,) = [n for n in os.listdir(d) if n.endswith(".parquet")]
+    pq.write_table(pq.read_table(os.path.join(d, f)).drop(["chain_len"]), os.path.join(d, f))
+    chain = {(r["snapshot_id"], r["chain_len"]) for r in inc.metrics_table().collect()}
+    assert {c for sid, c in chain if sid == 1} == {None}
+    assert None not in {c for sid, c in chain if sid != 1}
 
 
 def test_apply_retention_accounting_and_reads(spark, snapshots, tmp_path, phase_jobs):
