@@ -66,7 +66,8 @@ def token_count_col(text_col="text", single_space: bool = False):
 def derive_turn_metrics(
     transcripts: DataFrame, single_space_tokens: bool = False
 ) -> DataFrame:
-    """transcripts -> + (ts_us, latency_us, token_count, text_len).
+    """transcripts -> + (ts_us, latency_us, token_count, text_len): the
+    stateless values (``turn_values``), then the latency (``with_latency``).
 
     latency_us is NULL for each conversation's first turn (no predecessor),
     mirroring the reference's "no gap before the first record".
@@ -75,22 +76,35 @@ def derive_turn_metrics(
     lag window on purpose: a downstream projection that drops ``text`` then
     prunes it below the window's conv_id exchange, so the shuffle carries
     ~60 B/turn of metrics instead of the full text bytes — at 100 TB the
-    text column is ~3x everything else combined (see slim_metrics).
+    text column is ~3x everything else combined (see slim_metrics). A
+    caller that puts a window of its own between the two halves keeps that
+    property by calling them itself (plans/pipeline.py).
 
     ``single_space_tokens`` selects the corpus-audited zero-regex
     tokenizer (token_count_col) — same values on single-space corpora,
     ~2x cheaper in the job's hottest map stage.
     """
-    w = turn_window()
-    ts_us = ts_us_col("ts")
+    return with_latency(turn_values(transcripts, single_space_tokens))
+
+
+def turn_values(transcripts: DataFrame, single_space_tokens: bool = False) -> DataFrame:
+    """transcripts -> + (ts_us, token_count, text_len): the metrics of a
+    turn on its own, no window."""
     return (
-        transcripts.withColumn("ts_us", ts_us)
+        transcripts.withColumn("ts_us", ts_us_col("ts"))
         .withColumn(
             "token_count",
             token_count_col(single_space=single_space_tokens).cast("long"),
         )
         .withColumn("text_len", F.length("text").cast("long"))
-        .withColumn("latency_us", F.col("ts_us") - F.lag("ts_us").over(w))
+    )
+
+
+def with_latency(turns: DataFrame) -> DataFrame:
+    """``turn_values`` output -> + latency_us, the gap to the previous turn
+    of the conversation (``turn_window`` order)."""
+    return turns.withColumn(
+        "latency_us", F.col("ts_us") - F.lag("ts_us").over(turn_window())
     )
 
 

@@ -11,6 +11,16 @@ the same pass. Chunk boundaries are a pure function of turn_idx
 (``turn_idx // CHUNK_POINTS``), so the bytes never depend on the physical
 partitioning (tests assert).
 
+The same pass repacks (plans/pipeline.py's commit): a conversation's
+previous blobs of every chain entry, ranked (``RANK``, ``n_points``,
+``payload``, ``xn``), ride in the sorted rows with its new points, and the
+kernel then carries whole (tier, conv_id) groups across batches. Per
+group it takes each window's highest-ranked blob, numbers its old points
+from the ``n_points`` of the earlier windows' latest blobs, decodes —
+with the Xn check — only the windows that hold a new point, and packs
+them with the new points (``_repack_points``). Resolve, decode and encode
+share one exchange, one sort and one vectorized pass.
+
 Windows are self-delimiting (each chunk re-anchors at its own X0) so there
 is NO cross-window or cross-chunk state — the property that makes packing
 embarrassingly parallel and resume-safe (SURVEY.md §7 phase 2 decision).
@@ -70,7 +80,7 @@ from pyspark.sql.types import (
 from .. import TIERS
 from ..codec import CHUNK_POINTS, blob_head
 from ..codec.vectorized import encode_chunks_raw, put_varints, varint_len
-from .rollup import window_start_col
+from .rollup import RANK, window_start_col
 
 # value streams packed per window, in order (stream 0 carries the x0/xn
 # invariant columns). NULL latency (first turn) packs as NaN bits.
@@ -108,20 +118,22 @@ def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     return rep + np.arange(total, dtype=np.int64)
 
 
-def _keys(tbl) -> list[str]:
-    return [k for k in _BLOB_KEYS if k in tbl.column_names]
+def _keys(tbl, keys=_BLOB_KEYS) -> list[str]:
+    return [k for k in keys if k in tbl.column_names]
 
 
-def _conv_ws_change(tbl) -> np.ndarray:
-    """Boolean array: row starts a new ([tier,] conv_id, window_start_us)
-    group. Comparison happens inside Arrow — no per-row python strings."""
+def _key_change(tbl, keys=_BLOB_KEYS) -> np.ndarray:
+    """Boolean array: row starts a new group of the ``keys`` columns
+    ``tbl`` carries (default: a window, ([tier,] conv_id,
+    window_start_us)). Comparison happens inside Arrow — no per-row
+    python strings."""
     import pyarrow.compute as pc
 
     n = tbl.num_rows
     new = np.ones(n, dtype=bool)
     if n > 1:
         new[1:] = False
-        for k in _keys(tbl):
+        for k in _keys(tbl, keys):
             col = tbl.column(k).chunk(0)
             new[1:] |= pc.not_equal(
                 col.slice(1, n - 1), col.slice(0, n - 1)
@@ -151,7 +163,7 @@ def _run_block_arrow(tbl):
         for s in STREAMS
     ]
 
-    new_win = _conv_ws_change(tbl)
+    new_win = _key_change(tbl)
     cp = turn // CHUNK_POINTS
     new_chunk = new_win.copy()
     if n > 1:
@@ -203,7 +215,7 @@ def _run_block_arrow(tbl):
     )
     first = pa.array(win_starts)
     conv_out = tbl.column("conv_id").chunk(0).take(first)
-    tier = [tbl.column("tier").chunk(0).take(first)] if "tier" in _keys(tbl) else []
+    tier = [tbl.column("tier").chunk(0).take(first)] if "tier" in tbl.column_names else []
     return pa.RecordBatch.from_arrays(
         [
             conv_out,
@@ -229,38 +241,124 @@ def _concat(parts):
     return pa.concat_tables([t for t in parts if t.num_rows]).combine_chunks()
 
 
-def _row_key(tbl, i: int) -> tuple:
-    return tuple(tbl.column(k)[i].as_py() for k in _keys(tbl))
+def _row_key(tbl, i: int, keys) -> tuple:
+    return tuple(tbl.column(k)[i].as_py() for k in _keys(tbl, keys))
 
 
 def _pack_flat_arrow(batches) -> Iterator:
     """One pass over a partition's sorted flat rows (Arrow RecordBatches).
 
-    The open window group (the rows from the last group start on) is kept
-    as a list of batch slices and concatenated once, when a later batch
-    closes it. Each batch is scanned for group starts once, plus its first
-    row against the carried last row, so a window spanning many batches
-    costs time linear in its rows."""
+    The open group (the rows from the last group start on) is kept as a
+    list of batch slices and concatenated once, when a later batch closes
+    it. A group is a window, or with previous blobs among the rows (a
+    repack, ``_repack_points``) a whole (tier, conv_id): its windows'
+    point offsets need every earlier window of it. Each batch is scanned
+    for group starts once, plus its first row against the carried last
+    row, so a group spanning many batches costs time linear in its rows."""
     import pyarrow as pa
 
-    carry = []  # single-chunk table slices of the open window group
+    carry = []  # single-chunk table slices of the open group
+    keys = _BLOB_KEYS
     for rb in batches:
         if rb.num_rows == 0:
             continue
         tbl = pa.Table.from_batches([rb])
-        new = _conv_ws_change(tbl)
+        if "payload" in tbl.column_names:
+            keys = ("tier", "conv_id")
+        new = _key_change(tbl, keys)
         if carry:
-            new[0] = _row_key(tbl, 0) != _row_key(carry[-1], -1)
+            new[0] = _row_key(tbl, 0, keys) != _row_key(carry[-1], -1, keys)
         starts = np.flatnonzero(new)
         if not len(starts):
             carry.append(tbl)
             continue
         start = int(starts[-1])
         done, carry = carry + [tbl.slice(0, start)], [tbl.slice(start)]
-        if any(t.num_rows for t in done):
-            yield _run_block_arrow(_concat(done))
-    if carry:
-        yield _run_block_arrow(_concat(carry))
+        yield from _pack_block(done)
+    yield from _pack_block(carry)
+
+
+def _pack_block(parts) -> Iterator:
+    """The blobs of the closed groups in the table slices ``parts``."""
+    if not any(t.num_rows for t in parts):
+        return
+    tbl = _concat(parts)
+    if "payload" in tbl.column_names:
+        tbl = _repack_points(tbl)
+    if tbl.num_rows:
+        yield _run_block_arrow(tbl)
+
+
+def _repack_points(tbl):
+    """The points to pack of the whole (tier, conv_id) groups ``tbl``, a
+    sorted union of new points and the groups' previous blobs (``RANK``,
+    ``n_points``, ``payload``, ``xn``; a blob row has no point columns).
+
+    Each window's latest blob is its highest-``RANK`` one. A window that
+    holds a new point decodes its latest blob (Xn-checked) and numbers
+    the old points from the summed ``n_points`` of the latest blobs of
+    the group's earlier windows — their turn_idx, as windows are
+    time-ordered and turn_idx dense. Windows without a new point are not
+    decoded and pack nothing. The result has the point columns only, in
+    ``pack_points``' sort order."""
+    import pyarrow as pa
+
+    from ..codec.decode_vec import check_xn, decode_concat
+
+    def take(name, rows):
+        return tbl.column(name).chunk(0).take(pa.array(rows))
+
+    def arr(col):
+        return col.to_numpy(zero_copy_only=False)
+
+    wid = np.cumsum(_key_change(tbl)) - 1
+    gid = np.cumsum(_key_change(tbl, ("tier", "conv_id"))) - 1
+    is_blob = arr(tbl.column("payload").chunk(0).is_valid())
+    bi, pi = np.flatnonzero(is_blob), np.flatnonzero(~is_blob)
+    by_rank = bi[np.lexsort((arr(take(RANK, bi)), wid[bi]))]
+    last = np.ones(len(by_rank), dtype=bool)
+    last[:-1] = wid[by_rank][1:] != wid[by_rank][:-1]
+    latest = by_rank[last]
+    # each latest blob's first turn_idx: the points of its group's
+    # earlier latest blobs
+    npts = arr(take("n_points", latest))
+    before = np.cumsum(npts) - npts
+    g = gid[latest]
+    g_start = np.ones(len(g), dtype=bool)
+    g_start[1:] = g[1:] != g[:-1]
+    off = before - np.maximum.accumulate(np.where(g_start, before, 0))
+    touched = np.isin(wid[latest], wid[pi])
+    blobs, off = latest[touched], off[touched]
+
+    blob_pts = np.zeros(0, dtype=np.int64)
+    ts_old, old = blob_pts, [np.zeros(0, dtype=np.uint64) for _ in STREAMS]
+    if len(blobs):
+        data, starts, ends = _binary_spans(take("payload", blobs))
+        blob_pts, point_off, ts_old, old = decode_concat(data, starts, ends)
+        check_xn(old, point_off, arr(take("xn", blobs)).view(np.uint64))
+    first = np.repeat(off - np.cumsum(blob_pts) + blob_pts, blob_pts)
+    rows = np.concatenate([np.repeat(blobs, blob_pts), pi])
+    turn = np.concatenate([first + np.arange(len(ts_old)), arr(take("turn_idx", pi))])
+    ts = np.concatenate([ts_old, arr(take("ts_us", pi))])
+    vals = [np.concatenate([v.view(np.float64), arr(take(c, pi))]) for v, c in zip(old, STREAMS)]
+    valid = [
+        np.concatenate([np.ones(len(ts_old), bool), arr(take(c, pi).is_valid())])
+        for c in STREAMS
+    ]
+    # pack_points' order: window, turn_idx, ts_us, then each stream with
+    # nulls first and NaN after every number (lexsort: last key first)
+    order = np.lexsort(
+        [k for v, ok in zip(vals[::-1], valid[::-1]) for k in (v, ok)] + [ts, turn, wid[rows]]
+    )
+    rows = pa.array(rows[order])
+    return pa.table(
+        {
+            **{k: tbl.column(k).chunk(0).take(rows) for k in _keys(tbl)},
+            "turn_idx": turn[order],
+            "ts_us": ts[order],
+            **{c: v[order] for c, v in zip(STREAMS, vals)},
+        }
+    )
 
 
 def tier_points(metrics: DataFrame, tier: str) -> DataFrame:
@@ -283,7 +381,9 @@ def pack_points(
     """Flat points of ANY tiers (``tier_points`` rows) -> one packed blob
     per (tier, conv_id, window_start_us), ``tier`` last: one exchange and
     one kernel pass whatever the number of tiers. ``clustered_by_conv``
-    and ``assume_sorted`` as in ``pack_tier``."""
+    and ``assume_sorted`` as in ``pack_tier``. Rows may also hold
+    previous blobs to repack (module doc); then only the windows with a
+    new point are packed."""
     if not (clustered_by_conv or assume_sorted):
         flat = flat.repartition("conv_id")
     if not assume_sorted:
@@ -352,12 +452,7 @@ def _binary_spans(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return data, off[:-1], off[1:]
 
 
-def _decode_partition_arrow(
-    batches,
-    with_pos: bool = False,
-    pos_offset: str | None = None,
-    keep: tuple[str, ...] = (),
-) -> "Iterator":
+def _decode_partition_arrow(batches, with_pos: bool = False) -> "Iterator":
     """Vectorized unpack of a whole Arrow batch of payload blobs: one
     decode_concat call per batch (codec/decode_vec.py wavefront kernel),
     output columns built from flat numpy arrays."""
@@ -385,22 +480,12 @@ def _decode_partition_arrow(
         out_names += [f"{s}_f" for s in STREAMS]
         if with_pos:
             pos = np.arange(len(ts_out)) - np.repeat(point_off[:-1], blob_pts)
-            if pos_offset is not None:
-                pos += rb.column(names.index(pos_offset)).to_numpy()[idx]
             arrays.append(pa.array(pos))
             out_names.append("pos")
-        for c in keep:
-            arrays.append(rb.column(names.index(c)).take(pa.array(idx)))
-        out_names += keep
         yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
 
-def unpack_tier(
-    packed: DataFrame,
-    with_pos: bool = False,
-    pos_offset: str | None = None,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def unpack_tier(packed: DataFrame, with_pos: bool = False) -> DataFrame:
     """Inverse of pack_tier: explode blobs back into per-point rows with the
     Xn integrity check (unpackdata.c:556-561 analogue) enforced per window.
 
@@ -408,22 +493,10 @@ def unpack_tier(
     unpack suite is larger than its pack suite, libmseed/unpackdata.c):
     one mapInArrow pass, whole-batch numpy wavefront decode, zero per-point
     Python. ``with_pos=True`` also emits each point's index within its
-    blob — the deterministic intra-window order repack relies on — plus,
-    with ``pos_offset``, that long column of its blob (e.g. the window's
-    first turn index, so ``pos`` is the point's turn index). The blob
-    columns named in ``keep`` (e.g. ``tier``) follow, repeated on each of
-    its points."""
-    with_pos = with_pos or pos_offset is not None
-    cols = ["conv_id", "window_start_us", "payload", "xn"]
-    if pos_offset is not None:
-        cols.append(pos_offset)
-    schema = _POINT_SCHEMA_POS if with_pos else _POINT_SCHEMA
-    schema = StructType(schema.fields + [packed.schema[c] for c in keep])
-    return packed.select(*cols, *keep).mapInArrow(
-        lambda batches: _decode_partition_arrow(
-            batches, with_pos, pos_offset, keep
-        ),
-        schema=schema,
+    blob — the deterministic intra-window order repack relies on."""
+    return packed.select("conv_id", "window_start_us", "payload", "xn").mapInArrow(
+        lambda batches: _decode_partition_arrow(batches, with_pos),
+        schema=_POINT_SCHEMA_POS if with_pos else _POINT_SCHEMA,
     )
 
 

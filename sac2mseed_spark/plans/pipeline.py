@@ -27,8 +27,8 @@ one tier aggregate, ``merge_tiers``, over the previous rows of the
 touched windows ∪ the delta's turns as one-point rows of every tier
 (operators/rollup.py). A chain is resolved in ONE scan of its entries
 (of a window-keyed chain, of the ``tier={t}`` leaf dirs the read needs),
-each row ranked by the entry directory it was read from; the tier
-resolve is fused into the MERGE (below).
+each row ranked by the entry directory it was read from; a commit's
+resolves are fused into the exchanges of their consumers (below).
 Per-snapshot write volume is therefore proportional to the delta, not
 the table — the reference merges into only the touched trace the same way
 (/root/reference/libmseed/tracelist.c:135-606 fast paths), and an Iceberg
@@ -40,13 +40,14 @@ back into one base directory.
 Cross-snapshot state (libmseed's StreamState, libmseed.h:458-465): each
 snapshot also writes the touched conversations' new ``(conv_id,
 last_turn_idx, last_ts_us)``. The next commit unions each of its
-conversations' last turn into the snapshot's turns as a ``_carried`` row,
-so the metrics' own lag window gives the first continued turn its true
-inter-turn latency — exactly how record N+1's first Steim difference is
-seeded from record N's last sample (pack.c:1003-1039). The writers drop
-the carried rows after the conv state has read them. With that carry, the
-merged tiers are bit-identical to a full batch recompute over all
-snapshots for append-ordered input (tests assert).
+conversations' latest last turn into the snapshot's turns as a
+``_carried`` row, so the metrics' own lag window gives the first
+continued turn its true inter-turn latency — exactly how record N+1's
+first Steim difference is seeded from record N's last sample
+(pack.c:1003-1039). The writers drop the carried rows after the conv
+state has read them. With that carry, the merged tiers are
+bit-identical to a full batch recompute over all snapshots for
+append-ordered input (tests assert).
 
 Out-of-order input and the heal pass (the mst_groupheal analogue,
 /root/reference/src/../libmseed/traceutils.c:776-915): a snapshot whose
@@ -115,28 +116,34 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
     commit and a heal's ``read`` start no job. Their semi-joins take
     plain key columns: a left-semi join needs no unique keys, and a
     ``distinct`` would be a shuffle;
-  * the tier resolve is fused into the MERGE: the resolve returns the
-    touched rows of EVERY chain entry with their entry rank and no
-    latest-wins window, and ``merge_tiers`` takes each window's
-    latest previous row per statistic (``max_by(value, rank)``) in the
-    same partial + final hash aggregate that merges the turn rows — one
-    exchange on the window keys where a window and the aggregate took
-    two;
+  * every commit resolve is fused into its consumer's exchange: the
+    resolve returns the touched rows of EVERY chain entry with their
+    entry rank and no latest-wins window. ``merge_tiers`` takes each
+    window's latest previous row per statistic (``max_by(value, rank)``)
+    in the same partial + final hash aggregate that merges the turn rows
+    — one exchange on the window keys where a window and the aggregate
+    took two; the state and packed resolves follow;
+  * the heal flags are read by the driver (pyarrow: a few small files),
+    and the snapshots' scan filters on the flagged conv_ids — no join;
   * one persisted frame per commit and per heal (``_turn_metrics``): the
     per-turn delta with its carried turns, only the columns the writers
-    read (``SLIM_COLS``) plus the ``_carried`` flag; the conv state is
-    one ``groupBy("conv_id")`` over it, which needs no exchange because
-    the cache is hash-partitioned on conv_id by the metrics' lag window,
+    read (``SLIM_COLS``) plus the ``_carried`` flag. The state read is
+    fused into it like the tier resolve: it returns every entry's state
+    rows of the touched conversations, ranked, and a ``max(RANK)``
+    window over conv_id keeps each conversation's latest carried row —
+    in the lag window's exchange and sort, with the stateless metrics
+    computed below both so no ``text`` is shuffled. The conv state is
+    one ``groupBy("conv_id")`` over the frame, which needs no exchange
+    because the cache is hash-partitioned on conv_id by those windows,
     and no join: the carry is a row of the frame, not a column;
-  * the packed chain is resolved once for every pack tier, clustered on
-    conv_id, so its latest-wins window and the cumulative point-offset
-    window that restores old points' turn_idx (per tier and
-    conversation) share one exchange, and the offset and the tier ride
-    through one decode (``unpack_tier(pos_offset=..., keep=("tier",))``)
-    instead of a join. The union of old and new points of every pack
-    tier then reaches ONE pack (``pack_points``) through its own conv_id
-    exchange: one plan shape, whatever the optimiser makes of the union,
-    and as many jobs for two pack tiers as for one.
+  * the packed chain is resolved into the pack the same way: every
+    entry's blobs of the touched conversations, ranked, of every pack
+    tier, ride in one union with the delta's points through ONE pack
+    (``pack_points``) — one conv_id exchange, one sort, one kernel pass
+    that takes each window's latest blob, restores its old points'
+    turn_idx from the earlier windows' point counts and decodes only
+    the windows with a new point. One plan shape, and as many jobs for
+    two pack tiers as for one.
 
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
@@ -168,13 +175,14 @@ from contextlib import contextmanager
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import TIERS
-from ..functions.metrics import SLIM_COLS, derive_turn_metrics
-from ..operators.pack import pack_points, tier_points, unpack_tier
+from ..functions.metrics import SLIM_COLS, turn_values, turn_window, with_latency
+from ..operators.pack import pack_points, tier_points
 from ..operators.retention import (
     retained,
     retention_bounds,
@@ -234,11 +242,15 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 def _turn_metrics(raw: DataFrame, carry: DataFrame | None = None) -> DataFrame:
     """The one frame a commit or a heal persists: the per-turn metrics of
     the transcript rows ``raw``, only the columns the writers read
-    (``SLIM_COLS``) and ``_carried``. Each row of ``carry`` (conv state:
-    conv_id, last_turn_idx, last_ts_us) is added to the turns as its
-    conversation's committed last turn, flagged ``_carried``, so the lag
-    window gives the first continued turn its true latency. The raw text,
-    role and tool are pruned below that window."""
+    (``SLIM_COLS``) and ``_carried``. ``carry`` holds the conv state rows
+    of every chain entry, ranked (conv_id, last_turn_idx, last_ts_us,
+    ``RANK``); each conversation's latest one, its highest rank, is added
+    to the turns as its committed last turn, flagged ``_carried``, so the
+    lag window gives the first continued turn its true latency. The latest
+    carried row is picked by a window over conv_id in the lag window's
+    order, so the two windows share one exchange and one sort; the
+    stateless metrics are computed below both, so the raw text, role and
+    tool are pruned below that exchange."""
     turns = raw.withColumn("_carried", F.lit(False))
     if carry is not None:
         last = carry.select(
@@ -246,9 +258,18 @@ def _turn_metrics(raw: DataFrame, carry: DataFrame | None = None) -> DataFrame:
             F.col("last_turn_idx").alias("turn_idx"),
             F.timestamp_micros("last_ts_us").cast(raw.schema["ts"].dataType).alias("ts"),
             F.lit(True).alias("_carried"),
+            RANK,
         )
         turns = turns.unionByName(last, allowMissingColumns=True)
-    return derive_turn_metrics(turns).select(*SLIM_COLS, "_carried").persist()
+    turns = turn_values(turns)
+    if carry is not None:
+        conv = turn_window().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        turns = (
+            turns.withColumn("_latest", F.max(RANK).over(conv))
+            .filter(~F.col("_carried") | (F.col(RANK) == F.col("_latest")))
+            .drop(RANK, "_latest")
+        )
+    return with_latency(turns).select(*SLIM_COLS, "_carried").persist()
 
 
 def _write_by_tier(df: DataFrame, path: str) -> None:
@@ -448,9 +469,7 @@ class IncrementalRollup:
         the scan down to the rows a merge needs, so the rows shuffled are
         delta-sized. ``touched_on`` may be a subset of the keys (e.g. just
         conv_id when the caller needs every window of the touched
-        conversations — the packed re-encode path); the rows are then
-        clustered on it, so the latest-wins window and a caller's window
-        over ``touched_on`` share one exchange.
+        conversations — the packed re-encode path).
 
         A window-keyed family (``keys`` lead with ``tier``) is read from
         the ``tier={t}`` leaf dirs of its entries, only those of ``tiers``
@@ -489,8 +508,6 @@ class IncrementalRollup:
             df = df.join(touched, touched_on or keys, "left_semi")
         if ranked:
             return df
-        if touched_on:
-            df = df.repartition(*touched_on)
         w = Window.partitionBy(*keys).orderBy(F.desc(RANK))
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -545,16 +562,19 @@ class IncrementalRollup:
 
     def _read_listed(self, family: str, prefix: str) -> DataFrame | None:
         """The ``{prefix}*`` dirs of ``family``, a table written with
-        pyarrow (one dir per commit or sweep; none yet: None), read without
-        a job. The dirs are listed newest first, so the schema comes from
-        the newest footer and a dir written before a column existed reads
-        that column as null."""
+        pyarrow (one dir per commit or sweep; none yet: None), read by the
+        driver with pyarrow into a local relation: no job to build or to
+        collect, however many dirs there are. The schema is the newest
+        dir's, and a dir written before a column existed reads that column
+        as null."""
         p = self._base(family)
         names = os.listdir(p) if os.path.isdir(p) else []
         dirs = sorted((n for n in names if n.startswith(prefix)), reverse=True)
         if not dirs:
             return None
-        return read_parquet(self.spark, *(os.path.join(p, n) for n in dirs))
+        tables = [pq.read_table(os.path.join(p, n)) for n in dirs]
+        table = pa.concat_tables(tables, promote_options="default")
+        return self.spark.createDataFrame(table.select(tables[0].schema.names))
 
     # -- processing -----------------------------------------------------
     def process_pending(self) -> int:
@@ -586,7 +606,8 @@ class IncrementalRollup:
         # turn joins the snapshot as a row of its own, so the metrics' lag
         # window seeds the first continued turn's latency from it. The
         # state read is delta-sized too: only the snapshot's own
-        # conversations are resolved down the chain.
+        # conversations are read down the chain, every entry's row ranked
+        # (``_turn_metrics`` keeps the latest).
         with self._phase(f"{tag} state read"):
             carry = self._resolve_chain(
                 self._base("state"),
@@ -594,6 +615,7 @@ class IncrementalRollup:
                 _CONV_KEYS,
                 touched=raw.select("conv_id"),
                 healed_through=state["healed_through"],
+                ranked=True,
             )
         delta_m = _turn_metrics(raw, carry)
         _, ooo_convs = self._write_entries(state, snap_id, tag, delta_m)
@@ -738,53 +760,36 @@ class IncrementalRollup:
         self, state: dict, version: int, metrics: DataFrame, heal: bool
     ) -> None:
         """Pack every pack tier's touched windows in one write. A commit
-        re-encodes only the windows its delta touches (class doc), from
-        one chain resolve and one decode of every pack tier at
-        ``state["version"]``; a heal packs its conversations' whole
-        history. The points of all pack tiers go through one pack."""
+        re-encodes only the windows its delta touches (class doc): the
+        touched conversations' blobs of every chain entry, ranked, ride
+        with the new points into the pack, whose kernel picks each
+        window's latest blob, numbers its old points and decodes only the
+        windows with a new point (operators/pack.py); a heal packs its
+        conversations' whole history. The points of all pack tiers go
+        through one pack."""
         bounds = state["retention_bounds"]
         # same retention drop as the aggregate tiers
         pts = _union([tier_points(metrics, t) for t in self.pack_tiers]).filter(
             retained(bounds)
         )
-        # chain read pruned to the delta's CONVERSATIONS (semi-join below
-        # the latest-wins window): all windows of a touched conversation
-        # are needed to restore old points' turn_idx from cumulative
-        # n_points — a metadata scan; only the touched windows' payloads
-        # are decoded below
+        # chain read pruned to the delta's CONVERSATIONS: all windows of a
+        # touched conversation are needed to restore old points' turn_idx
+        # from cumulative n_points; only the touched windows' payloads are
+        # decoded
         prev = None if heal else self._resolve_chain(
             self._base("packed"),
             state["version"],
             _WINDOW_KEYS,
-            touched=metrics.select("conv_id").distinct(),
+            touched=metrics.select("conv_id"),
             touched_on=["conv_id"],
             bounds=bounds,
             healed_through=state["healed_through"],
             tiers=self.pack_tiers,
+            ranked=True,
         )
         if prev is not None:
-            # cumulative point count of the conversation's earlier windows
-            # of the tier: the turn index of each window's first point (the
-            # resolve is clustered on conv_id, so this window needs no
-            # exchange of its own)
-            woff = (
-                Window.partitionBy("tier", "conv_id")
-                .orderBy("window_start_us")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            old_touched = prev.withColumn(
-                "_off", F.coalesce(F.sum("n_points").over(woff), F.lit(0))
-            ).join(pts.select(*_WINDOW_KEYS), _WINDOW_KEYS, "left_semi")
-            old_pts = unpack_tier(old_touched, pos_offset="_off", keep=("tier",))
-            pts = old_pts.select(
-                "tier",
-                "conv_id",
-                "window_start_us",
-                F.col("pos").alias("turn_idx"),
-                "ts_us",
-                F.col("latency_us_f").alias("latency_us"),
-                F.col("token_count_f").alias("token_count"),
-            ).unionByName(pts)
+            blobs = prev.select(*_WINDOW_KEYS, RANK, "n_points", "payload", "xn")
+            pts = pts.unionByName(blobs, allowMissingColumns=True)
         _write_by_tier(
             pack_points(pts), self._delta_path(self._base("packed"), version, heal)
         )
@@ -842,14 +847,14 @@ class IncrementalRollup:
             return 0
         tag = f"heal d{v:08d}"
         snap_paths = [p for sid, p in list_snapshots(self.input_dir) if sid <= v]
-        # a left-semi join needs no unique keys: a conversation flagged in
-        # several pending dirs (or appended twice) is healed once
+        # the flags are few (the flagged conversations) and small files,
+        # most written by the driver itself: the driver reads them, and the
+        # snapshots' scan filters on the list. A conversation flagged in
+        # several pending dirs (or appended twice) is healed once.
+        flags = [pq.read_table(d, columns=["conv_id"])["conv_id"] for d in pend_dirs]
+        flagged = sorted({c for f in flags for c in f.to_pylist()})
         with self._phase(f"{tag} read"):
-            raw = read_parquet(self.spark, *snap_paths).join(
-                read_parquet(self.spark, *pend_dirs).select("conv_id"),
-                "conv_id",
-                "left_semi",
-            )
+            raw = read_parquet(self.spark, *snap_paths).filter(F.col("conv_id").isin(flagged))
         healed_m = _turn_metrics(raw)
         n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)
         healed_m.unpersist()

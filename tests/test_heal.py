@@ -29,10 +29,10 @@ from sac2mseed_spark.sources.transcripts import (
 # snapshot 3 arrives LATE: turns [20, 40) land after turns [40, 60)
 OOO_BOUNDS = [(0, 20), (40, 60), (20, 40), (60, 10_000)]
 # Spark jobs of the out-of-order commit of snapshot 3 plus the heal after
-# it (measured: 19, the same on repeated runs). Schema inference, a
+# it (measured: 15, the same on repeated runs). Schema inference, a
 # persisted frame, an exchange that is not shared or a Spark write of rows
 # the driver holds each adds a job.
-OOO_COMMIT_HEAL_JOBS = 19
+OOO_COMMIT_HEAL_JOBS = 15
 
 
 @pytest.fixture(scope="module")
@@ -381,11 +381,13 @@ def _stage_upto(src, staged, n):
 def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jobs):
     """The out-of-order commit and the heal after it stay within the job
     budget, and every job is described. The heal's ``read`` phase starts
-    no job (its reads take their schema from a footer, and the flagged
-    conversations semi-join the snapshots without a distinct); neither do
-    the commit's heal flags and ``metrics/`` rows, which the driver
-    writes; the commit's tier MERGE resolves the previous rows in its own
-    aggregate, so its ``tiers`` phase needs at most 3 jobs."""
+    no job (its reads take their schema from a footer, and the driver
+    reads the flagged conversations itself); neither do the commit's heal
+    flags and ``metrics/`` rows, which the driver writes. Each commit
+    resolve shares its consumer's exchange: the tier MERGE's aggregate
+    (``tiers`` ≤ 3 jobs), the lag window (``state`` ≤ 4) and the pack
+    (``pack`` ≤ 3); the heal scans the snapshots with the flagged
+    conv_ids as a filter, no join (``state`` ≤ 3)."""
     src, _ = ooo_snapshots
     staged = str(tmp_path / "staged")
     _stage_upto(src, staged, 2)
@@ -403,7 +405,9 @@ def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jo
     assert per["commit d00000003 heal pending"] == per["commit d00000003 metrics"] == 0, per
     assert per[None] == 0, per
     assert 0 < per["commit d00000003 tiers"] <= 3, per
-    assert per["commit d00000003 state"] <= 5, per
+    assert per["commit d00000003 state"] <= 4, per
+    assert per["commit d00000003 pack"] <= 3, per
+    assert per["heal d00000003 state"] <= 3, per
     assert sum(per.values()) <= OOO_COMMIT_HEAL_JOBS, per
 
 
@@ -458,9 +462,9 @@ def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path, ph
 
 
 def test_two_pack_tiers_pack_phase_job_budget(spark, ooo_snapshots, tmp_path, phase_jobs):
-    """One resolve, one decode and one pack serve every pack tier: with
-    two pack tiers the out-of-order commit's ``pack`` phase runs as many
-    jobs as with one (measured: 5), and the heal's one."""
+    """One resolve and one pack serve every pack tier: with two pack
+    tiers the out-of-order commit's ``pack`` phase runs as many jobs as
+    with one (measured: 3), and the heal's one."""
     src, _ = ooo_snapshots
     staged = str(tmp_path / "staged")
     _stage_upto(src, staged, 2)
@@ -473,7 +477,7 @@ def test_two_pack_tiers_pack_phase_job_budget(spark, ooo_snapshots, tmp_path, ph
         assert inc.heal() > 0
 
     per = phase_jobs(commit_and_heal)
-    assert 0 < per["commit d00000003 pack"] <= 5, per
+    assert 0 < per["commit d00000003 pack"] <= 3, per
     assert per["heal d00000003 pack"] <= 1, per
 
 

@@ -312,6 +312,47 @@ def test_commit_read_phases_start_no_job(spark, snapshots, tmp_path, phase_jobs)
         assert per[f"{tag} read"] == per[f"{tag} state read"] == 0, per
 
 
+def _shuffled_columns(df):
+    """The columns of every shuffle exchange in ``df``'s physical plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            cols = node.output()
+            out.append({cols.apply(i).name() for i in range(cols.size())})
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def test_commit_state_exchange_shuffles_no_text(spark, snapshots, tmp_path, monkeypatch):
+    """A commit with carried turns persists a frame with ONE exchange: the
+    window that keeps each conversation's latest carried row shares it
+    with the lag window. The turns' token counts are computed below it,
+    so it carries no ``text``."""
+    shuffled = []
+    cls = type(spark.range(1))
+    persist = cls.persist
+
+    def spy(self, *args, **kwargs):
+        shuffled.append(_shuffled_columns(self))
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    src, _ = snapshots
+    inc = IncrementalRollup(spark, src, str(tmp_path / "w"))
+    assert inc.process_pending() == 3
+    assert len(shuffled) == 3
+    for exchanges in shuffled[1:]:  # the commits with carried turns
+        assert len(exchanges) == 1, exchanges
+        (cols,) = exchanges
+        assert {"conv_id", "token_count", "_carried"} <= cols, cols
+        assert not cols & {"text", "role", "tool"}, cols
+
+
 def test_observed_totals_existing_and_new_windows(spark, tmp_path):
     """Snapshot 2 holds only turns that fall in windows snapshot 1 already
     wrote (0 new windows in every tier); snapshot 3 holds only new

@@ -61,25 +61,36 @@ def by_packed_eviction_recorded(sweep_rows):
 
 
 def test_metrics_and_retention_tables_read_without_a_job(spark, snapshots, tmp_path, phase_jobs):
-    """``metrics_table`` and ``retention_table`` start no job and return
-    the schema Spark infers for their dirs; a metrics dir written before a
-    column existed reads that column as null."""
-    src, _t, lo_us, hi_us = snapshots
+    """``metrics_table`` and ``retention_table`` start no job, to build or
+    to collect, over 40 committed snapshots — more dirs than Spark lists
+    without a job — and return the schema Spark infers for their dirs; a
+    metrics dir written before a column existed reads that column as
+    null."""
+    _src, t, lo_us, hi_us = snapshots
     now_us, hz = _horizons(lo_us, hi_us)
+    src = str(tmp_path / "src")
+    for i in range(40):  # five turns a snapshot, the rest in the last
+        lo, hi = 5 * i, (5 * i + 5 if i < 39 else 10_000)
+        part = t.filter((F.col("turn_idx") >= lo) & (F.col("turn_idx") < hi))
+        part.write.parquet(os.path.join(src, f"snap_{i + 1:08d}"))
     work = str(tmp_path / "w")
-    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
-    inc.process_pending()
+    inc = IncrementalRollup(spark, src, work, pack_tiers=())
+    assert inc.process_pending() == 40
     inc.apply_retention(now_us, hz)
     inc.apply_retention(now_us + DAY_US, hz)
     got = {}
-    per = phase_jobs(
-        lambda: got.update(metrics=inc.metrics_table(), retention=inc.retention_table())
-    )
+
+    def read_and_collect():
+        got.update(metrics=inc.metrics_table(), retention=inc.retention_table())
+        got.update({f"{k} rows": df.collect() for k, df in list(got.items())})
+
+    per = phase_jobs(read_and_collect)
     assert per == {}, per
     for family, glob in (("metrics", "snap_*"), ("retention", "sweep_*")):
         inferred = spark.read.parquet(os.path.join(work, family, glob)).schema
         assert got[family].schema == inferred, family
-    assert got["retention"].count() == 2 * 4  # three tiers and packed:1m, twice
+    assert len(got["metrics rows"]) == 40 * 3  # a row per tier and snapshot
+    assert len(got["retention rows"]) == 2 * 3  # a row per tier, twice
     # snapshot 1's metrics as written before ``chain_len`` existed
     d = os.path.join(work, "metrics", "snap_00000001")
     (f,) = [n for n in os.listdir(d) if n.endswith(".parquet")]
