@@ -192,7 +192,7 @@ def main():
     n_turns = m.count()
     tiers = rollup_cascade(m)
     rolled_points = tiers["1m"].count() + tiers["1h"].count() + tiers["1d"].count()
-    packed_1m = pack_tier(m, "1m", assume_sorted=True).persist()
+    packed_1m = pack_tier(m, "1m").persist()
     packed_1m.count()  # materialize so unpack/repack timings are decode-side only
 
     def run_cascade():
@@ -206,7 +206,7 @@ def main():
     qs = E.queries()
     thunks: list[tuple[str, object]] = [
         ("synth_cascade", run_cascade),
-        ("synth_pack_1m", lambda: force(pack_tier(m, "1m", assume_sorted=True))),
+        ("synth_pack_1m", lambda: force(pack_tier(m, "1m"))),
         ("synth_unpack_1m", lambda: force(unpack_tier(packed_1m))),
         ("synth_repack_1h", lambda: force(repack_tier(packed_1m, "1h"))),
     ] + [

@@ -34,10 +34,16 @@ def ts_us_col(ts_col="ts"):
 
 
 def token_count_col(text_col="text", single_space: bool = False):
-    """Whitespace token count; empty/blank text counts 0 tokens.
+    """Whitespace token count: 1 + the runs of whitespace (``\\s``) in the
+    text with its leading and trailing SPACES trimmed; empty text and text
+    of spaces only count 0 tokens. ``F.trim`` strips only spaces, so other
+    whitespace at an end still separates an empty token: ``"\\n"`` and
+    ``"\\t"`` count 2, ``"hello world\\n"`` 3, and a no-break space is no
+    separator (``"a\\xa0b"`` counts 1). NULL text gives NULL.
 
     Default definition chosen to be expressible identically in ANSI SQL
-    (DuckDB oracle): split trimmed text on runs of whitespace. Computed
+    (DuckDB oracle, whose ``trim`` also strips only spaces): split trimmed
+    text on runs of whitespace. Computed
     as 1 + count of separator runs (regexp_count) — value-identical to
     size(split(...)) on trimmed non-empty text, but never materializes a
     per-row token array (the split-based form allocates |tokens| string

@@ -375,50 +375,27 @@ def tier_points(metrics: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def pack_points(
-    flat: DataFrame, clustered_by_conv: bool = False, assume_sorted: bool = False
-) -> DataFrame:
+def pack_points(flat: DataFrame) -> DataFrame:
     """Flat points of ANY tiers (``tier_points`` rows) -> one packed blob
     per (tier, conv_id, window_start_us), ``tier`` last: one exchange and
-    one kernel pass whatever the number of tiers. ``clustered_by_conv``
-    and ``assume_sorted`` as in ``pack_tier``. Rows may also hold
+    one kernel pass whatever the number of tiers. The planner drops the
+    conv_id exchange when the input is already hash-partitioned on
+    conv_id (e.g. by derive_turn_metrics' lag window). Rows may also hold
     previous blobs to repack (module doc); then only the windows with a
     new point are packed."""
-    if not (clustered_by_conv or assume_sorted):
-        flat = flat.repartition("conv_id")
-    if not assume_sorted:
-        flat = flat.sortWithinPartitions(
+    return (
+        flat.repartition("conv_id")
+        .sortWithinPartitions(
             "conv_id", "tier", "window_start_us", "turn_idx", "ts_us", *STREAMS
         )
-    return flat.mapInArrow(_pack_flat_arrow, schema=_PACKED_TIER_SCHEMA)
+        .mapInArrow(_pack_flat_arrow, schema=_PACKED_TIER_SCHEMA)
+    )
 
 
-def pack_tier(
-    metrics: DataFrame,
-    tier: str,
-    clustered_by_conv: bool = False,
-    assume_sorted: bool = False,
-) -> DataFrame:
-    """metrics (derive_turn_metrics output) -> packed window blobs.
-
-    ``clustered_by_conv=True`` skips the repartition exchange when the
-    caller guarantees rows of one conv_id share a partition — true for
-    derive_turn_metrics output, whose lag window already hash-partitioned
-    on conv_id. The per-partition sort still runs (cheap on the window's
-    near-sorted output); payload bytes are identical either way.
-
-    ``assume_sorted=True`` (implies clustered_by_conv) also skips the
-    per-partition sort, for callers whose rows are ALREADY in
-    (conv_id, turn_idx, ts_us) order within each partition — true when
-    packing straight off derive_turn_metrics output or its cache, whose
-    lag window sorted exactly that order. Preconditions for byte identity
-    with the sorting path: unique turn_idx per conversation and ts
-    monotone w.r.t. turn_idx (then (conv, turn, ts) order equals
-    (conv, window, turn, ts) order). Skipping the Tungsten sort removes
-    a full materialization of every row — the pack stage becomes one
-    cache-scan + one Arrow pass.
-    """
-    return pack_points(tier_points(metrics, tier), clustered_by_conv, assume_sorted)
+def pack_tier(metrics: DataFrame, tier: str) -> DataFrame:
+    """metrics (derive_turn_metrics output) -> packed window blobs of
+    ``tier`` (``pack_points`` of its ``tier_points``)."""
+    return pack_points(tier_points(metrics, tier))
 
 
 # ----------------------------------------------------------------------
@@ -548,8 +525,7 @@ def repack_tier(packed: DataFrame, to_tier: str) -> DataFrame:
         "ts_us",
         *[F.col(f"{s}_f").alias(s) for s in STREAMS],
     )
-    # the row_number window already hash-partitioned on conv_id
-    return pack_tier(flat, to_tier, clustered_by_conv=True)
+    return pack_tier(flat, to_tier)
 
 
 def verify_continuity(packed: DataFrame) -> DataFrame:

@@ -5,10 +5,10 @@ snapshot subdirectories (``snap_00000001/``, ``snap_00000002/``, … each a
 parquet dir of new transcript rows — the shape an Iceberg incremental read
 between two snapshot ids yields). The engine state is:
 
-  tiers/d{n}[h]/tier={t}/  aggregate tiers: ONE MERGE-on-read delta chain,
+  tiers/d{n}/tier={t}/     aggregate tiers: ONE MERGE-on-read delta chain,
                            every tier in each entry (one partitioned write)
-  packed/d{n}[h]/tier={t}/ packed-payload tiers, the same form
-  state/d{n}[h]/           per-conversation carry state, the same chain form
+  packed/d{n}/tier={t}/    packed-payload tiers, the same form
+  state/d{n}/              per-conversation carry state, the same chain form
   metrics/                 append-only rollup-count + lineage table (per
                            snapshot and tier: running totals, source files,
                            wall, out-of-order conversations, chain length)
@@ -16,10 +16,13 @@ between two snapshot ids yields). The engine state is:
   heal_pending/d{n}/       conversations flagged out-of-order at snapshot n
   _checkpoint.json         atomically-committed resume token
 
-EVERY table family is a delta chain: snapshot n writes ONLY the rows its
-delta touches to a ``d{n}`` directory, and reads resolve
-latest-version-wins per key (aggregate and packed tiers key on
-(tier, conv_id, window_start_us); conv state keys on conv_id). There are
+EVERY table family is a delta chain of numbered entries: every commit
+and every heal writes ONLY the rows it touches to the next entry,
+``d{n}``, of each family, where n is one past the checkpoint's entry
+counter ``entries`` — the stand-in for Iceberg's one snapshot sequence,
+in which every MERGE, a commit's or a heal's, is the next snapshot.
+Reads resolve latest-entry-wins per key (aggregate and packed tiers key
+on (tier, conv_id, window_start_us); conv state keys on conv_id). There are
 three families whatever ``TIERS`` and ``pack_tiers`` hold, and one
 writer (``_write_entries``) fills an entry of each from per-turn metrics:
 one resolve, one MERGE and one write per family. The tier MERGE is the
@@ -60,11 +63,13 @@ observation on that write brings the flagged conv_ids back to the
 driver, which writes them under ``heal_pending/`` when there are any.
 ``heal()`` then
 re-derives ONLY those conversations from all raw snapshots and writes
-corrective ``d{n}h`` chain entries (ranked after ``d{n}``) for every
-table family. A heal is a commit without previous rows: the same writer,
+them as the next entry of every table family, ranked after everything
+before it. A heal is a commit without previous rows: the same writer,
 given the conversations' whole history, no carried state and nothing to
-merge with. Afterwards all tiers are byte-identical to a full recompute
-(tests assert), and incremental processing resumes unchanged.
+merge with. A second heal at the same snapshot version (flags routed by
+the streaming path) is simply a later entry: it overrides only its own
+conversations' rows. Afterwards all tiers are byte-identical to a full
+recompute (tests assert), and incremental processing resumes unchanged.
 
 Retention (downsample-and-expire): ``apply_retention`` commits per-tier
 eviction BOUNDS into the checkpoint — eviction is a pure predicate on
@@ -77,16 +82,18 @@ touched until ``compact()`` reclaims the space physically.
 Resume protocol (the fpos analogue, /root/reference/libmseed/
 fileutils.c:367-384, recast as snapshot ids per the north rule):
 
-  1. read _checkpoint.json -> last committed version n
-  2. for snapshot n+1: write the d{n+1} delta dirs of every family —
-     BEFORE the checkpoint advances
+  1. read _checkpoint.json -> last committed version v, entry counter n
+  2. for snapshot v+1: remove every family dir above n, then write the
+     d{n+1} entry of every family — BEFORE the checkpoint advances
   3. append metrics, then atomic-rename the new _checkpoint.json
+     (version v+1, entries n+1)
 
 A crash between (2) and (3) leaves orphan d{n+1} directories that the
-rerun simply overwrites — re-aggregation is deterministic and the merge
-is integer-exact-associative (operators/rollup.py contract), so replaying
-a snapshot is idempotent: the chain resolver never reads past the
-committed version, so nothing is double-counted. Rollup-count totals in
+rerun removes before it writes — re-aggregation is deterministic and the
+merge is integer-exact-associative (operators/rollup.py contract), so
+replaying a snapshot is idempotent: the chain resolver never reads past
+the committed counter, so nothing is double-counted. A heal follows the
+same three steps without a snapshot. Rollup-count totals in
 the metrics table are maintained ARITHMETICALLY (previous committed
 totals + the windows and points of each tier the MERGE wrote minus those
 of the previous rows it replaced, crash-safe inside the same checkpoint),
@@ -148,10 +155,10 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
 Reads never see uncommitted data — every structural transition is gated
 by the atomically-swapped checkpoint:
 
-  * snapshot deltas: invisible until ``version`` advances (above);
-  * heal entries ``d{v}h``: invisible until ``healed_through`` >= v
-    (_chain_dirs gate; crash debris above the watermark is GC'd by the
-    next heal()/compact() so it can never be resurrected);
+  * chain entries, a commit's or a heal's: invisible until ``entries``
+    reaches them (above); crash debris above the counter is removed
+    before the next commit or heal writes, so the counter never passes
+    an entry it did not commit;
   * compaction: two-phase — stage under ``_compact_tmp`` (a name the
     chain regex never matches), commit ``compact_intent``, swap, clear.
     A crash mid-swap is finished by ``_maybe_recover()`` on the next
@@ -194,17 +201,16 @@ from ..sinks.tier_tables import table_writer, write_driver_table
 from ..sources.tables import read_parquet
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
-# d{version}[h]: plain snapshot deltas rank before the heal delta of the
-# same version ('' < 'h' lexicographically — latest-wins reads pick heal)
-_DELTA_RE = re.compile(r"^d(\d+)(h?)$")
+# d{n}: the n-th entry of a chain (and a snapshot's heal flags)
+_DELTA_RE = re.compile(r"^d(\d+)$")
 
 # latest-wins keys: a window-keyed family holds every tier in one chain
 _WINDOW_KEYS = ["tier", "conv_id", "window_start_us"]
 _CONV_KEYS = ["conv_id"]
-# chain entry of a row: the d{version:08d}[h] directory holding its file;
-# in a window-keyed family, its tier: the tier={t} leaf dir between entry
-# and file
-_ENTRY_RE = r"/d([0-9]{8})(h?)/(?:tier=([^/]+)/)?[^/]+$"
+# chain entry of a row: the d{n:08d} directory holding its file; in a
+# window-keyed family, its tier: the tier={t} leaf dir between entry and
+# file
+_ENTRY_RE = r"/d([0-9]{8})/(?:tier=([^/]+)/)?[^/]+$"
 
 # the rows a commit writes to ``metrics/``, one per tier
 _METRICS_SCHEMA = pa.schema(
@@ -362,9 +368,11 @@ class IncrementalRollup:
         self.pack_tiers = tuple(pack_tiers)
         # auto-compaction policy: after a snapshot commit, if any family's
         # chain exceeds this many entries, compact() runs inline (None
-        # disables). Bounds the chain-length-proportional row_number
-        # shuffle every MERGE-on-read pays — without it, hourly snapshots
-        # grow ~720 dirs/family/month between manual maintenance windows.
+        # disables). Bounds the entries every chain resolve scans: a
+        # commit's fused resolves carry the touched rows of every entry,
+        # and a read ranks every entry's rows in a row_number window —
+        # without it, hourly snapshots grow ~720 dirs/family/month
+        # between manual maintenance windows.
         self.max_chain = max_chain
         os.makedirs(work_dir, exist_ok=True)
         self.ckpt_path = os.path.join(work_dir, "_checkpoint.json")
@@ -374,15 +382,14 @@ class IncrementalRollup:
         if not os.path.exists(self.ckpt_path):
             return {
                 "version": 0,
+                "entries": 0,
                 "run_id": str(uuid.uuid4()),
                 "totals": {},
-                "healed_through": 0,
                 "retention_bounds": {},
             }
         with open(self.ckpt_path) as f:
             state = json.load(f)
         state.setdefault("totals", {})
-        state.setdefault("healed_through", 0)
         state.setdefault("retention_bounds", {})
         return state
 
@@ -412,8 +419,8 @@ class IncrementalRollup:
         (``metrics``, ``retention``)."""
         return os.path.join(self.work_dir, family)
 
-    def _delta_path(self, base: str, version: int, heal: bool = False) -> str:
-        return os.path.join(base, f"d{version:08d}" + ("h" if heal else ""))
+    def _delta_path(self, base: str, n: int) -> str:
+        return os.path.join(base, f"d{n:08d}")
 
     def _compact_jobs(self) -> list[tuple[str, list[str]]]:
         """(base, latest-wins keys) of the three chained table families."""
@@ -423,53 +430,42 @@ class IncrementalRollup:
             (self._base("state"), _CONV_KEYS),
         ]
 
-    def _chain_dirs(self, base: str, version: int, healed_through: int) -> list[str]:
-        """Committed chain entries <= version, in resolution order
-        (ascending version; a heal entry ranks after its plain twin).
-
-        A heal entry ``d{v}h`` is included only once the checkpoint's
-        ``healed_through`` watermark has reached v: heal() writes its dirs
-        BEFORE committing that watermark, so a crash mid-heal leaves the
-        partial dirs invisible to every read (no torn reads — the module
-        doc's reads-never-see-uncommitted-data invariant). Orphans from a
-        crashed heal are garbage-collected by the next heal()/compact()
-        before the watermark can advance past them."""
+    def _chain_dirs(self, base: str, entries: int) -> list[str]:
+        """The committed entries of a chain, ``d{n}`` with n <= ``entries``
+        (the checkpoint's counter), in ascending order. An entry above the
+        counter is the debris of a commit or heal that crashed before its
+        checkpoint: invisible to every read (no torn reads — the module
+        doc's reads-never-see-uncommitted-data invariant), and removed by
+        ``_gc_uncommitted`` before the next commit or heal writes."""
         if not os.path.isdir(base):
             return []
-        entries = []
+        found = []
         for name in os.listdir(base):
             m = _DELTA_RE.match(name)
-            if not m or int(m.group(1)) > version:
-                continue
-            if m.group(2) and int(m.group(1)) > healed_through:
-                continue  # uncommitted heal entry (crash debris)
-            entries.append((int(m.group(1)), m.group(2), name))
-        return [os.path.join(base, n) for _, _, n in sorted(entries)]
+            if m and int(m.group(1)) <= entries:
+                found.append((int(m.group(1)), name))
+        return [os.path.join(base, name) for _, name in sorted(found)]
 
     def _resolve_chain(
         self,
         base: str,
-        version: int,
+        entries: int,
         keys: list[str],
-        healed_through: int,
         touched: DataFrame | None = None,
         bounds: dict | None = None,
-        touched_on: list[str] | None = None,
         tiers: tuple[str, ...] | None = None,
         ranked: bool = False,
     ) -> DataFrame | None:
-        """MERGE-on-read: one scan of the chain <= version, latest entry
-        wins per key. Each row is ranked by the entry directory its file
-        lives in (``_metadata.file_path``): ``d{v}`` ranks ``2v`` and its
-        heal twin ``d{v}h`` ``2v + 1``, so a heal entry ranks after its
-        plain twin. ``ranked`` returns every entry's rows with their rank
-        in ``RANK`` instead of the latest row per key: a fused MERGE
-        (``merge_tiers``) resolves them in its own aggregate. ``touched`` (a
-        DataFrame of ``touched_on`` columns, default ``keys``) semi-joins
-        the scan down to the rows a merge needs, so the rows shuffled are
-        delta-sized. ``touched_on`` may be a subset of the keys (e.g. just
-        conv_id when the caller needs every window of the touched
-        conversations — the packed re-encode path).
+        """MERGE-on-read: one scan of the chain's entries <= ``entries``,
+        latest entry wins per key. Each row is ranked by the number n of
+        the entry ``d{n}`` its file lives in (``_metadata.file_path``).
+        ``ranked`` returns every entry's rows with their rank in ``RANK``
+        instead of the latest row per key: a fused MERGE (``merge_tiers``)
+        resolves them in its own aggregate. ``touched`` semi-joins the
+        scan, on its columns, down to the rows a merge needs, so the rows
+        shuffled are delta-sized: the keys themselves, or just conv_id when
+        the caller needs every window of the touched conversations (the
+        packed re-encode path).
 
         A window-keyed family (``keys`` lead with ``tier``) is read from
         the ``tier={t}`` leaf dirs of its entries, only those of ``tiers``
@@ -477,7 +473,7 @@ class IncrementalRollup:
         path; if no entry holds a row of ``tiers``, the result is an empty
         frame of the family's columns. ``bounds`` (tier -> bound) applies
         the committed retention predicate (operators/retention.retained)."""
-        dirs = self._chain_dirs(base, version, healed_through)
+        dirs = self._chain_dirs(base, entries)
         by_tier = keys[0] == "tier"
         empty = False
         if by_tier:
@@ -494,18 +490,16 @@ class IncrementalRollup:
             return None
         path = F.col("_metadata.file_path")
         df = read_parquet(self.spark, *dirs).withColumn(
-            RANK,
-            F.regexp_extract(path, _ENTRY_RE, 1).cast("long") * 2
-            + (F.regexp_extract(path, _ENTRY_RE, 2) == "h").cast("long"),
+            RANK, F.regexp_extract(path, _ENTRY_RE, 1).cast("long")
         )
         if by_tier:
-            df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 3))
+            df = df.withColumn("tier", F.regexp_extract(path, _ENTRY_RE, 2))
             if bounds:
                 df = df.filter(retained(bounds))
         if empty:
             df = df.limit(0)
         if touched is not None:
-            df = df.join(touched, touched_on or keys, "left_semi")
+            df = df.join(touched, touched.columns, "left_semi")
         if ranked:
             return df
         w = Window.partitionBy(*keys).orderBy(F.desc(RANK))
@@ -516,40 +510,32 @@ class IncrementalRollup:
         )
 
     # -- readers --------------------------------------------------------
-    def conv_state(self, version: int) -> DataFrame | None:
+    def conv_state(self) -> DataFrame | None:
         state = self._maybe_recover(self._read_ckpt())
-        return self._resolve_chain(
-            self._base("state"),
-            version,
-            _CONV_KEYS,
-            healed_through=state["healed_through"],
-        )
+        return self._resolve_chain(self._base("state"), state["entries"], _CONV_KEYS)
 
-    def tier(self, tier: str, version: int | None = None) -> DataFrame | None:
+    def tier(self, tier: str) -> DataFrame | None:
         state = self._maybe_recover(self._read_ckpt())
-        return self._read_family("tiers", tier, state, version)
+        return self._read_family("tiers", tier, state)
 
-    def packed_tier(self, tier: str, version: int | None = None) -> DataFrame | None:
+    def packed_tier(self, tier: str) -> DataFrame | None:
         state = self._maybe_recover(self._read_ckpt())
-        return self._read_family("packed", tier, state, version)
+        return self._read_family("packed", tier, state)
 
-    def _read_family(
-        self, family: str, tier: str, state: dict, version: int | None = None
-    ) -> DataFrame | None:
-        """One tier of a window-keyed family at ``version`` (default: the
-        committed one of ``state``, the checkpoint the public call read),
-        with the committed retention bounds."""
+    def _read_family(self, family: str, tier: str, state: dict) -> DataFrame | None:
+        """One tier of a window-keyed family as committed in ``state`` (the
+        checkpoint the public call read), with the committed retention
+        bounds."""
         return self._resolve_chain(
             self._base(family),
-            version if version is not None else state["version"],
+            state["entries"],
             _WINDOW_KEYS,
             bounds=state["retention_bounds"],
-            healed_through=state["healed_through"],
             tiers=(tier,),
         )
 
     def _read_tiers(self, state: dict) -> dict[str, DataFrame]:
-        """Every aggregate tier at the committed version of ``state`` (none
+        """Every aggregate tier as committed in ``state`` (none
         before the first commit)."""
         tiers = ((t, self._read_family("tiers", t, state)) for t in TIERS)
         return {t: df for t, df in tiers if df is not None}
@@ -611,10 +597,9 @@ class IncrementalRollup:
         with self._phase(f"{tag} state read"):
             carry = self._resolve_chain(
                 self._base("state"),
-                state["version"],
+                state["entries"],
                 _CONV_KEYS,
                 touched=raw.select("conv_id"),
-                healed_through=state["healed_through"],
                 ranked=True,
             )
         delta_m = _turn_metrics(raw, carry)
@@ -626,7 +611,7 @@ class IncrementalRollup:
         lineage = ",".join(
             sorted(f for f in os.listdir(snap_path) if f.endswith(".parquet"))
         )
-        chain_len = self.chain_length({**state, "version": snap_id})
+        chain_len = self.chain_length(state)
         # keyed-by-snapshot OVERWRITE, not a blind append: a crash between
         # this write and the checkpoint commit makes the rerun rewrite the
         # same directory instead of double-appending the snapshot's rows —
@@ -657,19 +642,25 @@ class IncrementalRollup:
         metrics: DataFrame,
         heal: bool = False,
     ) -> tuple[int, int]:
-        """Write the ``d{version}`` entry of every table family (``d{version}h``
-        for a heal) from the per-turn ``metrics`` of the conversations it
-        touches (``_turn_metrics``): their conv state, their windows of
-        every tier, their blobs of every pack tier. A commit merges with
-        what is committed at ``state["version"]`` — the carried last turns
-        (the ``_carried`` rows of ``metrics``) and the touched windows'
-        rows — and keeps the running totals. A heal holds its
+        """Write the next entry ``d{n}`` of every table family, n one past
+        ``state["entries"]``, from the per-turn ``metrics`` of the
+        conversations it touches (``_turn_metrics``): their conv state,
+        their windows of every tier, their blobs of every pack tier. The
+        family dirs above the committed counter (a crashed write) are
+        removed first. A commit of snapshot ``version`` merges with what
+        is committed — the carried last turns (the ``_carried`` rows of
+        ``metrics``) and the touched windows' rows — keeps the running
+        totals and flags its out-of-order conversations under
+        ``heal_pending/d{version}``. A heal holds its
         conversations' whole history, so it has no carried rows and no
         previous rows, and it changes no window's count or points, so the
         totals stand. Late data behind a committed retention bound is
         dropped: it would be read-filtered and eviction-eligible anyway,
         and admitting it would let the totals drift from what reads see.
+        Advances ``state["entries"]`` to n, for the caller to commit.
         Returns (conversations written, of them out of order)."""
+        self._gc_uncommitted(state)
+        n = state["entries"] + 1
         bounds = state["retention_bounds"]
         # conv state: each conversation's new last turn, the latest of its
         # carried and new turns, plus the out-of-order flag (heal trigger,
@@ -707,9 +698,7 @@ class IncrementalRollup:
                 )
                 .drop("_ooo")
                 .coalesce(1)
-            ).mode("overwrite").parquet(
-                self._delta_path(self._base("state"), version, heal)
-            )
+            ).mode("overwrite").parquet(self._delta_path(self._base("state"), n))
         n_convs, ooo = _observed(conv_obs, "n", "ooo")
         if ooo:
             write_driver_table(
@@ -732,18 +721,17 @@ class IncrementalRollup:
         with self._phase(f"{tag} tiers"):
             prev = None if heal else self._resolve_chain(
                 self._base("tiers"),
-                state["version"],
+                state["entries"],
                 _WINDOW_KEYS,
                 touched=rows.select(*_WINDOW_KEYS),
                 bounds=bounds,
-                healed_through=state["healed_through"],
                 ranked=True,
             )
             if prev is not None:
                 rows = prev.unionByName(rows, allowMissingColumns=True)
             _write_by_tier(
                 _observe_totals(merge_tiers(rows), out_obs).drop(REPLACED_POINTS),
-                self._delta_path(self._base("tiers"), version, heal),
+                self._delta_path(self._base("tiers"), n),
             )
         if not heal:
             for t in TIERS:
@@ -753,20 +741,19 @@ class IncrementalRollup:
                 tot["n_points"] += p
         if self.pack_tiers:
             with self._phase(f"{tag} pack"):
-                self._write_packed(state, version, metrics, heal)
+                self._write_packed(state, n, metrics, heal)
+        state["entries"] = n
         return n_convs, len(ooo)
 
-    def _write_packed(
-        self, state: dict, version: int, metrics: DataFrame, heal: bool
-    ) -> None:
-        """Pack every pack tier's touched windows in one write. A commit
-        re-encodes only the windows its delta touches (class doc): the
-        touched conversations' blobs of every chain entry, ranked, ride
-        with the new points into the pack, whose kernel picks each
-        window's latest blob, numbers its old points and decodes only the
-        windows with a new point (operators/pack.py); a heal packs its
-        conversations' whole history. The points of all pack tiers go
-        through one pack."""
+    def _write_packed(self, state: dict, n: int, metrics: DataFrame, heal: bool) -> None:
+        """Pack every pack tier's touched windows into entry ``d{n}`` in one
+        write. A commit re-encodes only the windows its delta touches
+        (class doc): the touched conversations' blobs of every chain
+        entry, ranked, ride with the new points into the pack, whose
+        kernel picks each window's latest blob, numbers its old points and
+        decodes only the windows with a new point (operators/pack.py); a
+        heal packs its conversations' whole history. The points of all
+        pack tiers go through one pack."""
         bounds = state["retention_bounds"]
         # same retention drop as the aggregate tiers
         pts = _union([tier_points(metrics, t) for t in self.pack_tiers]).filter(
@@ -778,31 +765,30 @@ class IncrementalRollup:
         # decoded
         prev = None if heal else self._resolve_chain(
             self._base("packed"),
-            state["version"],
+            state["entries"],
             _WINDOW_KEYS,
             touched=metrics.select("conv_id"),
-            touched_on=["conv_id"],
             bounds=bounds,
-            healed_through=state["healed_through"],
             tiers=self.pack_tiers,
             ranked=True,
         )
         if prev is not None:
             blobs = prev.select(*_WINDOW_KEYS, RANK, "n_points", "payload", "xn")
             pts = pts.unionByName(blobs, allowMissingColumns=True)
-        _write_by_tier(
-            pack_points(pts), self._delta_path(self._base("packed"), version, heal)
-        )
+        _write_by_tier(pack_points(pts), self._delta_path(self._base("packed"), n))
 
     # -- heal (mst_groupheal analogue) ----------------------------------
     def heal(self) -> int:
         """Repair every conversation flagged out-of-order since the last
         heal: re-derive its per-turn metrics from ALL raw snapshots (the
-        batch path is order-insensitive), then write them as one
-        corrective ``d{v}h`` chain entry per table family — the commit's
-        own writer (``_write_entries``) with no carry and no previous
-        rows. Afterwards all reads are byte-identical to a full recompute
-        (tests assert) and incremental mode resumes.
+        batch path is order-insensitive), then write them as the next
+        entry of every table family — the commit's own writer
+        (``_write_entries``) with no carry and no previous rows. The entry
+        ranks after every earlier one, so it overrides only the healed
+        conversations' rows, also when an earlier heal at the same
+        snapshot version wrote other conversations. Afterwards all reads
+        are byte-identical to a full recompute (tests assert) and
+        incremental mode resumes.
 
         The reference's analogue walks a broken trace group and re-sorts
         / re-merges its segments in place with the merge it uses on
@@ -812,27 +798,23 @@ class IncrementalRollup:
         scoped batch recompute — O(affected conversations), never
         O(table).
 
-        Crash-safe: heal dirs are deterministic overwrites keyed by the
-        committed version, and a ``d{v}h`` entry is INVISIBLE to chain
-        reads until ``healed_through`` reaches v (_chain_dirs gate) — the
-        watermark advances only after every family's dir is fully
-        written, so a mid-heal crash leaves reads exactly as before the
-        heal and the rerun replays clean. Stale heal debris above the
-        watermark is garbage-collected first, so a later heal cannot
-        resurrect it. Returns the number of conversations healed, as
-        observed on the conv-state write (one row per conversation)."""
+        Crash-safe: the entry is INVISIBLE to chain reads until the
+        checkpoint's ``entries`` counter reaches it, and the counter
+        advances only after every family's dir is fully written, so a
+        mid-heal crash leaves reads exactly as before the heal; the rerun
+        removes the debris and writes the entry again. Returns the number
+        of conversations healed, as observed on the conv-state write (one
+        row per conversation)."""
         state = self._maybe_recover(self._read_ckpt())
         v = state["version"]
         if v == 0:
             return 0
-        self._gc_uncommitted_heal(state)
         # EVERY pending dir is due, regardless of version: heal deletes
-        # the dirs it processed only AFTER the watermark commit, so a
+        # the dirs it processed only AFTER its checkpoint commit, so a
         # leftover means "not certainly healed" and is re-healed (the
-        # repair is a deterministic overwrite — idempotent). Flags can
-        # also arrive from the streaming path at an already-healed
-        # version (streaming/rollup_stream.route_ooo_to_pending); a
-        # watermark filter here would drop those forever.
+        # repair is deterministic — idempotent). Flags can also arrive
+        # from the streaming path at an already-healed version
+        # (streaming/rollup_stream.route_ooo_to_pending).
         base = self._base("heal_pending")
         pend_dirs = (
             [
@@ -858,7 +840,6 @@ class IncrementalRollup:
         healed_m = _turn_metrics(raw)
         n_convs, _ = self._write_entries(state, v, tag, healed_m, heal=True)
         healed_m.unpersist()
-        state["healed_through"] = v
         self._commit_ckpt(state)
         # delete the processed pending dirs only now: a crash before this
         # point re-heals them (idempotent); deleting earlier could lose
@@ -896,10 +877,9 @@ class IncrementalRollup:
             with self._phase(f"retention sweep {family}"):
                 df = self._resolve_chain(
                     self._base(family),
-                    state["version"],
+                    state["entries"],
                     _WINDOW_KEYS,
                     bounds=state["retention_bounds"],
-                    healed_through=state["healed_through"],
                     tiers=tiers,
                 )
                 if df is None:
@@ -932,18 +912,17 @@ class IncrementalRollup:
         return serve_tiered(self._read_tiers(state), now_us, horizons)
 
     # -- maintenance ----------------------------------------------------
-    def _gc_uncommitted_heal(self, state: dict) -> None:
-        """Remove heal dirs whose version exceeds the committed
-        ``healed_through`` — debris from a crashed heal(). Without this GC
-        a later heal at a higher version would advance the watermark past
-        the orphan and resurrect its torn contents into chain reads."""
-        ht = state["healed_through"]
+    def _gc_uncommitted(self, state: dict) -> None:
+        """Remove every chain entry above the committed ``entries``
+        counter — the debris of a commit or heal that crashed before its
+        checkpoint. Runs before each commit and heal writes, so the
+        counter never passes an entry it did not commit."""
         for base, _ in self._compact_jobs():
             if not os.path.isdir(base):
                 continue
             for name in os.listdir(base):
                 m = _DELTA_RE.match(name)
-                if m and m.group(2) and int(m.group(1)) > ht:
+                if m and int(m.group(1)) > state["entries"]:
                     shutil.rmtree(os.path.join(base, name))
 
     def _maybe_recover(self, state: dict) -> dict:
@@ -968,7 +947,7 @@ class IncrementalRollup:
             tmp = os.path.join(base, "_compact_tmp")
             if not os.path.isdir(tmp):
                 continue  # never staged, or already swapped on a prior run
-            for p in self._chain_dirs(base, v, state["healed_through"]):
+            for p in self._chain_dirs(base, v):
                 shutil.rmtree(p)
             os.replace(tmp, self._delta_path(base, v))
         # pending dirs are NOT touched here: heal() owns their lifecycle
@@ -983,14 +962,15 @@ class IncrementalRollup:
         alert on)."""
         state = state or self._read_ckpt()
         return max(
-            len(self._chain_dirs(b, state["version"], state["healed_through"]))
+            len(self._chain_dirs(b, state["entries"]))
             for b, _ in self._compact_jobs()
         )
 
     def compact(self) -> None:
-        """Fold every chain into a single base directory at the committed
-        version (Iceberg's rewrite_data_files maintenance action): resolve
-        latest-wins + retention bounds, rewrite, drop the old entries.
+        """Fold every chain into a single base directory, its latest
+        committed entry ``d{entries}`` (Iceberg's rewrite_data_files
+        maintenance action): resolve latest-wins + retention bounds,
+        rewrite, drop the old entries.
         Reads before/after are row-identical (tests assert).
 
         Crash-safe two-phase protocol (the parquet standin for Iceberg's
@@ -999,7 +979,8 @@ class IncrementalRollup:
           1. stage every family's resolved table under ``_compact_tmp``
              (a name the chain regex never matches — invisible to reads;
              a crash here leaves harmless debris the next run overwrites)
-          2. atomically commit ``compact_intent = v`` in the checkpoint
+          2. atomically commit ``compact_intent = v`` (the entry counter)
+             in the checkpoint
           3. per family: drop superseded entries, adopt tmp as ``d{v}``
           4. clear the intent, commit
 
@@ -1007,16 +988,10 @@ class IncrementalRollup:
         next entry point (reads included), so a half-swapped chain is
         never served."""
         state = self._maybe_recover(self._read_ckpt())
-        v = state["version"]
-        # heal debris would otherwise be resurrected once healed_through
-        # advances; compacting is the natural GC point
-        self._gc_uncommitted_heal(state)
+        v = state["entries"]
         staged = 0
         for base, keys in self._compact_jobs():
-            df = self._resolve_chain(
-                base, v, keys, bounds=state["retention_bounds"],
-                healed_through=state["healed_through"],
-            )
+            df = self._resolve_chain(base, v, keys, bounds=state["retention_bounds"])
             if df is None:
                 continue
             tmp = os.path.join(base, "_compact_tmp")

@@ -70,9 +70,15 @@ def stream_metrics_stateful(transcripts: DataFrame) -> DataFrame:
     ``heal()`` pass — the streaming twin of the reference's
     mstl_addmsr-out-of-order -> mst_groupheal flow (tracelist.c:392-556,
     traceutils.c:776-915).
+
+    Text never crosses into Python: token_count is computed JVM-side by
+    the batch definition (functions/metrics.token_count_col) before the
+    stateful step.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..functions.metrics import token_count_col
 
     out_schema = (
         "conv_id string, turn_idx int, ts_us long, latency_us long,"
@@ -98,7 +104,6 @@ def stream_metrics_stateful(transcripts: DataFrame) -> DataFrame:
             ooo = int(pdf["turn_idx"].iloc[0]) <= last_turn
         else:
             lat[0] = None
-        tok = [len(t.split()) if isinstance(t, str) else 0 for t in pdf["text"]]
         state.update(
             (
                 max(int(pdf["turn_idx"].iloc[-1]),
@@ -112,12 +117,15 @@ def stream_metrics_stateful(transcripts: DataFrame) -> DataFrame:
                 "turn_idx": pdf["turn_idx"].to_numpy(),
                 "ts_us": ts_us,
                 "latency_us": lat,
-                "token_count": tok,
+                "token_count": pdf["token_count"].to_numpy(),
                 "ooo": ooo,
             }
         )
 
-    return transcripts.groupBy("conv_id").applyInPandasWithState(
+    turns = transcripts.select(
+        "conv_id", "turn_idx", "ts", token_count_col().cast("long").alias("token_count")
+    )
+    return turns.groupBy("conv_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -131,8 +139,10 @@ def route_ooo_to_pending(metrics_batch: DataFrame, work_dir: str) -> int:
 
     The pending dir is keyed by the pipeline's current committed version
     (or 1 before any commit) and written in append mode: replayed
-    micro-batches at-least-once-append duplicates, which heal's left-semi
-    join absorbs — same idempotence story as the snapshot path.
+    micro-batches at-least-once-append duplicates, which heal absorbs by
+    reading the flags into a set — same idempotence story as the
+    snapshot path. A heal at a version already healed writes an entry of
+    its own, so the earlier heal's repairs stay.
     """
     import os
 

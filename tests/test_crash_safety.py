@@ -2,9 +2,9 @@
 uncommitted data, and every maintenance action resumes cleanly.
 
 Invariants under test (plans/pipeline.py module doc):
-  * a heal entry ``d{v}h`` is invisible until the checkpoint's
-    ``healed_through`` watermark reaches v, and debris from a crashed
-    heal can never be resurrected by a later heal;
+  * a chain entry ``d{n}`` is invisible until the checkpoint's
+    ``entries`` counter reaches n, and debris above the counter from a
+    crashed commit or heal is removed before the counter can pass it;
   * compact() is two-phase (stage -> intent -> swap -> clear) and a crash
     at ANY step leaves reads identical, with ``_maybe_recover`` finishing
     the swap on the next entry point;
@@ -51,31 +51,36 @@ def _agg_as_dict(df):
 
 
 def test_uncommitted_heal_dirs_invisible_and_gcd(spark, snapshots, tmp_path):
-    """A half-written heal dir (crash before the watermark commit) must
-    not be readable, and a later heal must GC it rather than let the
-    advancing watermark resurrect it."""
+    """Half-written entries above the committed counter (a crashed heal
+    or commit, before its checkpoint commit) must not be readable, and
+    the next heal must remove them rather than let the advancing counter
+    expose them."""
     src, full_t = snapshots
     work = str(tmp_path / "w")
     inc = IncrementalRollup(spark, src, work, pack_tiers=())
     inc.process_pending()
     clean = _agg_as_dict(inc.tier("1h"))
+    n = inc._read_ckpt()["entries"]
 
-    # plant poison: a valid-schema heal entry at version 2 with absurd
-    # values, healed_through still 0 -> must stay invisible
-    poison_dir = os.path.join(work, "tiers", "d00000002h")
-    inc.tier("1h").limit(5).withColumn(
-        "n_points", F.lit(999_999)
-    ).write.partitionBy("tier").mode("overwrite").parquet(poison_dir)
-    assert _agg_as_dict(inc.tier("1h")) == clean, "uncommitted heal dir leaked"
+    # plant poison: valid-schema entries one and two past the counter with
+    # absurd values -> must stay invisible
+    poison = [os.path.join(work, "tiers", f"d{n + k:08d}") for k in (1, 2)]
+    for p in poison:
+        inc.tier("1h").limit(5).withColumn(
+            "n_points", F.lit(999_999)
+        ).write.partitionBy("tier").mode("overwrite").parquet(p)
+    assert _agg_as_dict(inc.tier("1h")) == clean, "uncommitted entry leaked"
 
     # a real heal cycle later (simulate: flag one conversation pending at
-    # the committed version) must GC the orphan, not resurrect it
+    # the committed version) writes entry n + 1 and must GC the orphan
+    # above it, not let a later counter expose it
     some_conv = inc.tier("1h").select("conv_id").limit(1)
     some_conv.write.mode("overwrite").parquet(
         os.path.join(work, "heal_pending", "d00000004")
     )
     assert inc.heal() == 1
-    assert not os.path.isdir(poison_dir), "orphan heal debris not GC'd"
+    assert inc._read_ckpt()["entries"] == n + 1
+    assert not os.path.isdir(poison[1]), "orphan debris not GC'd"
     assert _agg_as_dict(inc.tier("1h")) == clean, "heal changed clean data"
 
 
@@ -83,10 +88,7 @@ def _stage_compaction(inc, state, v):
     """Phase 1 of compact() by hand: every family's resolved chain staged
     under ``_compact_tmp`` in the family's own layout."""
     for base, keys in inc._compact_jobs():
-        r = inc._resolve_chain(
-            base, v, keys, bounds=state["retention_bounds"],
-            healed_through=state["healed_through"],
-        )
+        r = inc._resolve_chain(base, v, keys, bounds=state["retention_bounds"])
         if r is not None:
             w = r.write.mode("overwrite")
             if "tier" in keys:
@@ -105,7 +107,7 @@ def test_compact_crash_matrix(spark, snapshots, tmp_path, monkeypatch, crash_ste
     inc.process_pending()
     want = _agg_as_dict(inc.tier("1h"))
     state = inc._read_ckpt()
-    v = state["version"]
+    v = state["entries"]
 
     if crash_step == "staged":
         # crash after phase 1: tmps staged, no intent committed

@@ -123,7 +123,8 @@ def test_single_space_tokenizer_contract(spark):
     assert diff.count() == 0
 
     edge = spark.createDataFrame(
-        [("a\tb",), ("a  b",), ("",), ("   ",), ("one",)], "text string"
+        [("a\tb",), ("a  b",), ("",), ("   ",), ("one",), ("\n",), ("\t",)],
+        "text string",
     )
     rows = {
         r["text"]: (r["a"], r["b"])
@@ -138,3 +139,7 @@ def test_single_space_tokenizer_contract(spark):
     assert rows[""] == (0, 0)
     assert rows["   "] == (0, 0)
     assert rows["one"] == (1, 1)
+    # trim strips only spaces: a lone newline or tab is a separator
+    # between two empty tokens under \s+, one token under single-space
+    assert rows["\n"] == (2, 1)
+    assert rows["\t"] == (2, 1)

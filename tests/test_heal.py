@@ -105,8 +105,40 @@ def test_ooo_detected_then_heal_restores_batch_parity(
     want_p = _packed_as_dict(pack_tier(full_m, "1m"))
     assert got_p == want_p, "packed tier not byte-identical after heal"
 
-    # heal is a no-op the second time (watermark advanced)
+    # heal is a no-op the second time (its flags are consumed)
     assert inc.heal() == 0
+
+
+def test_second_heal_at_one_version_keeps_the_first(spark, ooo_snapshots, tmp_path):
+    """A flag routed by the streaming path at the committed version after
+    a heal (``route_ooo_to_pending``) gets a heal of its own at that
+    version. That heal writes only its one conversation; the first
+    heal's repairs stay: every tier and the packed 1m tier still equal
+    the batch recompute."""
+    from sac2mseed_spark.streaming.rollup_stream import route_ooo_to_pending
+
+    src, full_t = ooo_snapshots
+    work = str(tmp_path / "w")
+    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+    assert inc.process_pending() == len(OOO_BOUNDS)
+    assert inc.heal() > 0
+    # a conversation the first heal did not touch (at most 40 turns)
+    short = (
+        full_t.groupBy("conv_id").count().filter("count <= 40")
+        .agg(F.min("conv_id")).collect()[0][0]
+    )
+    flags = spark.createDataFrame([(short, True)], "conv_id string, ooo boolean")
+    assert route_ooo_to_pending(flags, work) == 1
+    assert inc.heal() == 1
+
+    full_m = derive_turn_metrics(full_t)
+    for tier in ("1m", "1h", "1d"):
+        assert _agg_as_dict(inc.tier(tier)) == _agg_as_dict(
+            rollup_from_turns(full_m, tier)
+        ), tier
+    assert _packed_as_dict(inc.packed_tier("1m")) == _packed_as_dict(
+        pack_tier(full_m, "1m")
+    )
 
 
 def test_incremental_resumes_after_heal(spark, ooo_snapshots, tmp_path):
@@ -149,16 +181,17 @@ def test_incremental_resumes_after_heal(spark, ooo_snapshots, tmp_path):
 
 
 def test_heal_crash_replay(spark, ooo_snapshots, tmp_path):
-    """Crash mid-heal (some heal dirs written, watermark NOT advanced):
-    the rerun rewrites everything deterministically."""
+    """Crash mid-heal (some dirs of the heal's entry written, entry
+    counter NOT advanced): the rerun removes them and rewrites everything
+    deterministically."""
     src, full_t = ooo_snapshots
     work = str(tmp_path / "w3")
     inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
     inc.process_pending()
 
-    # simulate the crash: run a full heal, then roll back the watermark,
-    # delete one family's heal dir, and restore the pending dirs heal
-    # consumed — exactly the on-disk state of a process killed between
+    # simulate the crash: run a full heal, then roll back the counter,
+    # delete one family's dir of the heal's entry, and restore the pending
+    # dirs heal consumed — exactly the on-disk state of a process killed between
     # the aggregate writes and the commit (pending deletion happens only
     # AFTER the commit, so a pre-commit crash still has the flags)
     pend = os.path.join(work, "heal_pending")
@@ -167,11 +200,11 @@ def test_heal_crash_replay(spark, ooo_snapshots, tmp_path):
     state_before = inc._read_ckpt()
     assert inc.heal() > 0
     state_after = inc._read_ckpt()
-    assert state_after["healed_through"] == 4
-    shutil.rmtree(os.path.join(work, "packed", "d00000004h"))
+    assert state_after["entries"] == state_before["entries"] + 1 == 5
+    shutil.rmtree(os.path.join(work, "packed", "d00000005"))
     shutil.rmtree(pend, ignore_errors=True)
     shutil.copytree(pend_copy, pend)
-    state_after["healed_through"] = state_before["healed_through"]
+    state_after["entries"] = state_before["entries"]
     inc._commit_ckpt(state_after)
 
     assert inc.heal() > 0  # replays clean
@@ -188,12 +221,16 @@ def test_pending_only_for_ooo_snapshot_and_totals_match(spark, ooo_snapshots, tm
     """``heal_pending/d{n}`` is written only for an out-of-order snapshot
     and holds exactly the conversations whose first new turn is <= the
     carried last turn; the metrics rows record that count, and the
-    observed running totals equal a direct scan at every version, before
-    and after heal."""
+    observed running totals equal a direct scan right after every
+    commit, and after the heal."""
     src, full_t = ooo_snapshots
     work = str(tmp_path / "w4")
-    inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
-    assert inc.process_pending() == 4
+    staged = str(tmp_path / "staged")
+    inc = IncrementalRollup(spark, staged, work, pack_tiers=("1m",))
+    for i in range(1, len(OOO_BOUNDS) + 1):
+        _stage_upto(src, staged, i)
+        assert inc.process_pending() == 1
+        _assert_totals_equal_scan(inc, i)
 
     # expected flags, from the raw snapshots alone
     want = {}
@@ -224,22 +261,27 @@ def test_pending_only_for_ooo_snapshot_and_totals_match(spark, ooo_snapshots, tm
         ]
         assert len(got) == len(set(got)) and set(got) == convs
 
-    def check_totals():
-        rows = inc.metrics_table().collect()
-        for r in rows:
-            direct = inc.tier(r["tier"], version=r["snapshot_id"]).agg(
-                F.count(F.lit(1)).alias("w"), F.sum("n_points").alias("p")
-            ).collect()[0]
-            assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"])
-        return rows
-
-    rows = check_totals()
+    rows = inc.metrics_table().collect()
     assert {(r["snapshot_id"], r["ooo_convs"]) for r in rows} == {
         (i, len(want.get(f"d{i:08d}", ()))) for i in range(1, 5)
     }
     assert inc.heal() == len(want["d00000003"])
     assert not os.listdir(pend)
-    check_totals()
+    _assert_totals_equal_scan(inc, len(OOO_BOUNDS))
+
+
+def _assert_totals_equal_scan(inc, snap_id):
+    """The metrics rows of ``snap_id`` carry the running totals its commit
+    observed; they must equal a direct scan of each tier as committed
+    now (right after that commit, or after a heal, which changes no
+    window's count or points)."""
+    rows = [r for r in inc.metrics_table().collect() if r["snapshot_id"] == snap_id]
+    assert {r["tier"] for r in rows} == {"1m", "1h", "1d"}
+    for r in rows:
+        direct = inc.tier(r["tier"]).agg(
+            F.count(F.lit(1)).alias("w"), F.sum("n_points").alias("p")
+        ).collect()[0]
+        assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"]), r
 
 
 def test_tier_wholly_behind_bound_writes_no_leaf(spark, tmp_path):
@@ -326,25 +368,28 @@ def test_commit_and_heal_share_one_tier_aggregate(
     assert calls == ["merge_tiers"]
 
 
-def test_fused_merge_takes_the_heal_twin_by_rank(spark, ooo_snapshots, tmp_path):
+def test_fused_merge_takes_the_heal_entry_by_rank(spark, ooo_snapshots, tmp_path):
     """The commit after a heal merges windows whose previous rows sit in
-    ``d{n-1}``, in its heal twin ``d{n-1}h`` and in older entries, with
-    different values — the heal row's statistics are neither all larger
-    nor all smaller. The MERGE takes the heal row by its rank, not by
-    value: the tiers equal a batch recompute, and the observed running
-    totals equal a scan at every version."""
+    the out-of-order commit's entry ``d3``, in the heal's entry ``d4``
+    and in older entries, with different values — the heal row's
+    statistics are neither all larger nor all smaller. The MERGE takes
+    the heal row by its rank, not by value: the tiers equal a batch
+    recompute, and the observed running totals equal a scan right after
+    every commit."""
     src, full_t = ooo_snapshots
     staged = str(tmp_path / "staged")
     work = str(tmp_path / "w")
-    _stage_upto(src, staged, 3)
     inc = IncrementalRollup(spark, staged, work, pack_tiers=("1m",), max_chain=None)
-    assert inc.process_pending() == 3
+    for i in (1, 2, 3):
+        _stage_upto(src, staged, i)
+        assert inc.process_pending() == 1
+        _assert_totals_equal_scan(inc, i)
     assert inc.heal() > 0
 
     def entry(name):
         return _agg_as_dict(spark.read.parquet(os.path.join(work, "tiers", name)))
 
-    plain, healed = entry("d00000003"), entry("d00000003h")
+    plain, healed = entry("d00000003"), entry("d00000004")
     differ = {k for k in plain.keys() & healed.keys() if plain[k] != healed[k]}
     pairs = [
         (p, h)
@@ -355,18 +400,14 @@ def test_fused_merge_takes_the_heal_twin_by_rank(spark, ooo_snapshots, tmp_path)
     assert any(h < p for p, h in pairs) and any(h > p for p, h in pairs)
     _stage_upto(src, staged, 4)
     assert inc.process_pending() == 1
-    # the commit re-merged windows of both twins
-    assert differ & entry("d00000004").keys()
+    # the commit re-merged windows of both entries
+    assert differ & entry("d00000005").keys()
     full_m = derive_turn_metrics(full_t)
     for tier in ("1m", "1h", "1d"):
         assert _agg_as_dict(inc.tier(tier)) == _agg_as_dict(
             rollup_from_turns(full_m, tier)
         ), tier
-    for r in inc.metrics_table().collect():
-        direct = inc.tier(r["tier"], version=r["snapshot_id"]).agg(
-            F.count(F.lit(1)).alias("w"), F.sum("n_points").alias("p")
-        ).collect()[0]
-        assert (r["n_windows"], r["n_points"]) == (direct["w"], direct["p"]), r
+    _assert_totals_equal_scan(inc, 4)
 
 
 def _stage_upto(src, staged, n):
@@ -429,7 +470,7 @@ def test_state_and_heal_flag_entries_are_one_file(spark, ooo_snapshots, tmp_path
     pending = _parquet_files_per_entry(work, "heal_pending")  # heal() deletes them
     assert inc.heal() > 0
     files = {**pending, **_parquet_files_per_entry(work, "state")}
-    assert "heal_pending/d00000003" in files and "state/d00000004h" in files, files
+    assert "heal_pending/d00000003" in files and "state/d00000005" in files, files
     assert set(files.values()) == {1}, files
 
 

@@ -120,8 +120,16 @@ def test_noop_when_caught_up(spark, snapshots, tmp_path):
 def test_metrics_lineage(spark, snapshots, tmp_path):
     src, full_t = snapshots
     work = str(tmp_path / "work4")
-    inc = IncrementalRollup(spark, src, work)
-    inc.process_pending()
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, work)
+    # running totals (maintained arithmetically from delta-sized stats,
+    # never an O(table) rescan) match a direct scan right after EVERY
+    # commit
+    for snap_id in (1, 2, 3):
+        _stage(src, staged, snap_id)
+        assert inc.process_pending() == 1
+        _assert_totals_equal_scan(inc, snap_id)
     mt = inc.metrics_table()
     assert mt.schema.simpleString() == (
         "struct<run_id:string,snapshot_id:int,tier:string,n_windows:bigint,"
@@ -137,19 +145,6 @@ def test_metrics_lineage(spark, snapshots, tmp_path):
     n_turns = full_t.count()
     last = {r["tier"]: r["n_points"] for r in rows if r["snapshot_id"] == 3}
     assert set(last.values()) == {n_turns}
-    # running totals (maintained arithmetically from delta-sized stats,
-    # never an O(table) rescan) match a direct scan at EVERY version
-    for snap_id in (1, 2, 3):
-        per_tier = {
-            r["tier"]: r for r in rows if r["snapshot_id"] == snap_id
-        }
-        for tier in ("1m", "1h", "1d"):
-            direct = inc.tier(tier, version=snap_id).agg(
-                F.count(F.lit(1)).alias("w"),
-                F.sum("n_points").alias("p"),
-            ).collect()[0]
-            assert per_tier[tier]["n_windows"] == direct["w"]
-            assert per_tier[tier]["n_points"] == direct["p"]
     # checkpoint file records version 3
     with open(os.path.join(work, "_checkpoint.json")) as f:
         assert json.load(f)["version"] == 3
@@ -181,13 +176,10 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
     calls = []
     orig = IncrementalRollup._resolve_chain
 
-    def spy(self, base, version, keys, touched=None, touched_on=None,
-            tiers=None, **kw):
-        calls.append({"base": base, "version": version, "keys": keys,
-                      "touched": touched, "touched_on": touched_on,
-                      "tiers": tiers})
-        return orig(self, base, version, keys, touched=touched,
-                    touched_on=touched_on, tiers=tiers, **kw)
+    def spy(self, base, entries, keys, touched=None, tiers=None, **kw):
+        calls.append({"base": base, "entries": entries, "keys": keys,
+                      "touched": touched, "tiers": tiers})
+        return orig(self, base, entries, keys, touched=touched, tiers=tiers, **kw)
 
     IncrementalRollup._resolve_chain = spy
     try:
@@ -211,12 +203,11 @@ def test_chain_reads_are_touched_pruned(spark, snapshots, tmp_path):
         # conv-state by touched conversation. A None here is a regression
         # to a full-table merge.
         assert c["touched"] is not None, f"un-pruned chain read: {c['base']}"
-        full = per_tier(orig(inc, c["base"], c["version"], c["keys"],
-                             state["healed_through"], tiers=c["tiers"]))
-        got = per_tier(orig(inc, c["base"], c["version"], c["keys"],
-                            state["healed_through"], touched=c["touched"],
-                            touched_on=c["touched_on"], tiers=c["tiers"]))
-        if (c["touched_on"] or c["keys"]) == c["keys"]:
+        full = per_tier(orig(inc, c["base"], c["entries"], c["keys"],
+                             tiers=c["tiers"]))
+        got = per_tier(orig(inc, c["base"], c["entries"], c["keys"],
+                            touched=c["touched"], tiers=c["tiers"]))
+        if c["touched"].columns == c["keys"]:
             # window-keyed prune: the merge read is bounded, per tier, by
             # the keys it touches, and snapshot 3 (turns >= 60) touches a
             # strict subset of the 1m windows so pruning must actually bite
@@ -247,7 +238,8 @@ def _stage(src, staged, snap_id):
 
 def _assert_totals_equal_scan(inc, snap_id):
     """The metrics rows of ``snap_id`` carry the running totals the commit
-    observed; they must equal a direct scan of each tier at that version."""
+    observed; right after that commit they must equal a direct scan of
+    each tier."""
     rows = {
         r["tier"]: r
         for r in inc.metrics_table().collect()
@@ -255,7 +247,7 @@ def _assert_totals_equal_scan(inc, snap_id):
     }
     assert set(rows) == {"1m", "1h", "1d"}
     for tier, r in rows.items():
-        direct = inc.tier(tier, version=snap_id).agg(
+        direct = inc.tier(tier).agg(
             F.count(F.lit(1)).alias("w"),
             F.coalesce(F.sum("n_points"), F.lit(0)).alias("p"),
         ).collect()[0]
@@ -357,7 +349,7 @@ def test_observed_totals_existing_and_new_windows(spark, tmp_path):
     """Snapshot 2 holds only turns that fall in windows snapshot 1 already
     wrote (0 new windows in every tier); snapshot 3 holds only new
     conversations (no previous rows at all). The observed running totals
-    equal a direct scan at every version."""
+    equal a direct scan right after every commit."""
     t = generate_transcripts(spark, "t_small", seed=42).withColumn(
         "_m", F.floor(ts_us_col("ts") / 60_000_000)
     )
@@ -380,9 +372,14 @@ def test_observed_totals_existing_and_new_windows(spark, tmp_path):
         part.drop("_m", "_last", "_same_min").write.parquet(
             os.path.join(src, f"snap_{i:08d}")
         )
-    inc = IncrementalRollup(spark, src, str(tmp_path / "w"))
-    assert inc.process_pending() == 3
-    rows = {v: _assert_totals_equal_scan(inc, v) for v in (1, 2, 3)}
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"))
+    rows = {}
+    for v in (1, 2, 3):
+        _stage(src, staged, v)
+        assert inc.process_pending() == 1
+        rows[v] = _assert_totals_equal_scan(inc, v)
     n_tail = parts[1].count()
     for tier in ("1m", "1h", "1d"):
         assert rows[2][tier]["n_windows"] == rows[1][tier]["n_windows"]

@@ -57,7 +57,7 @@ def test_incremental_pack_bytes_equal_full_recompute_each_version(
         inc._process_one(state, snap_id, snap_path)
         state["version"] = snap_id
         inc._commit_ckpt(state)
-        got = _packed_as_dict(inc.packed_tier("1m", snap_id))
+        got = _packed_as_dict(inc.packed_tier("1m"))
         want = _packed_as_dict(
             _full_pack(spark, full_t, BOUNDS[snap_id - 1][1], "1m")
         )
@@ -73,7 +73,7 @@ def test_incremental_pack_survives_crash_replay(spark, snapshots, tmp_path):
     state["version"] = snaps[0][0]
     inc._commit_ckpt(state)
     # crash AFTER the packed delta write but BEFORE the checkpoint commit:
-    # the orphan d00000002 exists; the rerun must overwrite it
+    # the orphan d00000002 exists; the rerun must remove and rewrite it
     inc._process_one(state, *snaps[1])
     orphan = os.path.join(str(tmp_path / "w2"), "packed", "d00000002", "tier=1m")
     assert os.path.isdir(orphan)
@@ -132,7 +132,7 @@ def test_two_pack_tiers_one_row_per_window_each_version(spark, snapshots, tmp_pa
                 "conv_id", "window_start_us"
             )
             assert keys.count() == keys.distinct().count(), (snap_id, tier)
-            got = _packed_as_dict(inc.packed_tier(tier, snap_id))
+            got = _packed_as_dict(inc.packed_tier(tier))
             want = _packed_as_dict(
                 _full_pack(spark, full_t, BOUNDS[snap_id - 1][1], tier)
             )
@@ -202,9 +202,10 @@ def test_repack_groups_span_arrow_batches(spark, ranked_snapshots, tmp_path):
 
 
 def test_repack_takes_each_windows_highest_rank_blob(spark, ranked_snapshots, tmp_path):
-    """Windows whose blobs sit in ``d3``, its heal twin ``d3h`` and ``d4``
-    (and ``d2``), all different, are re-encoded by commit 5 from the
-    ``d4`` blob, the highest-ranked one: the packs equal a batch pack."""
+    """Windows whose blobs sit in ``d3`` (commit 3), ``d4`` (the heal
+    after it) and ``d5`` (commit 4) (and ``d2``), all different, are
+    re-encoded by commit 5 from the ``d5`` blob, the highest-ranked one:
+    the packs equal a batch pack."""
     src, t = ranked_snapshots
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
@@ -220,12 +221,12 @@ def test_repack_takes_each_windows_highest_rank_blob(spark, ranked_snapshots, tm
             for r in df.collect()
         }
 
-    d3, d3h, d4 = blobs("d00000003"), blobs("d00000003h"), blobs("d00000004")
-    layered = {k for k in d3.keys() & d3h.keys() & d4.keys() if len({d3[k], d3h[k], d4[k]}) == 3}
+    d3, d4, d5 = blobs("d00000003"), blobs("d00000004"), blobs("d00000005")
+    layered = {k for k in d3.keys() & d4.keys() & d5.keys() if len({d3[k], d4[k], d5[k]}) == 3}
     _commit(inc, src, staged, 5)
     # commit 5 re-encoded such windows (1h ones: a 1m window is too short
     # to hold turns of snapshots 3 and 4)
-    assert layered & blobs("d00000005").keys()
+    assert layered & blobs("d00000006").keys()
     _assert_packs_equal_batch(spark, inc, t, 5)
 
 

@@ -108,33 +108,6 @@ def test_out_of_order_input_same_bytes(spark):
     assert pa == pb
 
 
-def test_assume_sorted_same_bytes(spark):
-    """assume_sorted=True packs the lag-window output (already in
-    (conv_id, turn_idx, ts) order within partitions, unique turn_idx,
-    monotone ts) to byte-identical blobs while skipping both the exchange
-    and the Tungsten sort."""
-    t = generate_transcripts(spark, "t_small", seed=42)
-    m = derive_turn_metrics(t)
-    pa = {
-        (r["conv_id"], r["window_start_us"]): (bytes(r["payload"]), r["crc32"])
-        for r in pack_tier(m, "1m").collect()
-    }
-    pb = {
-        (r["conv_id"], r["window_start_us"]): (bytes(r["payload"]), r["crc32"])
-        for r in pack_tier(m, "1m", assume_sorted=True).collect()
-    }
-    assert pa == pb
-    # same through a cache (the scaling-job shape: persist then pack)
-    mc = m.select("conv_id", "turn_idx", "ts_us", "latency_us", "token_count").persist()
-    mc.count()
-    pc = {
-        (r["conv_id"], r["window_start_us"]): (bytes(r["payload"]), r["crc32"])
-        for r in pack_tier(mc, "1m", assume_sorted=True).collect()
-    }
-    mc.unpersist()
-    assert pa == pc
-
-
 def test_chunk_split_across_windows(spark):
     """Conversations long enough to cross the CHUNK_POINTS turn boundary
     inside one window produce multi-chunk blobs that decode whole."""

@@ -222,7 +222,7 @@ def test_compact_is_logically_invisible(spark, snapshots, tmp_path):
         (r["conv_id"], r["window_start_us"]): bytes(r["payload"])
         for r in inc.packed_tier("1m").collect()
     }
-    before_state = _rows_as_set(inc.conv_state(inc._read_ckpt()["version"]))
+    before_state = _rows_as_set(inc.conv_state())
 
     inc.compact()
     for t in ("1m", "1h", "1d"):
@@ -236,9 +236,7 @@ def test_compact_is_logically_invisible(spark, snapshots, tmp_path):
         for r in inc.packed_tier("1m").collect()
     }
     assert after_packed == before_packed
-    assert _rows_as_set(
-        inc.conv_state(inc._read_ckpt()["version"])
-    ) == before_state
+    assert _rows_as_set(inc.conv_state()) == before_state
 
     # and the pipeline keeps working on the compacted layout: another
     # sweep is a no-op accounting-wise (bounds already committed)

@@ -206,6 +206,42 @@ def test_stateful_metrics_carry_latency_across_batches(spark, stream_setup, tmp_
     assert got == want
 
 
+def test_stateful_metrics_token_count_equals_batch(spark, tmp_path):
+    """The stateful path counts tokens by the batch definition, also on
+    texts where whitespace splitting in Python disagrees with it: a
+    trailing newline, a lone newline or tab, a no-break space."""
+    from sac2mseed_spark.streaming.rollup_stream import stream_metrics_stateful
+
+    texts = ["hello world\n", "\n", "\t", "a\xa0b", "two words"]
+    t = spark.createDataFrame(
+        [
+            ("c", i, "user", text, None, f"2024-01-01 00:00:{i:02d}")
+            for i, text in enumerate(texts)
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    src = str(tmp_path / "in")
+    t.write.parquet(src)
+    out = str(tmp_path / "out")
+    q = (
+        stream_metrics_stateful(spark.readStream.schema(t.schema).parquet(src))
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = {r["turn_idx"]: r["token_count"] for r in spark.read.parquet(out).collect()}
+    want = {
+        r["turn_idx"]: r["token_count"]
+        for r in derive_turn_metrics(t).select("turn_idx", "token_count").collect()
+    }
+    assert want == {0: 3, 1: 2, 2: 2, 3: 1, 4: 2}
+    assert got == want
+
+
 def test_stream_kill_resume_more_data_no_dup_no_drop(spark, tmp_path):
     """Full kill/resume E2E: run the tier sink over partial input, stop the
     query, append more data, restart on the SAME checkpoint — the final

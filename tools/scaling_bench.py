@@ -122,11 +122,10 @@ def _pipeline_once(spark, conv_slice=None, with_counts=True):
         force(t1h.unionByName(rollup_from_tier(t1h, "1d")))
     stages["cascade"] = round(time.perf_counter() - t, 2)
     stage_ts["cascade_end"] = round(time.time(), 2)
-    # m is already hash-partitioned AND (conv_id, turn_idx, ts)-sorted by
-    # the lag window -> the pack skips both its exchange and its sort
-    # (byte identity asserted by tests/test_pack_spark.py)
+    # m is already hash-partitioned on conv_id by the lag window -> the
+    # planner drops the pack's exchange
     t = time.perf_counter()
-    force(pack_tier(m, "1m", assume_sorted=True))
+    force(pack_tier(m, "1m"))
     stages["pack"] = round(time.perf_counter() - t, 2)
     stage_ts["pack_end"] = round(time.time(), 2)
     t1m.unpersist()
