@@ -12,9 +12,9 @@ Design principles (see SURVEY.md):
   * DataFrame/SQL only — Catalyst plans every scan/filter/agg/join.
   * Python appears only inside Arrow-batched UDFs (codec kernels).
   * Windows are self-delimiting (each packs its own X0) so encode is
-    embarrassingly parallel and resume-safe; cross-window continuity is a
-    *verification* join, mirroring StreamState (libmseed pack.c:1003-1039)
-    without serializing the pipeline.
+    embarrassingly parallel and resume-safe; each blob's Xn is checked on
+    decode, and no StreamState (libmseed pack.c:1003-1039) serializes the
+    pipeline.
 """
 
 __version__ = "0.1.0"

@@ -24,9 +24,9 @@ share one exchange, one sort and one vectorized pass.
 Windows are self-delimiting (each chunk re-anchors at its own X0) so there
 is NO cross-window or cross-chunk state — the property that makes packing
 embarrassingly parallel and resume-safe (SURVEY.md §7 phase 2 decision).
-Continuity of Xn -> next X0 is verified after the fact by
-verify_continuity() instead of being a sequential dependence at pack time
-(StreamState, libmseed.h:458-465).
+Each blob is checked on its own: every decode checks its Xn (``check_xn``),
+and nothing carries from one window's Xn to the next window's X0, where the
+reference keeps a sequential StreamState (libmseed.h:458-465).
 
 Design decision — blob granularity stays ONE WINDOW per blob (DR-1)
 --------------------------------------------------------------------
@@ -77,7 +77,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import TIERS
 from ..codec import CHUNK_POINTS, blob_head
 from ..codec.vectorized import encode_chunks_raw, put_varints, varint_len
 from .rollup import RANK, window_start_col
@@ -527,30 +526,3 @@ def repack_tier(packed: DataFrame, to_tier: str) -> DataFrame:
     )
     return pack_tier(flat, to_tier)
 
-
-def verify_continuity(packed: DataFrame) -> DataFrame:
-    """Cross-window chain audit: expose each window's x0 next to the
-    previous window's xn — the StreamState comphistory relationship
-    (pack.c:1003-1039) recast as a declarative lag instead of pack-time
-    state. ``adjacent`` marks windows that directly follow their
-    predecessor (no missing window between them)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id", "tier").orderBy("window_start_us")
-    tier_us = F.element_at(
-        F.create_map(*[x for t, us in TIERS.items() for x in (F.lit(t), F.lit(us))]),
-        F.col("tier"),
-    )
-    return packed.select(
-        "conv_id",
-        "tier",
-        "window_start_us",
-        "x0",
-        "xn",
-        F.lag("xn").over(w).alias("prev_xn"),
-        F.lag("window_start_us").over(w).alias("prev_ws"),
-    ).withColumn(
-        "adjacent",
-        F.col("prev_ws").isNotNull()
-        & ((F.col("window_start_us") - F.col("prev_ws")) == tier_us),
-    )

@@ -38,7 +38,7 @@ the table — the reference merges into only the touched trace the same way
 deployment expresses the same chain as MERGE + positional deletes (no
 Iceberg jars in this sandbox, so parquet dirs + this resolver stand in).
 ``compact()`` is the rewrite_data_files analogue that folds a long chain
-back into one base directory.
+into one entry: the next numbered entry, like a commit's or a heal's.
 
 Cross-snapshot state (libmseed's StreamState, libmseed.h:458-465): each
 snapshot also writes the touched conversations' new ``(conv_id,
@@ -92,8 +92,9 @@ A crash between (2) and (3) leaves orphan d{n+1} directories that the
 rerun removes before it writes — re-aggregation is deterministic and the
 merge is integer-exact-associative (operators/rollup.py contract), so
 replaying a snapshot is idempotent: the chain resolver never reads past
-the committed counter, so nothing is double-counted. A heal follows the
-same three steps without a snapshot. Rollup-count totals in
+the committed counter, so nothing is double-counted. A heal and a
+compaction follow the same three steps without a snapshot (a compaction
+then deletes the entries below its own). Rollup-count totals in
 the metrics table are maintained ARITHMETICALLY (previous committed
 totals + the windows and points of each tier the MERGE wrote minus those
 of the previous rows it replaced, crash-safe inside the same checkpoint),
@@ -152,22 +153,22 @@ The jobs of a commit are fixed costs, so each is cut where it arises:
     the windows with a new point. One plan shape, and as many jobs for
     two pack tiers as for one.
 
-Reads never see uncommitted data — every structural transition is gated
-by the atomically-swapped checkpoint:
-
-  * chain entries, a commit's or a heal's: invisible until ``entries``
-    reaches them (above); crash debris above the counter is removed
-    before the next commit or heal writes, so the counter never passes
-    an entry it did not commit;
-  * compaction: two-phase — stage under ``_compact_tmp`` (a name the
-    chain regex never matches), commit ``compact_intent``, swap, clear.
-    A crash mid-swap is finished by ``_maybe_recover()`` on the next
-    entry point, reads included, so a half-swapped chain is never served.
+Reads never see uncommitted data, and never write: every chain entry,
+a commit's, a heal's or a compaction's, is invisible until the
+atomically-swapped checkpoint's ``entries`` counter reaches it. Crash
+debris above the counter is removed by the next writer before it writes
+(``_gc_uncommitted``), so the counter never passes an entry it did not
+commit. A compaction's entry holds the latest row of every key above the
+committed retention bounds and ranks above every older entry, so the
+older entries it deletes after its checkpoint are shadowed or
+read-filtered: a crash partway through the deletes leaves a chain that
+reads the same, which ``chain_length`` still counts and the next
+compaction folds.
 
 ``compact()`` runs automatically when any family's chain exceeds
-``max_chain`` entries (ctor policy) — bounding the per-read latest-wins
-resolve at O(max_chain) deltas — and remains callable as an explicit
-maintenance action.
+``max_chain`` entries after a commit or a heal (ctor policy) — bounding
+the per-read latest-wins resolve at O(max_chain) deltas — and remains
+callable as an explicit maintenance action.
 """
 
 from __future__ import annotations
@@ -366,7 +367,7 @@ class IncrementalRollup:
         self.input_dir = input_dir
         self.work_dir = work_dir
         self.pack_tiers = tuple(pack_tiers)
-        # auto-compaction policy: after a snapshot commit, if any family's
+        # auto-compaction policy: after a commit or a heal, if any family's
         # chain exceeds this many entries, compact() runs inline (None
         # disables). Bounds the entries every chain resolve scans: a
         # commit's fused resolves carry the touched rows of every entry,
@@ -388,10 +389,7 @@ class IncrementalRollup:
                 "retention_bounds": {},
             }
         with open(self.ckpt_path) as f:
-            state = json.load(f)
-        state.setdefault("totals", {})
-        state.setdefault("retention_bounds", {})
-        return state
+            return json.load(f)
 
     def _commit_ckpt(self, state: dict) -> None:
         tmp = self.ckpt_path + ".tmp"
@@ -433,10 +431,12 @@ class IncrementalRollup:
     def _chain_dirs(self, base: str, entries: int) -> list[str]:
         """The committed entries of a chain, ``d{n}`` with n <= ``entries``
         (the checkpoint's counter), in ascending order. An entry above the
-        counter is the debris of a commit or heal that crashed before its
-        checkpoint: invisible to every read (no torn reads — the module
-        doc's reads-never-see-uncommitted-data invariant), and removed by
-        ``_gc_uncommitted`` before the next commit or heal writes."""
+        counter is the debris of a commit, heal or compaction that crashed
+        before its checkpoint: invisible to every read (no torn reads — the
+        module doc's reads-never-see-uncommitted-data invariant), and
+        removed by ``_gc_uncommitted`` before the next writer writes.
+        Entries below a compaction's that a crash left undeleted are
+        listed too: shadowed, they read the same."""
         if not os.path.isdir(base):
             return []
         found = []
@@ -511,15 +511,15 @@ class IncrementalRollup:
 
     # -- readers --------------------------------------------------------
     def conv_state(self) -> DataFrame | None:
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         return self._resolve_chain(self._base("state"), state["entries"], _CONV_KEYS)
 
     def tier(self, tier: str) -> DataFrame | None:
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         return self._read_family("tiers", tier, state)
 
     def packed_tier(self, tier: str) -> DataFrame | None:
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         return self._read_family("packed", tier, state)
 
     def _read_family(self, family: str, tier: str, state: dict) -> DataFrame | None:
@@ -566,7 +566,7 @@ class IncrementalRollup:
     def process_pending(self) -> int:
         """Roll every unprocessed snapshot into the tier tables; returns
         the number of snapshots processed. Safe to call after a crash."""
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         done = 0
         for snap_id, snap_path in list_snapshots(self.input_dir):
             if snap_id <= state["version"]:
@@ -575,12 +575,7 @@ class IncrementalRollup:
             state["version"] = snap_id
             self._commit_ckpt(state)
             done += 1
-            # auto-compaction policy (ctor doc): keep every family's
-            # MERGE-on-read chain bounded. Runs AFTER the commit, so a
-            # crash inside compact never loses the snapshot.
-            if self.max_chain is not None and self.chain_length(state) > self.max_chain:
-                self.compact()
-                state = self._read_ckpt()
+            self._bound_chain(state)
         return done
 
     def _process_one(self, state: dict, snap_id: int, snap_path: str) -> None:
@@ -802,10 +797,11 @@ class IncrementalRollup:
         checkpoint's ``entries`` counter reaches it, and the counter
         advances only after every family's dir is fully written, so a
         mid-heal crash leaves reads exactly as before the heal; the rerun
-        removes the debris and writes the entry again. Returns the number
-        of conversations healed, as observed on the conv-state write (one
-        row per conversation)."""
-        state = self._maybe_recover(self._read_ckpt())
+        removes the debris and writes the entry again. Like a commit, a
+        heal is followed by the auto-compaction policy (``max_chain``).
+        Returns the number of conversations healed, as observed on the
+        conv-state write (one row per conversation)."""
+        state = self._read_ckpt()
         v = state["version"]
         if v == 0:
             return 0
@@ -846,6 +842,7 @@ class IncrementalRollup:
         # flags. Dirs that appeared concurrently stay for the next heal.
         for p in pend_dirs:
             shutil.rmtree(p, ignore_errors=True)
+        self._bound_chain(state)
         return n_convs
 
     # -- retention (downsample-and-expire) ------------------------------
@@ -865,7 +862,7 @@ class IncrementalRollup:
         two loses only the accounting row, and a rerun with the same
         ``now_us`` rewrites it keyed-idempotently). Physical space is
         reclaimed later by ``compact()``. Returns the accounting rows."""
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         # one resolve and one grouped sweep per family; packed rows are
         # named ``packed:{t}`` (windows are the unit of eviction for both
         # representations, so each shares its aggregate twin's bound)
@@ -908,14 +905,14 @@ class IncrementalRollup:
         retained tier per age band (operators/retention.serve_tiered),
         read straight off the delta chains. Pure prunable predicates +
         union — the query a dashboard runs against this store."""
-        state = self._maybe_recover(self._read_ckpt())
+        state = self._read_ckpt()
         return serve_tiered(self._read_tiers(state), now_us, horizons)
 
     # -- maintenance ----------------------------------------------------
     def _gc_uncommitted(self, state: dict) -> None:
         """Remove every chain entry above the committed ``entries``
-        counter — the debris of a commit or heal that crashed before its
-        checkpoint. Runs before each commit and heal writes, so the
+        counter — the debris of a commit, heal or compaction that crashed
+        before its checkpoint. Runs before each of them writes, so the
         counter never passes an entry it did not commit."""
         for base, _ in self._compact_jobs():
             if not os.path.isdir(base):
@@ -925,36 +922,14 @@ class IncrementalRollup:
                 if m and int(m.group(1)) > state["entries"]:
                     shutil.rmtree(os.path.join(base, name))
 
-    def _maybe_recover(self, state: dict) -> dict:
-        """Finish a crashed compact() swap before anything reads a chain.
-
-        Called from every public entry point: if the checkpoint carries a
-        ``compact_intent``, the staged-but-unswapped families are swapped
-        now (idempotent — a family whose ``_compact_tmp`` is gone was
-        already adopted) and the intent is cleared. Cheap no-op otherwise."""
-        if "compact_intent" in state:
-            self._finish_compact(state)
-        return state
-
-    def _finish_compact(self, state: dict) -> None:
-        """Phase 2 of compact(): per family, drop the superseded chain
-        entries and adopt the staged ``_compact_tmp`` as ``d{v}`` (the
-        os.replace is atomic; a crash anywhere here is resumed by
-        _maybe_recover on the next entry point, which re-runs this loop —
-        families with no staged tmp left are skipped)."""
-        v = state["compact_intent"]
-        for base, _ in self._compact_jobs():
-            tmp = os.path.join(base, "_compact_tmp")
-            if not os.path.isdir(tmp):
-                continue  # never staged, or already swapped on a prior run
-            for p in self._chain_dirs(base, v):
-                shutil.rmtree(p)
-            os.replace(tmp, self._delta_path(base, v))
-        # pending dirs are NOT touched here: heal() owns their lifecycle
-        # (a leftover means not-certainly-healed under its deletion
-        # protocol, and compacting must never lose heal flags)
-        state.pop("compact_intent")
-        self._commit_ckpt(state)
+    def _bound_chain(self, state: dict) -> None:
+        """The auto-compaction policy (ctor doc), run once a commit or a
+        heal has committed its entry in ``state``: compact when any
+        family's chain is longer than ``max_chain``. It runs AFTER the
+        checkpoint, so a crash inside compact() never loses what was
+        committed."""
+        if self.max_chain is not None and self.chain_length(state) > self.max_chain:
+            self.compact(state)
 
     def chain_length(self, state: dict | None = None) -> int:
         """Longest delta chain across the three table families
@@ -966,43 +941,41 @@ class IncrementalRollup:
             for b, _ in self._compact_jobs()
         )
 
-    def compact(self) -> None:
-        """Fold every chain into a single base directory, its latest
-        committed entry ``d{entries}`` (Iceberg's rewrite_data_files
-        maintenance action): resolve latest-wins + retention bounds,
-        rewrite, drop the old entries.
-        Reads before/after are row-identical (tests assert).
+    def compact(self, state: dict | None = None) -> None:
+        """Fold every chain into one entry (Iceberg's rewrite_data_files
+        maintenance action): each family's latest-wins resolve under the
+        committed retention bounds, written as the next entry ``d{n}`` like
+        a commit's or a heal's, then the entries below it are deleted.
+        Reads before/after are row-identical (tests assert). ``state`` (the
+        committed checkpoint; default: read it) advances to n.
 
-        Crash-safe two-phase protocol (the parquet standin for Iceberg's
-        atomic metadata swap):
-
-          1. stage every family's resolved table under ``_compact_tmp``
-             (a name the chain regex never matches — invisible to reads;
-             a crash here leaves harmless debris the next run overwrites)
-          2. atomically commit ``compact_intent = v`` (the entry counter)
-             in the checkpoint
-          3. per family: drop superseded entries, adopt tmp as ``d{v}``
-          4. clear the intent, commit
-
-        A crash inside (3)-(4) is finished by ``_maybe_recover`` on the
-        next entry point (reads included), so a half-swapped chain is
-        never served."""
-        state = self._maybe_recover(self._read_ckpt())
-        v = state["entries"]
-        staged = 0
+        The one crash protocol of every writer: debris above the counter
+        is removed first, the entry is invisible until the checkpoint
+        counts it, and it holds the latest row of every key above the
+        bounds while ranking above every older entry — so the older rows
+        are shadowed or read-filtered, and deleting them after the
+        checkpoint only reclaims space. A crash partway through the
+        deletes leaves a chain that reads the same and that
+        ``chain_length`` still counts, so the next compaction folds it."""
+        state = state or self._read_ckpt()
+        if state["entries"] == 0:
+            return  # nothing committed yet
+        self._gc_uncommitted(state)
+        n = state["entries"] + 1
         for base, keys in self._compact_jobs():
-            df = self._resolve_chain(base, v, keys, bounds=state["retention_bounds"])
+            df = self._resolve_chain(
+                base, state["entries"], keys, bounds=state["retention_bounds"]
+            )
             if df is None:
                 continue
-            tmp = os.path.join(base, "_compact_tmp")
+            path = self._delta_path(base, n)
             with self._phase(f"compact {os.path.basename(base)}"):
                 if keys == _WINDOW_KEYS:
-                    _write_by_tier(df, tmp)
+                    _write_by_tier(df, path)
                 else:
-                    table_writer(df).mode("overwrite").parquet(tmp)
-            staged += 1
-        if staged == 0:
-            return
-        state["compact_intent"] = v
+                    table_writer(df).mode("overwrite").parquet(path)
+        state["entries"] = n
         self._commit_ckpt(state)
-        self._finish_compact(state)
+        for base, _ in self._compact_jobs():
+            for p in self._chain_dirs(base, n - 1):
+                shutil.rmtree(p)

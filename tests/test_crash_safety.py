@@ -1,15 +1,18 @@
 """Crash-consistency of the delta-chain store: reads never see
-uncommitted data, and every maintenance action resumes cleanly.
+uncommitted data, reads never write, and every writer resumes cleanly.
 
 Invariants under test (plans/pipeline.py module doc):
-  * a chain entry ``d{n}`` is invisible until the checkpoint's
-    ``entries`` counter reaches n, and debris above the counter from a
-    crashed commit or heal is removed before the counter can pass it;
-  * compact() is two-phase (stage -> intent -> swap -> clear) and a crash
-    at ANY step leaves reads identical, with ``_maybe_recover`` finishing
-    the swap on the next entry point;
-  * the auto-compaction policy keeps every family's chain bounded while
-    staying at batch-recompute parity;
+  * a chain entry ``d{n}`` — a commit's, a heal's or a compaction's — is
+    invisible until the checkpoint's ``entries`` counter reaches n, and
+    debris above the counter from a crashed writer is removed before the
+    counter can pass it;
+  * compact() writes the folded chain as the next entry and deletes the
+    older ones after its checkpoint: a crash at ANY step leaves reads
+    identical, and the next compact() folds what is left;
+  * no read entry point changes a byte of the store, whatever state a
+    crash left it in;
+  * the auto-compaction policy keeps every family's chain bounded after
+    commits and heals alike while staying at batch-recompute parity;
   * chain reads during incremental maintenance are DELTA-SIZED: the
     touched-window semi-join prunes each chain entry to at most the
     delta's keys (the claim behind "per-snapshot cost proportional to
@@ -22,6 +25,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from sac2mseed_spark import TIERS
 from sac2mseed_spark.functions.metrics import derive_turn_metrics
 from sac2mseed_spark.operators.rollup import rollup_from_turns
 from sac2mseed_spark.plans import pipeline as pl
@@ -84,86 +88,150 @@ def test_uncommitted_heal_dirs_invisible_and_gcd(spark, snapshots, tmp_path):
     assert _agg_as_dict(inc.tier("1h")) == clean, "heal changed clean data"
 
 
-def _stage_compaction(inc, state, v):
-    """Phase 1 of compact() by hand: every family's resolved chain staged
-    under ``_compact_tmp`` in the family's own layout."""
-    for base, keys in inc._compact_jobs():
-        r = inc._resolve_chain(base, v, keys, bounds=state["retention_bounds"])
-        if r is not None:
-            w = r.write.mode("overwrite")
-            if "tier" in keys:
-                w = w.partitionBy("tier")
-            w.parquet(os.path.join(base, "_compact_tmp"))
-
-
-@pytest.mark.parametrize("crash_step", ["staged", "intent", "mid_rmtree", "mid_swap"])
-def test_compact_crash_matrix(spark, snapshots, tmp_path, monkeypatch, crash_step):
-    """Kill compact() at each protocol step; reads must be identical
-    before the crash, after the crash, and after recovery — and recovery
-    must leave a fully folded chain."""
-    src, full_t = snapshots
-    work = str(tmp_path / f"w_{crash_step}")
-    inc = IncrementalRollup(spark, src, work, pack_tiers=(), max_chain=None)
+@pytest.fixture(scope="module")
+def committed(spark, snapshots, tmp_path_factory):
+    """A store holding every snapshot as its own entry (packed 1m
+    included) after a retention sweep that evicts about half the 1m
+    windows; tests work on copies of it."""
+    src, t = snapshots
+    store = str(tmp_path_factory.mktemp("committed") / "w")
+    inc = IncrementalRollup(spark, src, store, pack_tiers=("1m",), max_chain=None)
     inc.process_pending()
-    want = _agg_as_dict(inc.tier("1h"))
-    state = inc._read_ckpt()
-    v = state["entries"]
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    lo_us, hi_us = t.agg(F.min(ts_us), F.max(ts_us)).collect()[0]
+    now_us = hi_us + 60_000_000
+    hz = {"1m": (hi_us - lo_us) // 2, "1h": None, "1d": None}
+    acct = inc.apply_retention(now_us, hz).collect()
+    assert {r["tier"] for r in acct if r["n_evicted"] > 0} == {"1m", "packed:1m"}
+    return src, store, now_us, hz
 
-    if crash_step == "staged":
-        # crash after phase 1: tmps staged, no intent committed
-        _stage_compaction(inc, state, v)
-    elif crash_step == "intent":
-        # crash right after phase 2: intent committed, nothing swapped
-        _stage_compaction(inc, state, v)
-        state["compact_intent"] = v
-        inc._commit_ckpt(state)
+
+def _copy(spark, committed, tmp_path):
+    src, store, _, _ = committed
+    work = str(tmp_path / "w")
+    shutil.copytree(store, work)
+    return IncrementalRollup(spark, src, work, pack_tiers=("1m",), max_chain=None)
+
+
+def _reads(inc, now_us, hz):
+    """What every read entry point returns, collected."""
+
+    def rows(df):
+        return None if df is None else sorted(repr(tuple(r)) for r in df.collect())
+
+    return {
+        **{t: rows(inc.tier(t)) for t in TIERS},
+        "packed": rows(inc.packed_tier("1m")),
+        "state": rows(inc.conv_state()),
+        "serve": rows(inc.serve(now_us, hz)),
+        "metrics": rows(inc.metrics_table()),
+        "retention": rows(inc.retention_table()),
+    }
+
+
+# where compact() is killed: after the first family's new entry is written
+# (mid_write) or after every family's (staged), before the checkpoint; or
+# after the checkpoint, on the second delete of an older entry (mid_rmtree)
+CRASH_STEPS = ["mid_write", "staged", "mid_rmtree"]
+
+
+def _crash_compact(inc, monkeypatch, step):
+    if step == "mid_write":
+        real_write = pl._write_by_tier
+
+        def boom(df, path):
+            real_write(df, path)
+            raise RuntimeError("simulated crash mid-write")
+
+        monkeypatch.setattr(pl, "_write_by_tier", boom)
+    elif step == "staged":
+
+        def boom(state):
+            raise RuntimeError("simulated crash before the checkpoint")
+
+        monkeypatch.setattr(inc, "_commit_ckpt", boom)
     else:
-        # crash INSIDE phase 3 via an injected fault: after the k-th
-        # old-entry delete (mid_rmtree) or the first adoption (mid_swap)
         calls = {"n": 0}
-        real_rmtree, real_replace = shutil.rmtree, os.replace
+        real_rmtree = shutil.rmtree
 
-        if crash_step == "mid_rmtree":
-            def boom(path, *a, **k):
-                calls["n"] += 1
-                real_rmtree(path, *a, **k)
-                if calls["n"] == 2:
-                    raise RuntimeError("simulated crash mid-delete")
-            monkeypatch.setattr(pl.shutil, "rmtree", boom)
-        else:
-            def boom(srcp, dst):
-                real_replace(srcp, dst)
-                calls["n"] += 1
-                if "_compact_tmp" in str(srcp) and calls["n"] >= 1:
-                    raise RuntimeError("simulated crash mid-swap")
-            monkeypatch.setattr(pl.os, "replace", boom)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            inc.compact()
-        monkeypatch.setattr(pl.shutil, "rmtree", real_rmtree)
-        monkeypatch.setattr(pl.os, "replace", real_replace)
+        def boom(path, *a, **k):
+            calls["n"] += 1
+            real_rmtree(path, *a, **k)
+            if calls["n"] == 2:
+                raise RuntimeError("simulated crash mid-delete")
 
-    # a FRESH handle (new process after the crash) must read clean data —
-    # recovery runs implicitly on the first entry point
-    inc2 = IncrementalRollup(spark, src, work, pack_tiers=(), max_chain=None)
-    assert _agg_as_dict(inc2.tier("1h")) == want, crash_step
-    assert "compact_intent" not in inc2._read_ckpt(), "intent not cleared"
+        monkeypatch.setattr(pl.shutil, "rmtree", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        inc.compact()
+    monkeypatch.undo()
 
-    # and an explicit compact() completes the fold
+
+@pytest.mark.parametrize("crash_step", CRASH_STEPS)
+def test_compact_crash_matrix(spark, committed, tmp_path, monkeypatch, crash_step):
+    """Kill compact() at each step; reads must be identical before the
+    crash, after it and after the next compact() — which must leave each
+    family one dir, the committed counter's entry."""
+    _, _, now_us, hz = committed
+    inc = _copy(spark, committed, tmp_path)
+    want = _reads(inc, now_us, hz)
+    _crash_compact(inc, monkeypatch, crash_step)
+
+    # a FRESH handle (new process after the crash) must read clean data
+    inc2 = IncrementalRollup(spark, inc.input_dir, inc.work_dir, pack_tiers=("1m",))
+    assert _reads(inc2, now_us, hz) == want, crash_step
+    if crash_step == "mid_rmtree":
+        # the undeleted older entries still count towards the policy
+        assert inc2.chain_length() > 1
+
+    # and the next compact() completes the fold
     inc2.compact()
-    assert _agg_as_dict(inc2.tier("1h")) == want, f"{crash_step} post-compact"
-    base = os.path.join(work, "tiers")
-    assert sorted(os.listdir(base)) == [f"d{v:08d}"], crash_step
+    assert _reads(inc2, now_us, hz) == want, f"{crash_step} post-compact"
+    n = inc2._read_ckpt()["entries"]
+    for family in ("tiers", "packed", "state"):
+        base = os.path.join(inc.work_dir, family)
+        assert sorted(os.listdir(base)) == [f"d{n:08d}"], (crash_step, family)
+
+
+def _listing(work):
+    """(path, size, mtime) of every file and dir under ``work``."""
+    out = set()
+    for root, dirs, files in os.walk(work):
+        for name in dirs + files:
+            path = os.path.join(root, name)
+            st = os.stat(path)
+            out.add((os.path.relpath(path, work), st.st_size, st.st_mtime_ns))
+    return out
+
+
+@pytest.mark.parametrize("crash_step", ["clean", *CRASH_STEPS])
+def test_reads_never_write(spark, committed, tmp_path, monkeypatch, crash_step):
+    """Every read entry point, over a clean store and over a store left
+    in each compaction crash state, leaves every file and dir and the
+    checkpoint's bytes as they were."""
+    _, _, now_us, hz = committed
+    inc = _copy(spark, committed, tmp_path)
+    if crash_step != "clean":
+        _crash_compact(inc, monkeypatch, crash_step)
+    before = _listing(inc.work_dir)
+    with open(inc.ckpt_path, "rb") as f:
+        ckpt = f.read()
+
+    inc2 = IncrementalRollup(spark, inc.input_dir, inc.work_dir, pack_tiers=("1m",))
+    _reads(inc2, now_us, hz)
+    inc2.chain_length()
+    assert _listing(inc.work_dir) == before, crash_step
+    with open(inc.ckpt_path, "rb") as f:
+        assert f.read() == ckpt, crash_step
 
 
 def test_auto_compaction_bounds_chain_at_parity(spark, snapshots, tmp_path):
     """max_chain policy: chains stay bounded across many snapshots and
-    reads remain at batch-recompute parity throughout."""
+    many heals, and reads remain at batch-recompute parity throughout."""
     src, full_t = snapshots
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
-    inc = IncrementalRollup(
-        spark, staged, str(tmp_path / "w"), pack_tiers=(), max_chain=2
-    )
+    work = str(tmp_path / "w")
+    inc = IncrementalRollup(spark, staged, work, pack_tiers=(), max_chain=2)
     for i in range(1, len(BOUNDS) + 1):
         shutil.copytree(
             os.path.join(src, f"snap_{i:08d}"),
@@ -171,6 +239,12 @@ def test_auto_compaction_bounds_chain_at_parity(spark, snapshots, tmp_path):
         )
         inc.process_pending()
         assert inc.chain_length() <= 3, f"chain unbounded at snapshot {i}"
+    # a heal is a chain entry too: re-flag one conversation before each
+    flag = full_t.select("conv_id").limit(1)
+    for k in range(1, 5):
+        flag.write.parquet(os.path.join(work, "heal_pending", f"d{len(BOUNDS):08d}"))
+        assert inc.heal() == 1
+        assert inc.chain_length() <= 3, f"chain unbounded at heal {k}"
     want = _agg_as_dict(
         rollup_from_turns(derive_turn_metrics(full_t), "1h")
     )

@@ -83,7 +83,8 @@ def test_carried_turn_at_a_duplicate_ts_equals_full_recompute(spark, tmp_path):
 
 def test_resume_after_partial_failure(spark, snapshots, tmp_path):
     """Kill between tier write and checkpoint commit -> rerun must not
-    double-count (orphan version is overwritten)."""
+    double-count (the orphan entry above the counter is removed by the
+    rerun's GC and written again)."""
     src, full_t = snapshots
     work = str(tmp_path / "work2")
     inc = IncrementalRollup(spark, src, work)

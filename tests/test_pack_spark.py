@@ -12,12 +12,7 @@ from pyspark.sql import functions as F
 
 from sac2mseed_spark.codec import CHUNK_POINTS, oracle
 from sac2mseed_spark.functions.metrics import derive_turn_metrics
-from sac2mseed_spark.operators.pack import (
-    STREAMS,
-    pack_tier,
-    unpack_tier,
-    verify_continuity,
-)
+from sac2mseed_spark.operators.pack import STREAMS, pack_tier, unpack_tier
 from sac2mseed_spark.operators.rollup import window_start_col
 from sac2mseed_spark.sources.transcripts import generate_transcripts
 
@@ -260,11 +255,3 @@ def test_payload_decodes_with_oracle(spark, packed_1m):
     assert len(streams) == len(STREAMS)
     assert ts[0] == row["first_ts_us"] and ts[-1] == row["last_ts_us"]
 
-
-def test_continuity_audit_shape(spark, packed_1m):
-    _, packed = packed_1m
-    cont = verify_continuity(packed)
-    n_adj = cont.filter("adjacent").count()
-    # adjacent windows must see a non-null prev_xn
-    assert cont.filter(F.col("adjacent") & F.col("prev_xn").isNull()).count() == 0
-    assert n_adj > 0
