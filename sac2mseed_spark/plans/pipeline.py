@@ -25,7 +25,11 @@ Reads resolve latest-entry-wins per key (aggregate and packed tiers key
 on (tier, conv_id, window_start_us); conv state keys on conv_id). There are
 three families whatever ``TIERS`` and ``pack_tiers`` hold, and one
 writer (``_write_entries``) fills an entry of each from per-turn metrics:
-one resolve, one MERGE and one write per family. The tier MERGE is the
+one resolve, one MERGE and one write per family. Each write's files
+follow the size rule of sinks/tier_tables.table_writer — a leaf of a
+small entry (``state/d{n}``, ``tiers/d{n}/tier={t}``) is one file,
+whatever the session's shuffle parallelism — except the packed write's,
+one per task of its pack. The tier MERGE is the
 one tier aggregate, ``merge_tiers``, over the previous rows of the
 touched windows ∪ the delta's turns as one-point rows of every tier
 (operators/rollup.py). A chain is resolved in ONE scan of its entries
@@ -107,13 +111,22 @@ A commit's Spark actions are its three family writes, nothing else:
 ``state`` (the conv-state entry), ``tiers`` (the MERGE) and ``pack`` (the
 packed re-encode). Each carries a job description naming its phase
 (``commit d00000002 tiers``, ``heal d00000002 pack``, ``compact tiers``);
-a commit and a heal share these three phases. What the driver already
-holds it writes itself, with pyarrow (sinks/tier_tables
-.write_driver_table): the heal flags, from the state write's
-observation; the ``metrics/`` rows, from the checkpoint's totals and the
-snapshot's file listing; a retention sweep's ``retention/`` accounting,
-from the sweeps' collected rows. A Spark write of such rows would start a
-job and a Python worker for a few rows.
+a commit and a heal share these three phases. ``state`` runs first: it
+builds the persisted frame's cache, which the other two only read, so
+``tiers`` and ``pack`` then run together (``_together``: one in the
+caller's thread, the other in a ``pyspark.InheritableThread``, which
+carries the caller's job group over). Both are joined before an error
+of either is re-raised, and before the totals, the heal flags and the
+checkpoint are written, so a failed write leaves debris above the
+counter like any crash. A compaction's three family writes run
+together the same way: no family reads another.
+
+What the driver already holds it writes itself, with pyarrow
+(sinks/tier_tables.write_driver_table): the heal flags, from the state
+write's observation; the ``metrics/`` rows, from the checkpoint's totals
+and the snapshot's file listing; a retention sweep's ``retention/``
+accounting, from the sweeps' collected rows. A Spark write of such rows
+would start a job and a Python worker for a few rows.
 
 The jobs of a commit are fixed costs, so each is cut where it arises:
 
@@ -180,11 +193,12 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from functools import reduce
+from functools import partial, reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -279,12 +293,37 @@ def _turn_metrics(raw: DataFrame, carry: DataFrame | None = None) -> DataFrame:
     return with_latency(turns).select(*SLIM_COLS, "_carried").persist()
 
 
+def _together(*writes) -> None:
+    """Run the ``writes`` (callables) at once: the first in the caller's
+    thread, each other in a ``pyspark.InheritableThread``, which carries
+    the caller's job group and job description over to its own JVM
+    thread. Every thread is joined before the first error is re-raised,
+    so no write is still running when the caller sees it."""
+    errors = []
+
+    def run(write):
+        try:
+            write()
+        except BaseException as e:  # re-raised after the join
+            errors.append(e)
+
+    threads = [InheritableThread(run, args=(w,)) for w in writes[1:]]
+    for t in threads:
+        t.start()
+    run(writes[0])
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+
+
 def _write_by_tier(df: DataFrame, path: str) -> None:
     """Write one entry of a window-keyed family: a ``tier={t}`` leaf per
-    tier with rows. An entry with no row at all gets an empty ``tier=``
+    tier with rows, its files by the size rule (sinks/tier_tables
+    .table_writer). An entry with no row at all gets an empty ``tier=``
     leaf instead (no tier reads it by name), so a read of a tier without
     rows still finds the family's columns."""
-    table_writer(df).partitionBy("tier").mode("overwrite").parquet(path)
+    table_writer(df, _WINDOW_KEYS).partitionBy("tier").mode("overwrite").parquet(path)
     if not any(n.startswith("tier=") for n in os.listdir(path)):
         schema = df.drop("tier").schema
         table_writer(df.sparkSession.createDataFrame([], schema)).parquet(
@@ -677,10 +716,8 @@ class IncrementalRollup:
             F.col("_l.ts_us").alias("last_ts_us"),
             "_ooo",
         )
-        # one file per entry for the state: it holds a few bytes per
-        # conversation, so more files would be mostly footer, and the next
-        # resolve reads every one. The write's observation also brings the
-        # flagged conversations back (a list bounded by the snapshot's
+        # the state write's observation also brings the flagged
+        # conversations back (a list bounded by the snapshot's
         # out-of-order conversations, each of which heal() re-derives
         # anyway); the driver writes them as the heal flags.
         conv_obs = Observation()
@@ -690,18 +727,14 @@ class IncrementalRollup:
                     conv_obs,
                     F.count(F.lit(1)).alias("n"),
                     F.collect_list(F.when(F.col("_ooo"), F.col("conv_id"))).alias("ooo"),
-                )
-                .drop("_ooo")
-                .coalesce(1)
+                ).drop("_ooo"),
+                _CONV_KEYS,
             ).mode("overwrite").parquet(self._delta_path(self._base("state"), n))
         n_convs, ooo = _observed(conv_obs, "n", "ooo")
-        if ooo:
-            write_driver_table(
-                [{"conv_id": c} for c in sorted(ooo)],
-                _PENDING_SCHEMA,
-                self._delta_path(self._base("heal_pending"), version),
-            )
 
+        # the state write has built ``metrics``' cache; the tier and pack
+        # writes only read it, so they run together (``_together``) — run
+        # beside the state write, each would build the cache itself.
         # tiers: ONE aggregate over the turn rows of every tier (a turn is
         # a one-point tier row) and, on a commit, every entry's ranked
         # previous rows of ONLY the windows they touch — a semi-join down
@@ -711,22 +744,36 @@ class IncrementalRollup:
         # windows and points it wrote minus those of the rows it
         # replaced. No re-read. The carried turns are committed already.
         metrics = metrics.filter(~carried)
-        rows = _union([turn_rows(metrics, t) for t in TIERS]).filter(retained(bounds))
         out_obs = Observation()
-        with self._phase(f"{tag} tiers"):
-            prev = None if heal else self._resolve_chain(
-                self._base("tiers"),
-                state["entries"],
-                _WINDOW_KEYS,
-                touched=rows.select(*_WINDOW_KEYS),
-                bounds=bounds,
-                ranked=True,
-            )
-            if prev is not None:
-                rows = prev.unionByName(rows, allowMissingColumns=True)
-            _write_by_tier(
-                _observe_totals(merge_tiers(rows), out_obs).drop(REPLACED_POINTS),
-                self._delta_path(self._base("tiers"), n),
+
+        def write_tiers():
+            rows = _union([turn_rows(metrics, t) for t in TIERS]).filter(retained(bounds))
+            with self._phase(f"{tag} tiers"):
+                prev = None if heal else self._resolve_chain(
+                    self._base("tiers"),
+                    state["entries"],
+                    _WINDOW_KEYS,
+                    touched=rows.select(*_WINDOW_KEYS),
+                    bounds=bounds,
+                    ranked=True,
+                )
+                if prev is not None:
+                    rows = prev.unionByName(rows, allowMissingColumns=True)
+                _write_by_tier(
+                    _observe_totals(merge_tiers(rows), out_obs).drop(REPLACED_POINTS),
+                    self._delta_path(self._base("tiers"), n),
+                )
+
+        def write_packed():
+            with self._phase(f"{tag} pack"):
+                self._write_packed(state, n, metrics, heal)
+
+        _together(write_tiers, *([write_packed] if self.pack_tiers else []))
+        if ooo:
+            write_driver_table(
+                [{"conv_id": c} for c in sorted(ooo)],
+                _PENDING_SCHEMA,
+                self._delta_path(self._base("heal_pending"), version),
             )
         if not heal:
             for t in TIERS:
@@ -734,9 +781,6 @@ class IncrementalRollup:
                 tot = state["totals"].setdefault(t, {"n_windows": 0, "n_points": 0})
                 tot["n_windows"] += w
                 tot["n_points"] += p
-        if self.pack_tiers:
-            with self._phase(f"{tag} pack"):
-                self._write_packed(state, n, metrics, heal)
         state["entries"] = n
         return n_convs, len(ooo)
 
@@ -962,18 +1006,22 @@ class IncrementalRollup:
             return  # nothing committed yet
         self._gc_uncommitted(state)
         n = state["entries"] + 1
-        for base, keys in self._compact_jobs():
+
+        def fold(base: str, keys: list[str]) -> None:
             df = self._resolve_chain(
                 base, state["entries"], keys, bounds=state["retention_bounds"]
             )
             if df is None:
-                continue
+                return
             path = self._delta_path(base, n)
             with self._phase(f"compact {os.path.basename(base)}"):
                 if keys == _WINDOW_KEYS:
                     _write_by_tier(df, path)
                 else:
-                    table_writer(df).mode("overwrite").parquet(path)
+                    table_writer(df, keys).mode("overwrite").parquet(path)
+
+        # no family reads another: the three writes run together
+        _together(*(partial(fold, base, keys) for base, keys in self._compact_jobs()))
         state["entries"] = n
         self._commit_ckpt(state)
         for base, _ in self._compact_jobs():

@@ -224,6 +224,71 @@ def test_reads_never_write(spark, committed, tmp_path, monkeypatch, crash_step):
         assert f.read() == ckpt, crash_step
 
 
+def _entry_files(work, n):
+    """{leaf of entry ``d{n}`` of every family, relative to ``work``: its
+    files' bytes, sorted}. Spark names each file after its write, so the
+    files are compared by content."""
+    out = {}
+    for family in ("tiers", "packed", "state"):
+        for d, _, names in os.walk(os.path.join(work, family, f"d{n:08d}")):
+            data = []
+            for m in names:
+                if m.endswith(".parquet"):
+                    with open(os.path.join(d, m), "rb") as f:
+                        data.append(f.read())
+            if data:
+                out[os.path.relpath(d, work)] = sorted(data)
+    return out
+
+
+@pytest.mark.parametrize("failing", ["packed", "tiers"])
+def test_failed_family_write_joins_the_other(spark, snapshots, tmp_path, monkeypatch, failing):
+    """A commit's tier and pack writes run in two threads. When one of
+    them fails at once, the other's write has finished, and no job is
+    left running, by the time the error reaches the caller; the counter
+    and every read are as before the commit, and the rerun commits the
+    same bytes as a store where the commit never failed."""
+    src, t = snapshots
+    ref = IncrementalRollup(spark, src, str(tmp_path / "ref"), pack_tiers=("1m",))
+    assert ref.process_pending() == len(BOUNDS)
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    for i in range(1, len(BOUNDS)):
+        name = f"snap_{i:08d}"
+        shutil.copytree(os.path.join(src, name), os.path.join(staged, name))
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"), pack_tiers=("1m",))
+    assert inc.process_pending() == len(BOUNDS) - 1
+    now_us = t.agg(F.max(F.unix_micros(F.col("ts").cast("timestamp")))).collect()[0][0]
+    want = _reads(inc, now_us, None)
+    with open(inc.ckpt_path, "rb") as f:
+        ckpt = f.read()
+
+    real_write = pl._write_by_tier
+
+    def boom(df, path):
+        if os.sep + failing + os.sep in path:
+            raise RuntimeError(f"simulated crash in the {failing} write")
+        real_write(df, path)
+
+    last = f"snap_{len(BOUNDS):08d}"
+    shutil.copytree(os.path.join(src, last), os.path.join(staged, last))
+    monkeypatch.setattr(pl, "_write_by_tier", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        inc.process_pending()
+    monkeypatch.undo()
+    other = "tiers" if failing == "packed" else "packed"
+    n = len(BOUNDS)
+    assert os.path.exists(os.path.join(inc.work_dir, other, f"d{n:08d}", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(inc.work_dir, failing, f"d{n:08d}"))
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    with open(inc.ckpt_path, "rb") as f:
+        assert f.read() == ckpt
+    assert _reads(inc, now_us, None) == want
+
+    assert inc.process_pending() == 1
+    assert _entry_files(inc.work_dir, n) == _entry_files(ref.work_dir, n)
+
+
 def test_auto_compaction_bounds_chain_at_parity(spark, snapshots, tmp_path):
     """max_chain policy: chains stay bounded across many snapshots and
     many heals, and reads remain at batch-recompute parity throughout."""

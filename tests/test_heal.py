@@ -452,26 +452,86 @@ def test_ooo_commit_and_heal_job_budget(spark, ooo_snapshots, tmp_path, phase_jo
     assert sum(per.values()) <= OOO_COMMIT_HEAL_JOBS, per
 
 
-def _parquet_files_per_entry(work, family):
-    base = os.path.join(work, family)
-    return {
-        f"{family}/{d}": sum(n.endswith(".parquet") for n in os.listdir(os.path.join(base, d)))
-        for d in os.listdir(base)
-    }
+def _leaf_files(work, family):
+    """{leaf dir of ``family`` under ``work``: sizes of its parquet
+    files}. A leaf holds files: ``state/d{n}``, ``tiers/d{n}/tier={t}``."""
+    out = {}
+    for d, _, names in os.walk(os.path.join(work, family)):
+        sizes = sorted(
+            os.path.getsize(os.path.join(d, n)) for n in names if n.endswith(".parquet")
+        )
+        if sizes:
+            out[os.path.relpath(d, work)] = sizes
+    return out
 
 
 def test_state_and_heal_flag_entries_are_one_file(spark, ooo_snapshots, tmp_path):
-    """Each ``state`` and ``heal_pending`` entry, of an in-order commit, an
-    out-of-order commit and a heal, is one parquet file."""
+    """Each ``state/d{n}``, ``tiers/d{n}/tier={t}`` and ``heal_pending``
+    entry, of an in-order commit, an out-of-order commit, a heal and a
+    compaction, is one parquet file: the files follow the bytes written
+    (sinks/tier_tables.table_writer), and these are far below one row
+    group."""
     src, _ = ooo_snapshots
     work = str(tmp_path / "w")
     inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
     assert inc.process_pending() == len(OOO_BOUNDS)
-    pending = _parquet_files_per_entry(work, "heal_pending")  # heal() deletes them
+    files = _leaf_files(work, "heal_pending")  # heal() deletes them
     assert inc.heal() > 0
-    files = {**pending, **_parquet_files_per_entry(work, "state")}
+    files.update(_leaf_files(work, "state"))
+    files.update(_leaf_files(work, "tiers"))
+    inc.compact()  # deletes the entries below its own
+    files.update(_leaf_files(work, "state"))
+    files.update(_leaf_files(work, "tiers"))
     assert "heal_pending/d00000003" in files and "state/d00000005" in files, files
-    assert set(files.values()) == {1}, files
+    for n in range(1, len(OOO_BOUNDS) + 3):
+        for t in ("1m", "1h", "1d"):
+            assert f"tiers/d{n:08d}/tier={t}" in files, (n, t, files)
+    assert {len(sizes) for sizes in files.values()} == {1}, files
+
+
+def test_tier_and_state_files_do_not_follow_the_session(spark, ooo_snapshots, tmp_path):
+    """The same commits and heal under 4 and under 16 shuffle partitions
+    write the same tier and state files, the same count and bytes in
+    every leaf: the size rule, not the caller's session, sets them."""
+    src, _ = ooo_snapshots
+    was = spark.conf.get("spark.sql.shuffle.partitions")
+    got = {}
+    try:
+        for parts in (4, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            work = str(tmp_path / f"w{parts}")
+            inc = IncrementalRollup(spark, src, work, pack_tiers=("1m",))
+            assert inc.process_pending() == len(OOO_BOUNDS)
+            assert inc.heal() > 0
+            got[parts] = {**_leaf_files(work, "state"), **_leaf_files(work, "tiers")}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", was)
+    assert got[4] == got[16]
+
+
+def test_every_writer_job_carries_group_and_phase(spark, ooo_snapshots, tmp_path, phase_jobs):
+    """The tier and pack writes of a commit and of a heal, and the three
+    family writes of a compaction, run in threads. Every job they start
+    still carries the caller's job group (``phase_jobs`` checks the jobs
+    submitted while it ran against the group's) and its own phase's
+    description."""
+    src, _ = ooo_snapshots
+    staged = str(tmp_path / "staged")
+    _stage_upto(src, staged, 2)
+    inc = IncrementalRollup(spark, staged, str(tmp_path / "w"), pack_tiers=("1m",))
+    assert inc.process_pending() == 2
+    _stage_upto(src, staged, 3)
+
+    def commit_heal_compact():
+        assert inc.process_pending() == 1
+        assert inc.heal() > 0
+        inc.compact()
+
+    per = phase_jobs(commit_heal_compact)
+    assert set(per) == {
+        *(f"{op} d00000003 {p}" for op in ("commit", "heal") for p in ("state", "tiers", "pack")),
+        *(f"compact {f}" for f in ("tiers", "packed", "state")),
+    }, per
 
 
 def test_footer_schema_equals_spark_inference(spark, ooo_snapshots, tmp_path, phase_jobs):
